@@ -160,8 +160,9 @@ def canonicalize_seq(mentions: pd.DataFrame):
     surf = [
         (s, ty, spark_xxhash64(s, ty), n) for (s, ty), n in counts.items()
     ]
-    # LSH banding over fuzzy types (kg.candidate_pairs: 16 bands x 4 rows,
-    # max_bucket=64, est-jaccard >= 0.7 i.e. >= 45/64 equal positions)
+    # LSH over fuzzy types (kg.lsh_components -> kg.candidate_pairs: 16
+    # bands x 4 rows keyed by type, parallel.cap_buckets at 64, est-jaccard
+    # >= 0.7 i.e. >= 45/64 equal positions)
     sigs = {sid: surface_sig(s) for s, ty, sid, _n in surf if ty in FUZZY_TYPES}
     buckets: dict[tuple, list[int]] = defaultdict(list)
     for s, ty, sid, _n in surf:

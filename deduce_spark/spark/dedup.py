@@ -3,11 +3,13 @@
 All operators are DataFrame -> DataFrame, deterministic, and shuffle-aware:
 
 - exact:     one groupBy on md5(text) (map-side combinable);
-- minhash:   char/word shingles -> 64-perm signatures (Arrow numpy UDF) ->
-             LSH bands -> bucket self-join -> signature-estimated jaccard
-             filter -> connected components -> canonical doc per cluster;
+- minhash:   word shingles -> 64-perm signatures (Arrow numpy UDF) ->
+             the kg LSH core (``kg.lsh_components``: bands, capped bucket
+             self-join, signature-estimated jaccard filter, connected
+             components) -> canonical doc per cluster;
 - simhash:   64-bit simhash, bucketed by four 16-bit chunks (any pair with
-             hamming distance <= 3 shares a chunk by pigeonhole);
+             hamming distance <= 3 shares a chunk by pigeonhole), under the
+             ``parallel.cap_buckets`` hot-bucket cap;
 - ngram jaccard: exact set jaccard via explode + join (SQL-expressible —
              serves as the DuckDB oracle form of near-dup detection).
 """
@@ -23,15 +25,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from deduce_spark.spark.kg import (
-    N_BANDS,
-    N_HASHES,
-    _MERSENNE,
-    _PERM_A,
-    _PERM_B,
-    connected_components,
-)
-from deduce_spark.spark.parallel import fan_out
+from deduce_spark.spark.kg import lsh_components, minhash, minhash_batch
+from deduce_spark.spark.parallel import cap_buckets, fan_out
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -156,74 +151,7 @@ _SIG_SCHEMA = T.StructType(
 def minhash_sig(text: str, shingle_words: int = 3) -> list[int]:
     """Per-document minhash signature (module-level so the golden-fixture
     generator replays the EXACT kernel outside Spark)."""
-    sh = _word_shingles(text, shingle_words)
-    v = (np.outer(_PERM_A, sh) + _PERM_B[:, None]) % _MERSENNE
-    return [int(x) for x in v.min(axis=1)]
-
-
-# Tile size for the vectorized permute: 64 x 4096 x 8B = 2 MB per
-# temporary, so the multiply/add/mod working set stays cache-resident.
-# The old 1M-shingle chunks streamed ~0.5 GB temporaries through DRAM,
-# which collapses under concurrency (32 parallel workers measured 30x
-# slower per doc than this tile — memory bandwidth, not ALU, was the
-# wall).  Per-doc results are bit-identical for any tile size; a single
-# document longer than the tile still forms one chunk.
-_MAX_CHUNK_SHINGLES = 1 << 12
-
-
-def _batch_minhash_sigs(
-    texts: list[str],
-    shingle_words: int = 3,
-    max_doc_words: int | None = None,
-) -> list[list[int]]:
-    """Batch-vectorized minhash: one (N_HASHES, chunk_shingles) permute
-    matrix + segmented min (np.minimum.reduceat) instead of a per-document
-    outer product.  Bit-identical to ``minhash_sig`` (same arithmetic on
-    the same values, only the loop structure changes) — pinned by test and
-    by the golden fixtures.
-
-    Documents are processed in chunks of at most ``_MAX_CHUNK_SHINGLES``
-    total shingles so the permute matrix (and its arithmetic temporaries)
-    stays bounded regardless of Arrow batch size × document length — a
-    10k-row batch of 1k-word web documents would otherwise materialize a
-    multi-GB matrix per worker.
-
-    The bound is across documents, NOT within one: a single document
-    larger than the cap still forms one chunk (the reduceat segment must
-    cover the whole doc), so peak memory for a pathological single doc is
-    ``64 × its_shingles × 8 B`` — ~0.5 GB per million shingles.
-    ``max_doc_words`` closes that hole: each document is clamped to its
-    first ``max_doc_words`` whitespace tokens BEFORE shingling, so one
-    doc's shingles — and with it the permute matrix — are hard-bounded at
-    ``64 × max_doc_words × 8 B`` no matter what the crawl feeds in (a
-    multi-hundred-MB book-dump page signs on its prefix instead of
-    blowing out the worker).  ``None`` keeps the exact full-document
-    semantics (the golden fixtures' form)."""
-    out: list[list[int]] = []
-    chunk: list[np.ndarray] = []
-    chunk_shingles = 0
-
-    def flush():
-        nonlocal chunk, chunk_shingles
-        if not chunk:
-            return
-        lengths = np.array([len(a) for a in chunk])
-        flat = np.concatenate(chunk)
-        v = (np.outer(_PERM_A, flat) + _PERM_B[:, None]) % _MERSENNE
-        starts = np.zeros(len(lengths), dtype=np.int64)
-        np.cumsum(lengths[:-1], out=starts[1:])
-        mins = np.minimum.reduceat(v, starts, axis=1)  # (N_HASHES, n_docs)
-        out.extend([int(x) for x in mins[:, j]] for j in range(len(chunk)))
-        chunk, chunk_shingles = [], 0
-
-    for t in texts:
-        sh = _word_shingles(t, shingle_words, max_doc_words)  # never empty
-        if chunk_shingles + len(sh) > _MAX_CHUNK_SHINGLES and chunk:
-            flush()
-        chunk.append(sh)
-        chunk_shingles += len(sh)
-    flush()
-    return out
+    return minhash(_word_shingles(text, shingle_words))
 
 
 def minhash_signatures(
@@ -233,11 +161,23 @@ def minhash_signatures(
     shingle_words: int = 3,
     max_doc_words: int | None = None,
 ) -> DataFrame:
+    """(doc_id, sig) over word shingles, signed by the tiled
+    :func:`deduce_spark.spark.kg.minhash_batch` kernel.
+
+    ``max_doc_words`` clamps each document to its first ``max_doc_words``
+    whitespace tokens BEFORE shingling, so one document's shingles — and
+    with them the kernel's permute matrix — are hard-bounded at
+    ``64 × max_doc_words × 8 B`` no matter what the crawl feeds in (a
+    multi-hundred-MB book-dump page signs on its prefix instead of blowing
+    out the worker).  ``None`` keeps the exact full-document semantics (the
+    golden fixtures' form)."""
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             ids = [int(d) for d in batch[id_col]]
-            sigs = _batch_minhash_sigs(
-                list(batch[text_col]), shingle_words, max_doc_words
+            sigs = minhash_batch(
+                _word_shingles(t, shingle_words, max_doc_words)
+                for t in batch[text_col]
             )
             yield pd.DataFrame({"doc_id": ids, "sig": sigs})
 
@@ -258,99 +198,22 @@ def minhash_dedup(
 ) -> DataFrame:
     """(doc_id, canonical_id) for every doc in a near-dup cluster.
 
-    Buckets larger than ``max_bucket`` are dropped whole before the
-    self-join (same cap strategy as ``kg.candidate_pairs``): one hot LSH
-    bucket — template boilerplate at web scale — otherwise emits B²/2 join
-    rows and stalls the stage.  Exact duplicates inside a dropped bucket are
-    still caught by ``exact_dedup``; the cap trades a sliver of near-dup
-    recall for a bounded join.
+    The LSH core is :func:`deduce_spark.spark.kg.lsh_components` over
+    document signatures, with no bucket key beyond the band.  Buckets
+    larger than ``max_bucket`` are dropped whole: exact duplicates inside a
+    dropped bucket are still caught by ``exact_dedup``; the cap trades a
+    sliver of near-dup recall for a bounded join.
 
     ``max_doc_words`` (recommended at crawl scale, e.g. ``1_000_000``)
-    clamps each document to its word prefix before shingling, bounding
-    the signature worker's peak memory against pathological single
-    documents — see :func:`_batch_minhash_sigs`."""
-    sigs = minhash_signatures(
-        df, text_col, id_col, shingle_words, max_doc_words
-    ).cache()
-    rows_per_band = N_HASHES // N_BANDS
-    # cache the banded table: it feeds the hot-bucket count, the anti-join
-    # and BOTH sides of the bucket self-join — without the cache each of
-    # those stages re-evaluates (and re-codegens) the 16-way xxhash64
-    # band projection, which dominates the cold-run wall
-    banded_cached = sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "band_key"),
-    ).cache()
-    # materialize BOTH caches eagerly with one bounded action (the banded
-    # job scans sigs exactly once, populating its cache on the way): the
-    # downstream plan otherwise scans them from several concurrently
-    # launched subtrees (hot-bucket count, self-join l/r, both verify
-    # joins), each recomputing the whole Python signature stage and racing
-    # to populate the same cache (the "Block rdd_N already exists"
-    # warnings).  The operator is already eager (connected_components runs
-    # actions), so this changes no contract.
-    banded_cached.count()
-    banded = banded_cached
-    # map-combinable bucket-size cap: count buckets, keep only the OVER-cap
-    # keys (few by construction: <= n/max_bucket, zero on healthy data) and
-    # anti-join them away.  NOT a window keyed on the raw bucket — a window
-    # materializes each hot bucket on one task (sort included) before
-    # filtering, exactly the straggler the cap exists to prevent; and NOT a
-    # semi-join against the huge under-cap key set — the over-cap side is
-    # the broadcastable one.
-    hot_buckets = (
-        banded.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
-        .select("band", "band_key")
+    bounds the signature worker's peak memory against pathological single
+    documents — see :func:`minhash_signatures`."""
+    comp = lsh_components(
+        minhash_signatures(df, text_col, id_col, shingle_words, max_doc_words),
+        threshold,
+        max_bucket,
+        id_col="doc_id",
+        key=None,
     )
-    banded = banded.join(
-        F.broadcast(hot_buckets), ["band", "band_key"], "left_anti"
-    )
-    pairs = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )
-    # verify candidates with the signature-estimated jaccard
-    est = (
-        pairs.join(sigs.withColumnRenamed("doc_id", "a").withColumnRenamed("sig", "sig_a"), "a")
-        .join(sigs.withColumnRenamed("doc_id", "b").withColumnRenamed("sig", "sig_b"), "b")
-        .withColumn(
-            "est_jaccard",
-            # zip_with avoids arrays_zip's per-element struct allocation
-            # (measured 6x faster on the kg.py verify stage)
-            F.expr(
-                "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),"
-                " 0, (acc, v) -> acc + v)"
-            )
-            / F.lit(N_HASHES),
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("a", "b")
-    )
-    comp = connected_components(est)
-    # comp is materialized (driver union-find or checkpointed star rounds);
-    # the returned frame depends only on it and the input scan, so the
-    # intra-operator caches can be released instead of leaking per call
-    sigs.unpersist(False)
-    banded_cached.unpersist(False)
     return (
         df.select(F.col(id_col).alias("doc_id"))
         .join(comp.withColumnRenamed("surface_id", "doc_id"), "doc_id", "left")
@@ -368,7 +231,7 @@ _SIMHASH_SCHEMA = T.StructType(
 )
 
 
-# Cache-resident tile (see _MAX_CHUNK_SHINGLES): 4096 x 64 x 8B = 2 MB
+# Cache-resident tile (see kg._MAX_CHUNK_SHINGLES): 4096 x 64 x 8B = 2 MB
 # per temporary vs the old 512 MB — 20x faster per doc under 32-way
 # worker concurrency (DRAM-bandwidth bound before).  Bit-identical for
 # any tile size.
@@ -381,7 +244,7 @@ def _batch_simhash(texts: list[str]) -> list[int]:
     (same word hashes, same votes, same sign threshold), pinned by test
     and by the golden fixtures.  Chunked at ``_MAX_CHUNK_WORDS`` total
     words so the bit matrix stays bounded regardless of Arrow batch size
-    × document length (same rationale as ``_batch_minhash_sigs``)."""
+    × document length (same rationale as ``kg.minhash_batch``)."""
     out = np.zeros(len(texts), dtype=np.int64)
 
     def flush(idx: list[int], word_lists: list[list[str]]):
@@ -475,15 +338,14 @@ def simhash_near_dupes(
     """(a, b, hamming) pairs with hamming(simhash) <= max_hamming.
 
     Pigeonhole bucketing by four 16-bit chunks; buckets above ``max_bucket``
-    are dropped whole before the self-join (see ``minhash_dedup``) so a hot
-    chunk value cannot go quadratic at scale."""
+    are dropped whole before the self-join
+    (:func:`deduce_spark.spark.parallel.cap_buckets`)."""
     # sigs feeds only the chunk explode (the simhash value rides along in
     # chunks), so the cache worth having is chunks, not sigs
     sigs = simhash_signatures(df, text_col, id_col)
-    # cached EAGERLY for the same reason as minhash_dedup's banded table:
-    # three downstream subtrees consume it (hot-chunk count, anti-join,
-    # self-join l/r) and would otherwise concurrently recompute the whole
-    # Python simhash stage, racing to populate the cache
+    # cached EAGERLY: three downstream subtrees consume it (hot-chunk
+    # count, anti-join, self-join l/r) and would otherwise concurrently
+    # recompute the whole Python simhash stage, racing to populate the cache
     chunks = sigs.select(
         "doc_id",
         "simhash",
@@ -497,17 +359,7 @@ def simhash_near_dupes(
         ).alias("chunk_idx", "chunk_val"),
     ).cache()
     chunks.count()
-    # map-combinable bucket-size cap (see minhash_dedup): anti-join the few
-    # OVER-cap chunk values away; no window keyed on the raw bucket column
-    hot_buckets = (
-        chunks.groupBy("chunk_idx", "chunk_val")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
-        .select("chunk_idx", "chunk_val")
-    )
-    chunks = chunks.join(
-        F.broadcast(hot_buckets), ["chunk_idx", "chunk_val"], "left_anti"
-    )
+    chunks = cap_buckets(chunks, ["chunk_idx", "chunk_val"], max_bucket)
     cand = (
         chunks.alias("l")
         .join(

@@ -3,8 +3,11 @@
 Stages (SURVEY.md §1 tail / north_star):
 
 1. surface normalization (native Spark expressions — stays in codegen);
-2. MinHash signatures over char 3-shingles (Arrow-batched numpy UDF);
-3. LSH banding -> candidate pairs (groupBy band, self-join inside bucket);
+2. MinHash signatures over char 3-shingles (Arrow-batched numpy UDF,
+   the tiled :func:`minhash_batch` kernel);
+3. LSH banding -> candidate pairs (:func:`lsh_bands`, bucket self-join
+   under the ``parallel.cap_buckets`` hot-bucket cap, est-jaccard verify
+   in :func:`candidate_pairs`);
 4. connected components: driver union-find for sparse edge sets, else
    distributed min-label propagation (iterative joins, O(cluster diameter)
    rounds — near-dup clusters are shallow; lineage truncated with
@@ -15,12 +18,17 @@ Stages (SURVEY.md §1 tail / north_star):
 Every hash is deterministic across processes (crc32 / xxhash64 via Spark,
 numpy permutations seeded with a fixed constant) — required for the
 exact-resume and differential-test guarantees.
+
+Stages 2-4 are the one MinHash-LSH core of the package: ``dedup`` signs
+documents with ``minhash_batch`` and clusters them with
+:func:`lsh_components`, the same owner of the signature and band caches
+that canonicalization uses.
 """
 
 from __future__ import annotations
 
 import zlib
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -29,13 +37,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deduce_spark.spark.checkpointing import CheckpointArg, make_checkpointer
+from deduce_spark.spark.parallel import cap_buckets
 
 N_HASHES = 64
-N_BANDS = 16  # used by doc-level dedup: 16 bands x 4 rows, jaccard >~ 0.5
-# surface canonicalization wants near-identical strings only (typos, case,
-# whitespace variants): 16x4 banding RECALLS jaccard >= 0.7 with p > 0.99,
-# and the signature-estimated-jaccard verify restores PRECISION
-SURFACE_BANDS = 16
+# 16 bands x 4 rows RECALLS jaccard >= 0.7 with p > 0.99, and the
+# signature-estimated-jaccard verify restores PRECISION.  Surface
+# canonicalization wants near-identical strings only (typos, case,
+# whitespace variants), hence its 0.7 threshold; document dedup passes its
+# own.
+N_BANDS = 16
 SURFACE_JACCARD = 0.7
 _MERSENNE = (1 << 61) - 1
 _RNG = np.random.RandomState(42)
@@ -96,13 +106,72 @@ def _shingle_hashes(s: str) -> np.ndarray:
     )
 
 
-def surface_sig(s: str) -> list[int]:
-    """Per-surface minhash signature (module-level so the golden-fixture
-    generator replays the EXACT kernel outside Spark).
-    sig[k] = min((a_k * h + b_k) mod p) over char-3-shingle crc32 hashes."""
-    sh = _shingle_hashes(s)
-    v = (np.outer(_PERM_A, sh) + _PERM_B[:, None]) % _MERSENNE
+def minhash(shingles: np.ndarray) -> list[int]:
+    """Reference MinHash of one non-empty shingle-hash array:
+    sig[k] = min((a_k * h + b_k) mod p) over the hashes h.  The per-item
+    kernel that :func:`minhash_batch` is pinned against."""
+    v = (np.outer(_PERM_A, shingles) + _PERM_B[:, None]) % _MERSENNE
     return [int(x) for x in v.min(axis=1)]
+
+
+def surface_sig(s: str) -> list[int]:
+    """Per-surface minhash signature over char-3-shingle crc32 hashes
+    (module-level so the golden-fixture generator replays the EXACT kernel
+    outside Spark)."""
+    return minhash(_shingle_hashes(s))
+
+
+# Tile size for the vectorized permute: 64 x 4096 x 8B = 2 MB per
+# temporary, so the multiply/add/mod working set stays cache-resident.
+# The old 1M-shingle chunks streamed ~0.5 GB temporaries through DRAM,
+# which collapses under concurrency (32 parallel workers measured 30x
+# slower per doc than this tile — memory bandwidth, not ALU, was the
+# wall).  Per-item results are bit-identical for any tile size; a single
+# item longer than the tile still forms one chunk.
+_MAX_CHUNK_SHINGLES = 1 << 12
+
+
+def minhash_batch(shingle_arrays: Iterable[np.ndarray]) -> list[list[int]]:
+    """Batch-vectorized :func:`minhash` of many non-empty shingle-hash
+    arrays: one (N_HASHES, chunk_shingles) permute matrix + segmented min
+    (np.minimum.reduceat) instead of a per-item outer product.
+    Bit-identical to ``minhash`` (same arithmetic on the same values, only
+    the loop structure changes) — pinned by test and by the golden
+    fixtures.  Each caller brings its own shingler (char-3 for surfaces,
+    word-3 for documents).
+
+    Items are processed in chunks of at most ``_MAX_CHUNK_SHINGLES`` total
+    shingles so the permute matrix (and its arithmetic temporaries) stays
+    bounded regardless of Arrow batch size × item length.  The bound is
+    across items, NOT within one: a single item larger than the cap still
+    forms one chunk (the reduceat segment must cover the whole item), so
+    its peak memory is ``64 × its_shingles × 8 B`` — callers clamp long
+    items before shingling (``dedup.minhash_signatures``'s
+    ``max_doc_words``)."""
+    out: list[list[int]] = []
+    chunk: list[np.ndarray] = []
+    chunk_shingles = 0
+
+    def flush():
+        nonlocal chunk, chunk_shingles
+        if not chunk:
+            return
+        lengths = np.array([len(a) for a in chunk])
+        flat = np.concatenate(chunk)
+        v = (np.outer(_PERM_A, flat) + _PERM_B[:, None]) % _MERSENNE
+        starts = np.zeros(len(lengths), dtype=np.int64)
+        np.cumsum(lengths[:-1], out=starts[1:])
+        mins = np.minimum.reduceat(v, starts, axis=1)  # (N_HASHES, n_items)
+        out.extend([int(x) for x in mins[:, j]] for j in range(len(chunk)))
+        chunk, chunk_shingles = [], 0
+
+    for sh in shingle_arrays:
+        if chunk_shingles + len(sh) > _MAX_CHUNK_SHINGLES and chunk:
+            flush()
+        chunk.append(sh)
+        chunk_shingles += len(sh)
+    flush()
+    return out
 
 
 def surface_signatures(surf: DataFrame) -> DataFrame:
@@ -110,12 +179,10 @@ def surface_signatures(surf: DataFrame) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            ids, sigs = [], []
-            for sid, s in zip(batch["surface_id"], batch["surface"]):
-                sigs.append(surface_sig(s))
-                ids.append(int(sid))
+            sigs = minhash_batch(_shingle_hashes(s) for s in batch["surface"])
             yield pd.DataFrame(
-                {"surface_id": ids, "type": batch["type"], "sig": sigs}
+                {"surface_id": batch["surface_id"], "type": batch["type"],
+                 "sig": sigs}
             )
 
     return surf.select("surface_id", "type", "surface").mapInPandas(
@@ -123,80 +190,137 @@ def surface_signatures(surf: DataFrame) -> DataFrame:
     )
 
 
-def candidate_pairs(
-    sigs: DataFrame,
-    n_bands: int = SURFACE_BANDS,
-    min_jaccard: float = SURFACE_JACCARD,
-    max_bucket: int = 64,
-) -> DataFrame:
-    """LSH banding over signatures -> bucket self-join (same type only) ->
-    pairs verified by the signature-estimated jaccard.
+# -- LSH: banding, bucket self-join, est-jaccard verify ----------------------
 
-    Buckets larger than ``max_bucket`` are dropped whole (deterministic):
-    a bucket with B members costs B²/2 join rows, so one hot bucket —
-    boilerplate strings, template dates — can dominate the entire stage at
-    scale.  Banding is native (xxhash64 over sig slices), the verify is a
-    higher-order array compare — no extra UDF."""
+
+def lsh_bands(
+    sigs: DataFrame,
+    id_col: str = "surface_id",
+    key: str | None = "type",
+    n_bands: int = N_BANDS,
+) -> DataFrame:
+    """(id, [key,] band, band_key): one row per signature band, keyed by
+    xxhash64 over (band index, the band's slice of the signature) — two
+    signatures share a bucket when they agree on a whole band.  Native
+    Spark expressions, no UDF."""
     rows_per_band = N_HASHES // n_bands
-    # eagerly cached: the hot-bucket count and both self-join sides would
-    # otherwise concurrently recompute the band projection (and, through
-    # it, the Python signature stage) — see dedup.minhash_dedup
-    banded = sigs.select(
-        "surface_id",
-        "type",
+    return sigs.select(
+        id_col,
+        *([key] if key else []),
         F.posexplode(
             F.array(
                 *[
-                    F.xxhash64(F.lit(b), F.slice("sig", b * rows_per_band + 1, rows_per_band))
+                    F.xxhash64(
+                        F.lit(b),
+                        F.slice("sig", b * rows_per_band + 1, rows_per_band),
+                    )
                     for b in range(n_bands)
                 ]
             )
         ).alias("band", "band_key"),
-    ).cache()
-    banded.count()
-    # map-combinable bucket-size cap: count buckets, keep only the OVER-cap
-    # keys (few by construction: <= n/max_bucket, zero on healthy data) and
-    # anti-join them away.  NOT a window keyed on the raw bucket — a window
-    # would materialize each hot bucket (sorted) on a single task before
-    # filtering it, exactly the straggler the cap exists to prevent.
-    hot_buckets = (
-        banded.groupBy("type", "band", "band_key")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
-        .select("type", "band", "band_key")
     )
-    banded = banded.join(
-        F.broadcast(hot_buckets), ["type", "band", "band_key"], "left_anti"
-    )
-    pairs = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.type") == F.col("r.type"))
-            & (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.surface_id") < F.col("r.surface_id")),
+
+
+def _verified(
+    pairs: DataFrame,
+    sigs_a: DataFrame,
+    sigs_b: DataFrame,
+    min_jaccard: float,
+    id_col: str = "surface_id",
+) -> DataFrame:
+    """The (a, b) candidate pairs whose signature-estimated jaccard (the
+    share of equal signature positions) reaches ``min_jaccard``; ``a`` is
+    looked up in ``sigs_a``, ``b`` in ``sigs_b``."""
+
+    def side(sigs: DataFrame, name: str) -> DataFrame:
+        return sigs.select(
+            F.col(id_col).alias(name), F.col("sig").alias(f"sig_{name}")
         )
-        .select(F.col("l.surface_id").alias("a"), F.col("r.surface_id").alias("b"))
-        .distinct()
+
+    # zip_with avoids the per-element struct allocation of arrays_zip+filter:
+    # measured 6x faster on the verify stage
+    equal = F.expr(
+        "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),"
+        " 0, (acc, v) -> acc + v)"
     )
     return (
-        pairs.join(sigs.select(F.col("surface_id").alias("a"),
-                               F.col("sig").alias("sig_a")), "a")
-        .join(sigs.select(F.col("surface_id").alias("b"),
-                          F.col("sig").alias("sig_b")), "b")
-        .withColumn(
-            "est_jaccard",
-            # zip_with avoids the per-element struct allocation of
-            # arrays_zip+filter: measured 6x faster on the verify stage
-            F.expr(
-                "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),"
-                " 0, (acc, v) -> acc + v)"
-            ) / F.lit(N_HASHES),
-        )
-        .filter(F.col("est_jaccard") >= min_jaccard)
+        pairs.join(side(sigs_a, "a"), "a")
+        .join(side(sigs_b, "b"), "b")
+        .filter(equal / F.lit(N_HASHES) >= min_jaccard)
         .select("a", "b")
     )
+
+
+def _bucket_cols(key: str | None) -> list[str]:
+    return [*([key] if key else []), "band", "band_key"]
+
+
+def candidate_pairs(
+    sigs: DataFrame,
+    n_bands: int = N_BANDS,
+    min_jaccard: float = SURFACE_JACCARD,
+    max_bucket: int = 64,
+    id_col: str = "surface_id",
+    key: str | None = "type",
+) -> DataFrame:
+    """LSH banding over signatures -> bucket self-join (within ``key``, the
+    node type for surfaces; ``None`` for documents) -> (a, b) pairs, a < b,
+    verified by the signature-estimated jaccard.
+
+    Buckets larger than ``max_bucket`` are dropped whole
+    (:func:`deduce_spark.spark.parallel.cap_buckets`).
+
+    The band table is read by the bucket count and both join sides.  This
+    function caches nothing; a caller that runs it under an action (see
+    :func:`lsh_components`) caches ``lsh_bands(sigs, id_col, key, n_bands)``
+    itself — Spark's cache manager substitutes the cached table for the
+    identical projection here — and releases it when done."""
+    bucket = _bucket_cols(key)
+    banded = cap_buckets(
+        lsh_bands(sigs, id_col, key, n_bands), bucket, max_bucket
+    )
+    l, r = banded.alias("l"), banded.alias("r")
+    pairs = (
+        l.join(
+            r,
+            [F.col(f"l.{c}") == F.col(f"r.{c}") for c in bucket]
+            + [F.col(f"l.{id_col}") < F.col(f"r.{id_col}")],
+        )
+        .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
+        .distinct()
+    )
+    return _verified(pairs, sigs, sigs, min_jaccard, id_col)
+
+
+def lsh_components(
+    sigs: DataFrame,
+    min_jaccard: float = SURFACE_JACCARD,
+    max_bucket: int = 64,
+    id_col: str = "surface_id",
+    key: str | None = "type",
+) -> DataFrame:
+    """(surface_id, component) over :func:`candidate_pairs` of ``sigs``
+    (ids in no verified pair are absent).  The result is materialized
+    (:func:`connected_components`), so the signature and band caches this
+    function creates are released before it returns.
+
+    Both caches are populated by one scan of ``sigs``: the pair plan reads
+    them from several concurrently launched subtrees (bucket count, both
+    self-join sides, both verify joins), which would otherwise each
+    recompute the Python signature stage and race to populate the same
+    cache."""
+    sigs = sigs.cache()
+    bands = lsh_bands(sigs, id_col, key).cache()
+    bands.count()
+    comp = connected_components(
+        candidate_pairs(
+            sigs, min_jaccard=min_jaccard, max_bucket=max_bucket,
+            id_col=id_col, key=key,
+        )
+    )
+    bands.unpersist()
+    sigs.unpersist()
+    return comp
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -377,22 +501,35 @@ def canonicalize(
     jobs/build_kg.py uses so incremental folds and compactions keep the
     anchor-voted canonical forms instead of silently reverting them.
     """
-    surf = surfaces(mentions).cache()
-    fuzzy = surf.filter(F.col("type").isin(*fuzzy_types))
-    sigs = surface_signatures(fuzzy).cache()
-    pairs = candidate_pairs(sigs)
-    comp = connected_components(pairs)
-    surface_map = (
-        surf.join(comp, "surface_id", "left")
-        .withColumn("entity_id", F.coalesce("component", "surface_id"))
-        .drop("component")
-    ).cache()  # consumed by canon + nodes here AND by the caller's
-    # triples() broadcast join — uncached, every consumer re-runs the
-    # whole LSH chain (measured 78s -> 31s for the sf0.1 triples query)
+    surface_map = _entity_map(surfaces(mentions), fuzzy_types)
     weights = anchor_weights
     if weights is None and anchors is not None:
         weights = anchor_surface_weights(anchors, mentions)
     return surface_map, nodes_from_surface_map(surface_map, weights)
+
+
+def _entity_map(surf: DataFrame, fuzzy_types: tuple[str, ...]) -> DataFrame:
+    """``surf`` (surface_id, type, surface, …) + entity_id under the batch
+    canonicalization rules: :func:`lsh_components` over the fuzzy-type
+    surfaces, identity for every other surface.
+
+    The result is cached and materialized, and the ``surf`` cache is
+    released: the map is consumed by the canonical-form pick AND by the
+    caller's triples() broadcast join — uncached, every consumer re-runs
+    the whole LSH chain (measured 78s -> 31s for the sf0.1 triples
+    query)."""
+    surf = surf.cache()
+    comp = lsh_components(
+        surface_signatures(surf.filter(F.col("type").isin(*fuzzy_types)))
+    )
+    out = (
+        surf.join(comp, "surface_id", "left")
+        .withColumn("entity_id", F.coalesce("component", "surface_id"))
+        .drop("component")
+    ).cache()
+    out.count()
+    surf.unpersist()
+    return out
 
 
 def anchor_surface_weights(
@@ -808,25 +945,6 @@ def triangle_count(edges: DataFrame, max_degree: int = 64) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _band_explode(sigs: DataFrame, n_bands: int = SURFACE_BANDS) -> DataFrame:
-    rows_per_band = N_HASHES // n_bands
-    return sigs.select(
-        "surface_id",
-        "type",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        F.lit(b),
-                        F.slice("sig", b * rows_per_band + 1, rows_per_band),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band", "band_key"),
-    )
-
-
 def incremental_canonicalize(
     new_mentions: DataFrame,
     surface_map: DataFrame,
@@ -858,8 +976,6 @@ def incremental_canonicalize(
     At 10^12 scale the existing signatures would be read from a persisted
     sidecar table (they are pure functions of the surface string); they
     are recomputed here to stay self-contained."""
-    from pyspark.sql import Window
-
     new_surf = surfaces(new_mentions).cache()
     existing = surface_map.select(
         "surface", "type", "n_mentions", "surface_id", "entity_id"
@@ -873,67 +989,31 @@ def incremental_canonicalize(
     )
 
     # -- novel fuzzy surfaces vs existing ones: cross-LSH match ------------
-    novel_fuzzy = novel.filter(F.col("type").isin(*fuzzy_types))
-    exist_fuzzy = existing.filter(F.col("type").isin(*fuzzy_types))
-    nsigs = surface_signatures(
-        novel_fuzzy.select("surface_id", "type", "surface")
-    ).cache()
+    nsigs = surface_signatures(novel.filter(F.col("type").isin(*fuzzy_types)))
     esigs = surface_signatures(
-        exist_fuzzy.select("surface_id", "type", "surface")
+        existing.filter(F.col("type").isin(*fuzzy_types))
     )
-    nb = _band_explode(nsigs)
-    eb = _band_explode(esigs)
-    # map-combinable bucket cap (see candidate_pairs): no raw-bucket window
-    hot_eb = (
-        eb.groupBy("type", "band", "band_key")
-        .agg(F.count(F.lit(1)).alias("bs"))
-        .filter(F.col("bs") > max_bucket)
-        .select("type", "band", "band_key")
-    )
-    eb = eb.join(F.broadcast(hot_eb), ["type", "band", "band_key"], "left_anti")
+    bucket = _bucket_cols("type")
+    nb = lsh_bands(nsigs).alias("n")
+    eb = cap_buckets(lsh_bands(esigs), bucket, max_bucket).alias("e")
     cand = (
-        nb.alias("n")
-        .join(
-            eb.alias("e"),
-            (F.col("n.type") == F.col("e.type"))
-            & (F.col("n.band") == F.col("e.band"))
-            & (F.col("n.band_key") == F.col("e.band_key")),
-        )
+        nb.join(eb, [F.col(f"n.{c}") == F.col(f"e.{c}") for c in bucket])
         .select(
-            F.col("n.surface_id").alias("n_sid"),
-            F.col("e.surface_id").alias("e_sid"),
+            F.col("n.surface_id").alias("a"), F.col("e.surface_id").alias("b")
         )
         .distinct()
     )
-    verified = (
-        cand.join(
-            nsigs.select(F.col("surface_id").alias("n_sid"),
-                         F.col("sig").alias("sig_n")), "n_sid")
-        .join(
-            esigs.select(F.col("surface_id").alias("e_sid"),
-                         F.col("sig").alias("sig_e")), "e_sid")
-        .withColumn(
-            "est_jaccard",
-            F.expr(
-                "aggregate(zip_with(sig_n, sig_e, (x, y) -> IF(x = y, 1, 0)),"
-                " 0, (acc, v) -> acc + v)"
-            ) / F.lit(N_HASHES),
-        )
-        .filter(F.col("est_jaccard") >= min_jaccard)
-        .select("n_sid", "e_sid")
-    )
     adopt = (
-        verified.join(
-            existing.select(F.col("surface_id").alias("e_sid"), "entity_id"),
-            "e_sid",
+        _verified(cand, nsigs, esigs, min_jaccard)
+        .join(
+            existing.select(F.col("surface_id").alias("b"), "entity_id"), "b"
         )
-        .groupBy("n_sid")
+        .groupBy("a")
         .agg(F.min("entity_id").alias("adopted"))
     )
 
     # -- novel-novel clustering (same rules as the batch path) -------------
-    nn_pairs = candidate_pairs(nsigs, max_bucket=max_bucket)
-    comp = connected_components(nn_pairs)
+    comp = lsh_components(nsigs, max_bucket=max_bucket)
     novel_assigned = (
         novel.join(comp, "surface_id", "left")
         .withColumn("cluster", F.coalesce("component", "surface_id"))
@@ -942,7 +1022,7 @@ def incremental_canonicalize(
     # a cluster adopts the minimum existing entity any member matched
     cluster_adopt = (
         novel_assigned.join(
-            adopt, novel_assigned.surface_id == adopt.n_sid, "left"
+            adopt, novel_assigned.surface_id == adopt.a, "left"
         )
         .groupBy("cluster")
         .agg(F.min("adopted").alias("cluster_entity"))
@@ -964,7 +1044,6 @@ def incremental_canonicalize(
     ).cache()
     new_surf.unpersist()
     novel.unpersist()
-    nsigs.unpersist()
     return updated_sm, nodes_from_surface_map(updated_sm, anchor_weights)
 
 
@@ -1010,21 +1089,13 @@ def compact_canonicalize(
     identical to ``canonicalize`` (the LSH + CC path is the scale-proven
     one); id_map is one extra groupBy over the surface map.
     """
-    surf = surface_map.select(
-        "surface", "type", "n_mentions", "surface_id",
-        F.col("entity_id").alias("old_entity_id"),
-    ).cache()
-    fuzzy = surf.filter(F.col("type").isin(*fuzzy_types))
-    sigs = surface_signatures(
-        fuzzy.select("surface_id", "type", "surface")
-    ).cache()
-    pairs = candidate_pairs(sigs)
-    comp = connected_components(pairs)
-    new_sm = (
-        surf.join(comp, "surface_id", "left")
-        .withColumn("entity_id", F.coalesce("component", "surface_id"))
-        .drop("component")
-    ).cache()
+    new_sm = _entity_map(
+        surface_map.select(
+            "surface", "type", "n_mentions", "surface_id",
+            F.col("entity_id").alias("old_entity_id"),
+        ),
+        fuzzy_types,
+    )
     id_map = (
         new_sm.groupBy("old_entity_id")
         .agg(
@@ -1033,13 +1104,6 @@ def compact_canonicalize(
         )
     ).cache()
     n_split = id_map.filter(F.col("n_new") > 1).count()
-    # the count above materialized new_sm's and id_map's caches; the
-    # intermediate surf/sigs caches are no longer needed (mirrors
-    # incremental_canonicalize's unpersist discipline — a maintenance job
-    # that leaks cached blocks every cycle degrades the executors it is
-    # meant to keep healthy)
-    surf.unpersist()
-    sigs.unpersist()
     if n_split:
         id_map.unpersist()
         new_sm.unpersist()

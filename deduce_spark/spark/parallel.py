@@ -1,4 +1,5 @@
-"""Scale-adaptive input fan-out for CPU-heavy stages.
+"""Scale-adaptive input fan-out for CPU-heavy stages, and the hot-bucket
+cap every bucketed self-join applies before it goes quadratic.
 
 A parquet fixture written as one row group yields a ONE-partition scan no
 matter how small ``spark.sql.files.maxPartitionBytes`` is (row groups do
@@ -78,3 +79,30 @@ def fan_out(
     if key is not None:
         return df.repartition(target, F.col(key))
     return df.repartition(target)
+
+
+def cap_buckets(df: DataFrame, keys: list[str], max_size: int) -> DataFrame:
+    """Drop whole every ``keys`` group of ``df`` with more than ``max_size``
+    rows (deterministic: a group is kept or dropped entirely).
+
+    A bucket with B members costs B²/2 rows in the self-join that follows,
+    so one hot bucket — boilerplate text, template dates, a degenerate
+    embedding region — can dominate the whole stage at scale.
+
+    The cap is a map-combinable count per group, the OVER-cap keys, and a
+    broadcast ``left_anti`` join of ``df`` against them.  It is not a
+    window keyed on the bucket: a window materializes each hot bucket
+    (sorted) on one task before filtering it, the very straggler the cap
+    exists to prevent.  The over-cap side is the broadcast side because it
+    is small by construction (at most ``n / max_size`` keys, none on
+    healthy data); the under-cap key set is as large as the input.
+
+    ``df`` is read twice (count and join): callers pass a cached frame when
+    it is expensive to recompute.  The output lists ``keys`` first."""
+    hot = (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("bucket_size"))
+        .filter(F.col("bucket_size") > max_size)
+        .select(*keys)
+    )
+    return df.join(F.broadcast(hot), keys, "left_anti")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from deduce_spark.spark.parallel import fan_out
+from deduce_spark.spark.parallel import cap_buckets, fan_out
 
 N_PLANES = 16
 
@@ -388,29 +388,17 @@ def lsh_topk(
     same-bucket candidates from every LSH table.
 
     Buckets above ``max_bucket`` are dropped whole before the self-join
-    (same cap as ``kg.candidate_pairs`` / ``dedup.minhash_dedup``): a
-    degenerate bucket — e.g. the all-zero region of a skewed embedding
-    distribution — would otherwise emit B² candidate rows.  Vectors in a
-    dropped bucket usually still meet in another of the ``n_tables``
-    independent tables, so recall degrades gracefully."""
+    (:func:`deduce_spark.spark.parallel.cap_buckets`), e.g. the all-zero
+    region of a skewed embedding distribution.  Vectors in a dropped
+    bucket usually still meet in another of the ``n_tables`` independent
+    tables, so recall degrades gracefully."""
     # eagerly cached: the hot-bucket count and both self-join sides would
-    # otherwise concurrently recompute the Python bucketing stage (see
-    # dedup.minhash_dedup)
+    # otherwise concurrently recompute the Python bucketing stage
     buckets = hyperplane_buckets(
         vectors, id_col, vec_col, dim, n_planes, n_tables
     ).cache()
     buckets.count()
-    # map-combinable bucket-size cap (see dedup.minhash_dedup): anti-join
-    # the few OVER-cap buckets away; no window keyed on the raw bucket
-    hot_buckets = (
-        buckets.groupBy("table_idx", "bucket")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .filter(F.col("bucket_size") > max_bucket)
-        .select("table_idx", "bucket")
-    )
-    buckets = buckets.join(
-        F.broadcast(hot_buckets), ["table_idx", "bucket"], "left_anti"
-    )
+    buckets = cap_buckets(buckets, ["table_idx", "bucket"], max_bucket)
     l, r = buckets.alias("l"), buckets.alias("r")
     cand = (
         l.join(
@@ -563,16 +551,8 @@ def semantic_dedup(
             "v", lambda x: F.floor(x * F.lit(float(PAIR_QUANT))).cast("long")
         ).alias("q"),
     )
-    # map-combinable cluster-size cap (see dedup.minhash_dedup): anti-join
-    # the few OVER-cap cluster ids away; no window keyed on the raw cid
-    hot_cids = (
-        assigned.groupBy("cid")
-        .agg(F.count(F.lit(1)).alias("csize"))
-        .filter(F.col("csize") > max_cluster)
-        .select("cid")
-    )
     members = (
-        assigned.join(F.broadcast(hot_cids), "cid", "left_anti")
+        cap_buckets(assigned, ["cid"], max_cluster)
         .join(qv, "vec_id")
         .select("cid", "vec_id", "q")
     )
@@ -601,6 +581,8 @@ def semantic_dedup(
         cluster_pairs, schema="a long, b long"
     )
     comp = connected_components(pairs, checkpoint=checkpoint)
+    # comp is materialized; the result no longer reads the assignment
+    assigned.unpersist()
     return (
         vectors.select(F.col(id_col).cast("long").alias("vec_id"))
         .join(comp, F.col("vec_id") == F.col("surface_id"), "left")

@@ -41,6 +41,35 @@ def test_candidate_pairs_merge_typo_variants(spark):
     assert all(3 not in p for p in pairs)
 
 
+@pytest.mark.parametrize("op, retained", [("canonicalize", 1), ("minhash_dedup", 0)])
+def test_lsh_ops_release_intermediate_caches(spark, op, retained):
+    """Input, signature and band caches are released once the components
+    exist; only the caches an operator hands back stay cached (the
+    surface map for canonicalize, nothing for minhash_dedup)."""
+    from deduce_spark.spark.dedup import minhash_dedup
+
+    names = ["jan de vries", "jan de vries", "jan de vriess", "piet jansen"]
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()  # a snapshot per call
+    if op == "canonicalize":
+        m = spark.createDataFrame(
+            [(n, "persoon") for n in names] + [("10 oktober 2018", "datum")],
+            ["text", "tag"],
+        )
+        surface_map, nodes = kg.canonicalize(m)
+        nodes.count()
+        surface_map.count()
+    else:
+        docs = spark.createDataFrame(
+            [(i, f"{n} woont in een huis") for i, n in enumerate(names)],
+            ["doc_id", "text"],
+        )
+        minhash_dedup(docs, threshold=0.5).count()
+    assert jsc.getPersistentRDDs().size() - before <= retained
+    if op == "canonicalize":
+        surface_map.unpersist()
+
+
 def test_connected_components_chain(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], ["a", "b"]

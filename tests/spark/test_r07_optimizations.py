@@ -20,14 +20,25 @@ class TestSignatureTiles:
     chunk)."""
 
     def test_minhash_tile_boundary_exact(self):
-        from deduce_spark.spark.dedup import (
-            _MAX_CHUNK_SHINGLES, _batch_minhash_sigs, minhash_sig,
-        )
+        from deduce_spark.spark.dedup import _word_shingles, minhash_sig
+        from deduce_spark.spark.kg import _MAX_CHUNK_SHINGLES, minhash_batch
 
         big = " ".join(f"w{i % 1009}" for i in range(_MAX_CHUNK_SHINGLES + 500))
         docs = ["short doc one", big, "short doc two", ""]
-        got = _batch_minhash_sigs(docs)
+        got = minhash_batch(_word_shingles(d) for d in docs)
         assert got == [minhash_sig(d) for d in docs]
+
+    def test_surface_sig_tile_boundary_exact(self):
+        # the char-3 shingler through the same kernel: many short surfaces
+        # fill several tiles, and one surface alone exceeds a tile
+        from deduce_spark.spark.kg import (
+            _MAX_CHUNK_SHINGLES, _shingle_hashes, minhash_batch, surface_sig,
+        )
+
+        surfs = [f"albert schweitzer ziekenhuis {i}" for i in range(400)]
+        surfs[200:200] = ["x" * (_MAX_CHUNK_SHINGLES + 500), "ab", ""]
+        got = minhash_batch(_shingle_hashes(s) for s in surfs)
+        assert got == [surface_sig(s) for s in surfs]
 
     def test_simhash_tile_boundary_exact(self):
         from deduce_spark.spark.dedup import (
@@ -66,6 +77,29 @@ class TestBucketCapPlanShape:
     """The bucket-size caps are groupBy counts + broadcast anti-joins now;
     a Window keyed on the raw bucket column would materialize each hot
     bucket (sorted) on one task — assert none sneaks back in."""
+
+    def test_minhash_lsh_plans_have_no_window(self, spark):
+        from deduce_spark.spark.dedup import minhash_dedup, minhash_signatures
+        from deduce_spark.spark.kg import candidate_pairs, surface_signatures
+
+        surf = spark.createDataFrame(
+            [(i, "PERSOON", f"jan de vries {i % 3}") for i in range(40)],
+            ["surface_id", "type", "surface"],
+        )
+        docs = spark.createDataFrame(
+            [(i, f"w{i} x y z common text") for i in range(40)],
+            ["doc_id", "text"],
+        )
+        for out in (
+            candidate_pairs(surface_signatures(surf)),
+            # minhash_dedup's own call; its result plan reads only the
+            # materialized components, checked as well
+            candidate_pairs(minhash_signatures(docs), min_jaccard=0.7,
+                            max_bucket=256, id_col="doc_id", key=None),
+            minhash_dedup(docs, threshold=0.5),
+        ):
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "Window" not in plan
 
     def test_simhash_plan_has_no_window(self, spark):
         from deduce_spark.spark.dedup import simhash_near_dupes

@@ -36,6 +36,19 @@ class TestBucketCaps:
         out2 = dedup.minhash_dedup(hot, threshold=0.5, max_bucket=512)
         assert {r["canonical_id"] for r in out2.collect()} == {0}
 
+    def test_candidate_pairs_hot_bucket_dropped(self, spark):
+        from deduce_spark.spark.kg import candidate_pairs, surface_signatures
+
+        # 20 surfaces with one string -> every band bucket holds all 20
+        surf = spark.range(20).select(
+            F.col("id").alias("surface_id"),
+            F.lit("PERSOON").alias("type"),
+            F.lit("jan de vries").alias("surface"),
+        )
+        sigs = surface_signatures(surf)
+        assert candidate_pairs(sigs, max_bucket=16).count() == 0
+        assert candidate_pairs(sigs, max_bucket=32).count() == 20 * 19 // 2
+
     def test_simhash_hot_bucket_dropped(self, spark):
         hot = spark.range(40).select(
             F.col("id").alias("doc_id"),
@@ -348,7 +361,7 @@ class TestSaltedSkewDefusal:
 class TestOversizedDocClamp:
     """max_doc_words bounds the minhash permute matrix against a single
     pathological document (round-4 judge task #6): the chunk bound in
-    _batch_minhash_sigs is across documents, so one multi-million-word doc
+    kg.minhash_batch is across documents, so one multi-million-word doc
     used to form one unbounded chunk."""
 
     def test_clamp_equals_signing_the_prefix(self, spark):
