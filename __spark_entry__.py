@@ -117,7 +117,6 @@ def _pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MENTIONS_CACHE: dict = {}
 _CANON_CACHE: dict = {}
-_LINK_BC_CACHE: dict = {}
 _TRIPLES_CACHE: dict = {}
 _COOC_CACHE: dict = {}
 
@@ -2237,15 +2236,11 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from deduce_spark.spark import kg
 
         _surface_map, nodes = _canon(spark, sf_dir)
-        link_bc = _LINK_BC_CACHE.get(id(spark))
-        if link_bc is None:
-            # build_link_dicts walks ~1M lookup phrases on the driver —
-            # one-time cost per session, like the engine broadcast
-            link_bc = spark.sparkContext.broadcast(
-                kg.build_link_dicts(_engine())
-            )
-            _LINK_BC_CACHE[id(spark)] = link_bc
-        scored = kg.link_scores(nodes, link_bc)
+        # the dictionaries (~686k phrases) are derived and broadcast once
+        # per session by kg.link_dicts_broadcast (the engine is a singleton)
+        scored = kg.link_scores(
+            nodes, kg.link_dicts_broadcast(spark, _engine())
+        )
         return (
             scored.groupBy("type", "link_evidence")
             .agg(

@@ -308,11 +308,11 @@ def _stage_b(
     from deduce_spark.spark import lineage as lin
     from deduce_spark.spark.iceberg_catalog import open_table
     from deduce_spark.spark.kg import (
-        build_link_dicts, canonicalize, link_scores, salted_repartition, triples,
+        canonicalize, link_dicts_broadcast, link_scores, salted_repartition,
+        triples,
     )
 
     t0 = time.monotonic()
-    link_bc = spark.sparkContext.broadcast(build_link_dicts(engine))
     mentions_all = mentions_table.read(spark)
     weights = None
     if anchors is not None:
@@ -320,29 +320,44 @@ def _stage_b(
 
         weights = anchor_surface_weights(anchors, mentions_all)
     surface_map, nodes = canonicalize(mentions_all, anchor_weights=weights)
-    nodes = link_scores(nodes, link_bc)
-    edges = triples(mentions_all, surface_map, with_cooccurrence=with_cooccurrence)
-    edges = salted_repartition(edges, spark.sparkContext.defaultParallelism)
-    # the surface map is the base an --incremental run folds new batches
-    # into (stable entity ids); persisted alongside nodes/edges
-    open_table(spark, str(out / "surface_map")).write(
-        surface_map, mode="overwrite", summary={"run_id": run_id, "stage": "kg"}
-    )
-    if weights is not None:
-        # persisted so --incremental folds and maintain_kg compactions
-        # keep the anchor-voted canonical forms instead of reverting to
-        # the bare mention-count argmax (a full rebuild refreshes it)
-        open_table(spark, str(out / "anchor_weights")).write(
-            weights, mode="overwrite",
+    # the surface map and triples' linked mentions stay cached until the
+    # last commit, and are released even if a commit fails
+    held_caches: list = [surface_map]
+    try:
+        nodes = link_scores(nodes, link_dicts_broadcast(spark, engine))
+        edges = triples(
+            mentions_all, surface_map, with_cooccurrence=with_cooccurrence,
+            caches=held_caches,
+        )
+        edges = salted_repartition(
+            edges, spark.sparkContext.defaultParallelism
+        )
+        # the surface map is the base an --incremental run folds new
+        # batches into (stable entity ids); persisted alongside nodes/edges
+        open_table(spark, str(out / "surface_map")).write(
+            surface_map, mode="overwrite",
             summary={"run_id": run_id, "stage": "kg"},
         )
-    nodes_man = open_table(spark, str(out / "nodes")).write(
-        nodes, mode="overwrite", summary={"run_id": run_id, "stage": "kg"}
-    )
-    edges_man = open_table(spark, str(out / "edges")).write(
-        edges, partition_by=("pred",), mode="overwrite",
-        summary={"run_id": run_id, "stage": "kg"},
-    )
+        if weights is not None:
+            # persisted so --incremental folds and maintain_kg
+            # compactions keep the anchor-voted canonical forms instead of
+            # reverting to the bare mention-count argmax (a full rebuild
+            # refreshes it)
+            open_table(spark, str(out / "anchor_weights")).write(
+                weights, mode="overwrite",
+                summary={"run_id": run_id, "stage": "kg"},
+            )
+        nodes_man = open_table(spark, str(out / "nodes")).write(
+            nodes, mode="overwrite",
+            summary={"run_id": run_id, "stage": "kg"},
+        )
+        edges_man = open_table(spark, str(out / "edges")).write(
+            edges, partition_by=("pred",), mode="overwrite",
+            summary={"run_id": run_id, "stage": "kg"},
+        )
+    finally:
+        for frame in held_caches:
+            frame.unpersist()
     wall = time.monotonic() - t0
     log.append(
         [
@@ -385,7 +400,7 @@ def _stage_b_incremental(
     from deduce_spark.spark import lineage as lin
     from deduce_spark.spark.iceberg_catalog import open_table
     from deduce_spark.spark.kg import (
-        build_link_dicts, incremental_canonicalize, link_scores,
+        incremental_canonicalize, link_dicts_broadcast, link_scores,
         salted_repartition, surfaces, triples,
     )
 
@@ -400,31 +415,38 @@ def _stage_b_incremental(
     updated_sm, nodes = incremental_canonicalize(
         new_mentions, existing_sm, anchor_weights=anchor_weights
     )
-    link_bc = spark.sparkContext.broadcast(build_link_dicts(engine))
-    nodes = link_scores(nodes, link_bc)
+    # as in _stage_b: released after the last commit, or on failure
+    held_caches: list = [updated_sm]
+    try:
+        nodes = link_scores(nodes, link_dicts_broadcast(spark, engine))
 
-    # upsert only the touched surface rows (novel + count-merged)
-    touched = updated_sm.join(
-        surfaces(new_mentions).select("surface_id"), "surface_id", "left_semi"
-    )
-    sm_man = sm_table.upsert(
-        touched, keys=["surface_id"],
-        summary={"run_id": run_id, "stage": "kg_incremental"},
-    )
-    nodes_man = open_table(spark, str(out / "nodes")).write(
-        nodes, mode="overwrite",
-        summary={"run_id": run_id, "stage": "kg_incremental"},
-    )
-    edges_new = triples(
-        new_mentions, updated_sm, with_cooccurrence=with_cooccurrence
-    )
-    edges_new = salted_repartition(
-        edges_new, spark.sparkContext.defaultParallelism
-    )
-    edges_man = open_table(spark, str(out / "edges")).write(
-        edges_new, partition_by=("pred",), mode="append",
-        summary={"run_id": run_id, "stage": "kg_incremental"},
-    )
+        # upsert only the touched surface rows (novel + count-merged)
+        touched = updated_sm.join(
+            surfaces(new_mentions).select("surface_id"), "surface_id",
+            "left_semi",
+        )
+        sm_man = sm_table.upsert(
+            touched, keys=["surface_id"],
+            summary={"run_id": run_id, "stage": "kg_incremental"},
+        )
+        nodes_man = open_table(spark, str(out / "nodes")).write(
+            nodes, mode="overwrite",
+            summary={"run_id": run_id, "stage": "kg_incremental"},
+        )
+        edges_new = triples(
+            new_mentions, updated_sm, with_cooccurrence=with_cooccurrence,
+            caches=held_caches,
+        )
+        edges_new = salted_repartition(
+            edges_new, spark.sparkContext.defaultParallelism
+        )
+        edges_man = open_table(spark, str(out / "edges")).write(
+            edges_new, partition_by=("pred",), mode="append",
+            summary={"run_id": run_id, "stage": "kg_incremental"},
+        )
+    finally:
+        for frame in held_caches:
+            frame.unpersist()
     wall = time.monotonic() - t0
     log.append(
         [

@@ -50,8 +50,8 @@ def run_merge_compaction(spark, root: str, engine=None) -> dict:
     from deduce_spark.spark import lineage as lin
     from deduce_spark.spark.iceberg_catalog import open_table
     from deduce_spark.spark.kg import (
-        build_link_dicts, compact_canonicalize, link_scores, remap_triples,
-        salted_repartition,
+        compact_canonicalize, link_dicts_broadcast, link_scores,
+        remap_triples, salted_repartition,
     )
     from pyspark.sql import functions as F
 
@@ -86,8 +86,7 @@ def run_merge_compaction(spark, root: str, engine=None) -> dict:
         from deduce_spark.kernel.engine import Engine
 
         engine = Engine()
-    link_bc = spark.sparkContext.broadcast(build_link_dicts(engine))
-    new_nodes = link_scores(new_nodes, link_bc)
+    new_nodes = link_scores(new_nodes, link_dicts_broadcast(spark, engine))
 
     seq = log.next_seq()
     sm_man = sm_table.write(
