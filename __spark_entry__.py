@@ -1,14 +1,15 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)``   — flagship KG query on sf0.001.
-``queries()``      — one callable per implemented operator (SURVEY.md §2 +
-                     the training-data operators); each takes
-                     (spark, sf_dir) and returns a DataFrame.
-``oracle_sql()``   — DuckDB-runnable ANSI-SQL twins for every relationally
-                     expressible query (RE2-safe regexes only).  Queries
-                     without an entry here are non-SQL-expressible (full
-                     NLP pipeline, MinHash/LSH, stateful loops) and get the
-                     driver's rows-only check.
+``queries()``      — the 50 scored queries, one per operator family
+                     (SURVEY.md §2 + the training-data operators); each
+                     takes (spark, sf_dir) and returns a DataFrame.
+``oracle_sql()``   — one DuckDB oracle per scored query: ANSI SQL
+                     (RE2-safe regexes only), or a parquet_scan of the
+                     committed golden fixture for the non-SQL-expressible
+                     ones (NLP pipeline, MinHash/LSH, stateful loops).
+``demoted_queries()`` / ``demoted_oracle_sql()`` — the same for the four
+                     unscored queries after the scored 50 (_QUERY_NAMES).
 
 Column names/aliases are kept identical between the Spark and SQL forms —
 the driver's value-hash compare sorts columns by name.
@@ -22,7 +23,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _REPO = Path(__file__).resolve().parent
 _PAGES_CACHE = _REPO / "data" / "pages"
@@ -30,17 +30,6 @@ _PAGES_CACHE = _REPO / "data" / "pages"
 _ENGINE = None
 _PIPELINE = None
 
-# RE2/Java-portable regexes shared verbatim between the Spark queries and
-# the DuckDB oracles (no lookaround — RE2 has none)
-_DATE_PAT = (
-    r"\b\d{1,2}[-/ ](?:januari|februari|maart|april|mei|juni|juli|augustus"
-    r"|september|oktober|november|december|jan|feb|mrt|apr|jun|jul|aug|sep"
-    r"|okt|nov|dec|\d{1,2})[-/ ]\d{4}\b"
-)
-_URL_PAT = (
-    r"https?://[-a-zA-Z0-9@:%._+~#=]{1,256}"
-    r"\.[a-z]{2,6}[-a-zA-Z0-9@:%_+.~#?&/=]*"
-)
 # deterministic date/url-bearing text derived from doc_id — identical SQL
 # expression evaluated by Spark and DuckDB (STRING is a VARCHAR alias in
 # DuckDB; ||, CASE and % are portable)
@@ -57,10 +46,6 @@ _ID_TEXT_SQL = (
     "'dossier ' || CAST(100000000 + doc_id AS STRING)"
     " || ' en nota ' || CAST(7000000 + doc_id % 1000 AS STRING)"
 )
-_EMAIL_TEXT_SQL = (
-    "'mail user' || CAST(doc_id AS STRING)"
-    " || '@voorbeeld' || CAST(doc_id % 9 AS STRING) || '.nl verzonden'"
-)
 # derived domain with a deliberate 50%-hot key (skew-handling demo)
 _DOMAIN_SQL = (
     "CASE WHEN doc_id % 2 = 0 THEN 'hot.example.nl'"
@@ -74,11 +59,6 @@ _BSN_TEXT_SQL = (
 # short name-like strings where single-edit pairs (transposition, insert,
 # delete) actually occur across doc_ids
 _NAME_TEXT_SQL = "'naam' || CAST(doc_id % 60 AS STRING)"
-_POSTAL_TEXT_SQL = (
-    "'Adres: Straatweg ' || CAST(doc_id % 200 + 1 AS STRING) || ', '"
-    " || CAST(1000 + doc_id % 9000 AS STRING)"
-    " || CASE WHEN doc_id % 4 = 0 THEN ' AB' ELSE 'CD' END || ' te Stad'"
-)
 _PHONE_TEXT_SQL = (
     "'bel 06-' || CAST(10000000 + doc_id % 89999999 AS STRING)"
     " || ' of 010 ' || CAST(1000000 + doc_id % 8999999 AS STRING)"
@@ -115,12 +95,6 @@ def _pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(str(path))
 
 
-_MENTIONS_CACHE: dict = {}
-_CANON_CACHE: dict = {}
-_TRIPLES_CACHE: dict = {}
-_COOC_CACHE: dict = {}
-
-
 def _mentions_fingerprint() -> str:
     """Content hash over everything that determines the mentions table:
     annotator kernel, page fixture generator, and the Spark annotate stage.
@@ -145,7 +119,6 @@ def _mv_write(df: DataFrame, target: Path, partitions: int) -> None:
     same directory — one could read it mid-overwrite (ADVICE r3 #4).
     rename is atomic within one filesystem; losing the race just discards
     the tmp copy and adopts the winner's identical-content MV."""
-    import os
     import shutil
     import uuid
 
@@ -181,144 +154,106 @@ def _mv_write(df: DataFrame, target: Path, partitions: int) -> None:
                 raise
 
 
-def _mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _build_mentions(spark: SparkSession, sf_dir: str) -> dict:
     """Long-format mentions over the pages fixture, shared by every kg_*
-    query — the materialized-view pattern a production pipeline uses
-    (annotate once, many consumers).  Two cache tiers:
-
-    1. on-disk parquet MV under data/mv/, keyed by a CONTENT FINGERPRINT of
-       the kernel + fixture + stage code — survives across driver sessions,
-       so repeated bench/correctness runs skip the (CPU-bound) annotate
-       entirely; a kernel change invalidates the key and re-annotates.
-       This is the small-scale analogue of the production pattern: the
-       mentions table is an IceTable the cluster job maintains
-       incrementally, consumers read it instead of re-running annotate.
-    2. in-session .cache() so the 5 kg_* consumers share one scan.
-
-    Spans only: text/redaction columns are not materialized here."""
-    key = (id(spark), sf_dir)
-    df = _MENTIONS_CACHE.get(key)
-    if df is None:
-        mv = (
-            Path(__file__).resolve().parent
-            / "data" / "mv"
-            / f"{Path(sf_dir).name}-{_mentions_fingerprint()}"
-            / "mentions.parquet"
+    query (annotate once, many consumers).  Spans only: text/redaction
+    columns are not materialized here."""
+    pipe = _pipeline(spark)
+    pages = _pages_df(spark, sf_dir)
+    return {"mentions": pipe.mentions_long(
+        pipe.annotate_pages(
+            pages, lang="nl", with_text=False, with_redacted=False
         )
-        # _SUCCESS gates against a session killed mid-write: a partial MV
-        # directory must trigger a rewrite, not be read as the full table
-        if not (mv / "_SUCCESS").exists():
-            pipe = _pipeline(spark)
-            pages = _pages_df(spark, sf_dir)
-            _mv_write(
-                pipe.mentions_long(
-                    pipe.annotate_pages(
-                        pages, lang="nl", with_text=False, with_redacted=False
-                    )
-                ),
-                mv,
-                partitions=8,
-            )
-        # no in-session .cache(): building the InMemoryRelation costs ~3x a
-        # warm parquet scan of this MV (measured 0.50 s build vs 0.18 s
-        # scan at sf0.1) and the headline bench scans it once — repeat
-        # consumers in a correctness sweep pay ~0.2 s/scan either way
-        df = spark.read.parquet(str(mv))
-        _MENTIONS_CACHE[key] = df
-    return df
+    )}
 
 
-def _canon(spark: SparkSession, sf_dir: str):
-    """(surface_map, nodes) for the shared mentions table — disk-MV'd next
-    to the mentions parquet (same content fingerprint): the LSH banding +
-    signature verify + connected components over ~100k distinct surfaces is
-    pure CPU that repeated driver sessions should not redo."""
+def _build_canon(spark: SparkSession, sf_dir: str) -> dict:
+    """(surface_map, nodes) from ONE kg.canonicalize: the LSH banding +
+    signature verify + connected components over ~100k distinct surfaces
+    is pure CPU that repeated driver sessions should not redo."""
     from deduce_spark.spark import kg
 
-    key = (id(spark), sf_dir)
-    pair = _CANON_CACHE.get(key)
-    if pair is None:
-        mv = (
-            Path(__file__).resolve().parent
-            / "data" / "mv"
-            / f"{Path(sf_dir).name}-{_mentions_fingerprint()}"
-        )
-        smap_p, nodes_p = mv / "surface_map.parquet", mv / "nodes.parquet"
-        if not ((smap_p / "_SUCCESS").exists() and (nodes_p / "_SUCCESS").exists()):
-            surface_map, nodes = kg.canonicalize(_mentions(spark, sf_dir))
-            _mv_write(surface_map, smap_p, partitions=4)
-            _mv_write(nodes, nodes_p, partitions=4)
-        pair = (
-            spark.read.parquet(str(smap_p)).cache(),
-            spark.read.parquet(str(nodes_p)).cache(),
-        )
-        _CANON_CACHE[key] = pair
-    return pair
+    surface_map, nodes = kg.canonicalize(_mv(spark, sf_dir, "mentions"))
+    return {"surface_map": surface_map, "nodes": nodes}
 
 
-def _triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full (subj, pred, obj, url, warc_ts) triple table, disk-MV'd under
-    the same content fingerprint as the mentions/canon MVs.  Five kg_*
+def _build_triples(spark: SparkSession, sf_dir: str) -> dict:
+    """Full (subj, pred, obj, url, warc_ts) triple table.  Five kg_*
     queries consume it (by-pred counts, degree histogram, top
-    co-occurrence, PageRank, triangles) — without this MV each one redid
-    the broadcast link + 5-way fanout; with it the kg family shares one
-    parquet scan.  Production analogue: the triples IceTable the cluster
-    job maintains incrementally (jobs/build_kg.py stage C)."""
-    key = (id(spark), sf_dir)
-    df = _TRIPLES_CACHE.get(key)
-    if df is None:
-        from deduce_spark.spark import kg
+    co-occurrence, PageRank, triangles); without the MV each one redid
+    the broadcast link + 5-way fanout.  Production analogue: the triples
+    IceTable the cluster job maintains incrementally (jobs/build_kg.py
+    stage C)."""
+    from deduce_spark.spark import kg
 
-        mv = (
-            Path(__file__).resolve().parent
-            / "data" / "mv"
-            / f"{Path(sf_dir).name}-{_mentions_fingerprint()}"
-            / "triples.parquet"
+    return {"triples": kg.triples(
+        _mv(spark, sf_dir, "mentions"), _mv(spark, sf_dir, "surface_map")
+    )}
+
+
+def _build_cooc_edges(spark: SparkSession, sf_dir: str) -> dict:
+    """Distinct undirected co-occurrence edge list (a<b, long ids), so the
+    iterative consumers (PageRank's ~12 joins per run, triangle counting)
+    scan a 2-column parquet instead of re-running filter+distinct over the
+    full triple table each session."""
+    return {"cooc_edges": (
+        _mv(spark, sf_dir, "triples")
+        .filter(F.col("pred") == "coOccursWith")
+        .select(
+            F.col("subj").cast("long").alias("a"),
+            F.col("obj").cast("long").alias("b"),
         )
-        if not (mv / "_SUCCESS").exists():
-            mentions = _mentions(spark, sf_dir)
-            surface_map, _nodes = _canon(spark, sf_dir)
-            _mv_write(kg.triples(mentions, surface_map), mv, partitions=8)
-        # no in-session .cache(): materializing the InMemoryRelation took
-        # 2.08 s for the 69 MB sf0.1 MV while a warm parquet scan is
-        # 0.2-0.35 s — the cache build was the entire kg_triples_by_pred
-        # timed cost, and even a 4-consumer correctness sweep breaks even
-        # on raw scans.  _cooc_edges (the iterated PageRank input) keeps
-        # its cache.
-        df = spark.read.parquet(str(mv))
-        _TRIPLES_CACHE[key] = df
-    return df
+        .distinct()
+    )}
 
 
-def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct undirected co-occurrence edge list (a<b, long ids) derived
-    from the triples MV — materialized separately so the iterative
-    consumers (PageRank's ~12 joins per run, triangle counting) scan a
-    2-column parquet instead of re-running filter+distinct over the full
-    triple table each session."""
-    key = (id(spark), sf_dir)
-    df = _COOC_CACHE.get(key)
+# MV table -> (builder, write partitions, in-session .cache() on read).
+# A builder returns every table it derives (surface_map and nodes share
+# one canonicalize); only the tables missing _SUCCESS are written.
+# mentions and triples are NOT cached: building the InMemoryRelation costs
+# more than the warm parquet scans it saves (mentions 0.50 s build vs
+# 0.18 s scan at sf0.1; triples 2.08 s for the 69 MB sf0.1 MV vs a
+# 0.2-0.35 s scan, which was the entire kg_triples_by_pred timed cost).
+# cooc_edges is cached for the iterated PageRank input.
+_MV_TABLES = {
+    "mentions": (_build_mentions, 8, False),
+    "surface_map": (_build_canon, 4, True),
+    "nodes": (_build_canon, 4, True),
+    "triples": (_build_triples, 8, False),
+    "cooc_edges": (_build_cooc_edges, 4, True),
+}
+_MV_ROOT = _REPO / "data" / "mv"
+_MV_MEMO: dict = {}
+
+
+def _mv(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """One materialized view of the kg_* family — the materialized-view
+    pattern a production pipeline uses.  Two cache tiers:
+
+    1. on-disk parquet under data/mv/<sf>-<fingerprint>/<table>.parquet,
+       keyed by a CONTENT FINGERPRINT of the kernel + fixture + stage code
+       — survives across driver sessions, so repeated bench/correctness
+       runs skip the (CPU-bound) annotate and canonicalize entirely; a
+       kernel change invalidates the key and rebuilds.
+    2. an in-session memo per (session, sf, table), so the kg_* consumers
+       share one DataFrame (``.cache()``d where _MV_TABLES says so)."""
+    key = (id(spark), sf_dir, table)
+    df = _MV_MEMO.get(key)
     if df is None:
-        mv = (
-            Path(__file__).resolve().parent
-            / "data" / "mv"
-            / f"{Path(sf_dir).name}-{_mentions_fingerprint()}"
-            / "cooc_edges.parquet"
-        )
-        if not (mv / "_SUCCESS").exists():
-            _mv_write(
-                _triples(spark, sf_dir)
-                .filter(F.col("pred") == "coOccursWith")
-                .select(
-                    F.col("subj").cast("long").alias("a"),
-                    F.col("obj").cast("long").alias("b"),
-                )
-                .distinct(),
-                mv,
-                partitions=4,
-            )
-        df = spark.read.parquet(str(mv)).cache()
-        _COOC_CACHE[key] = df
+        base = _MV_ROOT / f"{Path(sf_dir).name}-{_mentions_fingerprint()}"
+        path = base / f"{table}.parquet"
+        # _SUCCESS gates against a session killed mid-write: a partial MV
+        # directory must trigger a rewrite, not be read as the full table
+        if not (path / "_SUCCESS").exists():
+            build = _MV_TABLES[table][0]
+            for name, built in build(spark, sf_dir).items():
+                target = base / f"{name}.parquet"
+                if not (target / "_SUCCESS").exists():
+                    _mv_write(built, target, partitions=_MV_TABLES[name][1])
+        df = spark.read.parquet(str(path))
+        if _MV_TABLES[table][2]:
+            df = df.cache()
+        _MV_MEMO[key] = df
     return df
 
 
@@ -333,7 +268,7 @@ def _emb(spark, sf_dir):
 def _link_pages(spark, sf_dir):
     """Synthetic crawl pages (url, html binary) derived from doc_id with
     the same expression both engines — shared by link_graph_indegree and
-    anchor_text_by_host.  The HTML exercises every href form a crawl
+    kcore_link_hosts.  The HTML exercises every href form a crawl
     sees: absolute, scheme-relative (//), absolute-path (/about),
     dotted-relative (../w) — plus the three attribute quoting forms
     (double-quoted, single-quoted, unquoted) and a spaced `HREF = "..."`.
@@ -394,7 +329,7 @@ def entry(spark: SparkSession) -> DataFrame:
     canonicalize, emit triples, count per predicate/type."""
     sf_dir = "/root/testdata/sf0.001"
     return (
-        _triples(spark, sf_dir).groupBy("pred")
+        _mv(spark, sf_dir, "triples").groupBy("pred")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("pred")
     )
@@ -404,11 +339,13 @@ def entry(spark: SparkSession) -> DataFrame:
 # queries
 # ---------------------------------------------------------------------------
 
-# Dict-insertion order matters: the driver scores at most the FIRST 50
-# queries of queries()/oracle_sql().  North-star KG pipelines, sketches and
-# media decoders come first; the most redundant relational/regex twins sit
-# in the unscored tail (still runnable/oracled, just not driver-scored).
-_QUERY_ORDER = [
+# The one ordered name list.  The driver scores the FIRST 50 queries of
+# queries()/oracle_sql(), so order matters: North-star KG pipelines,
+# sketches and media decoders come first.  The names after the first 50
+# are unscored: bench.py / bench_extra.py time the first three in their
+# HEADLINE, tests/spark/test_plans.py pins doc_scan_filter's lang pushdown,
+# and tests/spark/test_entry.py checks each against its DuckDB twin.
+_QUERY_NAMES = [
     # knowledge-graph construction pipeline (golden-fixture oracles)
     "kg_mentions_by_tag", "kg_triples_by_pred", "kg_anchor_canon",
     "kg_link_scores",
@@ -417,19 +354,14 @@ _QUERY_ORDER = [
     # dedup / similarity sketches (golden-fixture oracles)
     "minhash_dedup_docs", "simhash_pairs_docs", "lsh_topk_embeddings",
     "ivf_topk_embeddings", "winnow_fingerprints",
-    # multimodal (golden-fixture oracles; resize + image_stats twins in
-    # demoted — the family stays scored via probe + audio_stats)
+    # multimodal (golden-fixture oracles)
     "media_probe", "media_audio_stats",
-    # dedup / similarity (brute embed_cosine/embed_topk/exact_dedup
-    # twins in demoted — the family stays scored via minhash/simhash/
-    # lsh/ivf + the round-6 semantic_dedup scale path)
+    # dedup / similarity (semantic_dedup is the scale path)
     "semantic_dedup_embeddings", "ngram_jaccard",
-    # crawl-source layer (round-6 session 2): WARC archive parity and
-    # robots policy on the driver's board; gzip/sitemap/recrawl/delta/
-    # pmi/page_meta twins in demoted
+    # crawl-source layer: WARC archive parity and robots policy
     "warc_roundtrip_files", "robots_policy_urls",
     # text analysis / curation / retrieval (doc_textstats = tokens+quality
-    # +lang+md5 fingerprint in ONE scan; individual forms in demoted)
+    # +lang+md5 fingerprint in ONE scan)
     "doc_textstats", "word_freq_topk", "para_dedup_docs", "doc_repetition",
     "decontam_overlap_docs", "sample_per_lang", "token_budget_mix_docs",
     "corpus_filter_docs", "split_assign_docs", "distinctive_terms_by_lang",
@@ -439,78 +371,29 @@ _QUERY_ORDER = [
     "substr_dup_docs", "url_canonical_hosts", "link_graph_indegree",
     "kcore_link_hosts",
     # kernel stages exposed relationally (regex_annotators = A2 identifier
-    # + A5 phone union; per-pattern twins pinned in demoted_queries)
+    # + A5 phone union)
     "tokenize_t1", "mentions_gap_merge", "fuzzy_name_pairs", "bsn_elfproef",
     "regex_annotators",
     # relational checklist (§2.6) — one scored member per distinct family
-    # (plain agg / set-op / rollup / pivot twins live in demoted)
     "events_sessionize", "events_asof_purchase", "domain_counts_salted",
     "events_funnel", "lineitem_percentiles", "acctbal_deciles",
+    # unscored: bench-only, then the scan-pushdown probe
+    "tpch_q3ish", "tpch_q1", "embed_topk", "doc_scan_filter",
 ]
-
-# Redundant relational/regex twins of scored queries, demoted out of the
-# driver's 50-query scoring window so CORRECTNESS_r{N} covers 100% of
-# queries().  Every entry stays pytest-pinned: tests/spark/test_entry.py
-# sweeps demoted_queries() vs demoted_oracle_sql() with the same
-# rows+schema+values compare the driver uses.
-_DEMOTED_ORDER = [
-    # merged into doc_textstats (single-scan form)
-    "doc_scan_filter", "doc_token_count", "doc_quality", "doc_lang_id",
-    "doc_fingerprint",
-    # merged into regex_annotators
-    "regex_identifiers", "regex_phone",
-    # regex family twins (pattern variants of regex_annotators)
-    "regex_emails", "regex_dates", "regex_urls", "regex_postal",
-    "events_regex_extract",
-    # relational twins of scored join/agg/window queries (tpch_q1 /
-    # bucket_except / orders_rollup / events_pivot rotated out in round 6
-    # to put round-5 operator families on the driver's board)
-    "tpch_q3ish", "brand_volume", "nation_supplier_stats", "cust_no_orders",
-    "brands_traded_semi", "events_moving_avg", "orders_above_cust_avg",
-    "events_value_buckets", "orders_daily_delta", "events_hourly",
-    "segment_top_customers", "tpch_q1", "bucket_except", "orders_rollup",
-    "events_pivot",
-    # similarity / media twins rotated out in round 6 (families stay
-    # scored via lsh/ivf/semantic and probe/audio; media_resize and the
-    # brute cosine baseline rotated out in session 2 to put the WARC +
-    # robots crawl-source family on the driver's board)
-    "embed_hash_docs", "media_image_stats", "embed_topk", "exact_dedup",
-    "media_resize", "embed_cosine_dedup",
-    # round-5 breadth additions not in the scored window (bm25/bloom/cms/
-    # funnel/kcore/bpe representatives rotated INTO the window in round 6)
-    "heavy_hitter_words", "jaccard_prefix_pairs", "pack_sequences_docs",
-    "anchor_text_by_host", "hits_link_hosts", "lm_quality_score",
-    "hll_words_by_lang", "doclen_log2_hist", "lpa_link_hosts",
-    "events_cohort_retention", "bfs_link_hosts",
-    # round-6 additions
-    "dsir_weights_docs", "frontier_waves_hosts", "boilerplate_clean_hosts",
-    "warc_gzip_roundtrip_files", "recrawl_schedule_urls",
-    "pmi_collocations_docs", "crawl_delta_snapshots", "sitemap_locs_hosts",
-    "page_meta_docs", "normalize_text_docs", "dedup_best_rep_docs",
-    "robots_crawl_delays",
-]
-
-
-def _reorder(d: dict) -> dict:
-    """Rewrite dict insertion order to _QUERY_ORDER (unknown keys keep
-    their relative order at the end; missing keys are skipped)."""
-    out = {k: d[k] for k in _QUERY_ORDER if k in d}
-    out.update({k: v for k, v in d.items() if k not in out})
-    return out
+_N_SCORED = 50
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Exactly 50 scored queries (the driver caps scoring at 50) — one per
-    distinct operator family; redundant twins live in demoted_queries()."""
+    distinct operator family."""
     q = _all_queries()
-    return _reorder({k: v for k, v in q.items() if k not in _DEMOTED_ORDER})
+    return {k: q[k] for k in _QUERY_NAMES[:_N_SCORED]}
 
 
 def demoted_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Redundant twins kept out of the driver's 50-query window; swept by
-    tests/spark/test_entry.py with the driver's own compare."""
+    """The unscored queries after the scored 50."""
     q = _all_queries()
-    return {k: q[k] for k in _DEMOTED_ORDER}
+    return {k: q[k] for k in _QUERY_NAMES[_N_SCORED:]}
 
 
 def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -528,13 +411,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["doc_scan_filter"] = doc_scan_filter
 
-    def doc_token_count(spark, sf_dir):
-        from deduce_spark.spark.textstats import token_count
-
-        return token_count(_docs(spark, sf_dir)).orderBy("doc_id")
-
-    q["doc_token_count"] = doc_token_count
-
     def word_freq_topk(spark, sf_dir):
         return (
             _docs(spark, sf_dir)
@@ -547,28 +423,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["word_freq_topk"] = word_freq_topk
-
-    def exact_dedup(spark, sf_dir):
-        from deduce_spark.spark.dedup import exact_duplicates
-
-        return exact_duplicates(_docs(spark, sf_dir)).orderBy("canonical_id")
-
-    q["exact_dedup"] = exact_dedup
-
-    def embed_cosine_dedup(spark, sf_dir):
-        # embedding-cosine near-dup pairs (brute-force baseline; LSH-bucketed
-        # scale path is lsh_topk_embeddings).  All-native: zip_with/aggregate
-        # dot products in double precision, no UDF.  tau=0.35 sits 2.9e-5
-        # away from the nearest pair on this data — no float-boundary risk
-        # vs the DuckDB oracle.  The O(n²) join is GATED inside
-        # brute_cosine_pairs (raises above max_rows, pointing at lsh/ivf).
-        from deduce_spark.spark.similarity import brute_cosine_pairs
-
-        return brute_cosine_pairs(_emb(spark, sf_dir), tau=0.35).orderBy(
-            "a_id", "b_id"
-        )
-
-    q["embed_cosine_dedup"] = embed_cosine_dedup
 
     def semantic_dedup_embeddings(spark, sf_dir):
         # SemDeDup-style semantic near-dup removal (Abbas et al. 2023):
@@ -586,31 +440,9 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["semantic_dedup_embeddings"] = semantic_dedup_embeddings
 
-    def doc_quality(spark, sf_dir):
-        from deduce_spark.spark.textstats import quality_score
-
-        return quality_score(_docs(spark, sf_dir)).orderBy("doc_id")
-
-    q["doc_quality"] = doc_quality
-
-    def doc_lang_id(spark, sf_dir):
-        from deduce_spark.spark.textstats import lang_id
-
-        return lang_id(_docs(spark, sf_dir)).orderBy("doc_id")
-
-    q["doc_lang_id"] = doc_lang_id
-
-    def doc_fingerprint(spark, sf_dir):
-        from deduce_spark.spark.textstats import fingerprint_md5
-
-        return fingerprint_md5(_docs(spark, sf_dir)).orderBy("doc_id")
-
-    q["doc_fingerprint"] = doc_fingerprint
-
     def doc_textstats(spark, sf_dir):
         # tokens + quality + lang-id + md5 fingerprint fused into ONE
-        # parquet scan / one codegen span (the scored form; the four
-        # individual queries above are pinned in demoted_queries())
+        # parquet scan / one codegen span
         from deduce_spark.spark.textstats import textstats_all
 
         return textstats_all(_docs(spark, sf_dir)).orderBy("doc_id")
@@ -726,36 +558,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["hll_words_registers"] = hll_words_registers
 
-    def heavy_hitter_words(spark, sf_dir):
-        # EXACT phi-heavy-hitter items via Misra-Gries sketch-then-verify
-        # (sketches.heavy_hitters): per-partition MG candidates (state and
-        # shuffle hard-bounded at k rows per partition regardless of
-        # vocabulary size) + broadcast-semi-join exact verify, so the
-        # output is the exact >= 2-permille set independent of
-        # partitioning.  The item column salts 30% of tokens with
-        # doc_id % 97 variants (the raw testdata vocabulary is only 31
-        # words, all heavy) so the candidate pruning genuinely exercises:
-        # ~2.6k distinct items, 30 true heavy hitters.
-        from deduce_spark.spark.sketches import heavy_hitters
-
-        items = (
-            _docs(spark, sf_dir)
-            .select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-            .select(
-                F.when(F.col("doc_id") % 10 < 7, F.col("word"))
-                .otherwise(
-                    F.concat(
-                        F.col("word"), F.lit("_"),
-                        (F.col("doc_id") % 97).cast("string"),
-                    )
-                )
-                .alias("item")
-            )
-        )
-        return heavy_hitters(items, "item", phi_permille=2)
-
-    q["heavy_hitter_words"] = heavy_hitter_words
-
     def substr_dup_docs(spark, sf_dir):
         # exact-substring duplication accounting (Lee et al. 2022 shape):
         # strided 50-char grams, md5-keyed two-shuffle detection — the
@@ -826,29 +628,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["link_graph_indegree"] = link_graph_indegree
 
-    def anchor_text_by_host(spark, sf_dir):
-        # anchor-text aggregation per destination host — the classic
-        # entity-naming evidence a KG pipeline collects ("what does the
-        # web call this page?").  Whole-tag regex keeps each href paired
-        # with ITS anchor text; same resolve/canonicalize chain as
-        # link_graph_indegree over the shared _link_pages fixture.
-        from deduce_spark.spark.weburl import extract_anchors, url_host
-
-        anchors = extract_anchors(
-            _link_pages(spark, sf_dir), "html", "url", canonical=True
-        )
-        return (
-            anchors.withColumn("dst_host", url_host(F.col("dst_url")))
-            .groupBy("dst_host", "anchor")
-            .agg(
-                F.count(F.lit(1)).alias("n_links"),
-                F.countDistinct("dst_url").alias("n_pages"),
-            )
-            .orderBy("dst_host", "anchor")
-        )
-
-    q["anchor_text_by_host"] = anchor_text_by_host
-
     def bm25_topk_docs(spark, sf_dir):
         # exact-integer BM25 retrieval (rational idf/length form — every
         # step int64, so both engines score bit-identically); one corpus
@@ -905,89 +684,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["bloom_decontam_words"] = bloom_decontam_words
 
-    def hits_link_hosts(spark, sf_dir):
-        # integer-quantized HITS (hub/authority) over the host-level link
-        # graph — crawl seed-ranking next to pagerank; fixed 2 rounds of
-        # max-norm half-steps unroll into joins both engines replay
-        # bit-identically (webgraph.hits_scores docstring)
-        from deduce_spark.spark.webgraph import hits_scores
-        from deduce_spark.spark.weburl import extract_links, url_host
-
-        edges = extract_links(
-            _link_pages(spark, sf_dir), "html", "url", canonical=True
-        )
-        host_edges = edges.select(
-            url_host(F.col("src_url")).alias("src"),
-            url_host(F.col("dst_url")).alias("dst"),
-        )
-        return hits_scores(host_edges, iters=2).orderBy("node")
-
-    q["hits_link_hosts"] = hits_link_hosts
-
-    def lm_quality_score(spark, sf_dir):
-        # CCNet-style LM quality bucketing: exact-integer bigram bit-cost
-        # of every document against a model trained on a reference slice
-        # (doc_id % 7 == 0 stands in for CCNet's curated corpus); lower
-        # ppl_millibits = closer to the reference distribution
-        from deduce_spark.spark.lmscore import bigram_lm_score
-
-        docs = _docs(spark, sf_dir)
-        return bigram_lm_score(docs, docs.filter(F.col("doc_id") % 7 == 0))
-
-    q["lm_quality_score"] = lm_quality_score
-
-    def dsir_weights_docs(spark, sf_dir):
-        # DSIR importance weights (Xie et al. 2023): hashed-bigram
-        # bucket models for a trusted target slice (doc_id % 5 == 0
-        # stands in for the curated corpus) vs the raw pool; Q10
-        # fixed-point log-ratio weight per doc, exact both engines
-        from deduce_spark.spark.dsir import dsir_weights
-
-        docs = _docs(spark, sf_dir)
-        return dsir_weights(docs, docs.filter(F.col("doc_id") % 5 == 0))
-
-    q["dsir_weights_docs"] = dsir_weights_docs
-
-    def frontier_waves_hosts(spark, sf_dir):
-        # politeness-scheduled crawl-frontier waves: every host fetches
-        # at most per_host_cap urls per wave; skew-safe two-phase rank
-        # (hot hosts fan out over 256 hash buckets, no single-task
-        # per-host window) — the scheduler feeding S5's page source
-        from deduce_spark.spark.weburl import frontier_waves
-
-        urls = _link_pages(spark, sf_dir).select("url")
-        return frontier_waves(urls, per_host_cap=50)
-
-    q["frontier_waves_hosts"] = frontier_waves_hosts
-
-    def boilerplate_clean_hosts(spark, sf_dir):
-        # per-host boilerplate stripping (CCNet/trafilatura template
-        # removal): nav/footer lines shared by >=30% of a host's pages
-        # are removed; the 1/3-frequency PROMO line sits right at the
-        # bar and the %11 trailing newline exercises empty-line
-        # semantics (kept: 91 permille < 300)
-        from deduce_spark.spark.textstats import remove_boilerplate
-
-        h = (F.col("doc_id") % 7).cast("string")
-        pages = _docs(spark, sf_dir).select(
-            "doc_id",
-            F.concat(F.lit("h"), h).alias("host"),
-            F.concat(
-                F.lit("NAV menu h"), h, F.lit("\n"),
-                F.when(F.col("doc_id") % 3 == 0, F.lit("PROMO subscribe\n"))
-                .otherwise(F.lit("")),
-                F.col("text"),
-                F.lit("\nCOPYRIGHT h"), h,
-                F.when(F.col("doc_id") % 11 == 0, F.lit("\n"))
-                .otherwise(F.lit("")),
-            ).alias("text"),
-        )
-        return remove_boilerplate(pages).select(
-            "doc_id", "host", "clean_text", "n_removed_lines"
-        )
-
-    q["boilerplate_clean_hosts"] = boilerplate_clean_hosts
-
     def _warc_pages(spark, sf_dir):
         # Bodies exercise the three parse landmines: empty (%101),
         # containing the record magic (%53 — length-delimited parsing
@@ -1021,50 +717,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["warc_roundtrip_files"] = warc_roundtrip_files
 
-    def warc_gzip_roundtrip_files(spark, sf_dir):
-        # the same pages through the .warc.gz layout: one deterministic
-        # gzip MEMBER per record, auto-detected by the parser.  Member
-        # byte lengths are not SQL-expressible, so the oracle pins the
-        # content-addressed columns; the member-tiling invariant is
-        # pytest-pinned (test_warc.py)
-        from deduce_spark.spark.warc import pack_warc_files, parse_warc_records
-
-        return (
-            parse_warc_records(
-                pack_warc_files(
-                    _warc_pages(spark, sf_dir), n_files=8, compress=True
-                )
-            )
-            .select("file_id", "url", "ts", "body_bytes", "body_md5")
-            .orderBy("url")
-        )
-
-    q["warc_gzip_roundtrip_files"] = warc_gzip_roundtrip_files
-
-    def recrawl_schedule_urls(spark, sf_dir):
-        # adaptive-revisit (AIMD) crawl scheduling over synthetic fetch
-        # histories: halve the revisit interval on change, double on
-        # no-change, clamped to [1000, 16000]; %5<2 flag density yields
-        # change runs (min clamp) AND no-change runs (max clamp), %47
-        # the empty-history base case.  Per-row integer fold — zero
-        # shuffle; feeds frontier_waves
-        from deduce_spark.spark.weburl import recrawl_schedule
-
-        d = F.col("doc_id")
-        hist = _docs(spark, sf_dir).select(
-            F.concat(F.lit("https://w"), (d % 9).cast("string"),
-                     F.lit(".nl/p/"), d.cast("string")).alias("url"),
-            F.expr(
-                "CASE WHEN doc_id % 47 = 0 THEN CAST(array() AS ARRAY<INT>)"
-                " ELSE transform(sequence(1, CAST(doc_id % 6 + 1 AS INT)),"
-                " i -> CASE WHEN (doc_id * 31 + i) % 5 < 2"
-                " THEN 1 ELSE 0 END) END"
-            ).alias("changed_flags"),
-        )
-        return recrawl_schedule(hist).orderBy("url")
-
-    q["recrawl_schedule_urls"] = recrawl_schedule_urls
-
     def robots_policy_urls(spark, sf_dir):
         # robots.txt parse + RFC 9309 longest-prefix-match policy over
         # the crawl's url space: k%3==0 hosts disallow /p/ but allow
@@ -1097,173 +749,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["robots_policy_urls"] = robots_policy_urls
 
-    def pmi_collocations_docs(spark, sf_dir):
-        # Church & Hanks PMI collocations over the corpus — exact Q10
-        # fixed-point log2 terms (lmscore plog2 discipline), so both
-        # engines produce the identical integer ranking
-        from deduce_spark.spark.colloc import pmi_collocations
-
-        return pmi_collocations(_docs(spark, sf_dir), min_count=5, top_k=25)
-
-    q["pmi_collocations_docs"] = pmi_collocations_docs
-
-    def crawl_delta_snapshots(spark, sf_dir):
-        # two-snapshot crawl delta: %13 urls vanish (deleted), %7 texts
-        # get a content edit (changed), %17 urls appear under /new
-        # (added) — the change signal feeding recrawl_schedule
-        from deduce_spark.spark.weburl import crawl_delta
-
-        d = F.col("doc_id")
-        url = F.concat(F.lit("https://w"), (d % 9).cast("string"),
-                       F.lit(".nl/p/"), d.cast("string"))
-        docs = _docs(spark, sf_dir)
-        old = docs.select(url.alias("url"), F.md5("text").alias("digest"))
-        new = docs.filter(d % 13 != 0).select(
-            url.alias("url"),
-            F.md5(
-                F.when(d % 7 == 0, F.concat(F.col("text"), F.lit("x")))
-                .otherwise(F.col("text"))
-            ).alias("digest"),
-        ).unionAll(
-            docs.filter(d % 17 == 0).select(
-                F.concat(url, F.lit("/new")).alias("url"),
-                F.md5("text").alias("digest"),
-            )
-        )
-        return crawl_delta(old, new).orderBy("url")
-
-    q["crawl_delta_snapshots"] = crawl_delta_snapshots
-
-    def sitemap_locs_hosts(spark, sf_dir):
-        # sitemap XML discovery source: block-level <url> extraction
-        # keeps each loc paired with ITS optional lastmod; whitespace-
-        # padded locs trimmed, %4 docs add a second lastmod-free entry
-        from deduce_spark.spark.weburl import parse_sitemap
-
-        d = F.col("doc_id")
-        k = (d % 9).cast("string")
-        sm = _docs(spark, sf_dir).select(
-            F.concat(F.lit("h"), k).alias("host"),
-            F.concat(
-                F.lit("<urlset><url><loc> https://s"), k,
-                F.lit(".nl/a/"), d.cast("string"),
-                F.lit(" </loc><lastmod>2026-08-0"),
-                ((d % 9) + 1).cast("string"),
-                F.lit("</lastmod></url>"),
-                F.when(d % 4 == 0, F.concat(
-                    F.lit("<url>\n<loc>https://s"), k, F.lit(".nl/b/"),
-                    d.cast("string"), F.lit("</loc>\n</url>")))
-                .otherwise(F.lit("")),
-                F.lit("</urlset>"),
-            ).alias("sitemap_xml"),
-        )
-        return parse_sitemap(sm).select(
-            "host", "loc", F.coalesce("lastmod", F.lit("")).alias("lastmod")
-        ).orderBy("host", "loc")
-
-    q["sitemap_locs_hosts"] = sitemap_locs_hosts
-
-    def page_meta_docs(spark, sf_dir):
-        # title / meta-description / h1 extraction (page-level naming
-        # evidence complementing anchor text): %3 docs carry a meta
-        # description, %5 an h1, all titles whitespace-padded
-        from deduce_spark.spark.weburl import extract_page_meta
-
-        d = F.col("doc_id")
-        pages = _docs(spark, sf_dir).select(
-            F.concat(F.lit("https://w"), (d % 9).cast("string"),
-                     F.lit(".nl/p/"), d.cast("string")).alias("url"),
-            F.concat(
-                F.lit("<html><head><title> Doc  "), d.cast("string"),
-                F.lit(" </title>"),
-                F.when(d % 3 == 0, F.concat(
-                    F.lit('<meta name="description" content="summary '),
-                    (d % 7).cast("string"), F.lit('">')))
-                .otherwise(F.lit("")),
-                F.lit("</head><body>"),
-                F.when(d % 5 == 0, F.concat(
-                    F.lit("<h1>H"), (d % 11).cast("string"),
-                    F.lit("</h1>"))).otherwise(F.lit("")),
-                F.lit("</body></html>"),
-            ).alias("html"),
-        )
-        m = extract_page_meta(pages)
-        return m.select(
-            "url", "title",
-            F.coalesce("meta_description", F.lit("")).alias(
-                "meta_description"
-            ),
-            F.coalesce("h1", F.lit("")).alias("h1"),
-        ).orderBy("url")
-
-    q["page_meta_docs"] = page_meta_docs
-
-    def normalize_text_docs(spark, sf_dir):
-        # unicode normalization before dedup: %4 docs get a decomposed
-        # accent (NFC composes it), %5 docs curly quotes + NBSP (the
-        # fold table); changed flags the rows normalization altered
-        from deduce_spark.spark.normtext import normalize_text
-
-        d = F.col("doc_id")
-        src = _docs(spark, sf_dir).select(
-            "doc_id",
-            F.concat(
-                F.col("text"),
-                F.when(d % 4 == 0, F.lit(" café"))
-                .otherwise(F.lit("")),
-                F.when(d % 5 == 0,
-                       F.lit(" “q” x"))
-                .otherwise(F.lit("")),
-            ).alias("text"),
-        )
-        return normalize_text(src).orderBy("doc_id")
-
-    q["normalize_text_docs"] = normalize_text_docs
-
-    def dedup_best_rep_docs(spark, sf_dir):
-        # quality-aware cluster representatives: highest n_chars wins,
-        # ties fall back to the min-id convention — the keep-the-best
-        # step after any dedup pass
-        from deduce_spark.spark.dedup import select_representatives
-
-        d = F.col("doc_id")
-        docs = _docs(spark, sf_dir)
-        clusters = docs.select("doc_id", (d % 50).alias("canonical_id"))
-        scores = docs.select("doc_id", F.col("n_chars").alias("score"))
-        return select_representatives(clusters, scores).orderBy(
-            "canonical_id"
-        )
-
-    q["dedup_best_rep_docs"] = dedup_best_rep_docs
-
-    def robots_crawl_delays(spark, sf_dir):
-        # Crawl-delay directive -> exact-millisecond per-(host, agent)
-        # pacing: k%3==1 hosts exercise fractional seconds + a second
-        # agent group, k%3==2 hosts have no '*' group at all
-        from deduce_spark.spark.weburl import crawl_delays
-
-        k = F.col("k")
-        robots = (
-            _docs(spark, sf_dir)
-            .select((F.col("doc_id") % 9).alias("k")).distinct()
-            .select(
-                F.concat(F.lit("src"), k.cast("string"),
-                         F.lit(".nl")).alias("host"),
-                F.when(k % 3 == 0, F.concat(
-                    F.lit("User-agent: *\nCrawl-delay: "),
-                    (k + 1).cast("string"), F.lit("\nDisallow: /p/")))
-                .when(k % 3 == 1, F.concat(
-                    F.lit("User-agent: *\nCrawl-delay: 0."),
-                    k.cast("string"),
-                    F.lit("5\nUser-agent: slow\nCrawl-delay: 9")))
-                .otherwise(F.lit("User-agent: slow\nCrawl-delay: 4"))
-                .alias("robots_txt"),
-            )
-        )
-        return crawl_delays(robots).orderBy("host", "agent")
-
-    q["robots_crawl_delays"] = robots_crawl_delays
-
     def kcore_link_hosts(spark, sf_dir):
         # bounded-round k-core peel of the host link graph (link-farm /
         # template-core curation signal next to pagerank/HITS); fixed
@@ -1281,42 +766,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return kcore_peel(host_edges, k=2, rounds=2)
 
     q["kcore_link_hosts"] = kcore_link_hosts
-
-    def lpa_link_hosts(spark, sf_dir):
-        # synchronous min-tie-break label propagation on the host graph
-        # (mirror-cluster / template-family detection); fixed rounds
-        # unroll into joins + per-node window ranks both engines replay
-        from deduce_spark.spark.webgraph import label_propagation
-        from deduce_spark.spark.weburl import extract_links, url_host
-
-        edges = extract_links(
-            _link_pages(spark, sf_dir), "html", "url", canonical=True
-        )
-        host_edges = edges.select(
-            url_host(F.col("src_url")).alias("src"),
-            url_host(F.col("dst_url")).alias("dst"),
-        )
-        return label_propagation(host_edges, rounds=2)
-
-    q["lpa_link_hosts"] = lpa_link_hosts
-
-    def bfs_link_hosts(spark, sf_dir):
-        # minimum link distance from crawl seeds within a fixed hop
-        # budget — the frontier-depth signal (seed-proximity ranking,
-        # focused-crawl cutoffs); same fixed-round unroll as kcore/lpa
-        from deduce_spark.spark.webgraph import bfs_layers
-        from deduce_spark.spark.weburl import extract_links, url_host
-
-        edges = extract_links(
-            _link_pages(spark, sf_dir), "html", "url", canonical=True
-        )
-        host_edges = edges.select(
-            url_host(F.col("src_url")).alias("src"),
-            url_host(F.col("dst_url")).alias("dst"),
-        )
-        return bfs_layers(host_edges, ["src0.nl", "src1.nl"], rounds=2)
-
-    q["bfs_link_hosts"] = bfs_link_hosts
 
     def bpe_token_counts_docs(spark, sf_dir):
         # apply a FIXED learned BPE merge table (tokenizer-application
@@ -1346,17 +795,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["events_funnel"] = events_funnel
 
-    def events_cohort_retention(spark, sf_dir):
-        # cohort retention triangle over 3-day periods on a thinned log
-        from deduce_spark.spark.relational import cohort_retention
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        return cohort_retention(
-            ev.filter(F.col("event_id") % 37 == 0), period_s=259200
-        )
-
-    q["events_cohort_retention"] = events_cohort_retention
-
     def cms_word_counts(spark, sf_dir):
         # Count-Min point-frequency sketch (the 4th mergeable-sketch
         # family next to HLL/Bloom/Misra-Gries): grid over every corpus
@@ -1381,52 +819,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["cms_word_counts"] = cms_word_counts
 
-    def hll_words_by_lang(spark, sf_dir):
-        # sharded approx-distinct: one independent HLL register set per
-        # lang (the distinct-X-per-key workhorse); mergeable per group
-        from deduce_spark.spark.sketches import hll_registers
-
-        words = (
-            _docs(spark, sf_dir)
-            .select("lang", F.explode(F.split("text", " ")).alias("word"))
-            .filter(F.col("word") != "")
-        )
-        return hll_registers(
-            words, "word", p=6, group_cols=("lang",)
-        ).orderBy("lang", "bucket")
-
-    q["hll_words_by_lang"] = hll_words_by_lang
-
-    def doclen_log2_hist(spark, sf_dir):
-        # power-of-two doc-length histogram per lang — the mergeable
-        # distribution sketch (<= ~64 buckets/group at any corpus size)
-        from deduce_spark.spark.sketches import log2_histogram
-
-        return log2_histogram(
-            _docs(spark, sf_dir), "n_chars", group_cols=("lang",)
-        ).orderBy("lang", "bucket")
-
-    q["doclen_log2_hist"] = doclen_log2_hist
-
-    def embed_hash_docs(spark, sf_dir):
-        # hashing-trick document embeddings (no vocab, no training, no
-        # UDF) — exploded to long format so DuckDB replays the exact
-        # buckets; the dense array<float> form feeds cosine/lsh/ivf topk
-        from deduce_spark.spark.similarity import feature_hash_embed
-
-        emb = feature_hash_embed(_docs(spark, sf_dir))
-        return (
-            emb.select("doc_id", F.posexplode("embedding").alias("bucket", "v"))
-            .select(
-                "doc_id",
-                F.col("bucket").cast("long").alias("bucket"),
-                F.col("v").cast("long").alias("val"),
-            )
-            .orderBy("doc_id", "bucket")
-        )
-
-    q["embed_hash_docs"] = embed_hash_docs
-
     def ngram_jaccard(spark, sf_dir):
         from deduce_spark.spark.dedup import ngram_jaccard_pairs
 
@@ -1436,36 +828,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).orderBy("a", "b")
 
     q["ngram_jaccard"] = ngram_jaccard
-
-    def jaccard_prefix_pairs(spark, sf_dir):
-        # EXACT prefix-filtered set-similarity self-join — the scale path
-        # for ngram_jaccard: only each doc's rarest-gram prefix generates
-        # candidates (hot grams never do), then exact verification over
-        # candidates only; the output SET is identical to the all-pairs
-        # form by the AllPairs/PPJoin prefix lemma (dedup.py docstring).
-        from deduce_spark.spark.dedup import jaccard_join_prefix
-
-        out = jaccard_join_prefix(
-            _docs(spark, sf_dir), n=3, threshold_permille=200
-        )
-        return out.orderBy("a", "b")
-
-    q["jaccard_prefix_pairs"] = jaccard_prefix_pairs
-
-    def pack_sequences_docs(spark, sf_dir):
-        # deterministic concat-and-split sequence packing (doc -> training
-        # pack assignment): two-phase exact global prefix sum over the
-        # md5 hash order (256-way parallel running sums + driver-side
-        # offsets, exact_ntile discipline), integer pack arithmetic
-        from deduce_spark.spark.curation import pack_sequences
-
-        docs = _docs(spark, sf_dir).select(
-            "doc_id",
-            F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
-        )
-        return pack_sequences(docs, seq_len=512)
-
-    q["pack_sequences_docs"] = pack_sequences_docs
 
     def embed_topk(spark, sf_dir):
         from deduce_spark.spark.similarity import cosine_topk
@@ -1500,32 +862,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["events_sessionize"] = events_sessionize
-
-    def events_hourly(spark, sf_dir):
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        return (
-            ev.groupBy(
-                F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-                "event_type",
-            )
-            .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-            .orderBy("hour", "event_type")
-        )
-
-    q["events_hourly"] = events_hourly
-
-    def events_regex_extract(spark, sf_dir):
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        return (
-            ev.select(
-                "event_id",
-                F.regexp_extract(F.col("props"), r'"k": (\d+)', 1).cast("int").alias("k"),
-            )
-            .filter(F.col("k") > 50)
-            .orderBy("event_id")
-        )
-
-    q["events_regex_extract"] = events_regex_extract
 
     def tpch_q1(spark, sf_dir):
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -1571,126 +907,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["tpch_q3ish"] = tpch_q3ish
 
-    def segment_top_customers(spark, sf_dir):
-        from pyspark.sql import Window
-
-        cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        spend = (
-            orders.groupBy("o_custkey")
-            .agg(F.round(F.sum("o_totalprice"), 2).alias("total_spend"))
-            .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        )
-        w = Window.partitionBy("c_mktsegment").orderBy(
-            F.desc("total_spend"), F.asc("c_custkey")
-        )
-        return (
-            spend.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= 3)
-            .select("c_mktsegment", "rank", "c_custkey", "total_spend")
-            .orderBy("c_mktsegment", "rank")
-        )
-
-    q["segment_top_customers"] = segment_top_customers
-
-    def brand_volume(spark, sf_dir):
-        part = spark.read.parquet(f"{sf_dir}/part.parquet")
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        return (
-            li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-            .groupBy("p_brand")
-            .agg(
-                F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-                F.count(F.lit(1)).alias("n_lines"),
-            )
-            .orderBy("p_brand")
-        )
-
-    q["brand_volume"] = brand_volume
-
-    def nation_supplier_stats(spark, sf_dir):
-        sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-        nat = spark.read.parquet(f"{sf_dir}/nation.parquet")
-        reg = spark.read.parquet(f"{sf_dir}/region.parquet")
-        return (
-            sup.join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-            .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-            .groupBy("r_name", "n_name")
-            .agg(
-                F.count(F.lit(1)).alias("n_suppliers"),
-                F.round(F.avg("s_acctbal"), 2).alias("avg_acctbal"),
-            )
-            .orderBy("r_name", "n_name")
-        )
-
-    q["nation_supplier_stats"] = nation_supplier_stats
-
-    def cust_no_orders(spark, sf_dir):
-        # anti join: customers with no URGENT order (the unfiltered variant
-        # is vacuous on this data — every customer has orders)
-        cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        return (
-            cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
-            .select("c_custkey", "c_name", "c_mktsegment")
-            .orderBy("c_custkey")
-        )
-
-    q["cust_no_orders"] = cust_no_orders
-
-    def brands_traded_semi(spark, sf_dir):
-        # semi join: brands with at least one traded part
-        part = spark.read.parquet(f"{sf_dir}/part.parquet")
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        return (
-            part.join(li, part.p_partkey == li.l_partkey, "left_semi")
-            .groupBy("p_brand")
-            .agg(F.count(F.lit(1)).alias("n_parts"))
-            .orderBy("p_brand")
-        )
-
-    q["brands_traded_semi"] = brands_traded_semi
-
-    def orders_rollup(spark, sf_dir):
-        # rollup: (status, priority) -> status subtotal -> grand total
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        return (
-            orders.rollup("o_orderstatus", "o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-            )
-            .select(
-                F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-                F.coalesce("o_orderpriority", F.lit("ALL")).alias("priority"),
-                "n_orders",
-                "total_price",
-            )
-            .orderBy("status", "priority")
-        )
-
-    q["orders_rollup"] = orders_rollup
-
-    def events_moving_avg(spark, sf_dir):
-        # 3-row moving average per user (deterministic tie-break on event_id)
-        from pyspark.sql import Window
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy("ts", "event_id")
-            .rowsBetween(-2, 0)
-        )
-        return ev.select(
-            "event_id",
-            "user_id",
-            F.round(F.avg("value").over(w), 4).alias("mov_avg_3"),
-        ).orderBy("event_id")
-
-    q["events_moving_avg"] = events_moving_avg
-
     def acctbal_deciles(spark, sf_dir):
         # global NTILE(10) semantics WITHOUT the global sort: range-bucket
         # + broadcast prefix offsets + arithmetic tile index
@@ -1716,25 +932,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
     q["acctbal_deciles"] = acctbal_deciles
-
-    def orders_above_cust_avg(spark, sf_dir):
-        # self-agg join: orders 1.5x above their own customer's average
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        avg_per_cust = orders.groupBy("o_custkey").agg(
-            F.avg("o_totalprice").alias("cust_avg")
-        )
-        return (
-            orders.join(avg_per_cust, "o_custkey")
-            .filter(F.col("o_totalprice") > 1.5 * F.col("cust_avg"))
-            .select(
-                "o_orderkey",
-                "o_custkey",
-                F.round("o_totalprice", 2).alias("totalprice"),
-            )
-            .orderBy("o_orderkey")
-        )
-
-    q["orders_above_cust_avg"] = orders_above_cust_avg
 
     def events_asof_purchase(spark, sf_dir):
         # as-of join: each click gets the user's most recent STRICTLY prior
@@ -1819,94 +1016,10 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["lineitem_percentiles"] = lineitem_percentiles
 
-    def events_value_buckets(spark, sf_dir):
-        # broadcast range join onto a generated bucket-bounds dim
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        buckets = spark.range(0, 10).select(
-            (F.col("id") * 10).alias("lo"), ((F.col("id") + 1) * 10).alias("hi")
-        )
-        return (
-            ev.join(
-                F.broadcast(buckets),
-                (ev.value >= F.col("lo")) & (ev.value < F.col("hi")),
-            )
-            .groupBy("lo", "hi")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.sum("value"), 2).alias("total_value"),
-            )
-            .orderBy("lo")
-        )
-
-    q["events_value_buckets"] = events_value_buckets
-
-    def events_pivot(spark, sf_dir):
-        # pivot: event counts per user bucket x event type (explicit value
-        # list keeps the output schema static — required at scale, where a
-        # dynamic pivot would need an extra distinct pass)
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        types = ["click", "error", "purchase", "signup", "view"]
-        pivoted = (
-            ev.withColumn("user_bucket", (F.col("user_id") % 10).cast("long"))
-            .groupBy("user_bucket")
-            .pivot("event_type", types)
-            .agg(F.count(F.lit(1)))
-        )
-        # pivot yields NULL for empty (bucket, type) combos while the
-        # oracle's COUNT(*) FILTER yields 0 — coalesce for sparse-data parity
-        return pivoted.select(
-            "user_bucket",
-            *[F.coalesce(F.col(t), F.lit(0)).alias(t) for t in types],
-        ).orderBy("user_bucket")
-
-    q["events_pivot"] = events_pivot
-
-    def bucket_except(spark, sf_dir):
-        # set difference (EXCEPT/subtract + distinct): doc_id buckets hit by
-        # even docs minus buckets hit by multiples of 26.  Derived from
-        # doc_id so the result is non-vacuous and stable at every sf (the
-        # testdata languages share one vocabulary, so a word-level set
-        # difference is always empty).
-        d = _docs(spark, sf_dir)
-        evens = (
-            d.filter(F.col("doc_id") % 2 == 0)
-            .select((F.col("doc_id") % 13).alias("bucket"))
-            .distinct()
-        )
-        mult26 = (
-            d.filter(F.col("doc_id") % 26 == 0)
-            .select((F.col("doc_id") % 13).alias("bucket"))
-            .distinct()
-        )
-        return evens.subtract(mult26).orderBy("bucket")
-
-    q["bucket_except"] = bucket_except
-
-    def orders_daily_delta(spark, sf_dir):
-        # lag family: day-over-day revenue delta per order date
-        from pyspark.sql import Window
-
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        daily = orders.groupBy("o_orderdate").agg(
-            F.sum("o_totalprice").alias("rev")
-        )
-        w = Window.orderBy("o_orderdate")
-        return (
-            daily.withColumn("prev", F.lag("rev").over(w))
-            .select(
-                "o_orderdate",
-                F.round("rev", 2).alias("revenue"),
-                F.round(F.col("rev") - F.col("prev"), 2).alias("delta"),
-            )
-            .orderBy("o_orderdate")
-        )
-
-    q["orders_daily_delta"] = orders_daily_delta
-
     # -- annotator families over documents (RE2-safe regex; oracled) ------
 
     def regex_identifiers(spark, sf_dir):
-        # identifier annotator semantics (7+ digit runs), relational form;
+        # (helper of regex_annotators) identifier annotator semantics (7+ digit runs), relational form;
         # text derived from doc_id (testdata documents are digit-free)
         d = _docs(spark, sf_dir)
         return (
@@ -1919,63 +1032,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             .orderBy("doc_id", "id_text")
         )
-
-    q["regex_identifiers"] = regex_identifiers
-
-    def regex_emails(spark, sf_dir):
-        # email annotator pattern (deduce/base_config.json email regex
-        # family), over doc_id-derived text (testdata has no emails)
-        pat = r"[-a-zA-Z0-9:%._\+~#=]{1,256}@[-a-zA-Z0-9:%._\+~#=]{1,256}\.(?:com|net|org|co|us|uk|nl|be|fr|sp|gov|nu)"
-        d = _docs(spark, sf_dir)
-        return (
-            d.select("doc_id", F.expr(_EMAIL_TEXT_SQL).alias("t"))
-            .select(
-                "doc_id",
-                F.explode(
-                    F.regexp_extract_all(F.col("t"), F.lit(pat), 0)
-                ).alias("email"),
-            )
-            .orderBy("doc_id", "email")
-        )
-
-    q["regex_emails"] = regex_emails
-
-    def regex_dates(spark, sf_dir):
-        # dmy date shapes per the reference's date_dmy annotators
-        # (deduce/base_config.json:401-452), RE2/Java-portable subset.
-        # The testdata documents are date-free word salad, so the text is
-        # derived deterministically from doc_id with the SAME expression
-        # in the oracle — non-vacuous extraction with nonzero matches.
-        d = _docs(spark, sf_dir)
-        return (
-            d.select("doc_id", F.expr(_DERIVED_TEXT_SQL).alias("t"))
-            .select(
-                "doc_id",
-                F.explode(
-                    F.regexp_extract_all(F.col("t"), F.lit(_DATE_PAT), 0)
-                ).alias("date_text"),
-            )
-            .orderBy("doc_id", "date_text")
-        )
-
-    q["regex_dates"] = regex_dates
-
-    def regex_urls(spark, sf_dir):
-        # url annotator semantics (deduce/base_config.json:515-532),
-        # RE2/Java-portable subset; derived text as in regex_dates
-        d = _docs(spark, sf_dir)
-        return (
-            d.select("doc_id", F.expr(_DERIVED_TEXT_SQL).alias("t"))
-            .select(
-                "doc_id",
-                F.explode(
-                    F.regexp_extract_all(F.col("t"), F.lit(_URL_PAT), 0)
-                ).alias("url_text"),
-            )
-            .orderBy("doc_id", "url_text")
-        )
-
-    q["regex_urls"] = regex_urls
 
     def bsn_elfproef(spark, sf_dir):
         # A4 BsnAnnotator semantics (reference deduce/annotator.py:597-651):
@@ -2004,26 +1060,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["bsn_elfproef"] = bsn_elfproef
 
-    def regex_postal(spark, sf_dir):
-        # postal_code annotator family (A2), RE2-portable subset
-        d = _docs(spark, sf_dir)
-        return (
-            d.select("doc_id", F.expr(_POSTAL_TEXT_SQL).alias("t"))
-            .select(
-                "doc_id",
-                F.explode(
-                    F.regexp_extract_all(
-                        F.col("t"), F.lit(r"\b\d{4} ?[A-Z]{2}\b"), 0
-                    )
-                ).alias("postal"),
-            )
-            .orderBy("doc_id", "postal")
-        )
-
-    q["regex_postal"] = regex_postal
-
     def regex_phone(spark, sf_dir):
-        # phone annotator family (A5, reference deduce/annotator.py:654-722),
+        # (helper of regex_annotators) phone annotator family (A5, reference deduce/annotator.py:654-722),
         # RE2-portable subset: NL 0-prefixed numbers with one optional
         # hyphen/space separator
         d = _docs(spark, sf_dir)
@@ -2040,12 +1078,10 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .orderBy("doc_id", "phone")
         )
 
-    q["regex_phone"] = regex_phone
-
     def regex_annotators(spark, sf_dir):
         # A2 identifier + A5 phone annotator families in one scored query
-        # (union with a `kind` discriminator; the per-pattern twins are
-        # pinned individually in demoted_queries()).  Reference:
+        # (union with a `kind` discriminator over the two per-pattern
+        # helpers above).  Reference:
         # deduce/annotator.py:654-722 (phone), base_config.json identifier.
         ids = regex_identifiers(spark, sf_dir).select(
             "doc_id",
@@ -2161,7 +1197,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def kg_mentions_by_tag(spark, sf_dir):
         return (
-            _mentions(spark, sf_dir)
+            _mv(spark, sf_dir, "mentions")
             .groupBy("tag")
             .agg(F.count(F.lit(1)).alias("n"))
             .orderBy("tag")
@@ -2171,7 +1207,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def kg_triples_by_pred(spark, sf_dir):
         return (
-            _triples(spark, sf_dir)
+            _mv(spark, sf_dir, "triples")
             .groupBy("pred")
             .agg(F.count(F.lit(1)).alias("n"))
             .orderBy("pred")
@@ -2192,8 +1228,9 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from deduce_spark.spark import kg
         from deduce_spark.spark.weburl import extract_anchors
 
-        m = _mentions(spark, sf_dir)
-        surface_map, nodes = _canon(spark, sf_dir)
+        m = _mv(spark, sf_dir, "mentions")
+        surface_map = _mv(spark, sf_dir, "surface_map")
+        nodes = _mv(spark, sf_dir, "nodes")
         pers = m.filter(kg.node_type(F.col("tag")) == "PERSOON").filter(
             F.pmod(F.xxhash64("text"), F.lit(7)) == 0
         )
@@ -2235,7 +1272,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # dictionaries (north_star stage; no reference counterpart)
         from deduce_spark.spark import kg
 
-        _surface_map, nodes = _canon(spark, sf_dir)
+        nodes = _mv(spark, sf_dir, "nodes")
         # the dictionaries (~686k phrases) are derived and broadcast once
         # per session by kg.link_dicts_broadcast (the engine is a singleton)
         scored = kg.link_scores(
@@ -2256,7 +1293,9 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # degree distribution over the coOccursWith graph: how many distinct
         # neighbours each entity has, histogrammed (graph-analytics surface
         # over the triple table).  Reads the triples MV (2-col pruned scan).
-        cooc = _triples(spark, sf_dir).filter(F.col("pred") == "coOccursWith")
+        cooc = _mv(spark, sf_dir, "triples").filter(
+            F.col("pred") == "coOccursWith"
+        )
         sym = cooc.select(F.col("subj").alias("e"), F.col("obj").alias("n")).union(
             cooc.select(F.col("obj").alias("e"), F.col("subj").alias("n"))
         )
@@ -2272,8 +1311,10 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def kg_top_cooccurrence(spark, sf_dir):
         # strongest co-occurring entity pairs (by #pages), with canonical
         # forms attached via broadcast join against the nodes table
-        _surface_map, nodes = _canon(spark, sf_dir)
-        cooc = _triples(spark, sf_dir).filter(F.col("pred") == "coOccursWith")
+        nodes = _mv(spark, sf_dir, "nodes")
+        cooc = _mv(spark, sf_dir, "triples").filter(
+            F.col("pred") == "coOccursWith"
+        )
         top = (
             cooc.groupBy("subj", "obj")
             .agg(F.count(F.lit(1)).alias("n_pages"))
@@ -2303,7 +1344,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # which is what lets a golden fixture value-oracle it
         from deduce_spark.spark import kg
 
-        pr = kg.pagerank_quantized(_cooc_edges(spark, sf_dir))
+        pr = kg.pagerank_quantized(_mv(spark, sf_dir, "cooc_edges"))
         return pr.orderBy(F.desc("rank"), "entity_id").limit(50)
 
     q["kg_pagerank"] = kg_pagerank
@@ -2312,7 +1353,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # hub-capped triangle count (graph-cohesion summary of the KG)
         from deduce_spark.spark import kg
 
-        return kg.triangle_count(_cooc_edges(spark, sf_dir), max_degree=64)
+        return kg.triangle_count(_mv(spark, sf_dir, "cooc_edges"), max_degree=64)
 
     q["kg_triangles"] = kg_triangles
 
@@ -2327,18 +1368,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return audio_stats(media).orderBy("media_id")
 
     q["media_audio_stats"] = media_audio_stats
-
-    def media_image_stats(spark, sf_dir):
-        # REAL uncompressed-BMP decode -> dimensions + exact integer
-        # channel means
-        from deduce_spark.spark.multimodal import image_stats, synthetic_media_real
-
-        media = synthetic_media_real(spark, 32).filter(
-            F.col("media_type") == "image/bmp"
-        )
-        return image_stats(media).orderBy("media_id")
-
-    q["media_image_stats"] = media_image_stats
 
     def kg_redact_sample(spark, sf_dir):
         pipe = _pipeline(spark)
@@ -2411,18 +1440,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["media_probe"] = media_probe
 
-    def media_resize(spark, sf_dir):
-        from deduce_spark.spark.multimodal import resize_images, synthetic_media
-
-        return (
-            resize_images(synthetic_media(spark, 64), max_side=8)
-            .select("media_id", "width", "height", F.crc32("media").alias("crc"))
-            .orderBy("media_id")
-        )
-
-    q["media_resize"] = media_resize
-
-    return _reorder(q)
+    return q
 
 
 # ---------------------------------------------------------------------------
@@ -2438,17 +1456,6 @@ def _hll_words_oracle() -> str:
     )
     return hll_oracle_sql(src, "word", p=9) + " ORDER BY bucket"
 
-
-def _heavy_hitter_oracle() -> str:
-    from deduce_spark.spark.sketches import heavy_hitters_oracle_sql
-
-    src = """
-        SELECT CASE WHEN doc_id % 10 < 7 THEN word
-               ELSE word || '_' || CAST(doc_id % 97 AS VARCHAR) END AS item
-        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-              FROM documents)
-    """
-    return heavy_hitters_oracle_sql(src, "item", phi_permille=2)
 
 
 def _url_hosts_oracle() -> str:
@@ -2508,7 +1515,7 @@ def _bm25_oracle() -> str:
 
 def _host_edges_sql() -> str:
     """(src, dst) host-level link edges over _LINK_PAGES_SQL — the SQL
-    twin of extract_links + url_host in hits_link_hosts/kcore_link_hosts."""
+    twin of extract_links + url_host in kcore_link_hosts."""
     from deduce_spark.spark.weburl import (
         canonical_url_oracle_sql, href_extract_sql, resolve_href_oracle_sql,
         url_host_oracle_sql,
@@ -2524,22 +1531,12 @@ def _host_edges_sql() -> str:
     """
 
 
-def _hits_oracle() -> str:
-    from deduce_spark.spark.webgraph import hits_oracle_sql
-
-    return hits_oracle_sql(_host_edges_sql(), iters=2) + " ORDER BY node"
-
 
 def _kcore_oracle() -> str:
     from deduce_spark.spark.webgraph import kcore_oracle_sql
 
     return kcore_oracle_sql(_host_edges_sql(), k=2, rounds=2)
 
-
-def _lpa_oracle() -> str:
-    from deduce_spark.spark.webgraph import label_propagation_oracle_sql
-
-    return label_propagation_oracle_sql(_host_edges_sql(), rounds=2)
 
 
 # fixed BPE merge table for bpe_token_counts_docs — trained once with
@@ -2557,13 +1554,6 @@ def _bpe_oracle() -> str:
     return bpe_token_counts_oracle_sql(_BPE_MERGES, k=40)
 
 
-def _bfs_oracle() -> str:
-    from deduce_spark.spark.webgraph import bfs_oracle_sql
-
-    return bfs_oracle_sql(
-        _host_edges_sql(), ["src0.nl", "src1.nl"], rounds=2
-    )
-
 
 def _funnel_oracle() -> str:
     from deduce_spark.spark.relational import funnel_oracle_sql
@@ -2574,57 +1564,9 @@ def _funnel_oracle() -> str:
     )
 
 
-def _cohort_oracle() -> str:
-    from deduce_spark.spark.relational import cohort_retention_oracle_sql
-
-    return cohort_retention_oracle_sql(
-        table="(SELECT * FROM events WHERE event_id % 37 = 0)",
-        period_s=259200,
-    )
 
 
-def _hll_by_lang_oracle() -> str:
-    from deduce_spark.spark.sketches import hll_oracle_sql
 
-    words = """
-        SELECT lang, word
-        FROM (SELECT lang, unnest(string_split(text, ' ')) AS word
-              FROM documents)
-        WHERE word <> ''
-    """
-    return (
-        hll_oracle_sql(words, "word", p=6, group_cols=("lang",))
-        + " ORDER BY lang, bucket"
-    )
-
-
-def _doclen_hist_oracle() -> str:
-    from deduce_spark.spark.sketches import log2_histogram_oracle_sql
-
-    return (
-        log2_histogram_oracle_sql(
-            "SELECT lang, n_chars FROM documents", "n_chars", ("lang",)
-        )
-        + " ORDER BY lang, bucket"
-    )
-
-
-def _lm_score_oracle() -> str:
-    from deduce_spark.spark.lmscore import bigram_lm_score_oracle_sql
-
-    return bigram_lm_score_oracle_sql(
-        "SELECT doc_id, text FROM documents",
-        "SELECT text FROM documents WHERE doc_id % 7 = 0",
-    )
-
-
-def _dsir_oracle() -> str:
-    from deduce_spark.spark.dsir import dsir_weights_oracle_sql
-
-    return dsir_weights_oracle_sql(
-        "SELECT doc_id, text FROM documents",
-        "SELECT text FROM documents WHERE doc_id % 5 = 0",
-    )
 
 
 def _warc_pages_sql() -> str:
@@ -2651,30 +1593,6 @@ def _warc_oracle() -> str:
     )
 
 
-def _warc_gzip_oracle() -> str:
-    from deduce_spark.spark.warc import warc_gzip_roundtrip_oracle_sql
-
-    return (
-        warc_gzip_roundtrip_oracle_sql(_warc_pages_sql(), n_files=8)
-        + " ORDER BY url"
-    )
-
-
-def _recrawl_oracle() -> str:
-    from deduce_spark.spark.weburl import recrawl_schedule_oracle_sql
-
-    hist = """
-        SELECT 'https://w' || CAST(doc_id % 9 AS VARCHAR)
-                   || '.nl/p/' || CAST(doc_id AS VARCHAR) AS url,
-               CASE WHEN doc_id % 47 = 0 THEN []::INTEGER[]
-                    ELSE list_transform(
-                        generate_series(1, (doc_id % 6 + 1)::BIGINT),
-                        i -> CASE WHEN (doc_id * 31 + i) % 5 < 2
-                             THEN 1 ELSE 0 END)
-               END AS changed_flags
-        FROM documents
-    """
-    return recrawl_schedule_oracle_sql(hist) + " ORDER BY url"
 
 
 def _robots_oracle() -> str:
@@ -2702,155 +1620,13 @@ def _robots_oracle() -> str:
     return robots_allowed_oracle_sql(urls, robots) + " ORDER BY url"
 
 
-def _pmi_oracle() -> str:
-    from deduce_spark.spark.colloc import pmi_collocations_oracle_sql
-
-    return pmi_collocations_oracle_sql(
-        "SELECT doc_id, text FROM documents", min_count=5, top_k=25
-    )
 
 
-def _crawl_delta_oracle() -> str:
-    from deduce_spark.spark.weburl import crawl_delta_oracle_sql
-
-    url = ("'https://w' || CAST(doc_id % 9 AS VARCHAR) || '.nl/p/' || "
-           "CAST(doc_id AS VARCHAR)")
-    old = f"SELECT {url} AS url, md5(text) AS digest FROM documents"
-    new = f"""
-        SELECT {url} AS url,
-               md5(CASE WHEN doc_id % 7 = 0 THEN text || 'x'
-                        ELSE text END) AS digest
-        FROM documents WHERE doc_id % 13 <> 0
-        UNION ALL
-        SELECT {url} || '/new' AS url, md5(text) AS digest
-        FROM documents WHERE doc_id % 17 = 0
-    """
-    return crawl_delta_oracle_sql(old, new) + " ORDER BY url"
 
 
-def _sitemap_oracle() -> str:
-    from deduce_spark.spark.weburl import parse_sitemap_oracle_sql
-
-    nl = "chr(10)"
-    sm = f"""
-        SELECT 'h' || CAST(doc_id % 9 AS VARCHAR) AS host,
-               '<urlset><url><loc> https://s' || CAST(doc_id % 9 AS VARCHAR)
-               || '.nl/a/' || CAST(doc_id AS VARCHAR)
-               || ' </loc><lastmod>2026-08-0'
-               || CAST(doc_id % 9 + 1 AS VARCHAR)
-               || '</lastmod></url>'
-               || CASE WHEN doc_id % 4 = 0 THEN
-                      '<url>' || {nl} || '<loc>https://s'
-                      || CAST(doc_id % 9 AS VARCHAR) || '.nl/b/'
-                      || CAST(doc_id AS VARCHAR) || '</loc>' || {nl}
-                      || '</url>'
-                  ELSE '' END
-               || '</urlset>' AS sitemap_xml
-        FROM documents
-    """
-    inner = parse_sitemap_oracle_sql(sm)
-    return (
-        f"SELECT host, loc, COALESCE(lastmod, '') AS lastmod FROM ({inner})"
-        " ORDER BY host, loc"
-    )
 
 
-def _page_meta_oracle() -> str:
-    from deduce_spark.spark.weburl import extract_page_meta_oracle_sql
 
-    pages = """
-        SELECT 'https://w' || CAST(doc_id % 9 AS VARCHAR)
-                   || '.nl/p/' || CAST(doc_id AS VARCHAR) AS url,
-               '<html><head><title> Doc  ' || CAST(doc_id AS VARCHAR)
-               || ' </title>'
-               || CASE WHEN doc_id % 3 = 0 THEN
-                      '<meta name="description" content="summary '
-                      || CAST(doc_id % 7 AS VARCHAR) || '">'
-                  ELSE '' END
-               || '</head><body>'
-               || CASE WHEN doc_id % 5 = 0 THEN
-                      '<h1>H' || CAST(doc_id % 11 AS VARCHAR) || '</h1>'
-                  ELSE '' END
-               || '</body></html>' AS html
-        FROM documents
-    """
-    inner = extract_page_meta_oracle_sql(pages)
-    return (
-        "SELECT url, title, COALESCE(meta_description, '') AS "
-        f"meta_description, COALESCE(h1, '') AS h1 FROM ({inner}) "
-        "ORDER BY url"
-    )
-
-
-def _normtext_oracle() -> str:
-    from deduce_spark.spark.normtext import normalize_text_oracle_sql
-
-    src = """
-        SELECT doc_id,
-               text
-               || CASE WHEN doc_id % 4 = 0
-                       THEN ' cafe' || chr(769) ELSE '' END
-               || CASE WHEN doc_id % 5 = 0
-                       THEN ' ' || chr(8220) || 'q' || chr(8221)
-                            || chr(160) || 'x'
-                       ELSE '' END AS text
-        FROM documents
-    """
-    return normalize_text_oracle_sql(src) + " ORDER BY doc_id"
-
-
-def _best_rep_oracle() -> str:
-    from deduce_spark.spark.dedup import select_representatives_oracle_sql
-
-    return select_representatives_oracle_sql(
-        "SELECT doc_id, doc_id % 50 AS canonical_id FROM documents",
-        "SELECT doc_id, n_chars AS score FROM documents",
-    ) + " ORDER BY canonical_id"
-
-
-def _crawl_delays_oracle() -> str:
-    from deduce_spark.spark.weburl import crawl_delays_oracle_sql
-
-    nl = "chr(10)"
-    robots = f"""
-        SELECT 'src' || CAST(k AS VARCHAR) || '.nl' AS host,
-               CASE WHEN k % 3 = 0 THEN
-                        'User-agent: *' || {nl} || 'Crawl-delay: '
-                        || CAST(k + 1 AS VARCHAR) || {nl}
-                        || 'Disallow: /p/'
-                    WHEN k % 3 = 1 THEN
-                        'User-agent: *' || {nl} || 'Crawl-delay: 0.'
-                        || CAST(k AS VARCHAR) || '5' || {nl}
-                        || 'User-agent: slow' || {nl} || 'Crawl-delay: 9'
-                    ELSE 'User-agent: slow' || {nl} || 'Crawl-delay: 4'
-               END AS robots_txt
-        FROM (SELECT DISTINCT doc_id % 9 AS k FROM documents)
-    """
-    return crawl_delays_oracle_sql(robots) + " ORDER BY host, agent"
-
-
-def _frontier_oracle() -> str:
-    from deduce_spark.spark.weburl import frontier_waves_oracle_sql
-
-    return frontier_waves_oracle_sql(
-        f"SELECT url FROM ({_LINK_PAGES_SQL})", per_host_cap=50
-    )
-
-
-def _boilerplate_oracle() -> str:
-    from deduce_spark.spark.textstats import remove_boilerplate_oracle_sql
-
-    src = """
-        SELECT doc_id, 'h' || CAST(doc_id % 7 AS VARCHAR) AS host,
-               'NAV menu h' || CAST(doc_id % 7 AS VARCHAR) || chr(10)
-               || CASE WHEN doc_id % 3 = 0
-                       THEN 'PROMO subscribe' || chr(10) ELSE '' END
-               || text || chr(10)
-               || 'COPYRIGHT h' || CAST(doc_id % 7 AS VARCHAR)
-               || CASE WHEN doc_id % 11 = 0 THEN chr(10) ELSE '' END AS text
-        FROM documents
-    """
-    return remove_boilerplate_oracle_sql(src, out_cols="p.doc_id, p.host")
 
 
 def _cms_oracle() -> str:
@@ -2909,30 +1685,6 @@ def _bloom_oracle() -> str:
     """
 
 
-def _anchor_text_oracle() -> str:
-    from deduce_spark.spark.weburl import (
-        anchor_extract_sql, canonical_url_oracle_sql,
-        resolve_href_oracle_sql, url_host_oracle_sql,
-    )
-
-    return f"""
-        WITH pages AS ({_LINK_PAGES_SQL}),
-        a AS ({anchor_extract_sql('html', 'url', 'pages')}),
-        r AS (
-            SELECT {resolve_href_oracle_sql('src_url', 'dst_url')} AS abs_url,
-                   anchor
-            FROM a
-        ),
-        c AS (
-            SELECT {canonical_url_oracle_sql('abs_url')} AS dst_url, anchor
-            FROM r
-        )
-        SELECT {url_host_oracle_sql('dst_url')} AS dst_host, anchor,
-               CAST(COUNT(*) AS BIGINT) AS n_links,
-               CAST(COUNT(DISTINCT dst_url) AS BIGINT) AS n_pages
-        FROM c GROUP BY 1, 2 ORDER BY dst_host, anchor
-    """
-
 
 def oracle_sql(sf: str = "sf0.01") -> dict[str, str]:
     """DuckDB value-oracle per query key (same order as queries()).
@@ -2944,93 +1696,30 @@ def oracle_sql(sf: str = "sf0.01") -> dict[str, str]:
     ``python -m deduce_spark.golden``).
     """
     o = _all_oracles(sf)
-    return _reorder({k: v for k, v in o.items() if k not in _DEMOTED_ORDER})
+    return {k: o[k] for k in _QUERY_NAMES[:_N_SCORED]}
 
 
 def demoted_oracle_sql(sf: str = "sf0.01") -> dict[str, str]:
     """Oracles for demoted_queries(), same contract as oracle_sql()."""
     o = _all_oracles(sf)
-    return {k: o[k] for k in _DEMOTED_ORDER if k in o}
+    return {k: o[k] for k in _QUERY_NAMES[_N_SCORED:]}
 
 
 def _all_oracles(sf: str = "sf0.01") -> dict[str, str]:
     bpe = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
-    email = r"[-a-zA-Z0-9:%._\+~#=]{1,256}@[-a-zA-Z0-9:%._\+~#=]{1,256}\.(?:com|net|org|co|us|uk|nl|be|fr|sp|gov|nu)"
     nl = ",".join(f"'{w}'" for w in _STOP_NL)
     en = ",".join(f"'{w}'" for w in _STOP_EN)
     de = ",".join(f"'{w}'" for w in _STOP_DE)
-    return _reorder({
+    return {
         "doc_scan_filter": """
             SELECT doc_id, lang, source, n_chars FROM documents
             WHERE n_chars > 200 AND lang = 'en' ORDER BY doc_id
-        """,
-        "doc_token_count": rf"""
-            SELECT doc_id,
-                   len(regexp_split_to_array(text, '\s+')) AS ws_tokens,
-                   len(regexp_extract_all(text, '{bpe}')) AS bpe_tokens
-            FROM documents ORDER BY doc_id
         """,
         "word_freq_topk": """
             SELECT word, COUNT(*) AS n
             FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
             WHERE word <> '' GROUP BY word
             ORDER BY n DESC, word ASC LIMIT 20
-        """,
-        "exact_dedup": """
-            SELECT md5(text) AS text_hash, MIN(doc_id) AS canonical_id,
-                   COUNT(*) AS n_dups
-            FROM documents GROUP BY md5(text) ORDER BY canonical_id
-        """,
-        "embed_cosine_dedup": """
-            SELECT a.vec_id AS a_id, b.vec_id AS b_id
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.35
-            ORDER BY a_id, b_id
-        """,
-        "doc_quality": r"""
-            WITH base AS (
-                SELECT doc_id,
-                       length(text) AS n_chars,
-                       len(regexp_split_to_array(text, '\s+')) AS n_words,
-                       length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g')) AS punct,
-                       length(text) - length(regexp_replace(text, '[A-Z]', '', 'g')) AS upper_,
-                       len(list_distinct(regexp_split_to_array(text, '\s+'))) AS n_distinct
-                FROM documents)
-            SELECT doc_id, n_chars, n_words,
-                   ROUND((n_chars - n_words + 1) / CAST(n_words AS DOUBLE), 4) AS mean_word_len,
-                   ROUND(punct / CAST(n_chars AS DOUBLE), 4) AS punct_ratio,
-                   ROUND(upper_ / CAST(n_chars AS DOUBLE), 4) AS upper_ratio,
-                   ROUND(n_distinct / CAST(n_words AS DOUBLE), 4) AS distinct_ratio,
-                   ROUND(
-                     (CASE WHEN n_words BETWEEN 5 AND 100000 THEN 0.25 ELSE 0.0 END)
-                   + (CASE WHEN (n_chars - n_words + 1) / CAST(n_words AS DOUBLE)
-                           BETWEEN 3 AND 12 THEN 0.25 ELSE 0.0 END)
-                   + (CASE WHEN punct / CAST(n_chars AS DOUBLE) <= 0.2 THEN 0.25 ELSE 0.0 END)
-                   + 0.25 * (n_distinct / CAST(n_words AS DOUBLE)), 4) AS quality
-            FROM base ORDER BY doc_id
-        """,
-        "doc_lang_id": rf"""
-            WITH base AS (
-                SELECT doc_id,
-                       list_distinct(regexp_split_to_array(lower(text), '\s+')) AS words
-                FROM documents),
-            scored AS (
-                SELECT doc_id,
-                       len(list_intersect(words, [{nl}])) AS score_nl,
-                       len(list_intersect(words, [{en}])) AS score_en,
-                       len(list_intersect(words, [{de}])) AS score_de
-                FROM base)
-            SELECT doc_id, score_nl, score_en, score_de,
-                   CASE WHEN greatest(score_nl, score_en, score_de) = 0 THEN 'unknown'
-                        WHEN score_nl = greatest(score_nl, score_en, score_de) THEN 'nl'
-                        WHEN score_en = greatest(score_nl, score_en, score_de) THEN 'en'
-                        ELSE 'de' END AS pred_lang
-            FROM scored ORDER BY doc_id
-        """,
-        "doc_fingerprint": r"""
-            SELECT doc_id,
-                   md5(regexp_replace(lower(text), '\s+', ' ', 'g')) AS fingerprint
-            FROM documents ORDER BY doc_id
         """,
         "doc_textstats": rf"""
             WITH base AS (
@@ -3215,26 +1904,6 @@ def _all_oracles(sf: str = "sf0.01") -> dict[str, str]:
             SELECT grp, rk, w, tf, df_groups, score
             FROM sc WHERE rk <= 5 ORDER BY grp, rk
         """,
-        "embed_hash_docs": """
-            WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-                       FROM documents),
-            wnz AS (SELECT doc_id, w FROM w WHERE w <> ''),
-            h AS (SELECT doc_id,
-                         ('0x' || substr(md5(w), 1, 8))::BIGINT % 64 AS bucket,
-                         CASE WHEN ('0x' || substr(md5(w), 9, 1))::BIGINT % 2 = 0
-                              THEN 1 ELSE -1 END AS sign
-                  FROM wnz),
-            s AS (SELECT doc_id, bucket, SUM(sign) AS val
-                  FROM h GROUP BY doc_id, bucket),
-            grid AS (SELECT d.doc_id, g.bucket
-                     FROM (SELECT DISTINCT doc_id FROM documents) d
-                     CROSS JOIN (SELECT unnest(range(0, 64)) AS bucket) g)
-            SELECT grid.doc_id, grid.bucket,
-                   CAST(COALESCE(s.val, 0) AS BIGINT) AS val
-            FROM grid LEFT JOIN s ON grid.doc_id = s.doc_id
-                                 AND grid.bucket = s.bucket
-            ORDER BY grid.doc_id, grid.bucket
-        """,
         "ngram_jaccard": """
             WITH grams AS (
                 SELECT doc_id, list_distinct([
@@ -3258,33 +1927,6 @@ def _all_oracles(sf: str = "sf0.01") -> dict[str, str]:
             JOIN sizes sa ON sa.doc_id = a
             JOIN sizes sb ON sb.doc_id = b
             WHERE n_common / CAST(sa.n_grams + sb.n_grams - n_common AS DOUBLE) >= 0.2
-            ORDER BY a, b
-        """,
-        "jaccard_prefix_pairs": """
-            WITH grams AS (
-                SELECT doc_id, list_distinct([
-                    string_split(text, ' ')[i] || ' ' ||
-                    string_split(text, ' ')[i+1] || ' ' ||
-                    string_split(text, ' ')[i+2]
-                    FOR i IN range(1, len(string_split(text, ' ')) - 1)
-                ]) AS gs
-                FROM documents
-                WHERE len(string_split(text, ' ')) >= 3),
-            sizes AS (SELECT doc_id, len(gs) AS n_grams FROM grams),
-            exploded AS (SELECT doc_id, unnest(gs) AS gram FROM grams),
-            inter AS (
-                SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS n_common
-                FROM exploded l JOIN exploded r
-                  ON l.gram = r.gram AND l.doc_id < r.doc_id
-                GROUP BY l.doc_id, r.doc_id)
-            SELECT a, b, CAST(n_common AS BIGINT) AS n_common,
-                   CAST((1000 * n_common)
-                        // (sa.n_grams + sb.n_grams - n_common) AS BIGINT)
-                       AS jacc_permille
-            FROM inter
-            JOIN sizes sa ON sa.doc_id = a
-            JOIN sizes sb ON sb.doc_id = b
-            WHERE n_common * 1000 >= 200 * (sa.n_grams + sb.n_grams - n_common)
             ORDER BY a, b
         """,
         "embed_topk": """
@@ -3319,18 +1961,6 @@ def _all_oracles(sf: str = "sf0.01") -> dict[str, str]:
                    COUNT(*) AS n_events
             FROM gaps GROUP BY user_id ORDER BY user_id
         """,
-        "events_hourly": """
-            SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-                   event_type, COUNT(*) AS n, ROUND(SUM(value), 2) AS total_value
-            FROM events GROUP BY 1, 2 ORDER BY hour, event_type
-        """,
-        "events_regex_extract": r"""
-            SELECT event_id,
-                   CAST(regexp_extract(props, '"k": (\d+)', 1) AS INT) AS k
-            FROM events
-            WHERE CAST(regexp_extract(props, '"k": (\d+)', 1) AS INT) > 50
-            ORDER BY event_id
-        """,
         "tpch_q1": """
             SELECT l_returnflag, l_linestatus,
                    ROUND(SUM(l_quantity), 2) AS sum_qty,
@@ -3352,61 +1982,6 @@ def _all_oracles(sf: str = "sf0.01") -> dict[str, str]:
             GROUP BY o_orderkey, o_orderdate
             ORDER BY revenue DESC, o_orderkey ASC LIMIT 10
         """,
-        "segment_top_customers": """
-            WITH spend AS (
-                SELECT o_custkey, ROUND(SUM(o_totalprice), 2) AS total_spend
-                FROM orders GROUP BY o_custkey),
-            ranked AS (
-                SELECT c_mktsegment, c_custkey, total_spend,
-                       ROW_NUMBER() OVER (PARTITION BY c_mktsegment
-                                          ORDER BY total_spend DESC, c_custkey ASC) AS rank
-                FROM spend JOIN customer ON o_custkey = c_custkey)
-            SELECT c_mktsegment, rank, c_custkey, total_spend
-            FROM ranked WHERE rank <= 3 ORDER BY c_mktsegment, rank
-        """,
-        "brand_volume": """
-            SELECT p_brand, ROUND(SUM(l_quantity), 2) AS sum_qty,
-                   COUNT(*) AS n_lines
-            FROM lineitem JOIN part ON l_partkey = p_partkey
-            GROUP BY p_brand ORDER BY p_brand
-        """,
-        "nation_supplier_stats": """
-            SELECT r_name, n_name, COUNT(*) AS n_suppliers,
-                   ROUND(AVG(s_acctbal), 2) AS avg_acctbal
-            FROM supplier
-            JOIN nation ON s_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            GROUP BY r_name, n_name ORDER BY r_name, n_name
-        """,
-        "cust_no_orders": """
-            SELECT c_custkey, c_name, c_mktsegment FROM customer c
-            WHERE NOT EXISTS (SELECT 1 FROM orders o
-                              WHERE o.o_custkey = c.c_custkey
-                                AND o.o_orderpriority = '1-URGENT')
-            ORDER BY c_custkey
-        """,
-        "brands_traded_semi": """
-            SELECT p_brand, COUNT(*) AS n_parts FROM part p
-            WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = p.p_partkey)
-            GROUP BY p_brand ORDER BY p_brand
-        """,
-        "orders_rollup": """
-            SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-                   COALESCE(o_orderpriority, 'ALL') AS priority,
-                   COUNT(*) AS n_orders,
-                   ROUND(SUM(o_totalprice), 2) AS total_price
-            FROM orders
-            GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-            ORDER BY status, priority
-        """,
-        "events_moving_avg": """
-            SELECT event_id, user_id,
-                   ROUND(AVG(value) OVER (PARTITION BY user_id
-                                          ORDER BY ts, event_id
-                                          ROWS BETWEEN 2 PRECEDING AND CURRENT ROW),
-                         4) AS mov_avg_3
-            FROM events ORDER BY event_id
-        """,
         "acctbal_deciles": """
             WITH d AS (
                 SELECT c_acctbal,
@@ -3417,16 +1992,6 @@ def _all_oracles(sf: str = "sf0.01") -> dict[str, str]:
                    ROUND(MIN(c_acctbal), 2) AS min_bal,
                    ROUND(MAX(c_acctbal), 2) AS max_bal
             FROM d GROUP BY decile ORDER BY decile
-        """,
-        "orders_above_cust_avg": """
-            WITH a AS (
-                SELECT o_custkey, AVG(o_totalprice) AS cust_avg
-                FROM orders GROUP BY o_custkey)
-            SELECT o_orderkey, o.o_custkey,
-                   ROUND(o_totalprice, 2) AS totalprice
-            FROM orders o JOIN a ON o.o_custkey = a.o_custkey
-            WHERE o_totalprice > 1.5 * cust_avg
-            ORDER BY o_orderkey
         """,
         "events_asof_purchase": """
             SELECT e.event_id, e.user_id,
@@ -3468,58 +2033,6 @@ def _all_oracles(sf: str = "sf0.01") -> dict[str, str]:
                    n_lines
             FROM agg ORDER BY l_returnflag
         """,
-        "events_value_buckets": """
-            WITH buckets AS (
-                SELECT 10 * i AS lo, 10 * (i + 1) AS hi FROM range(0, 10) t(i))
-            SELECT lo, hi, COUNT(*) AS n, ROUND(SUM(value), 2) AS total_value
-            FROM events JOIN buckets ON value >= lo AND value < hi
-            GROUP BY lo, hi ORDER BY lo
-        """,
-        "regex_identifiers": f"""
-            SELECT doc_id,
-                   unnest(regexp_extract_all({_ID_TEXT_SQL}, '\\d{{7,}}')) AS id_text
-            FROM documents ORDER BY doc_id, id_text
-        """,
-        "regex_emails": f"""
-            SELECT doc_id,
-                   unnest(regexp_extract_all({_EMAIL_TEXT_SQL}, '{email}')) AS email
-            FROM documents ORDER BY doc_id, email
-        """,
-        "regex_dates": f"""
-            SELECT doc_id,
-                   unnest(regexp_extract_all({_DERIVED_TEXT_SQL}, '{_DATE_PAT}')) AS date_text
-            FROM documents ORDER BY doc_id, date_text
-        """,
-        "regex_urls": f"""
-            SELECT doc_id,
-                   unnest(regexp_extract_all({_DERIVED_TEXT_SQL}, '{_URL_PAT}')) AS url_text
-            FROM documents ORDER BY doc_id, url_text
-        """,
-        "events_pivot": """
-            SELECT user_id % 10 AS user_bucket,
-                   COUNT(*) FILTER (WHERE event_type = 'click') AS click,
-                   COUNT(*) FILTER (WHERE event_type = 'error') AS error,
-                   COUNT(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-                   COUNT(*) FILTER (WHERE event_type = 'signup') AS signup,
-                   COUNT(*) FILTER (WHERE event_type = 'view') AS view
-            FROM events GROUP BY user_bucket ORDER BY user_bucket
-        """,
-        "bucket_except": """
-            SELECT DISTINCT doc_id % 13 AS bucket FROM documents
-            WHERE doc_id % 2 = 0
-            EXCEPT
-            SELECT DISTINCT doc_id % 13 AS bucket FROM documents
-            WHERE doc_id % 26 = 0
-            ORDER BY bucket
-        """,
-        "orders_daily_delta": """
-            WITH daily AS (
-                SELECT o_orderdate, SUM(o_totalprice) AS rev
-                FROM orders GROUP BY o_orderdate)
-            SELECT o_orderdate, ROUND(rev, 2) AS revenue,
-                   ROUND(rev - LAG(rev) OVER (ORDER BY o_orderdate), 2) AS delta
-            FROM daily ORDER BY o_orderdate
-        """,
         "bsn_elfproef": f"""
             WITH cand AS (
                 SELECT doc_id,
@@ -3538,18 +2051,6 @@ def _all_oracles(sf: str = "sf0.01") -> dict[str, str]:
                       - CAST(substring(bsn, 9, 1) AS INT)) % 11 + 11) % 11 = 0
                         THEN 1 ELSE 0 END AS valid
             FROM cand ORDER BY doc_id, bsn
-        """,
-        "regex_postal": f"""
-            SELECT doc_id,
-                   unnest(regexp_extract_all({_POSTAL_TEXT_SQL},
-                          '\\b\\d{{4}} ?[A-Z]{{2}}\\b')) AS postal
-            FROM documents ORDER BY doc_id, postal
-        """,
-        "regex_phone": f"""
-            SELECT doc_id,
-                   unnest(regexp_extract_all({_PHONE_TEXT_SQL},
-                          '\\b0\\d{{1,3}}[- ]?\\d{{6,8}}\\b')) AS phone
-            FROM documents ORDER BY doc_id, phone
         """,
         "regex_annotators": f"""
             WITH ids AS (
@@ -3612,27 +2113,6 @@ def _all_oracles(sf: str = "sf0.01") -> dict[str, str]:
             ORDER BY doc_id, merged_start
         """,
         "hll_words_registers": _hll_words_oracle(),
-        "heavy_hitter_words": _heavy_hitter_oracle(),
-        "pack_sequences_docs": """
-            WITH d AS (
-                SELECT doc_id,
-                       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-                       md5(CAST(doc_id AS VARCHAR)) AS h
-                FROM documents),
-            s AS (
-                SELECT doc_id, n_tokens,
-                       COALESCE(SUM(n_tokens) OVER (ORDER BY h, doc_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                         0) AS start_tok
-                FROM d)
-            SELECT doc_id, n_tokens,
-                   CAST(start_tok AS BIGINT) AS start_tok,
-                   CAST(start_tok // 512 AS BIGINT) AS pack_id,
-                   CAST(start_tok % 512 AS BIGINT) AS pack_offset,
-                   CAST((start_tok + greatest(n_tokens, 1) - 1) // 512
-                        - start_tok // 512 + 1 AS BIGINT) AS n_spans
-            FROM s
-        """,
         "substr_dup_docs": """
             WITH s AS (
                 SELECT doc_id,
@@ -3661,33 +2141,13 @@ def _all_oracles(sf: str = "sf0.01") -> dict[str, str]:
         """,
         "url_canonical_hosts": _url_hosts_oracle(),
         "link_graph_indegree": _link_graph_oracle(),
-        "anchor_text_by_host": _anchor_text_oracle(),
         "bm25_topk_docs": _bm25_oracle(),
         "bloom_decontam_words": _bloom_oracle(),
-        "hits_link_hosts": _hits_oracle(),
-        "lm_quality_score": _lm_score_oracle(),
-        "dsir_weights_docs": _dsir_oracle(),
-        "frontier_waves_hosts": _frontier_oracle(),
-        "boilerplate_clean_hosts": _boilerplate_oracle(),
         "warc_roundtrip_files": _warc_oracle(),
-        "warc_gzip_roundtrip_files": _warc_gzip_oracle(),
-        "recrawl_schedule_urls": _recrawl_oracle(),
         "robots_policy_urls": _robots_oracle(),
-        "pmi_collocations_docs": _pmi_oracle(),
-        "crawl_delta_snapshots": _crawl_delta_oracle(),
-        "sitemap_locs_hosts": _sitemap_oracle(),
-        "page_meta_docs": _page_meta_oracle(),
-        "normalize_text_docs": _normtext_oracle(),
-        "dedup_best_rep_docs": _best_rep_oracle(),
-        "robots_crawl_delays": _crawl_delays_oracle(),
         "cms_word_counts": _cms_oracle(),
         "kcore_link_hosts": _kcore_oracle(),
-        "hll_words_by_lang": _hll_by_lang_oracle(),
-        "doclen_log2_hist": _doclen_hist_oracle(),
-        "lpa_link_hosts": _lpa_oracle(),
         "events_funnel": _funnel_oracle(),
-        "events_cohort_retention": _cohort_oracle(),
-        "bfs_link_hosts": _bfs_oracle(),
         "bpe_token_counts_docs": _bpe_oracle(),
         # -- golden-fixture oracles (non-SQL-expressible pipelines) --------
         # Expected outputs are recomputed SEQUENTIALLY (no Spark) by
@@ -3721,12 +2181,10 @@ def _all_oracles(sf: str = "sf0.01") -> dict[str, str]:
                 "ivf_topk_embeddings": "query_id, rank",
                 "winnow_fingerprints": "doc_id",
                 "media_probe": "media_id",
-                "media_resize": "media_id",
                 "media_audio_stats": "media_id",
-                "media_image_stats": "media_id",
             }.items()
         },
-    })
+    }
 
 
 from deduce_spark.spark.textstats import STOPWORDS as _SW  # noqa: E402

@@ -28,7 +28,6 @@ Run:  python -m deduce_spark.golden   (regenerates all fixtures)
 from __future__ import annotations
 
 import re
-import zlib
 from collections import Counter, defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 from itertools import combinations
@@ -670,9 +669,7 @@ def golden_substr_rolling(docs: pd.DataFrame) -> pd.DataFrame:
 
 def golden_media() -> dict[str, pd.DataFrame]:
     from deduce_spark.spark.multimodal import (
-        bmp_stats_one,
         probe_one,
-        resize_one,
         synthetic_media_real_rows,
         synthetic_media_rows,
         wav_stats_one,
@@ -680,39 +677,20 @@ def golden_media() -> dict[str, pd.DataFrame]:
 
     rows = synthetic_media_rows(64)
     probe = [(mid, *probe_one(blob)) for mid, blob, _t in rows]
-    resize = []
-    for mid, blob, _t in rows:
-        out, w, h = resize_one(blob, max_side=8)
-        resize.append((mid, w, h, zlib.crc32(out)))
     real = synthetic_media_real_rows(32)
     audio = [
         (mid,) + wav_stats_one(blob)
         for mid, blob, t in real
         if t == "audio/wav"
     ]
-    image = [
-        (mid, w, h, r, g, b)
-        for mid, blob, t in real
-        if t == "image/bmp"
-        for (w, h, r, g, b) in [bmp_stats_one(blob)]
-    ]
     return {
         "media_probe": pd.DataFrame(
             probe, columns=["media_id", "detected_type", "n_bytes", "checksum"]
         ).astype({"media_id": "int64", "n_bytes": "int64", "checksum": "int64"}),
-        "media_resize": pd.DataFrame(
-            resize, columns=["media_id", "width", "height", "crc"]
-        ).astype({"media_id": "int64", "width": "int32", "height": "int32",
-                  "crc": "int64"}),
         "media_audio_stats": pd.DataFrame(
             audio,
             columns=["media_id", "sample_rate", "n_channels", "n_frames",
                      "rms_q", "peak", "zero_crossings"],
-        ).astype("int64"),
-        "media_image_stats": pd.DataFrame(
-            image,
-            columns=["media_id", "width", "height", "mean_r_q", "mean_g_q",
-                     "mean_b_q"],
         ).astype("int64"),
     }
 

@@ -39,10 +39,15 @@ _DEFAULT_CACHE_DIR = _default_cache_dir()
 
 
 def source_digest(lookup_path: Path) -> str:
-    """sha256 over every file under <lookup_path>/src (path + bytes)."""
+    """sha256 over every file under <lookup_path>/src (path + bytes).
+
+    Raises FileNotFoundError when that directory is missing: hashing an
+    empty file set would give every missing path the same cache key."""
     h = hashlib.sha256()
     h.update(__version__.encode())
     src = Path(lookup_path) / "src"
+    if not src.is_dir():
+        raise FileNotFoundError(f"lookup source directory not found: {src}")
     for f in sorted(p for p in src.rglob("*") if p.is_file()):
         h.update(str(f.relative_to(src)).encode())
         h.update(f.read_bytes())

@@ -321,8 +321,8 @@ def corpus_filter(
 
     Scale shape: repetition signals are per-row expressions + one
     groupBy(doc); the duplicate rule is a map-side-combinable
-    min-per-md5(text) aggregate joined back — the same shuffles as
-    exact_dedup, no per-group window materialization."""
+    min-per-md5(text) aggregate joined back — one groupBy on md5(text),
+    no per-group window materialization."""
     from deduce_spark.spark.textstats import repetition_stats
 
     rep = repetition_stats(

@@ -205,25 +205,6 @@ def heavy_hitters(
     )
 
 
-def heavy_hitters_oracle_sql(
-    source_sql: str, item_col: str, phi_permille: int = 2
-) -> str:
-    """DuckDB twin of :func:`heavy_hitters` over ``source_sql`` (a query
-    exposing ``item_col``): the exact definition the operator computes —
-    the sketch pass is an implementation detail the oracle never sees."""
-    return f"""
-        WITH hh_src AS (
-            SELECT CAST({item_col} AS VARCHAR) AS item
-            FROM ({source_sql}) WHERE {item_col} IS NOT NULL
-        )
-        SELECT item, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM hh_src
-        GROUP BY item
-        HAVING COUNT(*) * 1000 >= {int(phi_permille)} * (
-            SELECT COUNT(*) FROM hh_src)
-    """
-
-
 def hll_estimate(registers: list[tuple[int, int]], p: int = 9) -> float:
     """Standard HLL estimate from (bucket, max_rho) pairs (absent buckets
     count as register 0).  Includes the small-range linear-counting
@@ -536,23 +517,6 @@ def log2_histogram(
         .groupBy(*group_cols, "bucket")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-
-
-def log2_histogram_oracle_sql(
-    source_sql: str, col: str, group_cols: tuple = ()
-) -> str:
-    """DuckDB twin of :func:`log2_histogram` over ``source_sql``."""
-    x = f"CAST({col} AS BIGINT)"
-    groups = "".join(f"{g}, " for g in group_cols)
-    group_by = ", ".join(str(i + 1) for i in range(len(group_cols) + 1))
-    return f"""
-        SELECT {groups}CAST(CASE WHEN {x} = 0 THEN -1
-                    ELSE length(bin({x})) - 1 END AS INT) AS bucket,
-               COUNT(*)::BIGINT AS cnt
-        FROM ({source_sql})
-        WHERE {col} IS NOT NULL
-        GROUP BY {group_by}
-    """
 
 
 def log2_histogram_quantile(

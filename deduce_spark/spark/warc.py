@@ -275,29 +275,6 @@ def parse_warc_records(
     return files.mapInPandas(gen, _PARSE_SCHEMA)
 
 
-def warc_gzip_roundtrip_oracle_sql(
-    pages_sql: str,
-    n_files: int,
-    url_col: str = "url",
-    ts_col: str = "ts",
-    body_col: str = "body",
-) -> str:
-    """DuckDB twin of ``parse_warc_records(pack_warc_files(pages,
-    compress=True))`` on the CONTENT-ADDRESSED columns (file_id, url,
-    ts, body_bytes, body_md5).  Gzip member byte lengths are not
-    SQL-expressible, so offset/rec_len are excluded here and pinned
-    instead by the pytest tiling invariant (members exactly cover each
-    payload)."""
-    return f"""
-        SELECT ('0x' || substr(md5({url_col}), 1, 8))::BIGINT
-                   % {n_files} AS file_id,
-               {url_col} AS url, {ts_col} AS ts,
-               strlen({body_col})::BIGINT AS body_bytes,
-               md5({body_col}) AS body_md5
-        FROM ({pages_sql})
-    """
-
-
 def warc_roundtrip_oracle_sql(
     pages_sql: str,
     n_files: int,

@@ -32,18 +32,15 @@ def main(argv: list[str]) -> None:
     fp = entry_mod._mentions_fingerprint()
     spark = get_spark(master="local[32]", app_name="warm_mv")
     for sf in tiers:
-        # touching each MV-backed layer materializes (or reuses) the
-        # on-disk parquet keyed by the current fingerprint
+        # touching each MV table materializes (or reuses) the on-disk
+        # parquet keyed by the current fingerprint
         sf_dir = f"/root/testdata/{sf}"
-        entry_mod._mentions(spark, sf_dir).count()
-        entry_mod._canon(spark, sf_dir)
-        entry_mod._triples(spark, sf_dir).count()
-        entry_mod._cooc_edges(spark, sf_dir).count()
+        for table in entry_mod._MV_TABLES:
+            entry_mod._mv(spark, sf_dir, table)
         print(f"{sf}: warm at {fp}")
     spark.stop()
     if prune:
-        root = REPO / "data" / "mv"
-        for d in root.iterdir():
+        for d in entry_mod._MV_ROOT.iterdir():
             if d.is_dir() and not d.name.endswith(fp):
                 shutil.rmtree(d)
                 print(f"pruned stale {d.name}")

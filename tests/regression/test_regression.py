@@ -47,9 +47,12 @@ def run_group(engine, examples_file: Path, group: str) -> set[int]:
     return failures
 
 
+# skipif, not a skip in the body: the engine fixture runs before the body
+# and errors on the same missing reference checkout
+@pytest.mark.skipif(
+    not CASES_DIR.exists(), reason="reference regression corpus not available"
+)
 @pytest.mark.parametrize("fname", sorted(GROUPS))
 def test_regression(engine, fname):
-    if not CASES_DIR.exists():
-        pytest.skip("reference regression corpus not available")
     failures = run_group(engine, CASES_DIR / fname, GROUPS[fname])
     assert failures == KNOWN_FAILURES.get(fname, set())

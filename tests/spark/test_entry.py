@@ -63,13 +63,21 @@ DEMOTED = sorted(entry_mod.demoted_oracle_sql())
 
 def test_driver_window_contract():
     """The driver scores at most 50 queries — queries() must be EXACTLY 50
-    (every entry scored, none invisible) and every one oracled; redundant
-    twins live in demoted_queries(), all oracled, disjoint from scored."""
+    (every entry scored, none invisible) and every one oracled; the
+    unscored queries live in demoted_queries(), all oracled, disjoint
+    from scored, and cover every HEADLINE name the benches time."""
+    import bench
+    import bench_extra
+
     q, d = entry_mod.queries(), entry_mod.demoted_queries()
     assert len(q) == 50, f"queries() must stay exactly 50, got {len(q)}"
-    assert set(q) <= set(entry_mod.oracle_sql())
-    assert set(d) <= set(entry_mod.demoted_oracle_sql())
+    assert list(q) == list(entry_mod.oracle_sql())
+    assert list(d) == list(entry_mod.demoted_oracle_sql())
+    assert set(d) == {"tpch_q1", "tpch_q3ish", "embed_topk",
+                      "doc_scan_filter"}
     assert not set(q) & set(d)
+    for headline in (bench.HEADLINE, bench_extra.HEADLINE):
+        assert set(headline) <= set(q) | set(d)
 
 
 @pytest.mark.parametrize("name", ORACLED)
@@ -82,8 +90,8 @@ def test_oracled_query(spark, duck, name):
 
 @pytest.mark.parametrize("name", DEMOTED)
 def test_demoted_query(spark, duck, name):
-    """Demoted twins get the same rows+schema+values gate the driver
-    applies to scored queries — demotion changes visibility, not rigor."""
+    """Unscored queries get the same rows+schema+values gate the driver
+    applies to scored queries."""
     q = entry_mod.demoted_queries()[name]
     spark_pdf = q(spark, SF_DIR).toPandas()
     duck_pdf = duck.sql(entry_mod.demoted_oracle_sql()[name]).df()
@@ -124,9 +132,8 @@ def test_golden_oracle_paths_parameterized_by_sf():
             for name, sql in oracles.items()
             if "parquet_scan" in sql
         }
-        # 17 scored + 2 demoted media twins (resize rotated out in the
-        # round-6 session-2 window swap)
-        assert len(golden) == 19
+        # the 17 scored golden-fixture oracles (no unscored query has one)
+        assert len(golden) == 17
         for name, sql in golden.items():
             m = re.search(r"parquet_scan\(\s*'([^']+)'", sql)
             assert m, name
@@ -159,3 +166,67 @@ def test_mv_fingerprint_fresh_all_tiers():
                 f"{fp} — rebuild the MVs (run the kg_* queries at {sf} or "
                 f"python -m jobs.warm_mv) before the driver benches"
             )
+
+
+def test_mv_helper_builds_once_rebuilds_partial_and_caches_per_table(
+    spark, tmp_path, monkeypatch
+):
+    """_mv's contract, engine-free: the MV root points at tmp_path and every
+    builder is swapped for a spark.range table (partitions and cache flags
+    stay the real ones).  A second call neither rebuilds nor re-reads; a
+    directory without _SUCCESS is rebuilt; surface_map and nodes come from
+    one build; only surface_map, nodes and cooc_edges are .cache()d."""
+    builds = []
+
+    def fake(*tables):
+        def build(spark_, sf_dir):
+            builds.append(tables)
+            return {t: spark_.range(40).withColumnRenamed("id", t)
+                    for t in tables}
+        return build
+
+    canon = fake("surface_map", "nodes")
+    builders = {"mentions": fake("mentions"), "surface_map": canon,
+                "nodes": canon, "triples": fake("triples"),
+                "cooc_edges": fake("cooc_edges")}
+    monkeypatch.setattr(entry_mod, "_MV_ROOT", tmp_path)
+    monkeypatch.setattr(entry_mod, "_MV_MEMO", {})
+    monkeypatch.setattr(entry_mod, "_MV_TABLES", {
+        t: (builders[t], parts, cache)
+        for t, (_, parts, cache) in entry_mod._MV_TABLES.items()
+    })
+    sf_dir = "/data/sf0.001"
+    base = tmp_path / f"sf0.001-{entry_mod._mentions_fingerprint()}"
+
+    dfs = {t: entry_mod._mv(spark, sf_dir, t) for t in builders}
+    assert builds == [("mentions",), ("surface_map", "nodes"), ("triples",),
+                      ("cooc_edges",)]
+    assert {t for t, df in dfs.items() if df.is_cached} == {
+        "surface_map", "nodes", "cooc_edges"}
+    parts = {t: len(list((base / f"{t}.parquet").glob("part-*")))
+             for t in builders}
+    assert parts == {"mentions": 8, "surface_map": 4, "nodes": 4,
+                     "triples": 8, "cooc_edges": 4}
+    for t, df in dfs.items():
+        assert df.columns == [t] and df.count() == 40
+        assert entry_mod._mv(spark, sf_dir, t) is df
+    assert len(builds) == 4
+
+    # a new session's memo is empty: the committed MVs are read, not rebuilt
+    monkeypatch.setattr(entry_mod, "_MV_MEMO", {})
+    entry_mod._mv(spark, sf_dir, "triples")
+    assert len(builds) == 4
+
+    # a partial directory (no _SUCCESS) is rebuilt, the complete sibling of
+    # the same build is kept as is
+    (base / "nodes.parquet" / "_SUCCESS").unlink()
+    kept = sorted(p.name for p in (base / "surface_map.parquet").iterdir())
+    rebuilt = entry_mod._mv(spark, sf_dir, "nodes")
+    assert rebuilt.count() == 40 and rebuilt.is_cached
+    assert builds[4:] == [("surface_map", "nodes")]
+    assert (base / "nodes.parquet" / "_SUCCESS").exists()
+    assert sorted(
+        p.name for p in (base / "surface_map.parquet").iterdir()
+    ) == kept
+    for df in [*dfs.values(), rebuilt]:
+        df.unpersist()

@@ -1,6 +1,6 @@
 """Physical-plan audit over the whole driver surface.
 
-Three invariants every query (scored AND demoted) must hold at any scale:
+Three invariants every query (scored AND unscored) must hold at any scale:
 - no row-at-a-time Python (`BatchEvalPython`) anywhere — Python work is
   only allowed Arrow-batched (MapInPandas / ArrowEvalPython);
 - parquet scans under a lang/doc_id filter actually push the predicate
@@ -34,13 +34,11 @@ def test_no_row_python_in_any_query_plan(spark):
 
 
 # Unpartitioned windows whose INPUT is bounded by construction — the only
-# two allowed in the whole surface:
+# one allowed in the whole surface:
 # - acctbal_deciles: exact_ntile's prefix-sum window runs over the
 #   per-bucket COUNT table (<= n_buckets=256 rows), never the base table
-#   (relational.exact_ntile step 4);
-# - orders_daily_delta: lag() over the per-date AGGREGATE — bounded by
-#   calendar days, not by input rows.
-_BOUNDED_WINDOW_OK = {"acctbal_deciles", "orders_daily_delta"}
+#   (relational.exact_ntile step 4).
+_BOUNDED_WINDOW_OK = {"acctbal_deciles"}
 
 _WINDOW_LINE = re.compile(r"\bWindow\s+(\[.*)$")
 
@@ -91,9 +89,12 @@ def test_no_unpartitioned_unbounded_window(spark):
 @pytest.mark.parametrize(
     "name,fragment",
     [
-        # lang equality must reach the documents/pages parquet scan
+        # lang equality must reach the documents parquet scan
         ("doc_scan_filter", "PushedFilters:"),
-        ("doc_lang_id", "PushedFilters:"),
+        # the shipdate range / segment equality must reach the
+        # lineitem / customer parquet scan
+        ("tpch_q1", "PushedFilters:"),
+        ("tpch_q3ish", "PushedFilters:"),
     ],
 )
 def test_scan_pushdown(spark, name, fragment):

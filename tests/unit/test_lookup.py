@@ -2,6 +2,7 @@
 tests/unit/test_lookup_struct.py:19-43, tests/unit/test_utils.py:96-214 and
 tests/unit/str/test_str.py:15-79."""
 
+import re
 from pathlib import Path
 
 import pytest
@@ -153,3 +154,30 @@ def test_load_raw_itemsets():
     assert set(sets) == {"test", "test_nested"}
     assert len(sets["test"]) == 5
     assert len(sets["test_nested"]) == 4
+
+
+# ---- lookup-structure cache key ----
+
+def test_source_digest_keys_on_src_content(tmp_path):
+    from deduce_spark.kernel.structs import source_digest
+
+    lookup = FIXTURES.parent
+    assert source_digest(lookup) == source_digest(lookup)
+    copy = tmp_path / "lookup" / "src"
+    copy.mkdir(parents=True)
+    (copy / "lst_a").write_text("x\n")
+    first = source_digest(copy.parent)
+    (copy / "lst_a").write_text("y\n")
+    assert source_digest(copy.parent) != first
+
+
+def test_source_digest_missing_src_raises(tmp_path):
+    # a missing directory used to hash to one key shared by every such path
+    from deduce_spark.kernel.structs import source_digest
+
+    for missing in (tmp_path / "nonexistent", tmp_path / "nothing"):
+        with pytest.raises(FileNotFoundError,
+                           match=re.escape(str(missing / "src"))):
+            source_digest(missing)
+    with pytest.raises(FileNotFoundError):
+        source_digest(tmp_path)  # directory exists, its src/ does not
