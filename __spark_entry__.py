@@ -751,7 +751,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def kcore_link_hosts(spark, sf_dir):
         # bounded-round k-core peel of the host link graph (link-farm /
-        # template-core curation signal next to pagerank/HITS); fixed
+        # template-core curation signal next to pagerank); fixed
         # round count unrolls into joins both engines replay exactly
         from deduce_spark.spark.webgraph import kcore_peel
         from deduce_spark.spark.weburl import extract_links, url_host
@@ -2161,7 +2161,7 @@ def _all_oracles(sf: str = "sf0.01") -> dict[str, str]:
         **{
             name: f"""
             SELECT * FROM parquet_scan(
-                '/root/repo/data/golden/{sf}/{name}.parquet')
+                '{_REPO}/data/golden/{sf}/{name}.parquet')
             ORDER BY {order}
         """
             for name, order in {

@@ -1,11 +1,10 @@
 """Injectable lineage-cut strategy for iterative DataFrame operators.
 
 Every iterative operator in this repo (pagerank_quantized,
-connected_components, kcore_peel, label_propagation, hits_scores,
-bfs_layers, bpe_train) must cut lineage each round or the upstream
-subtree re-executes a factor per round (3^rounds in the worst plan
-inventory — see webgraph.py docstrings).  On a single box an eager
-``localCheckpoint`` is the right cut: it materializes partitions in
+connected_components, kcore_peel, bpe_train) must cut lineage each
+round or the upstream subtree re-executes a factor per round
+(3^rounds for kcore_peel — see its docstring).  On a single box an
+eager ``localCheckpoint`` is the right cut: it materializes partitions in
 executor block storage with no filesystem round-trip.  On a real
 multi-executor cluster that storage dies with the executor, so the
 cut must be a *reliable* checkpoint into a fault-tolerant directory

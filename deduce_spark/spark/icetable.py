@@ -111,9 +111,6 @@ def _parse_partition_dir(rel: str) -> dict[str, str]:
     return out
 
 
-_HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
-
-
 def _hive_unescape(v: str) -> str:
     """Invert Hive/Spark partition-dir escaping ('%3A' -> ':').
 

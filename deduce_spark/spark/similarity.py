@@ -19,8 +19,6 @@ from pyspark.sql import types as T
 
 from deduce_spark.spark.parallel import cap_buckets, fan_out
 
-N_PLANES = 16
-
 
 def _dot(a, b):
     return F.aggregate(

@@ -30,18 +30,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hll_registers(
-    df: DataFrame, col: str, p: int = 9, group_cols: tuple = ()
-) -> DataFrame:
-    """(group_cols..., bucket, max_rho) HLL register table for the
-    values of ``col``, one independent sketch per group.
+def hll_registers(df: DataFrame, col: str, p: int = 9) -> DataFrame:
+    """(bucket, max_rho) HLL register table for the values of ``col``.
 
     Null values are ignored (SQL COUNT DISTINCT semantics).  Output has
-    at most 2^p rows per group; absent buckets mean register value 0.
-    With ``group_cols`` this is the sharded approx-distinct workhorse
-    (distinct visitors per host, distinct tokens per lang): each
-    group's register set is independently mergeable by max, so sketches
-    shard, roll up, and union across corpora without ever rescanning.
+    at most 2^p rows; absent buckets mean register value 0.  Register
+    sets merge by max, so sketches shard, roll up, and union across
+    corpora without ever rescanning.
     """
     if not 4 <= p <= 16:
         raise ValueError(f"p must be in [4, 16], got {p}")
@@ -56,35 +51,28 @@ def hll_registers(
     return (
         df.filter(F.col(col).isNotNull())
         .select(
-            *group_cols,
             F.expr(bucket).cast("int").alias("bucket"),
             F.expr(rho).cast("int").alias("rho"),
         )
-        .groupBy(*group_cols, "bucket")
+        .groupBy("bucket")
         .agg(F.max("rho").alias("max_rho"))
     )
 
 
-def hll_oracle_sql(
-    source_sql: str, col: str, p: int = 9, group_cols: tuple = ()
-) -> str:
+def hll_oracle_sql(source_sql: str, col: str, p: int = 9) -> str:
     """DuckDB twin of ``hll_registers`` over ``source_sql`` (a query or
-    table exposing ``col`` and any ``group_cols``)."""
+    table exposing ``col``)."""
     rem_bits = 32 - p
     h32 = f"CAST(('0x' || substr(md5(CAST({col} AS VARCHAR)), 1, 8)) AS BIGINT)"
     rem = f"(({h32}) % {2 ** rem_bits})"
-    groups = "".join(f"{g}, " for g in group_cols)
-    group_by = ", ".join(
-        str(i + 1) for i in range(len(group_cols) + 1)
-    )
     return f"""
-        SELECT {groups}CAST(({h32}) // {2 ** rem_bits} AS INT) AS bucket,
+        SELECT CAST(({h32}) // {2 ** rem_bits} AS INT) AS bucket,
                CAST(MAX(CASE WHEN {rem} = 0 THEN {rem_bits + 1}
                         ELSE {rem_bits} - length(bin({rem})) + 1 END) AS INT)
                    AS max_rho
         FROM ({source_sql})
         WHERE {col} IS NOT NULL
-        GROUP BY {group_by}
+        GROUP BY 1
     """
 
 

@@ -1,27 +1,22 @@
-"""Web-graph analytics beyond the KG pipeline: HITS and k-core peeling.
+"""Web-graph analytics beyond the KG pipeline: k-core peeling.
 
-Kleinberg's HITS assigns every node a hub score (points at good
-authorities) and an authority score (pointed at by good hubs) — the
-classic crawl-prioritization / seed-ranking signal next to PageRank
-(which ``kg.pagerank_quantized`` covers).  Float HITS with L2
-normalization is unportable across engines, so — like the quantized
-PageRank — this variant is exact-integer:
+The k-core (maximal subgraph where every node has degree >= k) is a
+classic crawl-curation signal next to PageRank (which
+``kg.pagerank_quantized`` covers): link-farm and template cores are
+dense (high k), genuine content sits in shallow cores.  Exact k-core
+needs data-dependent convergence; this module fixes the ROUND COUNT so
+the loop unrolls into plain joins and the DuckDB twin
+(:func:`kcore_oracle_sql`) replays it CTE by CTE, bit-for-bit.
+Peeling removes degree-<k nodes each round; once a round removes
+nothing the iteration is a fixpoint, so for any graph whose peeling
+converges within ``rounds`` the output IS the true k-core (pytest pins
+a chain that needs the full budget).
 
-- scores live in units of ``scale`` (default 1000 = milli);
-- each half-step is ``new[v] = sum over edges of the other score``,
-  then re-quantized by the CURRENT MAX: ``(raw * scale) DIV max(raw)``
-  (max-norm instead of L2 — same fixpoint direction, pure int64);
-- a FIXED iteration count unrolls into plain joins, so the DuckDB twin
-  (:func:`hits_oracle_sql`) replays the identical arithmetic CTE by CTE
-  and value-hashes match bit-for-bit.
-
-Scale shape: the edge list is the only big table; per iteration the
-score table (<= |nodes| rows, already aggregated) joins into one
-edge join + one groupBy — the standard iterative-join pattern, 2
-bounded shuffles per iteration, no driver-side loops over data.  The
-max used for re-quantization is a 1-row aggregate (broadcast
-crossJoin), never a collect.  Every operator takes
-``broadcast_tables`` (default True: hint the <=|V|-row side tables
+Scale shape: the edge list is the only big table.  Per round: one
+map-combinable degree aggregate + one edge semi-join against the
+(<= |V|-row, already-aggregated) survivor table — 2 bounded shuffles
+per round, no driver-side loops over data.  :func:`kcore_peel` takes
+``broadcast_tables`` (default True: hint the <=|V|-row survivor table
 broadcast; False: let Catalyst/AQE pick a shuffled join — required at
 |V| ~ 10^8-10^9 where a forced broadcast OOMs) and ``checkpoint``
 (injectable per-round lineage-cut strategy, see
@@ -32,7 +27,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deduce_spark.spark.checkpointing import CheckpointArg, make_checkpointer
@@ -41,7 +36,7 @@ from deduce_spark.spark.checkpointing import CheckpointArg, make_checkpointer
 def _side_hint(
     broadcast_tables: bool,
 ) -> Callable[[DataFrame], DataFrame]:
-    """Join hint for the per-round <=|V|-row score/survivor tables.
+    """Join hint for the per-round <=|V|-row survivor table.
 
     ``True`` (default) forces ``F.broadcast`` — the right call up to
     |V| ~ 10^7 hosts, where the table is tens of MB and a shuffle of
@@ -54,156 +49,6 @@ def _side_hint(
     if broadcast_tables:
         return lambda df: F.broadcast(df)
     return lambda df: df
-
-
-def hits_scores(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    iters: int = 2,
-    scale: int = 1000,
-    broadcast_tables: bool = True,
-    checkpoint: CheckpointArg = None,
-) -> DataFrame:
-    """(node, auth, hub) integer HITS scores after ``iters`` rounds.
-
-    Edges are deduplicated first (HITS is defined on the simple graph).
-    Nodes with no in-edges get auth=0, no out-edges hub=0.
-
-    ``broadcast_tables`` controls the join hint on the per-half-step
-    score table (see :func:`_side_hint`): keep the default up to
-    ~10^7 nodes, pass ``False`` at web scale so the score joins shuffle
-    instead of force-broadcasting a 10^8+-row table.
-
-    The deduplicated edge list is materialized once per the
-    kcore_peel / pagerank_quantized lineage discipline: every half-step
-    joins against it, so without the cut an expensive upstream chain
-    (e.g. extract_links) re-executes 2*iters+2 times.  ``checkpoint``
-    picks the cut strategy (default eager localCheckpoint; pass a
-    directory or callable on a real cluster —
-    :func:`deduce_spark.spark.checkpointing.make_checkpointer`)."""
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
-    cut = make_checkpointer(checkpoint)
-    hint = _side_hint(broadcast_tables)
-    e = cut(
-        edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    hub = nodes.select("node", F.lit(scale).cast("long").alias("score"))
-
-    def half_step(scores: DataFrame, join_on: str, group_on: str) -> DataFrame:
-        raw = (
-            e.join(
-                hint(scores),
-                e[join_on] == scores["node"],
-            )
-            .groupBy(e[group_on].alias("node"))
-            .agg(F.sum("score").alias("raw"))
-        )
-        mx = raw.agg(F.max("raw").alias("mx"))
-        # eager cut per half-step: raw appears twice above (score + max)
-        # and each round chains on the previous, so without it the plan
-        # doubles per half-step (f(n) = 2*(1+f(n-1)) — 92 scans at
-        # iters=2 in the pre-fix plan inventory vs 4 after).  The 1-row
-        # max table stays broadcast regardless of the flag.
-        return cut(
-            raw.crossJoin(F.broadcast(mx))
-            .select(
-                "node", F.expr(f"(raw * {scale}) DIV mx").alias("score")
-            )
-        )
-
-    auth = None
-    for _ in range(iters):
-        auth = half_step(hub, "src", "dst")
-        hub = half_step(auth, "dst", "src")
-
-    return (
-        nodes.join(
-            auth.select("node", F.col("score").alias("auth")), "node", "left"
-        )
-        .join(hub.select("node", F.col("score").alias("hub")), "node", "left")
-        .select(
-            "node",
-            F.coalesce("auth", F.lit(0)).cast("long").alias("auth"),
-            F.coalesce("hub", F.lit(0)).cast("long").alias("hub"),
-        )
-    )
-
-
-def hits_oracle_sql(
-    edges_sql: str, iters: int = 2, scale: int = 1000
-) -> str:
-    """DuckDB twin of :func:`hits_scores`: ``edges_sql`` must yield
-    (src, dst); returns (node, auth, hub).  The iteration loop unrolls
-    into one pair of CTEs per round — identical integer arithmetic."""
-    if iters < 1:
-        raise ValueError("iters must be >= 1")
-    ctes = [
-        f"e AS (SELECT DISTINCT src, dst FROM ({edges_sql}) "
-        "WHERE src IS NOT NULL AND dst IS NOT NULL)",
-        "nodes AS (SELECT src AS node FROM e UNION SELECT dst FROM e)",
-        f"h0 AS (SELECT node, {scale}::BIGINT AS score FROM nodes)",
-    ]
-    # AS MATERIALIZED: each raw CTE is referenced twice (score + MAX
-    # subquery), so default inlining doubles the plan per half-step —
-    # see kcore_oracle_sql for the measured blowup
-    prev_hub = "h0"
-    for t in range(1, iters + 1):
-        ctes.append(
-            f"a{t}r AS MATERIALIZED "
-            f"(SELECT e.dst AS node, SUM(s.score) AS raw "
-            f"FROM e JOIN {prev_hub} s ON e.src = s.node GROUP BY 1)"
-        )
-        ctes.append(
-            f"a{t} AS MATERIALIZED (SELECT node, (raw * {scale}) // "
-            f"(SELECT MAX(raw) FROM a{t}r) AS score FROM a{t}r)"
-        )
-        ctes.append(
-            f"h{t}r AS MATERIALIZED "
-            f"(SELECT e.src AS node, SUM(s.score) AS raw "
-            f"FROM e JOIN a{t} s ON e.dst = s.node GROUP BY 1)"
-        )
-        ctes.append(
-            f"h{t} AS MATERIALIZED (SELECT node, (raw * {scale}) // "
-            f"(SELECT MAX(raw) FROM h{t}r) AS score FROM h{t}r)"
-        )
-        prev_hub = f"h{t}"
-    return (
-        "WITH " + ",\n".join(ctes) + f"""
-        SELECT nodes.node AS node,
-               CAST(COALESCE(a.score, 0) AS BIGINT) AS auth,
-               CAST(COALESCE(h.score, 0) AS BIGINT) AS hub
-        FROM nodes
-        LEFT JOIN a{iters} AS a ON nodes.node = a.node
-        LEFT JOIN h{iters} AS h ON nodes.node = h.node
-    """
-    )
-
-
-# -- k-core peeling --------------------------------------------------------
-# The k-core (maximal subgraph where every node has degree >= k) is the
-# other classic crawl-curation signal next to PageRank/HITS: link-farm
-# and template cores are dense (high k), genuine content sits in shallow
-# cores.  Exact k-core needs data-dependent convergence; like HITS this
-# module fixes the ROUND COUNT so the loop unrolls into plain joins and
-# the DuckDB twin replays it CTE-by-CTE.  Peeling removes degree-<k
-# nodes each round; once a round removes nothing the iteration is a
-# fixpoint, so for any graph whose peeling converges within `rounds`
-# the output IS the true k-core (pytest pins a chain that needs the
-# full budget).  Per round: one map-combinable degree aggregate + one
-# edge semi-join against the (<= |V|-row, already-aggregated) survivor
-# table, broadcast like the HITS score tables — 2 bounded shuffles per
-# round, no driver-side loops over data.
 
 
 def kcore_peel(
@@ -294,198 +139,4 @@ def kcore_oracle_sql(edges_sql: str, k: int = 2, rounds: int = 3) -> str:
         SELECT a AS node, COUNT(*)::BIGINT AS deg
         FROM g{rounds} GROUP BY 1 ORDER BY 1
     """
-    )
-
-
-# -- label propagation communities -----------------------------------------
-# Synchronous label propagation (Raghavan et al. 2007) with a
-# deterministic tie-break: each round every node adopts the most
-# frequent label among its neighbours, ties broken by the SMALLEST
-# label.  Classic near-linear community detection for host graphs
-# (mirror clusters, link farms, template families).  Async LPA is
-# run-order dependent; the synchronous min-tie-break variant is a pure
-# function of the graph, so a FIXED round count unrolls into joins +
-# per-node window ranks that DuckDB replays exactly (same discipline as
-# hits_scores / kcore_peel, incl. the per-round lineage cut).
-
-
-def label_propagation(
-    edges: DataFrame,
-    rounds: int = 2,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    broadcast_tables: bool = False,
-    checkpoint: CheckpointArg = None,
-) -> DataFrame:
-    """(node, label) after ``rounds`` synchronous LPA steps on the
-    symmetrized simple graph; every node starts as its own label.
-    Isolated nodes (self-loops only) keep their own label.
-
-    ``broadcast_tables`` controls the join hint on the per-round label
-    table (see :func:`_side_hint`); ``checkpoint`` picks the per-round
-    lineage-cut strategy (default eager localCheckpoint).
-
-    Unlike kcore/HITS (whose per-round tables shrink or are pure
-    score vectors), LPA re-broadcasts the FULL |V|-row label table every
-    round; the repo's 26.76M-edge A/B (BENCH/BASELINE.md) measured
-    broadcast 95.4 s vs shuffled 33.3 s, so the default here is
-    ``False`` — let Catalyst/AQE pick from runtime sizes; pass ``True``
-    only for small graphs where the label table is a few MB."""
-    if rounds < 1:
-        raise ValueError("rounds must be >= 1")
-    cut = make_checkpointer(checkpoint)
-    hint = _side_hint(broadcast_tables)
-    fwd = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    ).filter(
-        F.col("a").isNotNull() & F.col("b").isNotNull()
-        & (F.col("a") != F.col("b"))
-    )
-    g = cut(
-        fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-    )
-    nodes = g.select(F.col("a").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for _ in range(rounds):
-        votes = (
-            g.join(
-                hint(labels.withColumnRenamed("node", "b")), "b"
-            )
-            .groupBy(F.col("a").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        win = Window.partitionBy("node").orderBy(
-            F.desc("cnt"), F.asc("label")
-        )
-        labels = cut(
-            votes.withColumn("rn", F.row_number().over(win))
-            .filter(F.col("rn") == 1)
-            .select("node", "label")
-        )
-    return labels.orderBy("node")
-
-
-def label_propagation_oracle_sql(edges_sql: str, rounds: int = 2) -> str:
-    """DuckDB twin of :func:`label_propagation`: ``edges_sql`` must
-    yield (src, dst); returns (node, label) ordered by node."""
-    if rounds < 1:
-        raise ValueError("rounds must be >= 1")
-    ctes = [
-        f"""fwd AS (SELECT src AS a, dst AS b FROM ({edges_sql})
-             WHERE src IS NOT NULL AND dst IS NOT NULL AND src <> dst)""",
-        "g AS (SELECT DISTINCT a, b FROM "
-        "(SELECT a, b FROM fwd UNION ALL SELECT b, a FROM fwd))",
-        "l0 AS (SELECT DISTINCT a AS node, a AS label FROM g)",
-    ]
-    for r in range(1, rounds + 1):
-        ctes.append(
-            f"""v{r} AS (SELECT g.a AS node, l.label, COUNT(*) AS cnt
-                 FROM g JOIN l{r - 1} l ON g.b = l.node GROUP BY 1, 2)"""
-        )
-        ctes.append(
-            f"""l{r} AS (SELECT node, label FROM (
-                 SELECT node, label, ROW_NUMBER() OVER (
-                     PARTITION BY node ORDER BY cnt DESC, label ASC
-                 ) AS rn FROM v{r}) WHERE rn = 1)"""
-        )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f" SELECT node, label FROM l{rounds} ORDER BY node"
-    )
-
-
-# -- BFS layers from a seed set --------------------------------------------
-# Minimum hop distance from any seed within a fixed hop budget — the
-# crawl-frontier depth signal (seed-proximity ranking, OPIC-style depth
-# decay, focused-crawl cutoffs).  Same fixed-round unroll discipline as
-# HITS/k-core/LPA: per round one edge join + one map-combinable MIN
-# aggregate, per-round lineage cut, DuckDB twin replays CTE-by-CTE
-# (AS MATERIALIZED — see kcore_oracle_sql for the inlining blowup).
-
-
-def bfs_layers(
-    edges: DataFrame,
-    seeds: list[str],
-    rounds: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    broadcast_tables: bool = True,
-    checkpoint: CheckpointArg = None,
-) -> DataFrame:
-    """(node, dist) — minimum hops from any seed, for every node within
-    ``rounds`` hops on the symmetrized simple graph, ordered by node.
-    Seeds report dist 0 whether or not they appear in the edge list;
-    unreached nodes are absent (standard frontier semantics).
-
-    ``broadcast_tables`` controls the join hint on the per-round
-    distance table (see :func:`_side_hint`); ``checkpoint`` picks the
-    per-round lineage-cut strategy (default eager localCheckpoint)."""
-    if rounds < 1:
-        raise ValueError("rounds must be >= 1")
-    if not seeds:
-        raise ValueError("seeds must be non-empty")
-    if len(set(seeds)) != len(seeds):
-        raise ValueError("seeds must be distinct")
-    cut = make_checkpointer(checkpoint)
-    hint = _side_hint(broadcast_tables)
-    spark = edges.sparkSession
-    fwd = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    ).filter(
-        F.col("a").isNotNull() & F.col("b").isNotNull()
-        & (F.col("a") != F.col("b"))
-    )
-    g = cut(
-        fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-    )
-    d = spark.createDataFrame(
-        [(s, 0) for s in seeds], "node string, dist long"
-    )
-    for _ in range(rounds):
-        step = g.join(
-            hint(d.withColumnRenamed("node", "a")), "a"
-        ).select(F.col("b").alias("node"), (F.col("dist") + 1).alias("dist"))
-        d = cut(
-            d.unionAll(step)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-    return d.orderBy("node")
-
-
-def bfs_oracle_sql(
-    edges_sql: str, seeds: list[str], rounds: int = 3
-) -> str:
-    """DuckDB twin of :func:`bfs_layers`: ``edges_sql`` must yield
-    (src, dst); returns (node, dist) ordered by node."""
-    if rounds < 1 or not seeds or len(set(seeds)) != len(seeds):
-        raise ValueError(f"bad bfs shape ({rounds=}, {seeds=})")
-    seed_rows = " UNION ALL ".join(
-        f"SELECT '{s.replace(chr(39), chr(39) * 2)}' AS node, "
-        "0::BIGINT AS dist"
-        for s in seeds
-    )
-    ctes = [
-        f"""fwd AS (SELECT src AS a, dst AS b FROM ({edges_sql})
-             WHERE src IS NOT NULL AND dst IS NOT NULL AND src <> dst)""",
-        "g AS MATERIALIZED (SELECT DISTINCT a, b FROM "
-        "(SELECT a, b FROM fwd UNION ALL SELECT b, a FROM fwd))",
-        f"d0 AS ({seed_rows})",
-    ]
-    for r in range(1, rounds + 1):
-        ctes.append(
-            f"""d{r} AS MATERIALIZED (
-                 SELECT node, MIN(dist) AS dist FROM (
-                     SELECT node, dist FROM d{r - 1}
-                     UNION ALL
-                     SELECT g.b AS node, d.dist + 1 AS dist
-                     FROM g JOIN d{r - 1} d ON g.a = d.node
-                 ) GROUP BY 1)"""
-        )
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f" SELECT node, CAST(dist AS BIGINT) AS dist FROM d{rounds}"
-        " ORDER BY node"
     )

@@ -363,104 +363,6 @@ def anchor_extract_sql(
     """
 
 
-_TITLE_RE = r"(?si)<title[^>]*>([^<]*)</title>"
-# meta description: both attribute orders × both content quote types.
-# Per-quote-type alternatives (the _HREF_RES discipline) keep an
-# apostrophe inside a double-quoted value intact — a mixed class like
-# [\"']([^\"']*)[\"'] would truncate "the world's best" at the
-# apostrophe.  The quote type is anchored right after content= so the
-# wrong-quote variant cannot partially match.
-_NAME_DESC = r"name\s*=\s*[\"']description[\"']"
-_META_DESC_RES = [
-    rf"(?si)<meta\s+[^>]*{_NAME_DESC}[^>]*content\s*=\s*\"([^\"]*)\"",
-    rf"(?si)<meta\s+[^>]*{_NAME_DESC}[^>]*content\s*=\s*'([^']*)'",
-    rf"(?si)<meta\s+[^>]*content\s*=\s*\"([^\"]*)\"[^>]*{_NAME_DESC}",
-    rf"(?si)<meta\s+[^>]*content\s*=\s*'([^']*)'[^>]*{_NAME_DESC}",
-]
-_H1_RE = r"(?si)<h1[^>]*>([^<]*)</h1>"
-# explicit whitespace class: Java's \s includes \x0B, RE2's does not —
-# \s+ here would silently diverge from the DuckDB twin on vertical tabs
-_WS_RUN_RE = r"[ \t\n\r\f]+"
-
-
-def extract_page_meta(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-) -> DataFrame:
-    """Extract ``(url, title, meta_description, h1)`` from page HTML —
-    the page-level naming evidence that complements anchor text (a
-    page's title names the THING the page is about; anchors name what
-    OTHERS call it), feeding KG surface-form voting and snippet
-    generation.
-
-    First occurrence wins for each tag (the browser rule); whitespace
-    runs collapse to one space (explicit ``[ \\t\\n\\r\\f]`` class —
-    Java's ``\\s`` includes vertical tab where RE2's does not) and the
-    result is trimmed; a missing tag yields NULL.  Meta descriptions
-    match in BOTH attribute orders (name-then-content and
-    content-then-name) and both quoting styles, with apostrophes inside
-    double-quoted values (and vice versa) preserved.  Subset honesty
-    (the href-grammar discipline): plain-text tag contents only
-    (``[^<]*`` — a ``<title>`` holding nested markup is not a real
-    page title), quoted meta content only.
-
-    Scale shape: native regexp_extracts over the html column — zero
-    Python, no shuffle."""
-    html = F.col(html_col).cast("string")
-
-    def collapse(col: Column) -> Column:
-        return F.nullif(
-            F.trim(F.regexp_replace(col, _WS_RUN_RE, " ")), F.lit("")
-        )
-
-    meta_raw = F.coalesce(
-        *[
-            F.nullif(F.regexp_extract(html, p, 1), F.lit(""))
-            for p in _META_DESC_RES
-        ]
-    )
-    return pages.select(
-        F.col(url_col).alias("url"),
-        collapse(F.regexp_extract(html, _TITLE_RE, 1)).alias("title"),
-        collapse(meta_raw).alias("meta_description"),
-        collapse(F.regexp_extract(html, _H1_RE, 1)).alias("h1"),
-    )
-
-
-def extract_page_meta_oracle_sql(
-    pages_sql: str,
-    html_expr: str = "html",
-    url_expr: str = "url",
-) -> str:
-    """DuckDB twin of :func:`extract_page_meta` (same per-quote-type
-    meta alternatives, same explicit whitespace class)."""
-
-    def extract(rx: str) -> str:
-        sql_rx = rx.replace("'", "''")
-        return (
-            f"NULLIF(coalesce(regexp_extract({html_expr}, '{sql_rx}', 1),"
-            " ''), '')"
-        )
-
-    def collapse(expr: str) -> str:
-        return (
-            f"NULLIF(trim(regexp_replace(coalesce({expr}, ''), "
-            f"'{_WS_RUN_RE}', ' ', 'g')), '')"
-        )
-
-    meta_raw = "COALESCE(" + ", ".join(
-        extract(p) for p in _META_DESC_RES
-    ) + ")"
-    return f"""
-        SELECT {url_expr} AS url,
-               {collapse(extract(_TITLE_RE))} AS title,
-               {collapse(meta_raw)} AS meta_description,
-               {collapse(extract(_H1_RE))} AS h1
-        FROM ({pages_sql})
-    """
-
-
 def frontier_waves(
     urls: DataFrame,
     per_host_cap: int,
@@ -592,74 +494,6 @@ def recrawl_schedule_oracle_sql(
     """
 
 
-_SITEMAP_URL_BLOCK_RE = r"(?s)<url>(.*?)</url>"
-_SITEMAP_LOC_RE = r"(?s)<loc>\s*([^<]+?)\s*</loc>"
-_SITEMAP_LASTMOD_RE = r"(?s)<lastmod>\s*([^<]+?)\s*</lastmod>"
-
-
-def parse_sitemap(
-    sitemaps: DataFrame,
-    host_col: str = "host",
-    body_col: str = "sitemap_xml",
-) -> DataFrame:
-    """Parse sitemap XML bodies into ``(host, loc, lastmod)`` — the
-    crawl DISCOVERY source that pairs with :func:`parse_robots`
-    (policy) and :func:`crawl_delta` (change): new locs seed the
-    frontier, lastmod seeds :func:`recrawl_schedule`.
-
-    Extraction is block-level, the :func:`extract_anchors` discipline:
-    each ``<url>…</url>`` block is exploded FIRST so a loc stays paired
-    with ITS lastmod (extracting the two tag streams separately would
-    mis-align them when lastmod is optional).  ``(?s)`` regexes span
-    newlines in both engines; whitespace inside ``<loc>`` is trimmed
-    per the sitemap spec; missing ``<lastmod>`` yields NULL.  Subset
-    honesty: ``<urlset>`` entries only (no nested sitemapindex
-    recursion — an index's ``<loc>`` list is a fetch worklist, not row
-    data).
-
-    Scale shape: regexp + explode, fully native, no shuffle."""
-    blocks = sitemaps.select(
-        F.col(host_col).alias("host"),
-        F.explode(
-            F.regexp_extract_all(
-                F.col(body_col), F.lit(_SITEMAP_URL_BLOCK_RE), 1
-            )
-        ).alias("block"),
-    )
-    return blocks.select(
-        "host",
-        F.nullif(
-            F.regexp_extract("block", _SITEMAP_LOC_RE, 1), F.lit("")
-        ).alias("loc"),
-        F.nullif(
-            F.regexp_extract("block", _SITEMAP_LASTMOD_RE, 1), F.lit("")
-        ).alias("lastmod"),
-    ).filter(F.col("loc").isNotNull())
-
-
-def parse_sitemap_oracle_sql(
-    sitemaps_sql: str,
-    host_col: str = "host",
-    body_col: str = "sitemap_xml",
-) -> str:
-    """DuckDB twin of :func:`parse_sitemap`."""
-    return f"""
-        SELECT host,
-               NULLIF(regexp_extract(block, '{_SITEMAP_LOC_RE}', 1),
-                      '') AS loc,
-               NULLIF(regexp_extract(block, '{_SITEMAP_LASTMOD_RE}', 1),
-                      '') AS lastmod
-        FROM (
-            SELECT {host_col} AS host,
-                   unnest(regexp_extract_all({body_col},
-                          '{_SITEMAP_URL_BLOCK_RE}', 1)) AS block
-            FROM ({sitemaps_sql})
-        )
-        WHERE NULLIF(regexp_extract(block, '{_SITEMAP_LOC_RE}', 1), '')
-              IS NOT NULL
-    """
-
-
 def crawl_delta(
     old: DataFrame,
     new: DataFrame,
@@ -719,11 +553,11 @@ def _robots_lines(
     robots: DataFrame, host_col: str, body_col: str
 ) -> DataFrame:
     """(host, fkey, ln, line): comment-stripped trimmed lines with a
-    per-BODY key — shared scaffold of :func:`parse_robots` and
-    :func:`crawl_delays`.  Keying on the body hash as well as the host
-    makes duplicate host rows (a robots file refetched in two crawl
-    waves and unioned) parse each body INDEPENDENTLY instead of
-    interleaving their colliding line numbers nondeterministically."""
+    per-BODY key — the scaffold of :func:`parse_robots`.  Keying on the
+    body hash as well as the host makes duplicate host rows (a robots
+    file refetched in two crawl waves and unioned) parse each body
+    INDEPENDENTLY instead of interleaving their colliding line numbers
+    nondeterministically."""
     line_no = (F.col("pos") + 1).alias("ln")
     return robots.select(
         F.col(host_col).alias("host"),
@@ -797,133 +631,6 @@ def parse_robots(
         .filter(F.col("allow").isNotNull() & (F.col("prefix") != ""))
         .filter(F.col("agent").isNotNull())
     )
-
-
-# Crawl-delay values: integer or decimal seconds with up to 3 fraction
-# digits ("10", "0.5", "2.25"); anything else is dropped as malformed.
-_DELAY_VAL_RE = r"^(\d+)(?:\.(\d{1,3}))?$"
-
-
-def crawl_delays(
-    robots: DataFrame,
-    host_col: str = "host",
-    body_col: str = "robots_txt",
-) -> DataFrame:
-    """Parse the de-facto ``Crawl-delay`` directive into
-    ``(host, agent, delay_ms)`` — the per-host pacing that scales
-    :func:`frontier_waves` wave spacing (a host with Crawl-delay 10
-    gets one fetch per 10 s, i.e. its wave interval stretches).
-
-    Seconds parse as EXACT integers (integer part × 1000 + the
-    right-padded fraction — no float anywhere, so "0.5" → 500 in both
-    engines bit-for-bit); malformed values are dropped; multiple
-    delays in one (host, agent) group keep the MAXIMUM (the
-    politeness-conservative choice).  Group assignment and the
-    duplicate-host-body discipline follow :func:`parse_robots`."""
-    lines = _robots_lines(robots, host_col, body_col)
-    low = F.lower(F.col("line"))
-    val = F.trim(F.expr("substr(line, 13)"))
-    tagged = lines.select(
-        "host",
-        "fkey",
-        "ln",
-        F.when(
-            low.startswith("user-agent:"),
-            F.lower(F.trim(F.expr("substr(line, 12)"))),
-        ).alias("ua"),
-        F.when(low.startswith("crawl-delay:"), val).alias("raw_delay"),
-    )
-    w = _group_window()
-    delays = (
-        tagged.select(
-            "host",
-            F.last("ua", ignorenulls=True).over(w).alias("agent"),
-            "raw_delay",
-        )
-        .filter(F.col("raw_delay").isNotNull() & F.col("agent").isNotNull())
-        .filter(F.col("raw_delay").rlike(_DELAY_VAL_RE))
-        .select(
-            "host",
-            "agent",
-            (
-                F.regexp_extract("raw_delay", _DELAY_VAL_RE, 1)
-                .cast("long") * 1000
-                + F.rpad(
-                    F.coalesce(
-                        F.nullif(
-                            F.regexp_extract(
-                                "raw_delay", _DELAY_VAL_RE, 2
-                            ),
-                            F.lit(""),
-                        ),
-                        F.lit("0"),
-                    ),
-                    3,
-                    "0",
-                ).cast("long")
-            ).alias("delay_ms"),
-        )
-    )
-    return delays.groupBy("host", "agent").agg(
-        F.max("delay_ms").alias("delay_ms")
-    )
-
-
-def crawl_delays_oracle_sql(
-    robots_sql: str,
-    host_col: str = "host",
-    body_col: str = "robots_txt",
-) -> str:
-    """DuckDB twin of :func:`crawl_delays` (same exact-integer
-    millisecond arithmetic, same max-per-group)."""
-    return f"""
-        SELECT host, agent, MAX(delay_ms)::BIGINT AS delay_ms
-        FROM (
-            SELECT host, agent,
-                   CAST(regexp_extract(raw_delay,
-                        '{_DELAY_VAL_RE}', 1) AS BIGINT) * 1000
-                   + CAST(rpad(COALESCE(NULLIF(regexp_extract(raw_delay,
-                        '{_DELAY_VAL_RE}', 2), ''), '0'), 3, '0')
-                        AS BIGINT) AS delay_ms
-            FROM (
-                SELECT host,
-                       LAST_VALUE(ua IGNORE NULLS) OVER (
-                           PARTITION BY host, fkey ORDER BY ln
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW
-                       ) AS agent,
-                       raw_delay
-                FROM (
-                    SELECT host, fkey, ln,
-                           CASE WHEN lower(line) LIKE 'user-agent:%'
-                                THEN lower(trim(substr(line, 12)))
-                           END AS ua,
-                           CASE WHEN lower(line) LIKE 'crawl-delay:%'
-                                THEN trim(substr(line, 13)) END
-                               AS raw_delay
-                    FROM (
-                        SELECT host, md5({body_col}) AS fkey,
-                               pair[2]::BIGINT AS ln,
-                               trim(regexp_replace(pair[1]::VARCHAR,
-                                    '#.*$', '')) AS line
-                        FROM (
-                            SELECT {host_col} AS host, {body_col},
-                                   unnest(list_zip(
-                                       string_split({body_col}, chr(10)),
-                                       generate_series(1,
-                                           len(string_split({body_col},
-                                               chr(10))))
-                                   )) AS pair
-                            FROM ({robots_sql})
-                        )
-                    )
-                )
-                QUALIFY raw_delay IS NOT NULL AND agent IS NOT NULL
-            )
-            WHERE regexp_matches(raw_delay, '{_DELAY_VAL_RE}')
-        )
-        GROUP BY host, agent
-    """
 
 
 # path+query of a url (everything between authority and fragment); the

@@ -1,4 +1,5 @@
-"""Crawl scheduling operators (weburl.recrawl_schedule + robots policy).
+"""Crawl scheduling operators (weburl.recrawl_schedule, robots policy and
+crawl_delta).
 
 Pins the AIMD fold exactly (halve-on-change / double-on-no-change with
 both clamps), empty-history behavior, and DuckDB twin parity.
@@ -8,6 +9,8 @@ import pandas as pd
 import pytest
 
 from deduce_spark.spark.weburl import (
+    crawl_delta,
+    crawl_delta_oracle_sql,
     recrawl_schedule,
     recrawl_schedule_oracle_sql,
 )
@@ -204,171 +207,34 @@ def test_robots_oracle_parity_inline(spark, robots_rules):
         assert list(got[c]) == list(want[c]), c
 
 
-DELAY_ROBOTS = [
-    ("a.nl",
-     "User-agent: *\nCrawl-delay: 10\nDisallow: /x\n"
-     "User-agent: slowbot\nCrawl-delay: 0.5\nCrawl-delay: 2.25"),
-    ("b.nl", "User-agent: *\nCrawl-delay: nonsense\nCrawl-delay: 3"),
-    ("c.nl", "Crawl-delay: 7"),  # before any User-agent -> dropped
-]
+OLD = [("u1", "d1"), ("u2", "d2"), ("u3", "d3")]
+NEW = [("u2", "dX"), ("u3", "d3"), ("u4", "d4")]
 
 
-def test_crawl_delays_exact_ms(spark):
-    from deduce_spark.spark.weburl import crawl_delays
-
-    robots = spark.createDataFrame(
-        DELAY_ROBOTS, "host string, robots_txt string"
-    )
-    out = {
-        (r["host"], r["agent"]): r["delay_ms"]
-        for r in crawl_delays(robots).collect()
-    }
+def test_crawl_delta_statuses(spark):
+    old = spark.createDataFrame(OLD, "url string, digest string")
+    new = spark.createDataFrame(NEW, "url string, digest string")
+    out = {r["url"]: r["status"] for r in crawl_delta(old, new).collect()}
     assert out == {
-        ("a.nl", "*"): 10000,
-        # duplicate delays keep the MAX; fractions are exact integers
-        ("a.nl", "slowbot"): 2250,
-        # malformed value dropped, valid one kept
-        ("b.nl", "*"): 3000,
+        "u1": "deleted", "u2": "changed", "u3": "unchanged", "u4": "added",
     }
 
 
-def test_crawl_delays_oracle_parity(spark):
-    from deduce_spark.spark.weburl import (
-        crawl_delays,
-        crawl_delays_oracle_sql,
-    )
-
-    robots = spark.createDataFrame(
-        DELAY_ROBOTS, "host string, robots_txt string"
-    )
-    got = crawl_delays(robots).orderBy("host", "agent").toPandas()
+def test_crawl_delta_oracle_parity(spark):
+    old = spark.createDataFrame(OLD, "url string, digest string")
+    new = spark.createDataFrame(NEW, "url string, digest string")
+    got = crawl_delta(old, new).orderBy("url").toPandas()
     con = duckdb.connect()
-    con.register(
-        "dr_src", pd.DataFrame(DELAY_ROBOTS,
-                               columns=["host", "robots_txt"])
-    )
+    con.register("old_src", pd.DataFrame(OLD, columns=["url", "digest"]))
+    con.register("new_src", pd.DataFrame(NEW, columns=["url", "digest"]))
     want = con.execute(
-        crawl_delays_oracle_sql("SELECT * FROM dr_src")
-        + " ORDER BY host, agent"
-    ).df()
-    assert list(got.columns) == list(want.columns)
-    for c in got.columns:
-        assert list(got[c]) == list(want[c]), c
-
-
-SITEMAPS = [
-    ("a.nl",
-     '<?xml version="1.0"?><urlset>'
-     "<url><loc> https://a.nl/1 </loc><lastmod>2026-08-01</lastmod></url>"
-     "<url>\n  <loc>https://a.nl/2</loc>\n</url>"
-     "<url><lastmod>2026-08-03</lastmod></url>"  # no loc -> dropped
-     "</urlset>"),
-    ("b.nl", "<urlset><url><loc>https://b.nl/x</loc>"
-             "<lastmod>2026-01-02</lastmod></url></urlset>"),
-    ("c.nl", "not xml at all"),
-]
-
-
-def test_parse_sitemap_pairs_loc_with_its_lastmod(spark):
-    from deduce_spark.spark.weburl import parse_sitemap
-
-    sm = spark.createDataFrame(SITEMAPS, "host string, sitemap_xml string")
-    rows = {(r["host"], r["loc"]): r["lastmod"]
-            for r in parse_sitemap(sm).collect()}
-    assert rows == {
-        ("a.nl", "https://a.nl/1"): "2026-08-01",  # whitespace trimmed
-        ("a.nl", "https://a.nl/2"): None,          # optional lastmod
-        ("b.nl", "https://b.nl/x"): "2026-01-02",
-    }
-
-
-def test_parse_sitemap_oracle_parity(spark):
-    from deduce_spark.spark.weburl import (
-        parse_sitemap,
-        parse_sitemap_oracle_sql,
-    )
-
-    sm = spark.createDataFrame(SITEMAPS, "host string, sitemap_xml string")
-    got = parse_sitemap(sm).orderBy("host", "loc").toPandas()
-    con = duckdb.connect()
-    con.register(
-        "sm_src", pd.DataFrame(SITEMAPS, columns=["host", "sitemap_xml"])
-    )
-    want = con.execute(
-        parse_sitemap_oracle_sql("SELECT * FROM sm_src")
-        + " ORDER BY host, loc"
-    ).df()
-    assert list(got.columns) == list(want.columns)
-    for c in got.columns:
-        assert [x for x in got[c]] == [
-            (None if pd.isna(x) else x) for x in want[c]
-        ], c
-
-
-META_PAGES = [
-    ("https://a.nl/1",
-     '<html><head><title> My  Page </title>'
-     '<meta name="description" content="Desc here"></head>'
-     '<body><h1>Header</h1><title>second</title></body></html>'),
-    ("https://a.nl/2",
-     "<html><head><META NAME='description' CONTENT='single quoted'>"
-     "<title>T2\nwrapped</title></head></html>"),
-    ("https://a.nl/3", "<html><body>no tags</body></html>"),
-    ("https://a.nl/4",
-     "<html><title>a<b>nested</b></title><h1 class='x'>H</h1></html>"),
-    # apostrophe inside a double-quoted value survives intact
-    ("https://a.nl/5",
-     '<html><meta name="description" '
-     'content="the world\'s best page"></html>'),
-    # content-before-name attribute order
-    ("https://a.nl/6",
-     '<html><meta content="order reversed" name="description"></html>'),
-]
-
-
-def test_extract_page_meta(spark):
-    from deduce_spark.spark.weburl import extract_page_meta
-
-    pages = spark.createDataFrame(META_PAGES, "url string, html string")
-    out = {
-        r["url"]: (r["title"], r["meta_description"], r["h1"])
-        for r in extract_page_meta(pages).collect()
-    }
-    assert out == {
-        # first title wins; whitespace collapsed
-        "https://a.nl/1": ("My Page", "Desc here", "Header"),
-        # case-insensitive tag/attr names, single-quoted content,
-        # newline inside title collapsed
-        "https://a.nl/2": ("T2 wrapped", "single quoted", None),
-        "https://a.nl/3": (None, None, None),
-        # nested markup inside <title> rejected; attributed <h1> kept
-        "https://a.nl/4": (None, None, "H"),
-        "https://a.nl/5": (None, "the world's best page", None),
-        "https://a.nl/6": (None, "order reversed", None),
-    }
-
-
-def test_extract_page_meta_oracle_parity(spark):
-    from deduce_spark.spark.weburl import (
-        extract_page_meta,
-        extract_page_meta_oracle_sql,
-    )
-
-    pages = spark.createDataFrame(META_PAGES, "url string, html string")
-    got = extract_page_meta(pages).orderBy("url").toPandas()
-    con = duckdb.connect()
-    con.register(
-        "pm_src", pd.DataFrame(META_PAGES, columns=["url", "html"])
-    )
-    want = con.execute(
-        extract_page_meta_oracle_sql("SELECT * FROM pm_src")
+        crawl_delta_oracle_sql(
+            "SELECT * FROM old_src", "SELECT * FROM new_src"
+        )
         + " ORDER BY url"
     ).df()
-    assert list(got.columns) == list(want.columns)
     for c in got.columns:
-        assert [x for x in got[c]] == [
-            (None if pd.isna(x) else x) for x in want[c]
-        ], c
+        assert list(got[c]) == list(want[c]), c
 
 
 def test_no_shuffle_no_python(spark, hist_df):

@@ -89,6 +89,14 @@ def _stage_b(spark, src: Path, out: Path, engine) -> set:
     }
 
 
+def _persisted(spark) -> set:
+    """Ids of the RDDs the session holds persisted.  Compared as sets: the
+    JVM keeps persisted RDDs in a weak-valued map, so a GC during a run
+    can drop unreachable ones that earlier tests left, and a count then
+    falls without saying anything about the run."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def _count_derivations(monkeypatch) -> list:
     derived = []
     derive = kg.build_link_dicts
@@ -100,14 +108,13 @@ def _count_derivations(monkeypatch) -> list:
 
 def test_stage_b_reuses_link_dicts_and_broadcast(spark, kg_src, monkeypatch):
     derived = _count_derivations(monkeypatch)
-    jsc = spark.sparkContext._jsc
     engine = SimpleNamespace(ds=_lookup())
 
     runs, broadcasts = [], []
     for i in range(2):
-        before = jsc.getPersistentRDDs().size()
+        before = _persisted(spark)
         runs.append(_stage_b(spark, kg_src, kg_src / f"run{i}", engine))
-        assert jsc.getPersistentRDDs().size() == before, "stage B leaked a cache"
+        assert not _persisted(spark) - before, "stage B leaked a cache"
         broadcasts.append(kg.link_dicts_broadcast(spark, engine))
 
     assert runs[0] == runs[1]
@@ -139,13 +146,12 @@ def test_stage_b_releases_caches_when_a_commit_fails(
 
     write = IceTable.write
     monkeypatch.setattr(IceTable, "write", fail)
-    jsc = spark.sparkContext._jsc
-    before = jsc.getPersistentRDDs().size()
+    before = _persisted(spark)
     with pytest.raises(OSError, match="edges commit failed"):
         _stage_b(
             spark, kg_src, kg_src / "run-fail", SimpleNamespace(ds=_lookup())
         )
-    assert jsc.getPersistentRDDs().size() == before, "stage B leaked a cache"
+    assert not _persisted(spark) - before, "stage B leaked a cache"
 
 
 class _Context:

@@ -210,27 +210,3 @@ class TestLog2HistogramAndGroupHLL:
             log2_histogram_quantile(hist, 1001)
         with _pytest.raises(ValueError):
             log2_histogram_quantile([], 500)
-
-    def test_group_hll_independent_per_group(self, spark):
-        # each group's registers must equal a standalone sketch over
-        # just that group's values
-        from deduce_spark.spark.sketches import hll_registers
-
-        rows = [("a", f"x{i}") for i in range(60)] + [
-            ("b", f"y{i}") for i in range(30)
-        ]
-        df = spark.createDataFrame(rows, "g string, v string")
-        grouped = {
-            (r["g"], r["bucket"]): r["max_rho"]
-            for r in hll_registers(
-                df, "v", p=5, group_cols=("g",)
-            ).collect()
-        }
-        for g in ("a", "b"):
-            solo = {
-                (g, r["bucket"]): r["max_rho"]
-                for r in hll_registers(
-                    df.filter(f"g = '{g}'"), "v", p=5
-                ).collect()
-            }
-            assert solo == {k: v for k, v in grouped.items() if k[0] == g}

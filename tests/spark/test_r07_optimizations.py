@@ -2,9 +2,7 @@
 
 Covers: cache-resident signature tiles (bit-identical to the scalar
 kernels across tile boundaries), the scale-adaptive ``fan_out`` helper,
-the bucket-cap rewrite (no window keyed on a raw bucket column), and the
-label_propagation default plan (no forced broadcast — the repo's own
-26.76M-edge A/B measured broadcast ~3x slower for LPA).
+and the bucket-cap rewrite (no window keyed on a raw bucket column).
 """
 
 from __future__ import annotations
@@ -127,36 +125,6 @@ class TestBucketCapPlanShape:
 
         for frag in re.findall(r"Window \[[^\]]*\], \[([^\]]*)\]", plan):
             assert "bucket" not in frag and "table_idx" not in frag
-
-
-class TestLpaDefaultPlan:
-    def test_no_broadcast_exchange_by_default(self, spark):
-        from deduce_spark.spark.webgraph import label_propagation
-
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 1), (4, 5)], "src long, dst long"
-        )
-        out = label_propagation(edges, rounds=1)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastExchange" not in plan
-
-    def test_both_modes_agree(self, spark):
-        from deduce_spark.spark.webgraph import label_propagation
-
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (3, 1), (4, 5), (5, 6)], "src long, dst long"
-        )
-        a = sorted(
-            (r["node"], r["label"])
-            for r in label_propagation(edges, rounds=2).collect()
-        )
-        b = sorted(
-            (r["node"], r["label"])
-            for r in label_propagation(
-                edges, rounds=2, broadcast_tables=True
-            ).collect()
-        )
-        assert a == b
 
 
 class TestCorpusFilterDupRule:

@@ -1,6 +1,8 @@
 """Round-3 operators: HLL register sketches, exact-substring dup
 accounting, URL canonicalization."""
 
+from pathlib import Path
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -10,6 +12,8 @@ from deduce_spark.spark.textstats import exact_substr_dup
 from deduce_spark.spark.weburl import (
     canonical_url_oracle_sql, canonicalize_url, url_host, url_host_oracle_sql,
 )
+
+_GOLDEN = Path(__file__).resolve().parents[2] / "data" / "golden"
 
 
 class TestHLL:
@@ -594,7 +598,7 @@ class TestExactSubstrDupRolling:
             .astype("int64")
         )
         want = pd.read_parquet(
-            f"/root/repo/data/golden/{sf}/substr_dup_rolling.parquet"
+            _GOLDEN / sf / "substr_dup_rolling.parquet"
         )
         pd.testing.assert_frame_equal(got, want)
 

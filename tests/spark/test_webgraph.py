@@ -1,75 +1,18 @@
-"""Integer-quantized HITS: semantics + DuckDB twin parity."""
+"""k-core peeling: semantics, DuckDB twin parity, broadcast and
+checkpoint controls."""
 
 import duckdb
 import pytest
 
-from deduce_spark.spark.webgraph import hits_oracle_sql, hits_scores
+from deduce_spark.spark.webgraph import kcore_oracle_sql, kcore_peel
 
 
 def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "src string, dst string")
 
 
-class TestHITS:
-    def test_hub_and_authority_structure(self, spark):
-        # h1,h2,h3 all point at "star"; h1 additionally points at a, b.
-        # star must be the max authority; h1 the max hub.
-        pairs = [
-            ("h1", "star"), ("h2", "star"), ("h3", "star"),
-            ("h1", "a"), ("h1", "b"),
-        ]
-        got = {
-            r["node"]: (r["auth"], r["hub"])
-            for r in hits_scores(_edges(spark, pairs), iters=2).collect()
-        }
-        assert got["star"][0] == 1000  # max-normalized authority
-        assert got["h1"][1] == 1000  # max-normalized hub
-        assert got["h2"][1] < 1000 and got["h3"][1] < 1000
-        assert got["a"][0] < got["star"][0]
-        # sources have no in-edges, sinks no out-edges
-        assert got["h2"][0] == 0 and got["star"][1] == 0
-
-    def test_duplicate_edges_collapse(self, spark):
-        once = hits_scores(
-            _edges(spark, [("x", "y"), ("x", "z")]), iters=2
-        ).collect()
-        dup = hits_scores(
-            _edges(spark, [("x", "y"), ("x", "y"), ("x", "z")]), iters=2
-        ).collect()
-        assert sorted(map(tuple, once)) == sorted(map(tuple, dup))
-
-    def test_validation(self, spark):
-        with pytest.raises(ValueError):
-            hits_scores(_edges(spark, [("x", "y")]), iters=0)
-        with pytest.raises(ValueError):
-            hits_oracle_sql("SELECT 1 src, 2 dst", iters=0)
-
-    def test_twin_parity(self, spark):
-        # ring + chords, 3 iterations — every quantized half-step must
-        # agree bit-for-bit between engines
-        pairs = [(f"n{i}", f"n{(i + 1) % 7}") for i in range(7)]
-        pairs += [("n0", "n3"), ("n5", "n2"), ("n1", "n4"), ("n6", "n0")]
-        got = sorted(
-            map(tuple, hits_scores(_edges(spark, pairs), iters=3).collect())
-        )
-        duck = duckdb.connect()
-        duck.execute("CREATE TABLE edges(src VARCHAR, dst VARCHAR)")
-        duck.executemany("INSERT INTO edges VALUES (?, ?)", pairs)
-        twin = sorted(
-            map(
-                tuple,
-                duck.sql(
-                    hits_oracle_sql("SELECT src, dst FROM edges", iters=3)
-                ).fetchall(),
-            )
-        )
-        assert got == twin
-
-
 class TestKCore:
     def _run(self, spark, pairs, **kw):
-        from deduce_spark.spark.webgraph import kcore_peel
-
         return {
             r["node"]: r["deg"]
             for r in kcore_peel(_edges(spark, pairs), **kw).collect()
@@ -104,16 +47,12 @@ class TestKCore:
         assert got == {"x": 2, "y": 2, "z": 2}
 
     def test_validation(self, spark):
-        from deduce_spark.spark.webgraph import kcore_oracle_sql, kcore_peel
-
         with pytest.raises(ValueError):
             kcore_peel(_edges(spark, [("a", "b")]), k=0)
         with pytest.raises(ValueError):
             kcore_oracle_sql("SELECT 1", rounds=0)
 
     def test_twin_parity(self, spark):
-        from deduce_spark.spark.webgraph import kcore_oracle_sql, kcore_peel
-
         # random-ish digraph over 20 hosts plus a 5-clique (a genuine
         # 3-core that must survive) and noise edges
         pairs = [
@@ -140,138 +79,6 @@ class TestKCore:
         assert got == want and len(got) > 0
 
 
-class TestLabelPropagation:
-    def _run(self, spark, pairs, **kw):
-        from deduce_spark.spark.webgraph import label_propagation
-
-        return {
-            r["node"]: r["label"]
-            for r in label_propagation(_edges(spark, pairs), **kw).collect()
-        }
-
-    def test_two_cliques_converge_to_min_labels(self, spark):
-        # two 4-cliques joined by one bridge edge: by round 2 each
-        # clique's majority overrides the round-1 tie-break leakage
-        # through the bridge, so each collapses onto its own smallest
-        # member's label (3-cliques would NOT separate: with all-tie
-        # round-1 votes the global min floods across the bridge — the
-        # documented LPA pathology on tie-heavy graphs)
-        cl = lambda p: [(f"{p}{i}", f"{p}{j}") for i in range(4)
-                        for j in range(4) if i < j]
-        pairs = cl("a") + cl("b") + [("a0", "b0")]
-        got = self._run(spark, pairs, rounds=2)
-        assert all(got[f"a{i}"] == "a0" for i in range(4))
-        assert all(got[f"b{i}"] == "b0" for i in range(4))
-
-    def test_deterministic_tie_break_is_min(self, spark):
-        # single edge x-y: each adopts the other's label round 1 (one
-        # neighbour each, no tie); star with two leaves: center sees two
-        # labels with cnt 1 -> takes the smaller
-        got = self._run(spark, [("c", "m"), ("c", "k")], rounds=1)
-        assert got["c"] == "k"
-
-    def test_validation_and_selfloop_drop(self, spark):
-        import pytest as _pytest
-
-        from deduce_spark.spark.webgraph import label_propagation
-
-        with _pytest.raises(ValueError):
-            label_propagation(_edges(spark, [("a", "b")]), rounds=0)
-        got = self._run(spark, [("a", "a"), ("a", "b")], rounds=1)
-        assert set(got) == {"a", "b"}
-
-    def test_twin_parity(self, spark):
-        from deduce_spark.spark.webgraph import (
-            label_propagation, label_propagation_oracle_sql,
-        )
-
-        pairs = [
-            (f"h{(i * 5) % 17}", f"h{(i * i + 1) % 17}") for i in range(50)
-        ] + [("x1", "x2"), ("x2", "x3")]
-        got = [
-            tuple(r)
-            for r in label_propagation(
-                _edges(spark, pairs), rounds=2
-            ).collect()
-        ]
-        import pandas as pd
-
-        duck = duckdb.connect()
-        duck.register("e", pd.DataFrame(pairs, columns=["src", "dst"]))
-        want = [
-            tuple(r)
-            for r in duck.sql(
-                label_propagation_oracle_sql(
-                    "SELECT src, dst FROM e", rounds=2
-                )
-            ).fetchall()
-        ]
-        assert got == want and len(got) > 0
-
-
-class TestBFSLayers:
-    def _run(self, spark, pairs, seeds, rounds):
-        from deduce_spark.spark.webgraph import bfs_layers
-
-        return {
-            r["node"]: r["dist"]
-            for r in bfs_layers(
-                _edges(spark, pairs), seeds, rounds=rounds
-            ).collect()
-        }
-
-    def test_layers_and_frontier_bound(self, spark):
-        # path a-b-c-d plus a detached edge x-y
-        pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")]
-        got = self._run(spark, pairs, ["a"], rounds=2)
-        assert got == {"a": 0, "b": 1, "c": 2}  # d beyond budget, x/y unreached
-
-    def test_min_distance_over_multiple_seeds(self, spark):
-        pairs = [("a", "b"), ("b", "c"), ("c", "d")]
-        got = self._run(spark, pairs, ["a", "d"], rounds=2)
-        assert got == {"a": 0, "b": 1, "c": 1, "d": 0}
-
-    def test_seed_not_in_graph_kept_at_zero(self, spark):
-        got = self._run(spark, [("a", "b")], ["zz"], rounds=1)
-        assert got == {"zz": 0}
-
-    def test_validation(self, spark):
-        from deduce_spark.spark.webgraph import bfs_layers, bfs_oracle_sql
-
-        df = _edges(spark, [("a", "b")])
-        with pytest.raises(ValueError):
-            bfs_layers(df, [], rounds=1)
-        with pytest.raises(ValueError):
-            bfs_layers(df, ["s", "s"], rounds=1)
-        with pytest.raises(ValueError):
-            bfs_oracle_sql("SELECT 1", ["s"], rounds=0)
-
-    def test_twin_parity(self, spark):
-        from deduce_spark.spark.webgraph import bfs_layers, bfs_oracle_sql
-
-        pairs = [
-            (f"h{(i * 3) % 15}", f"h{(i * i + 2) % 15}") for i in range(40)
-        ] + [("h0", "isle1"), ("isle1", "isle2")]
-        seeds = ["h0", "h7"]
-        got = [
-            tuple(r)
-            for r in bfs_layers(
-                _edges(spark, pairs), seeds, rounds=3
-            ).collect()
-        ]
-        import pandas as pd
-
-        duck = duckdb.connect()
-        duck.register("e", pd.DataFrame(pairs, columns=["src", "dst"]))
-        want = [
-            tuple(r)
-            for r in duck.sql(
-                bfs_oracle_sql("SELECT src, dst FROM e", seeds, rounds=3)
-            ).fetchall()
-        ]
-        assert got == want and len(got) > 3
-
-
 class TestBroadcastFallbackAndCheckpoint:
     """Round-6 scale controls: broadcast_tables=False must flip the
     <=|V|-row side-table joins to shuffled joins (a forced broadcast of
@@ -293,23 +100,8 @@ class TestBroadcastFallbackAndCheckpoint:
         assert len(on) > 0
         assert on == off
 
-    def test_hits_parity_both_modes(self, spark):
-        self._both_modes(spark, hits_scores, iters=2)
-
     def test_kcore_parity_both_modes(self, spark):
-        from deduce_spark.spark.webgraph import kcore_peel
-
         self._both_modes(spark, kcore_peel, k=3, rounds=3)
-
-    def test_lpa_parity_both_modes(self, spark):
-        from deduce_spark.spark.webgraph import label_propagation
-
-        self._both_modes(spark, label_propagation, rounds=2)
-
-    def test_bfs_parity_both_modes(self, spark):
-        from deduce_spark.spark.webgraph import bfs_layers
-
-        self._both_modes(spark, bfs_layers, seeds=["h0"], rounds=2)
 
     def _plan(self, df):
         return df._jdf.queryExecution().executedPlan().toString()
@@ -319,42 +111,20 @@ class TestBroadcastFallbackAndCheckpoint:
         # (eager cuts would hide per-round joins behind RDD scans), and
         # autoBroadcastJoinThreshold=-1 rules out Catalyst choosing a
         # broadcast on its own — any BroadcastExchange left is a hint.
-        from deduce_spark.spark.webgraph import (
-            bfs_layers, kcore_peel, label_propagation,
-        )
-
         ident = lambda df: df
         key = "spark.sql.autoBroadcastJoinThreshold"
         old = spark.conf.get(key)
         spark.conf.set(key, "-1")
         try:
             e = _edges(spark, self.PAIRS)
-            for fn, kw in [
-                (kcore_peel, dict(k=2, rounds=1)),
-                (label_propagation, dict(rounds=1)),
-                (bfs_layers, dict(seeds=["h0"], rounds=1)),
-            ]:
-                p_off = self._plan(fn(
-                    e, broadcast_tables=False, checkpoint=ident, **kw
-                ))
-                p_on = self._plan(fn(
-                    e, broadcast_tables=True, checkpoint=ident, **kw
-                ))
-                assert "BroadcastExchange" not in p_off, fn.__name__
-                assert "BroadcastExchange" in p_on, fn.__name__
-            # hits keeps the 1-row max-aggregate crossJoin broadcast in
-            # BOTH modes (it is a scalar, never |V|-sized); only the
-            # score-table joins must lose the hint.
-            p_off = self._plan(hits_scores(
-                e, iters=1, broadcast_tables=False, checkpoint=ident
+            p_off = self._plan(kcore_peel(
+                e, k=2, rounds=1, broadcast_tables=False, checkpoint=ident
             ))
-            p_on = self._plan(hits_scores(
-                e, iters=1, broadcast_tables=True, checkpoint=ident
+            p_on = self._plan(kcore_peel(
+                e, k=2, rounds=1, broadcast_tables=True, checkpoint=ident
             ))
-            assert (
-                p_off.count("BroadcastExchange")
-                < p_on.count("BroadcastExchange")
-            )
+            assert "BroadcastExchange" not in p_off
+            assert "BroadcastExchange" in p_on
             assert (
                 "SortMergeJoin" in p_off or "ShuffledHashJoin" in p_off
             )
@@ -364,8 +134,6 @@ class TestBroadcastFallbackAndCheckpoint:
     def test_directory_checkpoint_run(self, spark, tmp_path):
         # reliable-checkpoint strategy: same rows, and the directory
         # actually receives checkpoint data.
-        from deduce_spark.spark.webgraph import kcore_peel
-
         ckdir = str(tmp_path / "ck")
         got = sorted(map(tuple, kcore_peel(
             _edges(spark, self.PAIRS), k=3, rounds=3, checkpoint=ckdir
@@ -390,12 +158,10 @@ class TestBroadcastFallbackAndCheckpoint:
             calls.append(1)
             return df.localCheckpoint(eager=True)
 
-        from deduce_spark.spark.webgraph import label_propagation
-
-        got = label_propagation(
+        got = kcore_peel(
             _edges(spark, [("a", "b"), ("b", "c")]),
-            rounds=1, checkpoint=spy,
+            k=1, rounds=2, checkpoint=spy,
         ).collect()
-        assert len(got) == 3 and len(calls) >= 2  # edge table + 1 round
+        assert len(got) == 3 and len(calls) == 2  # one cut per round
         with pytest.raises(TypeError):
             make_checkpointer(42)

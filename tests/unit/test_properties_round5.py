@@ -146,81 +146,3 @@ def test_kcore_twin_matches_reference_peel(pairs):
         ).fetchall()
     )
     assert got == [(v, int(d)) for v, d in want]
-
-
-@given(st.lists(st.tuples(st.integers(0, 7), st.integers(0, 7)),
-                min_size=1, max_size=40),
-       st.integers(min_value=1, max_value=2))
-@settings(max_examples=15, deadline=None)
-def test_lpa_twin_matches_reference_sync_lpa(pairs, rounds):
-    """LPA SQL twin equals an independent pure-Python synchronous
-    min-tie-break propagation for any round count."""
-    from deduce_spark.spark.webgraph import label_propagation_oracle_sql
-
-    edges = _rand_edges(pairs)
-    adj = {}
-    for a, b in edges:
-        if a != b:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-    labels = {v: v for v in adj}
-    for _ in range(rounds):
-        nxt = {}
-        for v, ns in adj.items():
-            counts = {}
-            for n in ns:
-                counts[labels[n]] = counts.get(labels[n], 0) + 1
-            top = max(counts.values())
-            nxt[v] = min(l for l, c in counts.items() if c == top)
-        labels = nxt
-    want = sorted(labels.items())
-
-    duck = duckdb.connect()
-    duck.sql("SET threads TO 1")
-    duck.register("e", pd.DataFrame(edges, columns=["src", "dst"]))
-    got = sorted(
-        duck.sql(
-            label_propagation_oracle_sql(
-                "SELECT src, dst FROM e", rounds=rounds
-            )
-        ).fetchall()
-    )
-    assert got == want
-
-
-@given(st.lists(st.tuples(st.integers(0, 9), st.integers(0, 9)),
-                min_size=1, max_size=40),
-       st.integers(min_value=1, max_value=3))
-@settings(max_examples=15, deadline=None)
-def test_bfs_twin_matches_reference_bfs(pairs, rounds):
-    """BFS SQL twin equals an independent pure-Python bounded BFS from a
-    fixed seed pair on arbitrary digraphs."""
-    from deduce_spark.spark.webgraph import bfs_oracle_sql
-
-    edges = _rand_edges(pairs)
-    seeds = ["n0", "n5"]
-    adj = {}
-    for a, b in edges:
-        if a != b:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-    dist = {s: 0 for s in seeds}
-    frontier = set(seeds)
-    for d in range(1, rounds + 1):
-        frontier = {
-            n for v in frontier for n in adj.get(v, ())
-            if n not in dist
-        }
-        for n in frontier:
-            dist[n] = d
-    want = sorted(dist.items())
-
-    duck = duckdb.connect()
-    duck.sql("SET threads TO 1")
-    duck.register("e", pd.DataFrame(edges, columns=["src", "dst"]))
-    got = sorted(
-        duck.sql(
-            bfs_oracle_sql("SELECT src, dst FROM e", seeds, rounds=rounds)
-        ).fetchall()
-    )
-    assert got == [(n, d) for n, d in want]
