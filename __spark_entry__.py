@@ -97,13 +97,15 @@ def _pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _mentions_fingerprint() -> str:
     """Content hash over everything that determines the mentions table:
-    annotator kernel, page fixture generator, and the Spark annotate stage.
-    Any semantic change regenerates the materialized view automatically."""
+    annotator kernel and its pipeline config, page fixture generator, and
+    the Spark annotate stage.  Any semantic change regenerates the
+    materialized view automatically."""
     import hashlib
 
     root = Path(__file__).resolve().parent / "deduce_spark"
     h = hashlib.sha256()
     files = sorted((root / "kernel").glob("*.py"))
+    files += sorted((root / "kernel").glob("*.json"))
     files += [root / "fixtures.py", root / "spark" / "stages.py",
               root / "spark" / "kg.py"]
     for f in files:

@@ -3,10 +3,14 @@
 The pipeline spec (annotator definitions, overlap strategy, slack regexp,
 redactor chars) is the same JSON document format the reference uses
 (deduce/deduce.py:96-123; deep-merge semantics deduce/utils.py:75-88,
-pinned by tests/unit/test_utils.py:74-93).  The reference's shipped
-``base_config.json`` is treated as DATA and read from the reference
-checkout by default — override with the ``DEDUCE_SPARK_CONFIG`` env var or
-an explicit path/dict.
+pinned by tests/unit/test_utils.py:74-93).  The base document is
+``base_config.json`` next to this module; the ``DEDUCE_SPARK_CONFIG`` env
+var names another one, and a user config (path or dict) is merged on top.
+
+The lookup sources are a directory in the reference layout
+(``<dir>/src/...``) named by ``DEDUCE_SPARK_LOOKUP``; unset, the engine
+loads the pinned lookup structures tracked under ``data/cache`` (see
+``kernel.structs``).
 """
 
 from __future__ import annotations
@@ -17,15 +21,11 @@ from pathlib import Path
 from typing import Any, Optional, Union
 
 DEFAULT_CONFIG_PATH = Path(
-    os.environ.get(
-        "DEDUCE_SPARK_CONFIG", "/root/reference/deduce/base_config.json"
-    )
+    os.environ.get("DEDUCE_SPARK_CONFIG", Path(__file__).with_name("base_config.json"))
 )
-DEFAULT_LOOKUP_PATH = Path(
-    os.environ.get(
-        "DEDUCE_SPARK_LOOKUP", "/root/reference/deduce/data/lookup"
-    )
-)
+_LOOKUP_ENV = os.environ.get("DEDUCE_SPARK_LOOKUP")
+# None = no lookup sources: the pinned structures pickle
+DEFAULT_LOOKUP_PATH: Optional[Path] = Path(_LOOKUP_ENV) if _LOOKUP_ENV else None
 
 
 def deep_merge(base: dict, add: dict) -> dict:

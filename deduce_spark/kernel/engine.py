@@ -63,14 +63,14 @@ class Engine:
         self,
         config: Optional[Union[str, Path, dict]] = None,
         load_base_config: bool = True,
-        lookup_path: Union[str, Path] = DEFAULT_LOOKUP_PATH,
+        lookup_path: Optional[Union[str, Path]] = DEFAULT_LOOKUP_PATH,
         cache_dir: Optional[Path] = None,
         rebuild: bool = False,
     ) -> None:
         self.config = load_config(config, load_base_config=load_base_config)
         self.tokenizer = build_tokenizer(lookup_path)
         kwargs = {} if cache_dir is None else {"cache_dir": cache_dir}
-        self.ds = get_structs(Path(lookup_path), self.tokenizer, rebuild=rebuild, **kwargs)
+        self.ds = get_structs(lookup_path, self.tokenizer, rebuild=rebuild, **kwargs)
         self.groups = self._build_groups()
 
     # -- construction -----------------------------------------------------

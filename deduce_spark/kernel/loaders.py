@@ -2,8 +2,9 @@
 
 Mirrors reference deduce/lookup_struct_loader.py:10-239 and
 deduce/lookup_structs.py:33-47, re-expressed over WordSet/PhraseSet.  The
-raw source lists are DATA read from the reference checkout (or any
-directory with the same layout); nothing is copied into this repo.
+raw source lists are DATA read from a directory in the reference layout
+(``DEDUCE_SPARK_LOOKUP``); the lists themselves are not in this repo, only
+the structures built from them (the pinned pickle under data/cache).
 """
 
 from __future__ import annotations

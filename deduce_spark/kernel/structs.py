@@ -3,10 +3,15 @@
 Replaces the reference's pickle cache keyed on version + file mtimes
 (deduce/lookup_structs.py:115-239) with a CONTENT-HASH key: mtimes are not
 reproducible across cluster nodes, a digest of the source bytes is.
+
+Without source lists (no lookup path, or one without ``src/``) the
+structures come from ``PINNED_STRUCTS``, the tracked pickle built from the
+reference's lists (its name is their digest).
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import logging
 import pickle
@@ -36,6 +41,27 @@ def _default_cache_dir() -> Path:
 
 
 _DEFAULT_CACHE_DIR = _default_cache_dir()
+PINNED_STRUCTS = (
+    Path(__file__).resolve().parent.parent.parent
+    / "data" / "cache" / "lookup_structs_2ac432b4ec9e0f78.pkl"
+)
+
+
+def _has_sources(lookup_path: Optional[Path]) -> bool:
+    return lookup_path is not None and (Path(lookup_path) / "src").is_dir()
+
+
+@functools.lru_cache(maxsize=1)
+def _pinned_structs() -> dict:
+    """The tracked structures pickle, loaded once per process (~3 s) and
+    shared, read-only, by every engine built without sources."""
+    if not PINNED_STRUCTS.is_file():
+        raise FileNotFoundError(
+            f"no lookup sources given and the pinned lookup structures are "
+            f"missing: {PINNED_STRUCTS}"
+        )
+    with open(PINNED_STRUCTS, "rb") as fh:
+        return pickle.load(fh)
 
 
 def source_digest(lookup_path: Path) -> str:
@@ -55,12 +81,15 @@ def source_digest(lookup_path: Path) -> str:
 
 
 def get_structs(
-    lookup_path: Path,
+    lookup_path: Optional[Path],
     tokenizer: Tokenizer,
     cache_dir: Optional[Path] = _DEFAULT_CACHE_DIR,
     rebuild: bool = False,
 ) -> dict:
-    """Load (or build + cache) the full lookup-structure registry."""
+    """Load (or build + cache) the full lookup-structure registry; the
+    pinned structures when ``lookup_path`` holds no ``src/``."""
+    if not _has_sources(lookup_path):
+        return _pinned_structs()
     lookup_path = Path(lookup_path)
     cache_file = None
     if cache_dir is not None:
@@ -82,13 +111,18 @@ def get_structs(
     return structs
 
 
-def build_tokenizer(lookup_path: Path) -> Tokenizer:
+def build_tokenizer(lookup_path: Optional[Path]) -> Tokenizer:
     """Tokenizer whose merge phrases are the prefix + interfix items
-    (reference _initialize_tokenizer, deduce/deduce.py:132-144)."""
+    (reference _initialize_tokenizer, deduce/deduce.py:132-144); without
+    ``src/`` they are the pinned structures' ``prefix`` and ``interfix``."""
     from deduce_spark.kernel.loaders import build_interfix, build_prefix
 
-    raw = load_raw_itemsets(
-        Path(lookup_path), ["names/lst_interfix", "names/lst_prefix"]
-    )
-    merge_terms = list(build_prefix(raw)) + list(build_interfix(raw))
-    return Tokenizer(merge_terms=merge_terms)
+    if not _has_sources(lookup_path):
+        ds = _pinned_structs()
+        prefix, interfix = ds["prefix"], ds["interfix"]
+    else:
+        raw = load_raw_itemsets(
+            Path(lookup_path), ["names/lst_interfix", "names/lst_prefix"]
+        )
+        prefix, interfix = build_prefix(raw), build_interfix(raw)
+    return Tokenizer(merge_terms=list(prefix) + list(interfix))

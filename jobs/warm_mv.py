@@ -3,8 +3,8 @@
 Run after any edit that rotates ``_mentions_fingerprint()`` (kernel/*,
 fixtures.py, stages.py, kg.py) so the driver's one-shot bench reads warm
 parquet instead of paying a cold multi-minute annotate+canonicalize
-rebuild inside the timed capture.  ``tests/spark/test_entry.py::
-test_mv_fingerprint_fresh_all_tiers`` goes red until this has run.
+rebuild inside the timed capture.  The MVs are gitignored; ``_mv``
+also builds a missing one on demand.
 
 Usage::
 

@@ -5,6 +5,6 @@ from deduce_spark.kernel.engine import Engine
 
 @pytest.fixture(scope="session")
 def engine() -> Engine:
-    """Full engine over the reference's lookup data (content-hash cached
-    under data/cache after the first ~90s build)."""
+    """Full engine from the repository's own pipeline config and pinned
+    lookup structures (or the sources ``DEDUCE_SPARK_LOOKUP`` names)."""
     return Engine()

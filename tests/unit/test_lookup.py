@@ -181,3 +181,17 @@ def test_source_digest_missing_src_raises(tmp_path):
             source_digest(missing)
     with pytest.raises(FileNotFoundError):
         source_digest(tmp_path)  # directory exists, its src/ does not
+
+
+def test_missing_pinned_structs_raises_naming_the_pickle(tmp_path, monkeypatch):
+    # without src/ the engine falls back to the tracked pickle; losing that
+    # too must give one error that says which file is missing
+    from deduce_spark.kernel import structs
+
+    missing = tmp_path / "lookup_structs.pkl"
+    monkeypatch.setattr(structs, "PINNED_STRUCTS", missing)
+    structs._pinned_structs.cache_clear()
+    with pytest.raises(FileNotFoundError, match=re.escape(str(missing))):
+        structs.get_structs(tmp_path, tokenizer=None)
+    with pytest.raises(FileNotFoundError, match=re.escape(str(missing))):
+        structs.build_tokenizer(tmp_path)
