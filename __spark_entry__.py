@@ -798,8 +798,8 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["events_funnel"] = events_funnel
 
     def cms_word_counts(spark, sf_dir):
-        # Count-Min point-frequency sketch (the 4th mergeable-sketch
-        # family next to HLL/Bloom/Misra-Gries): grid over every corpus
+        # Count-Min point-frequency sketch (the mergeable-sketch family
+        # next to HLL and Bloom): grid over every corpus
         # word, probed with the distinct words of a sampled doc slice;
         # top-50 estimates (est >= true count by construction)
         from deduce_spark.spark.sketches import cms_build, cms_query

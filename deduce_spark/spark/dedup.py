@@ -2,7 +2,6 @@
 
 All operators are DataFrame -> DataFrame, deterministic, and shuffle-aware:
 
-- exact:     one groupBy on md5(text) (map-side combinable);
 - minhash:   word shingles -> 64-perm signatures (Arrow numpy UDF) ->
              the kg LSH core (``kg.lsh_components``: bands, capped bucket
              self-join, signature-estimated jaccard filter, connected
@@ -21,105 +20,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deduce_spark.spark.kg import lsh_components, minhash, minhash_batch
 from deduce_spark.spark.parallel import cap_buckets, fan_out
-
-
-def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Clusters of byte-identical texts: (canonical_id, n_dups, text_hash)."""
-    return (
-        df.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
-        .groupBy("text_hash")
-        .agg(
-            F.min(id_col).alias("canonical_id"),
-            F.count(F.lit(1)).alias("n_dups"),
-        )
-    )
-
-
-def select_representatives(
-    clusters: DataFrame,
-    scores: DataFrame,
-    id_col: str = "doc_id",
-    cluster_col: str = "canonical_id",
-    score_col: str = "score",
-) -> DataFrame:
-    """Quality-aware cluster representatives: ``(canonical_id, rep_id,
-    rep_score)`` — the member with the HIGHEST score wins (ties → the
-    lowest doc id, so the choice is deterministic and degrades to the
-    min-id convention when every score ties).
-
-    Min-id canonicals (the minhash/semantic/exact dedup contract) keep
-    an arbitrary member; a training pipeline wants to keep the BEST
-    member of each near-dup cluster (longest, highest LM quality, …).
-    ``clusters`` is any dedup output carrying (id, cluster); ``scores``
-    is (id, score) — e.g. textstats tokens or lmscore ppl (negate
-    costs so higher = better).
-
-    NULL scores are excluded from candidacy (a scoreless member cannot
-    be "best"; Spark's struct ordering would otherwise sort the NULL
-    FIRST and crown it, while DuckDB sorts it last — a silent
-    cross-engine divergence).  A cluster whose every member is
-    scoreless is absent from the output; the caller falls back to the
-    min-id canonical it already has.
-
-    Scale shape: one equi-join on the doc id and one map-combinable
-    ``min(struct(-score, id))`` per cluster — no window, no skew risk
-    beyond the cluster-size caps the dedup ops already enforce."""
-    joined = clusters.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(cluster_col).alias("canonical_id"),
-    ).join(
-        scores.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(score_col).cast("long").alias("score"),
-        ).filter(F.col("score").isNotNull()),
-        "doc_id",
-    )
-    best = joined.groupBy("canonical_id").agg(
-        F.min(
-            F.struct(
-                (-F.col("score")).alias("neg_score"),
-                F.col("doc_id").alias("doc_id"),
-            )
-        ).alias("b")
-    )
-    return best.select(
-        "canonical_id",
-        F.col("b.doc_id").alias("rep_id"),
-        (-F.col("b.neg_score")).cast("long").alias("rep_score"),
-    )
-
-
-def select_representatives_oracle_sql(
-    clusters_sql: str,
-    scores_sql: str,
-    id_col: str = "doc_id",
-    cluster_col: str = "canonical_id",
-    score_col: str = "score",
-) -> str:
-    """DuckDB twin of :func:`select_representatives` (same
-    min-of-struct precedence: highest score, then lowest id; same
-    NULL-score exclusion)."""
-    return f"""
-        SELECT canonical_id,
-               (b).doc_id AS rep_id,
-               (-(b).neg_score)::BIGINT AS rep_score
-        FROM (
-            SELECT c.{cluster_col} AS canonical_id,
-                   min(struct_pack(
-                       neg_score := -CAST(s.{score_col} AS BIGINT),
-                       doc_id := c.{id_col})) AS b
-            FROM ({clusters_sql}) c
-            JOIN ({scores_sql}) s ON c.{id_col} = s.{id_col}
-            WHERE s.{score_col} IS NOT NULL
-            GROUP BY c.{cluster_col}
-        )
-    """
 
 
 def _word_shingles(
@@ -200,9 +106,9 @@ def minhash_dedup(
 
     The LSH core is :func:`deduce_spark.spark.kg.lsh_components` over
     document signatures, with no bucket key beyond the band.  Buckets
-    larger than ``max_bucket`` are dropped whole: exact duplicates inside a
-    dropped bucket are still caught by ``exact_dedup``; the cap trades a
-    sliver of near-dup recall for a bounded join.
+    larger than ``max_bucket`` are dropped whole: a pair is still found
+    through any other band it shares (exact duplicates share every band);
+    the cap trades a sliver of near-dup recall for a bounded join.
 
     ``max_doc_words`` (recommended at crawl scale, e.g. ``1_000_000``)
     bounds the signature worker's peak memory against pathological single
@@ -429,119 +335,4 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "n_common", "jaccard")
-    )
-
-
-def jaccard_join_prefix(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold_permille: int = 700,
-    max_token_bucket: int | None = None,
-) -> DataFrame:
-    """EXACT set-similarity self-join (word n-gram Jaccard >= threshold)
-    via prefix filtering — the AllPairs/PPJoin candidate scheme, and the
-    scale path for what :func:`ngram_jaccard_pairs` computes by joining
-    EVERY shared gram occurrence (each hot gram there contributes a full
-    B^2 candidate block; here hot grams never generate candidates at
-    all).
-
-    Prefix-filter lemma (per-set alpha): order all grams by a global
-    total order — ascending corpus document-frequency, gram as
-    tiebreak, so the RAREST grams come first.  If ``J(A,B) >= t`` then
-    ``|A∩B| >= ceil(t·|A|)`` and ``>= ceil(t·|B|)``, and two sets whose
-    intersection is that large must share a gram within their first
-    ``l_X = |X| - ceil(t·|X|) + 1`` grams (if the smaller prefix-max
-    u_A <= u_B, a shared gram <= u_A would sit in both prefixes, so all
-    shared grams exceed u_A, leaving at most ``ceil(t|A|) - 1`` of
-    them).  So joining only PREFIX grams finds every qualifying pair;
-    exact verification then removes false candidates — the output is
-    the exact >=-threshold pair set, and the rare-first order is purely
-    a performance choice (hot grams land past every prefix, so the
-    candidate join's per-token buckets stay naturally tiny — no cap
-    needed for correctness; ``max_token_bucket`` optionally drops
-    pathological buckets at a documented recall cost, default exact).
-
-    All native DataFrame ops: two map-combinable aggregations (sizes,
-    gram df), one bounded window (per-doc gram rank — partition size =
-    grams per doc), the prefix self-join, and a two-step intersection
-    count over candidate pairs only.  Integer threshold arithmetic
-    (``inter * 1000 >= t_permille * union``) keeps Spark and the DuckDB
-    oracle bit-agreed.
-    """
-    if not 1 <= threshold_permille <= 1000:
-        raise ValueError(f"threshold_permille in [1,1000], got {threshold_permille}")
-    words = F.split(F.col(text_col), " ")
-    gram_list = F.when(
-        F.size(words) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(words) - n),
-                lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    grams = (
-        df.select(F.col(id_col).alias("doc_id"), gram_list.alias("grams"))
-        .filter(F.size("grams") > 0)
-        .select("doc_id", F.size("grams").alias("n_grams"),
-                F.explode("grams").alias("g"))
-    )
-    gfreq = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df_g"))
-    if max_token_bucket is not None:
-        gfreq = gfreq.filter(F.col("df_g") <= max_token_bucket)
-        grams_j = grams.join(gfreq.select("g"), "g", "left_semi")
-    else:
-        grams_j = grams
-    # per-doc rank in the global (df asc, gram asc) order; prefix length
-    # l = n_grams - ceil(t * n_grams) + 1, ceil done in exact integers
-    w_doc = Window.partitionBy("doc_id").orderBy(F.asc("df_g"), F.asc("g"))
-    prefix = (
-        grams_j.join(gfreq, "g")
-        .withColumn("_pos", F.row_number().over(w_doc))
-        .filter(
-            F.col("_pos")
-            <= F.col("n_grams")
-            - F.expr(f"({threshold_permille} * n_grams + 999) DIV 1000")
-            + 1
-        )
-        .select("doc_id", "g")
-    )
-    cand = (
-        prefix.alias("l")
-        .join(
-            prefix.alias("r"),
-            (F.col("l.g") == F.col("r.g"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )
-    ga = grams.select(F.col("doc_id").alias("a"), F.col("g").alias("g"))
-    gb = grams.select(F.col("doc_id").alias("b"), F.col("g").alias("g"))
-    inter = (
-        cand.join(ga, "a")
-        .join(gb, ["b", "g"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sizes = grams.select("doc_id", "n_grams").distinct()
-    return (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("a"),
-                         F.col("n_grams").alias("size_a")), "a")
-        .join(
-            sizes.select(F.col("doc_id").alias("b"),
-                         F.col("n_grams").alias("size_b")), "b")
-        .withColumn("union_sz", F.col("size_a") + F.col("size_b") - F.col("n_common"))
-        .filter(
-            F.col("n_common") * 1000
-            >= F.lit(int(threshold_permille)) * F.col("union_sz")
-        )
-        .select(
-            "a", "b", "n_common",
-            F.expr("(1000 * n_common) DIV union_sz").cast("long")
-            .alias("jacc_permille"),
-        )
     )

@@ -7,13 +7,9 @@ UDF signatures — is real and tested.  Codec status, honestly:
 - ``probe_media``: magic-byte type sniff (real);
 - ``decode_wav`` / ``audio_stats``: REAL RIFF/PCM parser (pure
   numpy/struct) — integer waveform stats over 8/16-bit WAV;
-- ``decode_bmp`` / ``image_stats``: REAL uncompressed 24-bit BMP parser —
-  dimensions + exact integer channel means;
-- compressed formats (JPEG/PNG/MP3/H.264) raise NotImplementedError unless
-  a codec backend (PIL/soundfile) is importable — none ships here;
-- ``image_features`` / ``frame_sample`` / ``resize_images``: deterministic
-  byte-raster paths so downstream similarity/partitioning logic runs with
-  production batch shapes regardless of codec availability.
+- ``synth_wav`` / ``synth_bmp`` / ``synthetic_media*``: deterministic
+  fixture blobs; no image decoder ships, and compressed formats
+  (JPEG/PNG/MP3/H.264) have no codec backend here.
 """
 
 from __future__ import annotations
@@ -23,7 +19,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -87,155 +82,6 @@ def probe_media(df: DataFrame) -> DataFrame:
     return df.select("media_id", "media").mapInPandas(run, schema=_PROBE_SCHEMA)
 
 
-def _try_import_pil():
-    try:  # pragma: no cover - not installed in this environment
-        from PIL import Image
-
-        return Image
-    except ImportError:
-        return None
-
-
-_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def image_features(df: DataFrame, dim: int = 64, use_decoder: bool = False) -> DataFrame:
-    """media -> feature vectors.
-
-    With ``use_decoder`` a real decoder backend is required
-    (NotImplementedError otherwise — STUB: no codecs in this container).
-    Default path: deterministic byte-histogram features, so downstream
-    similarity/partitioning logic is exercised with the exact production
-    batch shapes.
-    """
-    pil = _try_import_pil()
-    if use_decoder and pil is None:
-        raise NotImplementedError(
-            "image decoding requires PIL; not available in this environment "
-            "(stub per SURVEY.md — Spark plumbing is real, codec is not)"
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, feats = [], []
-            for mid, blob in zip(batch["media_id"], batch["media"]):
-                b = np.frombuffer(bytes(blob), dtype=np.uint8)
-                hist = np.bincount(b % dim, minlength=dim).astype(np.float32)
-                total = hist.sum()
-                if total > 0:
-                    hist /= total
-                ids.append(int(mid))
-                feats.append([float(x) for x in hist])
-            yield pd.DataFrame({"media_id": ids, "features": feats})
-
-    return df.select("media_id", "media").mapInPandas(run, schema=_FEATURE_SCHEMA)
-
-
-def frame_sample(df: DataFrame, n_frames: int = 4, frame_bytes: int = 256) -> DataFrame:
-    """Deterministic 'frame' sampling for video blobs: n evenly spaced byte
-    windows (stand-in for keyframe extraction; windowing/partitioning
-    logic matches what a real decoder would feed downstream)."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, idxs, frames = [], [], []
-            for mid, blob in zip(batch["media_id"], batch["media"]):
-                b = bytes(blob)
-                if not b:
-                    continue
-                step = max(1, (len(b) - frame_bytes) // max(1, n_frames - 1))
-                for j in range(n_frames):
-                    off = min(j * step, max(0, len(b) - frame_bytes))
-                    ids.append(int(mid))
-                    idxs.append(j)
-                    frames.append(b[off : off + frame_bytes])
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return df.select("media_id", "media").mapInPandas(run, schema=schema)
-
-
-_RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("media", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame, max_side: int = 32, use_decoder: bool = False
-) -> DataFrame:
-    """media -> resized media + (width, height) metadata.
-
-    With ``use_decoder`` a real decoder backend is required
-    (NotImplementedError otherwise — STUB: no codecs in this container).
-    Default path: the blob is treated as a square byte raster (side =
-    floor(sqrt(len))) and box-downsampled with numpy to ``max_side`` —
-    deterministic, so the full resize pipeline (binary in, smaller binary +
-    typed dims out, Arrow both ways) is exercised with production batch
-    shapes.
-    """
-    pil = _try_import_pil()
-    if use_decoder and pil is None:
-        raise NotImplementedError(
-            "image resize requires PIL; not available in this environment "
-            "(stub per SURVEY.md — Spark plumbing is real, codec is not)"
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, blobs, ws, hs = [], [], [], []
-            for mid, blob in zip(batch["media_id"], batch["media"]):
-                out, w, h = resize_one(blob, max_side)
-                ids.append(int(mid))
-                blobs.append(out)
-                ws.append(w)
-                hs.append(h)
-            yield pd.DataFrame(
-                {"media_id": ids, "media": blobs, "width": ws, "height": hs}
-            )
-
-    return df.select("media_id", "media").mapInPandas(run, schema=_RESIZE_SCHEMA)
-
-
-def resize_one(blob: bytes, max_side: int = 32) -> tuple[bytes, int, int]:
-    """(resized_bytes, width, height) for one blob — module-level so the
-    golden-fixture generator replays the EXACT kernel outside Spark.
-
-    Box filter uses INTEGER sums + floor division (not float mean ->
-    uint8 cast): bit-identical on every platform/BLAS, which the
-    golden-CRC oracle depends on."""
-    b = np.frombuffer(bytes(blob), dtype=np.uint8)
-    if len(b) == 0:
-        return b"\x00", 1, 1  # empty blob -> 1x1 black raster
-    side = max(1, int(len(b) ** 0.5))
-    raster = b[: side * side].reshape(side, side)
-    if side > max_side:
-        # box filter: average over ceil(side/max_side) blocks
-        f = -(-side // max_side)
-        pad = (-side) % f
-        if pad:
-            raster = np.pad(raster, ((0, pad), (0, pad)), mode="edge")
-        s = raster.shape[0] // f
-        sums = raster.reshape(s, f, s, f).astype(np.uint32).sum(axis=(1, 3))
-        raster = (sums // (f * f)).astype(np.uint8)
-    return raster.tobytes(), int(raster.shape[1]), int(raster.shape[0])
-
-
 def synthetic_media_rows(n: int = 64) -> list[tuple[int, bytes, str]]:
     """Deterministic fake media rows (shared by the Spark table and the
     golden-fixture generator)."""
@@ -255,9 +101,8 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# real decoders for uncompressed container formats (pure numpy/struct — no
-# codec libraries needed).  Compressed formats (JPEG/PNG/MP3/H.264) still
-# raise: those genuinely require codec libs absent from this environment.
+# real decoder for uncompressed PCM WAV (pure numpy/struct — no codec
+# libraries needed).  Compressed audio raises: it needs codec libs.
 # ---------------------------------------------------------------------------
 
 
@@ -321,44 +166,6 @@ def wav_stats_one(blob: bytes) -> tuple[int, int, int, int, int, int]:
     return sample_rate, n_channels, len(mono), rms_q, peak, zc
 
 
-def decode_bmp(blob: bytes) -> "np.ndarray":
-    """(H, W, 3) uint8 BGR->RGB from an uncompressed 24-bit BI_RGB BMP
-    (bottom-up row order, 4-byte row padding — the classic layout)."""
-    import struct
-
-    b = bytes(blob)
-    if len(b) < 54 or b[:2] != b"BM":
-        raise ValueError("not a BMP file")
-    (data_off,) = struct.unpack_from("<I", b, 10)
-    header_size, width, height = struct.unpack_from("<Iii", b, 14)
-    planes, bpp = struct.unpack_from("<HH", b, 26)
-    (compression,) = struct.unpack_from("<I", b, 30)
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError(
-            f"only uncompressed 24-bit BMP supported (bpp={bpp}, "
-            f"compression={compression})"
-        )
-    row_bytes = (width * 3 + 3) & ~3
-    flip = height > 0
-    height = abs(height)
-    px = np.frombuffer(
-        b[data_off : data_off + row_bytes * height], dtype=np.uint8
-    ).reshape(height, row_bytes)[:, : width * 3].reshape(height, width, 3)
-    if flip:
-        px = px[::-1]
-    return px[:, :, ::-1]  # BGR -> RGB
-
-
-def bmp_stats_one(blob: bytes) -> tuple[int, int, int, int, int]:
-    """(width, height, mean_r_q, mean_g_q, mean_b_q) with integer-floor
-    channel means (exact sums // n) — golden-replayable."""
-    px = decode_bmp(blob)
-    h, w, _ = px.shape
-    n = h * w
-    sums = px.astype(np.int64).sum(axis=(0, 1))
-    return w, h, int(sums[0] // n), int(sums[1] // n), int(sums[2] // n)
-
-
 _AUDIO_STATS_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -386,36 +193,6 @@ def audio_stats(df: DataFrame) -> DataFrame:
 
     return df.select("media_id", "media").mapInPandas(
         run, schema=_AUDIO_STATS_SCHEMA
-    )
-
-
-_IMAGE_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("mean_r_q", T.LongType()),
-        T.StructField("mean_g_q", T.LongType()),
-        T.StructField("mean_b_q", T.LongType()),
-    ]
-)
-
-
-def image_stats(df: DataFrame) -> DataFrame:
-    """24-bit BMP blobs -> dimensions + integer channel means (real
-    decode)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for mid, blob in zip(batch["media_id"], batch["media"]):
-                rows.append((int(mid),) + bmp_stats_one(blob))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _IMAGE_STATS_SCHEMA.fields]
-            )
-
-    return df.select("media_id", "media").mapInPandas(
-        run, schema=_IMAGE_STATS_SCHEMA
     )
 
 
@@ -463,8 +240,8 @@ def synth_bmp(i: int, width: int = 24, height: int = 16) -> bytes:
 
 
 def synthetic_media_real(spark, n: int = 32) -> DataFrame:
-    """Media table whose blobs are REAL decodable files (PCM WAV + 24-bit
-    BMP alternating) — the decode path runs for real on these."""
+    """Media table whose blobs are REAL files (PCM WAV + 24-bit BMP
+    alternating) — the WAV decode path runs for real on these."""
     return spark.createDataFrame(synthetic_media_real_rows(n), schema=MEDIA_SCHEMA)
 
 

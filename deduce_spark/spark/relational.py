@@ -369,14 +369,13 @@ def fuzzy_pairs_dl1(
     return cand.mapInPandas(run, schema="a long, b long, na string, nb string")
 
 
-# -- behavioral analytics: funnel + cohort retention -----------------------
-# The two classic event-log reductions next to sessionization.  Both are
-# exact-integer over epoch seconds (Spark CAST(ts AS LONG) == DuckDB
-# epoch_us(ts) // 1_000_000 — floor for positive epochs) so the DuckDB
-# twins value-hash match.  Scale shape: every join and aggregate is
-# keyed on user_id (co-partitioned chain, one shuffle key throughout),
-# per-step/period tables are pre-aggregated (<= |users| rows) before
-# joining, and the final outputs are tiny (|steps| rows / cohort grid).
+# -- behavioral analytics: funnel -------------------------------------------
+# The classic event-log reduction.  Exact-integer over epoch seconds
+# (Spark CAST(ts AS LONG) == DuckDB epoch_us(ts) // 1_000_000 — floor for
+# positive epochs) so the DuckDB twin value-hash matches.  Scale shape:
+# every join and aggregate is keyed on user_id (co-partitioned chain, one
+# shuffle key throughout), per-step tables are pre-aggregated (<= |users|
+# rows) before joining, and the final output is tiny (|steps| rows).
 
 
 def funnel_counts(
@@ -459,90 +458,3 @@ def funnel_oracle_sql(
         for i, s in enumerate(steps)
     )
     return "WITH " + ",\n".join(ctes) + f" {arms} ORDER BY step_idx"
-
-
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    period_s: int = 604800,
-) -> DataFrame:
-    """(cohort_period, period_offset, users) — users active in period
-    ``cohort_period + period_offset`` among those whose FIRST event fell
-    in ``cohort_period`` (periods = epoch seconds DIV ``period_s``; the
-    classic retention triangle, offset 0 row = cohort size)."""
-    if period_s < 1:
-        raise ValueError("period_s must be >= 1")
-    ev = events.select(
-        F.col(user_col).alias("u"),
-        F.col(ts_col).cast("timestamp").cast("long").alias("s"),
-    ).select("u", F.expr(f"s DIV {period_s}").alias("p"))
-    first = ev.groupBy("u").agg(F.min("p").alias("cohort"))
-    active = ev.distinct()
-    return (
-        active.join(first, "u")
-        .groupBy(
-            F.col("cohort").alias("cohort_period"),
-            (F.col("p") - F.col("cohort")).alias("period_offset"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("users"))
-        .orderBy("cohort_period", "period_offset")
-    )
-
-
-def cohort_retention_oracle_sql(
-    table: str = "events",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    period_s: int = 604800,
-) -> str:
-    """DuckDB twin of :func:`cohort_retention`."""
-    epoch = f"epoch_us({ts_col}) // 1000000"
-    return f"""
-        WITH ev AS (SELECT {user_col} AS u,
-                           ({epoch}) // {period_s} AS p FROM {table}),
-        first AS (SELECT u, MIN(p) AS cohort FROM ev GROUP BY 1),
-        active AS (SELECT DISTINCT u, p FROM ev)
-        SELECT cohort AS cohort_period, p - cohort AS period_offset,
-               COUNT(*)::BIGINT AS users
-        FROM active JOIN first USING (u)
-        GROUP BY 1, 2 ORDER BY 1, 2
-    """
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Inner equi-join with hot-key salting; row-multiset identical to
-    ``left.join(right, key)``.
-
-    A plain shuffled join sends every row of a hot key — both sides —
-    to ONE reduce task; at 100 TB a 50%-hot key makes that task the
-    whole job, and broadcast is off the table when the right side is
-    also large.  The classic fix: the LEFT rows of a key scatter over
-    ``n_salts`` sub-keys (deterministic hash of a per-row id, same
-    device as :func:`salted_count`), the RIGHT rows replicate across
-    ALL ``n_salts`` sub-keys (explode of a literal range — a narrow
-    ``n_salts``-fold blowup of the right side only), and the join runs
-    on (key, salt): each hot key now occupies ``n_salts`` tasks.
-
-    Use when BOTH sides are too big to broadcast and the key is skewed;
-    prefer ``broadcast()`` for small dims and AQE skew-join when plan
-    statistics can see the skew (this operator is the explicit form for
-    when they cannot, e.g. skew appears only after upstream filters).
-    Output columns: key, then left columns, then right columns (minus
-    the join key), like the plain join."""
-    if n_salts < 1:
-        raise ValueError("n_salts must be >= 1")
-    salt = F.pmod(
-        F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salts)
-    ).cast("int")
-    lt = left.withColumn("_salt", salt)
-    rt = right.withColumn(
-        "_salt",
-        F.explode(F.array(*[F.lit(i) for i in range(n_salts)])),
-    )
-    return lt.join(rt, [key, "_salt"]).drop("_salt")

@@ -1,10 +1,15 @@
 """Similarity search over embedding columns (array<float>).
 
-- brute-force cosine top-k: native higher-order functions (zip_with +
-  aggregate) — JVM-side, no Python; broadcast the (small) query side;
-- LSH-bucketed variant: signed random hyperplane projections (seeded numpy
-  pandas UDF) -> bucket join -> exact rerank within buckets.  At 100 TB the
-  brute force is the per-bucket rerank; the bucketing bounds the join.
+- ``cosine_topk``: exact cosine top-k with native higher-order functions
+  (zip_with + aggregate) — JVM-side, no Python; broadcast the (small)
+  query side;
+- ``lsh_topk``: signed random hyperplane projections (seeded numpy pandas
+  UDF) -> bucket join -> exact rerank within buckets.  At 100 TB the
+  exact rerank is per bucket; the bucketing bounds the join;
+- ``ivf_topk``: centroid-partitioned (IVF) search over ``ivf_train``'s
+  centroids with integer-quantized scores;
+- ``semantic_dedup``: SemDeDup-style near-duplicate collapse within IVF
+  clusters.
 """
 
 from __future__ import annotations
@@ -72,45 +77,6 @@ def cosine_topk(
         .select("query_id", "neighbor_id",
                 F.col("rank").cast("long").alias("rank"),
                 F.round("cosine", 6).alias("cosine"))
-    )
-
-
-def brute_cosine_pairs(
-    vectors: DataFrame,
-    tau: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_rows: int = 50_000,
-) -> DataFrame:
-    """All (a_id, b_id) pairs with cosine >= tau — the exact O(n²) baseline.
-
-    Explicitly GATED: the triangular self-join materializes n²/2 rows, so
-    above ``max_rows`` inputs this raises instead of launching a job that
-    cannot finish at scale.  The scale paths are ``lsh_topk`` (bucketed) and
-    ``ivf_topk`` (centroid-partitioned); use them beyond the gate.
-    All-native zip_with/aggregate dot products in double precision, no UDF."""
-    n = vectors.count()
-    if n > max_rows:
-        raise ValueError(
-            f"brute_cosine_pairs is O(n²) and gated at {max_rows} rows "
-            f"(got {n}); use lsh_topk or ivf_topk for large inputs"
-        )
-    e = (
-        vectors.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .withColumn("nrm", _norm(F.col("v")))
-    )
-    a = e.select(F.col("vec_id").alias("a_id"), F.col("v").alias("va"),
-                 F.col("nrm").alias("na"))
-    b = e.select(F.col("vec_id").alias("b_id"), F.col("v").alias("vb"),
-                 F.col("nrm").alias("nb"))
-    return (
-        a.join(b, F.col("a_id") < F.col("b_id"))
-        .withColumn("cos", _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")))
-        .filter(F.col("cos") >= tau)
-        .select("a_id", "b_id")
     )
 
 
@@ -430,53 +396,6 @@ def lsh_topk(
         .select("query_id", "neighbor_id",
                 F.col("rank").cast("long").alias("rank"),
                 F.round("cosine", 6).alias("cosine"))
-    )
-
-
-def feature_hash_embed(
-    docs: DataFrame,
-    dim: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Hashing-trick document embeddings (Weinberger et al. 2009), fully
-    native: every word maps to bucket md5(w)[:8] % dim with a ±1 sign from
-    the next hex nibble (the sign hash unbiases collisions), and the
-    embedding is the per-bucket signed count as ``array<float>`` —
-    drop-in input for ``cosine_topk`` / ``lsh_topk`` / ``ivf_topk``.
-
-    No vocabulary, no training pass, no UDF: explode + two md5-derived
-    integer expressions + one map-side-combinable groupBy, then a
-    sequence/transform rebuild of the dense vector.  md5 (not xxhash64)
-    so the DuckDB oracle replays the exact buckets; swap to xxhash64 for
-    the cheaper production hash — the plan shape is identical."""
-    w = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(text_col, " ")).alias("w"),
-    ).filter(F.col("w") != "")
-    hashed = w.select(
-        "doc_id",
-        F.expr(
-            f"cast(conv(substring(md5(w), 1, 8), 16, 10) as bigint) % {dim}"
-        ).cast("int").alias("bucket"),
-        F.expr(
-            "CASE WHEN cast(conv(substring(md5(w), 9, 1), 16, 10) as bigint)"
-            " % 2 = 0 THEN 1 ELSE -1 END"
-        ).alias("sign"),
-    )
-    sparse = hashed.groupBy("doc_id", "bucket").agg(
-        F.sum("sign").cast("long").alias("val")
-    )
-    return (
-        sparse.groupBy("doc_id")
-        .agg(F.map_from_entries(F.collect_list(F.struct("bucket", "val"))).alias("m"))
-        .select(
-            "doc_id",
-            F.expr(
-                f"transform(sequence(0, {dim - 1}), "
-                "i -> cast(coalesce(m[i], 0) as float))"
-            ).alias("embedding"),
-        )
     )
 
 

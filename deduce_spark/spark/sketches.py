@@ -24,7 +24,6 @@ the float estimate remains available to callers.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -74,123 +73,6 @@ def hll_oracle_sql(source_sql: str, col: str, p: int = 9) -> str:
         WHERE {col} IS NOT NULL
         GROUP BY 1
     """
-
-
-def _mg_merge(counts, series, cap: int):
-    """One batched Misra-Gries step: fold a pandas Series of items into
-    the running counter Series (``None`` = empty), then — if over ``cap``
-    counters — subtract the (cap+1)-th largest counter value and drop the
-    non-positive (the mergeable-summaries batch decrement: each unit of
-    decrement is charged against > cap counters, so total decrement per
-    item stays <= N/(cap+1)).  Vectorized: value_counts + aligned add +
-    one np.partition; no per-item Python."""
-    import numpy as np
-
-    vc = series.value_counts()
-    counts = vc if counts is None else counts.add(vc, fill_value=0)
-    if len(counts) > cap:
-        arr = counts.to_numpy()
-        delta = np.partition(arr, len(arr) - cap - 1)[len(arr) - cap - 1]
-        counts = counts[arr > delta] - delta
-    return counts
-
-
-def heavy_hitters(
-    items: DataFrame,
-    item_col: str = "item",
-    phi_permille: int = 2,
-    k: int | None = None,
-    caches: list | None = None,
-) -> DataFrame:
-    """EXACT phi-heavy-hitters: every item whose count is at least
-    ``phi_permille``-per-mille of all (non-null) items, with its exact
-    count — without ever shuffling the full distinct-item set.
-
-    Two passes, the textbook sketch-then-verify shape:
-
-    1. **Candidates** (one Arrow-batched pass): each partition keeps a
-       Misra-Gries summary of at most ``k`` counters — per batch a
-       vectorized ``value_counts`` merges into the running summary, and
-       when it overflows, the batched MG decrement (subtract the
-       (k+1)-th largest counter value, drop the non-positive) prunes it
-       back.  Mergeable-summaries bound: total decrement per partition
-       is at most ``N_p / (k+1)``, so every item with local frequency
-       >= phi survives its partition's summary; and by averaging, an
-       item with GLOBAL frequency >= phi has local frequency >= phi in
-       at least one partition — no false negatives.  Each partition
-       emits <= k candidate rows plus one null-item marker row carrying
-       its item count, so the global total ``N`` comes from the sketch
-       output (bounded: (k+1) rows per partition) instead of a second
-       scan.
-    2. **Verify**: exact counts restricted to the candidate set — a
-       broadcast semi-join (candidates are <= k per partition, a few MB
-       even at thousands of partitions) then a map-combinable groupBy
-       whose shuffle carries at most (candidates x partitions) rows.
-       The exact integer filter ``cnt * 1000 >= phi_permille * N``
-       removes the sketch's false positives, so the OUTPUT is the exact
-       heavy-hitter set, independent of partitioning, batch order, and
-       k — the sketch only bounds memory/shuffle, never the answer
-       (same partitioning-invariance-by-construction discipline as the
-       quantized IVF/PageRank operators).
-
-    ``k`` defaults to ``ceil(1000 / phi_permille)`` — the smallest size
-    the no-false-negative guarantee allows; passing a smaller k raises.
-    The pass-1 sketch is cached (it feeds both the N aggregation and the
-    candidate side of the verify plan); the handle is appended to
-    ``caches`` if given (release after evaluating the result), else it
-    stays cached like minhash_dedup's signature table.
-
-    Scale: at 10^12 items the full groupBy(item) a naive exact count
-    needs shuffles one row per distinct (item, partition) — unbounded in
-    vocabulary size.  Here pass 1's state and shuffle are hard-bounded
-    at k rows per partition, and pass 2 touches only candidate rows.
-    """
-    if phi_permille < 1:
-        raise ValueError(f"phi_permille must be >= 1, got {phi_permille}")
-    k_min = -(-1000 // phi_permille)  # ceil(1000 / phi_permille)
-    if k is None:
-        k = k_min
-    elif k < k_min:
-        raise ValueError(
-            f"k={k} breaks the no-false-negative guarantee for "
-            f"phi_permille={phi_permille}; need k >= {k_min}"
-        )
-    cap = int(k)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        counts = None
-        n_p = 0
-        for b in batches:
-            s = b["item"]
-            n_p += len(s)
-            counts = _mg_merge(counts, s, cap)
-        cand = [] if counts is None else counts.index.tolist()
-        ests = [] if counts is None else [int(c) for c in counts.to_numpy()]
-        yield pd.DataFrame(
-            {"item": cand + [None], "cnt": ests + [n_p]}
-        )
-
-    src = items.select(
-        F.col(item_col).cast("string").alias("item")
-    ).filter(F.col("item").isNotNull())
-    sk = src.mapInPandas(run, schema="item string, cnt long").cache()
-    if caches is not None:
-        caches.append(sk)
-    n_total = (
-        sk.filter(F.col("item").isNull()).agg(F.sum("cnt")).collect()[0][0]
-        or 0
-    )
-    if n_total == 0:
-        return items.sparkSession.createDataFrame([], "item string, cnt long")
-    cands = sk.filter(F.col("item").isNotNull()).select("item").distinct()
-    return (
-        src.join(F.broadcast(cands), "item", "left_semi")
-        .groupBy("item")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .filter(F.col("cnt") * 1000 >= int(phi_permille) * int(n_total))
-    )
 
 
 def hll_estimate(registers: list[tuple[int, int]], p: int = 9) -> float:
@@ -381,8 +263,8 @@ def bloom_probe_oracle_sql(
 
 # -- Count-Min sketch ------------------------------------------------------
 # The frequency-estimation member of the mergeable-sketch family (HLL =
-# cardinality, Bloom = membership, Misra-Gries = heavy hitters, CMS =
-# point frequency; Cormode & Muthukrishnan 2005).  Same scale shape as
+# cardinality, Bloom = membership, CMS = point frequency; Cormode &
+# Muthukrishnan 2005).  Same scale shape as
 # the others: build is a map-side-combinable SUM over at most
 # depth*width cells (each 10^12-row partition reduces to the tiny grid
 # before the shuffle), merging two sketches of the same shape is
@@ -473,56 +355,3 @@ def cms_query_oracle_sql(
         LEFT JOIN ({cms_sql}) USING (row_i, bucket)
         GROUP BY value
     """
-
-
-# -- log2 histogram --------------------------------------------------------
-# The distribution-shape member of the sketch family: power-of-two
-# bucketed counts (bucket = floor(log2 x), the HDR-histogram idea with
-# base-2 buckets).  Exact-integer via the same length(bin(x)) trick as
-# HLL, so both engines agree bit-for-bit; mergeable by per-bucket SUM;
-# at most ~64 buckets per group regardless of data size — the textbook
-# map-combinable shape for doc-length / latency / degree distributions
-# at 10^12 rows.  Approximate quantiles come from the collected
-# histogram driver-side (log2_histogram_quantile): within a factor of
-# 2 always, exact in the bucket index.
-
-
-def log2_histogram(
-    df: DataFrame, col: str, group_cols: tuple = ()
-) -> DataFrame:
-    """(group_cols..., bucket, cnt) power-of-two histogram of a
-    NON-NEGATIVE integer column; bucket = floor(log2 x), with x = 0 in
-    bucket -1.  Nulls ignored; negative values raise downstream (bin()
-    of a negative is 64 chars — callers must pre-clamp, documented)."""
-    x = f"CAST({col} AS BIGINT)"
-    bucket = (
-        f"CASE WHEN {x} = 0 THEN -1 "
-        f"ELSE length(bin({x})) - 1 END"
-    )
-    return (
-        df.filter(F.col(col).isNotNull())
-        .select(*group_cols, F.expr(bucket).cast("int").alias("bucket"))
-        .groupBy(*group_cols, "bucket")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-
-
-def log2_histogram_quantile(
-    buckets: list[tuple[int, int]], q_permille: int
-) -> int:
-    """Upper bound (2^(bucket+1) - 1) of the bucket holding the
-    ``q_permille``-quantile of a collected (bucket, cnt) histogram —
-    driver-side over <= ~64 rows, the hll_estimate convention."""
-    if not 0 <= q_permille <= 1000:
-        raise ValueError(f"q_permille must be in [0, 1000], got {q_permille}")
-    rows = sorted(buckets)
-    total = sum(c for _, c in rows)
-    if total == 0:
-        raise ValueError("empty histogram")
-    rank = (q_permille * total + 999) // 1000  # ceil; rank 0 -> first row
-    seen = 0
-    for b, c in rows:
-        seen += c
-        if seen >= max(rank, 1):
-            return 0 if b < 0 else 2 ** (b + 1) - 1
-    return 0 if rows[-1][0] < 0 else 2 ** (rows[-1][0] + 1) - 1

@@ -13,7 +13,8 @@ own (batch_id, *) partitions, and committed batch_ids are additionally
 recorded in the lineage log so clean replays skip the compute entirely.
 
 At cluster scale the same wrapper runs against a cloud-files / Kafka
-source; the per-batch body is source-agnostic.
+source; the per-batch body is source-agnostic.  ``jobs/stream_ingest.py``
+drives it.
 """
 
 from __future__ import annotations
@@ -99,135 +100,6 @@ class StreamingMentionsWriter:
         )
 
 
-def windowed_tag_counts(
-    pages_stream: DataFrame,
-    pipe: AnnotatePipeline,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    lang: Optional[str] = "nl",
-    from_html: bool = True,
-) -> DataFrame:
-    """Event-time windowed mention counts with a watermark for late pages.
-
-    pages_stream(url, warc_ts, html, ...) -> streaming DF
-    (window_start, window_end, tag, n).  Late pages within ``watermark``
-    of the max seen event time still update their window; later ones are
-    dropped (bounded state — the requirement for an unbounded crawl feed).
-    Append output mode: a window's row is emitted exactly once, when the
-    watermark passes its end.
-    """
-    annotated = pipe.annotate_pages(
-        pages_stream, lang=lang, from_html=from_html,
-        with_text=False, with_redacted=False,
-    )
-    mentions = pipe.mentions_long(annotated)
-    return (
-        mentions.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "tag")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "tag",
-            "n",
-        )
-    )
-
-
-def dedup_pages_stream(
-    pages_stream: DataFrame,
-    watermark: str = "2 hours",
-    key_cols: tuple = ("url",),
-) -> DataFrame:
-    """Cross-micro-batch page dedup with BOUNDED state.
-
-    A crawl feed re-delivers pages (re-crawls, retries, mirror hosts with
-    the same canonical url); plain ``dropDuplicates`` on a stream keeps
-    every key ever seen — unbounded state on an unbounded feed.
-    ``dropDuplicatesWithinWatermark`` keeps a key only until the watermark
-    passes its event time: a duplicate arriving within the watermark
-    horizon is dropped, one arriving later is treated as a legitimate
-    re-crawl (which downstream icetable upsert handles idempotently by
-    key anyway — this stage exists to cut the redundant ANNOTATION work,
-    the expensive part, not to guarantee global uniqueness)."""
-    return pages_stream.withWatermark(
-        "warc_ts", watermark
-    ).dropDuplicatesWithinWatermark(list(key_cols))
-
-
-_SESSION_OUTPUT_SCHEMA = (
-    "user_id long, session_id long, n_events long, first_ts timestamp, "
-    "last_ts timestamp"
-)
-_SESSION_STATE_SCHEMA = "session_id long, n_events long, first_ts long, last_ts long"
-
-SESSION_GAP_S = 1800
-
-
-def sessionize_events_stateful(events_stream: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator (``applyInPandasWithState``):
-    per-user session assembly with a 30-minute inactivity gap.
-
-    State per user = the OPEN session (id, count, first/last ts); a batch's
-    events extend it or close it and open the next.  Emits one row per
-    session TOUCHED in the batch (latest snapshot wins downstream — the
-    idempotent icetable sink pattern).  This is the operator shape Spark's
-    built-in windowed aggs can't express: session identity depends on the
-    running gap, not on fixed window bounds.
-    """
-    import pandas as pd
-
-    def update(key, pdfs, state):
-        (user_id,) = key
-        if state.exists:
-            session_id, n_events, first_ts, last_ts = state.get
-        else:
-            session_id, n_events, first_ts, last_ts = -1, 0, 0, 0
-        touched = {}
-        # applyInPandasWithState may split a large group across Arrow
-        # chunks with no ordering guarantee — concatenate first, sort once;
-        # per-chunk sorting would interleave sessions out of time order
-        chunks = [pdf["ts"] for pdf in pdfs]
-        all_ts = (
-            pd.concat(chunks, ignore_index=True) if chunks else pd.Series([])
-        )
-        for ts in sorted(all_ts):
-            epoch = int(ts.timestamp())
-            if session_id < 0 or epoch - last_ts > SESSION_GAP_S:
-                session_id += 1 if session_id >= 0 else 2  # -1 -> 1, else +1
-                n_events, first_ts = 0, epoch
-            n_events += 1
-            last_ts = epoch
-            touched[session_id] = (n_events, first_ts, last_ts)
-        state.update((session_id, n_events, first_ts, last_ts))
-        if not touched:
-            return iter([])
-        out = pd.DataFrame(
-            {
-                "user_id": [int(user_id)] * len(touched),
-                "session_id": list(touched),
-                "n_events": [v[0] for v in touched.values()],
-                "first_ts": [pd.Timestamp(v[1], unit="s") for v in touched.values()],
-                "last_ts": [pd.Timestamp(v[2], unit="s") for v in touched.values()],
-            }
-        )
-        return iter([out])
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        events_stream.select("user_id", "ts")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_SESSION_OUTPUT_SCHEMA,
-            stateStructType=_SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def stream_pages_to_mentions(
     spark: SparkSession,
     pages_dir: str,
@@ -258,174 +130,3 @@ def stream_pages_to_mentions(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def hll_registers_stream(
-    stream_df: DataFrame, col: str, p: int = 9
-) -> DataFrame:
-    """Streaming HyperLogLog maintenance: keep the (bucket, max_rho)
-    register table of every value seen on an unbounded stream.
-
-    State is AT MOST 2^p rows forever (the registers themselves — HLL's
-    whole point), so unlike a streaming COUNT DISTINCT the state store
-    never grows with cardinality; no watermark is needed because the
-    aggregate is a monotone max.  Update output mode emits changed
-    registers per batch; the sink folds them with max() (registers are
-    mergeable — the same property the batch sketch proves by test).
-    Same engine-portable integer arithmetic as ``sketches.hll_registers``,
-    so a streaming-maintained table is value-identical to a batch sketch
-    of the union of all batches."""
-    from deduce_spark.spark.sketches import hll_registers
-
-    return hll_registers(stream_df, col, p=p)
-
-
-def bloom_stream(
-    stream_df: DataFrame, col: str, m_words: int = 1024, n_hashes: int = 4
-) -> DataFrame:
-    """Streaming Bloom-filter maintenance: keep the (word_idx, bits)
-    membership bitmap of every value seen on an unbounded stream — the
-    continuously-updated decontamination gate (new benchmark rows arrive,
-    the filter that protects the training corpus absorbs them).
-
-    State is AT MOST ``m_words`` rows forever: like the HLL registers,
-    the aggregate is a monotone fold (bit_or only ever sets bits), so no
-    watermark is needed and the state store never grows with cardinality.
-    Update mode emits changed words per batch; the sink folds them with
-    bit_or — the same merge the batch sketch pins by test — so a
-    streaming-maintained filter is value-identical to
-    :func:`deduce_spark.spark.sketches.bloom_build` over the union of
-    all batches, and downstream probes can broadcast it join-free."""
-    from deduce_spark.spark.sketches import bloom_build
-
-    return bloom_build(stream_df, col, m_words=m_words, n_hashes=n_hashes)
-
-
-def heavy_hitters_stream(
-    stream_df: DataFrame,
-    item_col: str = "item",
-    n_buckets: int = 16,
-    k: int = 64,
-) -> DataFrame:
-    """Streaming Misra-Gries maintenance: a bounded-state candidate
-    summary of the heaviest items ever seen on an unbounded stream (hot
-    domains, hot query terms — the monitoring surface a crawl pipeline
-    watches between exact batch recounts).
-
-    Items are hash-partitioned into ``n_buckets`` groups
-    (``pmod(xxhash64(item), n_buckets)``), and each group keeps ONE
-    Misra-Gries summary of at most ``k`` counters in
-    ``applyInPandasWithState`` state — total state is hard-bounded at
-    ``n_buckets * k`` counters forever, no watermark needed (the summary
-    is a running fold, never evicted).  Every item lives in exactly one
-    bucket, so the MG bound applies per substream: an item whose count
-    in its bucket exceeds ``n_seen_bucket / (k+1)`` is GUARANTEED to be
-    in that bucket's summary, and its reported ``mg_count``
-    underestimates its true count by at most that same bound (each
-    output row carries ``n_seen`` so callers can compute it).  Exact
-    counts come from a periodic batch verify over the candidate set —
-    :func:`deduce_spark.spark.sketches.heavy_hitters`'s second phase;
-    same sketch kernel (``sketches._mg_merge``) in both paths.
-
-    Emits each touched bucket's full current summary per micro-batch
-    (latest snapshot wins downstream — the idempotent icetable sink
-    pattern, like the sessionizer)."""
-    import pandas as pd
-
-    from deduce_spark.spark.sketches import _mg_merge
-
-    def update(key, pdfs, state):
-        (bucket,) = key
-        if state.exists:
-            items, counts, n_seen = state.get
-            counter = (
-                pd.Series(list(counts), index=list(items), dtype="float64")
-                if items
-                else None
-            )
-        else:
-            counter, n_seen = None, 0
-        for pdf in pdfs:
-            s = pdf["item"]
-            n_seen += len(s)
-            counter = _mg_merge(counter, s, k)
-        if counter is None or not len(counter):
-            state.update(([], [], int(n_seen)))
-            return iter([])
-        surv_items = [str(i) for i in counter.index.tolist()]
-        surv_counts = [int(c) for c in counter.to_numpy()]
-        state.update((surv_items, surv_counts, int(n_seen)))
-        return iter(
-            [
-                pd.DataFrame(
-                    {
-                        "bucket": [int(bucket)] * len(surv_items),
-                        "item": surv_items,
-                        "mg_count": surv_counts,
-                        "n_seen": [int(n_seen)] * len(surv_items),
-                    }
-                )
-            ]
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        stream_df.select(F.col(item_col).cast("string").alias("item"))
-        .filter(F.col("item").isNotNull())
-        .withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("item"), F.lit(int(n_buckets))).cast("int"),
-        )
-        .groupBy("bucket")
-        .applyInPandasWithState(
-            update,
-            outputStructType=(
-                "bucket int, item string, mg_count long, n_seen long"
-            ),
-            stateStructType=(
-                "items array<string>, counts array<long>, n_seen long"
-            ),
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def cms_stream(
-    stream_df: DataFrame, col: str, width: int = 1024, depth: int = 4
-) -> DataFrame:
-    """Streaming Count-Min maintenance: keep the (row_i, bucket, cnt)
-    frequency grid of every value seen on an unbounded stream — the
-    continuously-updated point-frequency oracle (e.g. live per-token or
-    per-host traffic estimates feeding the curation mix).
-
-    State is AT MOST ``depth * width`` rows forever: the aggregate is a
-    monotone additive fold (counts only ever grow), so no watermark is
-    needed and the state store never grows with cardinality.  Update
-    mode emits changed cells per batch; the sink folds them by KEEPING
-    THE LATEST cnt per (row_i, bucket) (Spark's streaming SUM already
-    accumulates across batches — unlike the bit_or sketches there is
-    nothing to re-merge), so a streaming-maintained grid is
-    value-identical to :func:`deduce_spark.spark.sketches.cms_build`
-    over the union of all batches and broadcasts join-free downstream."""
-    from deduce_spark.spark.sketches import cms_build
-
-    return cms_build(stream_df, col, width=width, depth=depth)
-
-
-def warc_ingest_stream(files_stream: DataFrame) -> DataFrame:
-    """Streaming WARC ingestion: archive blobs land continuously (the
-    Common-Crawl cadence — a new segment every crawl wave) and each
-    micro-batch's archives parse independently through the BATCH
-    kernel: ``warc.parse_warc_records`` is a stateless ``mapInPandas``,
-    so the exact same code runs on the unbounded stream — no state
-    store, no watermark (an archive never spans batches; record offsets
-    are per-archive).  Exactly-once delivery is the file-source +
-    checkpoint contract upstream (each archive file is consumed once
-    per checkpoint lineage — pinned by the two-run restart test) plus
-    an idempotent sink downstream (the StreamingMentionsWriter
-    discipline)."""
-    from deduce_spark.spark.warc import parse_warc_records
-
-    return parse_warc_records(files_stream)

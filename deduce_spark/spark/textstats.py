@@ -566,132 +566,3 @@ def _substr_dup_tail(totals: DataFrame, grams: DataFrame) -> DataFrame:
             ).cast("long").alias("dup_permille"),
         )
     )
-
-
-def boilerplate_lines(
-    pages: DataFrame,
-    host_col: str = "host",
-    text_col: str = "text",
-    min_permille: int = 300,
-    min_pages: int = 2,
-) -> DataFrame:
-    """Per-host boilerplate line detection (CCNet / trafilatura-style
-    template stripping): a line is boilerplate on a host when it appears
-    in at least ``min_permille``/1000 of that host's pages and the host
-    has at least ``min_pages`` pages.  Returns (host, line).
-
-    Scale shape: ``array_distinct`` before the explode makes one row per
-    (page, line) — so the (host, line) count IS the page count, no page
-    id travels through the shuffle — and both aggregations are
-    map-combinable.  The threshold is exact integer arithmetic
-    (``1000 * n_line >= min_permille * n_pages``), so Spark and DuckDB
-    agree bit-for-bit.  Hot hosts are fine: the count shuffle key is
-    (host, line), which fans a 10^7-page host out across its distinct
-    lines.
-    """
-    host = F.col(host_col).alias("host")
-    page_lines = pages.select(
-        host,
-        F.explode(
-            F.array_distinct(F.split(F.col(text_col), "\n"))
-        ).alias("line"),
-    )
-    line_counts = page_lines.groupBy("host", "line").agg(
-        F.count(F.lit(1)).cast("long").alias("n_line")
-    )
-    host_counts = pages.select(host).groupBy("host").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pages")
-    )
-    return (
-        line_counts.join(host_counts, "host")
-        .filter(
-            (F.col("n_pages") >= min_pages)
-            & (1000 * F.col("n_line") >= min_permille * F.col("n_pages"))
-        )
-        .select("host", "line")
-    )
-
-
-def remove_boilerplate(
-    pages: DataFrame,
-    host_col: str = "host",
-    text_col: str = "text",
-    min_permille: int = 300,
-    min_pages: int = 2,
-) -> DataFrame:
-    """Strip per-host boilerplate lines from every page: adds
-    ``clean_text`` (the page with boilerplate lines removed, newline
-    re-joined) and ``n_removed_lines`` next to the input columns.
-
-    The per-host boilerplate set is collected into ONE array row per
-    host (bounded: only lines crossing the ``min_permille`` frequency
-    bar survive — a host's template has tens of such lines, not
-    millions) and joined back without a broadcast hint, so Catalyst
-    broadcasts while the host table is small and AQE falls back to a
-    shuffled join at web scale.  The removal itself is a native
-    higher-order ``filter`` — no Python anywhere.
-    """
-    bp = boilerplate_lines(pages, host_col, text_col, min_permille, min_pages)
-    bp_sets = bp.groupBy("host").agg(F.collect_set("line").alias("_bp"))
-    joined = pages.join(
-        bp_sets, pages[host_col] == bp_sets["host"], "left"
-    ).drop(bp_sets["host"])
-    cleaned = F.expr(
-        f"filter(split({text_col}, '\\n'), "
-        f"x -> NOT array_contains(coalesce(_bp, array()), x))"
-    )
-    return joined.select(
-        *[F.col(c) for c in pages.columns],
-        F.array_join(cleaned, "\n").alias("clean_text"),
-        (
-            F.size(F.split(F.col(text_col), "\n")) - F.size(cleaned)
-        ).cast("long").alias("n_removed_lines"),
-    )
-
-
-def remove_boilerplate_oracle_sql(
-    pages_sql: str,
-    host_col: str = "host",
-    text_col: str = "text",
-    min_permille: int = 300,
-    min_pages: int = 2,
-    out_cols: str = "*",
-) -> str:
-    """DuckDB twin of :func:`remove_boilerplate` over ``pages_sql`` (a
-    FROM-able SELECT producing at least ``host_col`` and ``text_col``).
-    ``out_cols`` selects the passthrough columns (default all)."""
-    return f"""
-        WITH pages AS ({pages_sql}),
-        hostn AS (
-            SELECT {host_col} AS host, COUNT(*)::BIGINT AS n_pages
-            FROM pages GROUP BY 1
-        ),
-        pl AS (
-            SELECT {host_col} AS host,
-                   unnest(list_distinct(string_split({text_col}, chr(10)))) AS line
-            FROM pages
-        ),
-        cnt AS (
-            SELECT host, line, COUNT(*)::BIGINT AS n_line
-            FROM pl GROUP BY host, line
-        ),
-        bp AS (
-            SELECT c.host, c.line
-            FROM cnt c JOIN hostn h USING (host)
-            WHERE h.n_pages >= {min_pages}
-              AND 1000 * c.n_line >= {min_permille} * h.n_pages
-        ),
-        bps AS (SELECT host, list(line) AS bpl FROM bp GROUP BY host)
-        SELECT {out_cols},
-               coalesce(array_to_string(
-                   list_filter(string_split(p.{text_col}, chr(10)),
-                               x -> NOT list_contains(
-                                   coalesce(b.bpl, CAST([] AS VARCHAR[])), x)),
-                   chr(10)), '') AS clean_text,
-               (len(string_split(p.{text_col}, chr(10)))
-                - len(list_filter(string_split(p.{text_col}, chr(10)),
-                      x -> NOT list_contains(
-                          coalesce(b.bpl, CAST([] AS VARCHAR[])), x)))
-               )::BIGINT AS n_removed_lines
-        FROM pages p LEFT JOIN bps b ON p.{host_col} = b.host
-    """

@@ -1,4 +1,4 @@
-"""Funnel + cohort retention: ordering semantics and DuckDB twins."""
+"""Funnel counts: ordering semantics and DuckDB twin."""
 
 import datetime as dt
 
@@ -6,10 +6,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-from deduce_spark.spark.relational import (
-    cohort_retention, cohort_retention_oracle_sql,
-    funnel_counts, funnel_oracle_sql,
-)
+from deduce_spark.spark.relational import funnel_counts, funnel_oracle_sql
 
 
 def _ev(spark, rows):
@@ -89,121 +86,3 @@ class TestFunnel:
             ).fetchall()
         ]
         assert got == want
-
-
-class TestCohortRetention:
-    def test_triangle_shape(self, spark):
-        # u1 first in period 0 and active in periods 0,2; u2 first in
-        # period 1, active 1 only
-        P = 100
-        rows = [
-            (1, "e", _t(5)), (1, "e", _t(2 * P + 1)),
-            (2, "e", _t(P + 3)), (2, "e", _t(P + 50)),
-        ]
-        base = dt.datetime(2024, 1, 1).timestamp()
-        base_p = int(base) // P
-        got = {
-            (r["cohort_period"] - base_p, r["period_offset"]): r["users"]
-            for r in cohort_retention(
-                _ev(spark, rows), period_s=P
-            ).collect()
-        }
-        assert got == {(0, 0): 1, (0, 2): 1, (1, 0): 1}
-
-    def test_offset_zero_is_cohort_size(self, spark):
-        rows = [(u, "e", _t(u)) for u in range(10)] + [
-            (u, "e", _t(1000 + u)) for u in range(5)
-        ]
-        got = cohort_retention(_ev(spark, rows), period_s=500).collect()
-        by_off = {
-            (r["cohort_period"], r["period_offset"]): r["users"]
-            for r in got
-        }
-        cohorts = {c for c, _ in by_off}
-        assert all((c, 0) in by_off for c in cohorts)
-
-    def test_validation(self, spark):
-        with pytest.raises(ValueError):
-            cohort_retention(_ev(spark, [(1, "e", _t(0))]), period_s=0)
-
-    def test_twin_parity(self, spark):
-        rows = [
-            (u, "e", _t(u * 997 + i * 211))
-            for u in range(30)
-            for i in range(1 + u % 5)
-        ]
-        df = _ev(spark, rows)
-        got = [
-            tuple(r)
-            for r in cohort_retention(df, period_s=600).collect()
-        ]
-        duck = duckdb.connect()
-        duck.register(
-            "events",
-            pd.DataFrame(rows, columns=["user_id", "event_type", "ts"]),
-        )
-        want = [
-            tuple(r)
-            for r in duck.sql(
-                cohort_retention_oracle_sql(period_s=600)
-            ).fetchall()
-        ]
-        assert got == want
-
-
-class TestSaltedJoin:
-    def test_row_multiset_identical_to_plain_join(self, spark):
-        from deduce_spark.spark.relational import salted_join
-
-        left = spark.createDataFrame(
-            [(f"k{i % 5}", i) for i in range(200)], "k string, lv long"
-        )
-        right = spark.createDataFrame(
-            [(f"k{i % 7}", i * 10) for i in range(21)], "k string, rv long"
-        )
-        got = sorted(map(tuple, salted_join(left, right, "k", 8).collect()))
-        want = sorted(map(tuple, left.join(right, "k").collect()))
-        assert got == want and len(got) > 0
-
-    def test_hot_key_spreads_over_salt_tasks(self, spark):
-        # 90%-hot key: the salted join's left side must occupy > 1
-        # shuffle group per key (partition row counts as task proxy,
-        # TestSaltedSkewDefusal discipline)
-        from deduce_spark.spark.relational import salted_join
-
-        left = spark.createDataFrame(
-            [("hot", i) for i in range(9000)]
-            + [(f"c{i % 50}", i) for i in range(1000)],
-            "k string, lv long",
-        )
-        right = spark.createDataFrame(
-            [("hot", 1)] + [(f"c{i}", 2) for i in range(50)],
-            "k string, rv long",
-        )
-        from pyspark.sql import functions as F
-
-        joined = salted_join(left, right, "k", 8)
-        assert joined.count() == 10000
-        # the pre-drop salted key set for the hot key covers >1 salt
-        salts = (
-            left.withColumn(
-                "_s",
-                F.pmod(
-                    F.xxhash64(F.monotonically_increasing_id()), F.lit(8)
-                ),
-            )
-            .filter("k = 'hot'")
-            .select("_s")
-            .distinct()
-            .count()
-        )
-        assert salts > 1
-
-    def test_validation(self, spark):
-        from deduce_spark.spark.relational import salted_join
-
-        df = spark.createDataFrame([("a", 1)], "k string, v long")
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            salted_join(df, df, "k", 0)

@@ -1,5 +1,6 @@
 """Per-partition lineage + exact resume through jobs/build_kg.run_job."""
 
+import shutil
 import sys
 from pathlib import Path
 
@@ -17,12 +18,16 @@ N_PARTS = 8
 
 
 @pytest.fixture(scope="module")
-def kg_out(tmp_path_factory):
-    return tmp_path_factory.mktemp("kg_out")
-
-
-def test_first_run_processes_all_parts(spark, engine, pages_path, kg_out):
+def first_run(spark, engine, pages_path, tmp_path_factory):
+    """(output root, summary) of one full build, shared by the tests that
+    resume from it; a test that changes the output works on a copy."""
+    kg_out = tmp_path_factory.mktemp("kg_out")
     s = run_job(spark, pages_path, str(kg_out), n_parts=N_PARTS, engine=engine)
+    return kg_out, s
+
+
+def test_first_run_processes_all_parts(spark, first_run):
+    kg_out, s = first_run
     assert s["parts_processed"] == N_PARTS and s["parts_skipped"] == 0
     mt = IceTable(kg_out / "mentions")
     assert mt.exists()
@@ -42,7 +47,8 @@ def test_first_run_processes_all_parts(spark, engine, pages_path, kg_out):
     assert IceTable(kg_out / "nodes").read(spark).count() == s["nodes_rows"]
 
 
-def test_second_run_skips_everything(spark, engine, pages_path, kg_out):
+def test_second_run_skips_everything(spark, engine, pages_path, first_run):
+    kg_out, _ = first_run
     before = IceTable(kg_out / "mentions").current_version()
     s = run_job(spark, pages_path, str(kg_out), n_parts=N_PARTS, engine=engine)
     assert s["parts_processed"] == 0 and s["parts_skipped"] == N_PARTS
@@ -51,8 +57,10 @@ def test_second_run_skips_everything(spark, engine, pages_path, kg_out):
 
 
 def test_changed_input_recomputes_only_touched_parts(
-    spark, engine, pages_path, kg_out, tmp_path
+    spark, engine, pages_path, first_run, tmp_path
 ):
+    kg_out = tmp_path / "kg_out"
+    shutil.copytree(first_run[0], kg_out)
     # drop ONE page -> exactly one part's input_hash changes
     pages = spark.read.parquet(pages_path)
     victim = pages.select("url").orderBy("url").limit(1).collect()[0].url

@@ -162,51 +162,3 @@ class TestCountMin:
             ).fetchall())
         )
         assert got == want
-
-
-class TestLog2HistogramAndGroupHLL:
-    def test_hist_bucket_semantics(self, spark):
-        from deduce_spark.spark.sketches import log2_histogram
-
-        rows = [("a", 0), ("a", 1), ("a", 1), ("a", 7), ("a", 8),
-                ("b", 1023), ("b", 1024), ("b", None)]
-        df = spark.createDataFrame(rows, "g string, n long")
-        got = {
-            (r["g"], r["bucket"]): r["cnt"]
-            for r in log2_histogram(df, "n", group_cols=("g",)).collect()
-        }
-        assert got == {
-            ("a", -1): 1, ("a", 0): 2, ("a", 2): 1, ("a", 3): 1,
-            ("b", 9): 1, ("b", 10): 1,
-        }
-
-    def test_hist_mergeable_by_bucket_sum(self, spark):
-        from pyspark.sql import functions as SF
-
-        from deduce_spark.spark.sketches import log2_histogram
-
-        a = spark.createDataFrame([(i,) for i in range(50)], "n long")
-        b = spark.createDataFrame([(i * 3,) for i in range(40)], "n long")
-        merged = (
-            log2_histogram(a, "n").unionAll(log2_histogram(b, "n"))
-            .groupBy("bucket").agg(SF.sum("cnt").alias("cnt"))
-        )
-        whole = log2_histogram(a.unionAll(b), "n")
-        assert sorted(map(tuple, merged.collect())) == sorted(
-            map(tuple, whole.collect())
-        )
-
-    def test_quantile_helper(self):
-        from deduce_spark.spark.sketches import log2_histogram_quantile
-
-        # {0 x1, [4,8) x3, [512,1024) x2}
-        hist = [(-1, 1), (2, 3), (9, 2)]
-        assert log2_histogram_quantile(hist, 0) == 0
-        assert log2_histogram_quantile(hist, 500) == 7
-        assert log2_histogram_quantile(hist, 1000) == 1023
-        import pytest as _pytest
-
-        with _pytest.raises(ValueError):
-            log2_histogram_quantile(hist, 1001)
-        with _pytest.raises(ValueError):
-            log2_histogram_quantile([], 500)

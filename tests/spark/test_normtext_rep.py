@@ -1,12 +1,9 @@
-"""normtext.normalize_text + dedup.select_representatives."""
+"""normtext.normalize_text and its DuckDB twin."""
+
 import duckdb
 import pandas as pd
 import pytest
 
-from deduce_spark.spark.dedup import (
-    select_representatives,
-    select_representatives_oracle_sql,
-)
 from deduce_spark.spark.normtext import (
     normalize_text,
     normalize_text_oracle_sql,
@@ -77,78 +74,3 @@ def test_normalize_oracle_parity(spark, docs_df):
 
 CLUSTERS = [(1, 10), (2, 10), (3, 10), (4, 20), (5, 20), (6, 30)]
 SCORES = [(1, 5), (2, 9), (3, 9), (4, 7), (5, 7), (6, 1)]
-
-
-def test_representative_best_score_then_min_id(spark):
-    clusters = spark.createDataFrame(
-        CLUSTERS, "doc_id long, canonical_id long"
-    )
-    scores = spark.createDataFrame(SCORES, "doc_id long, score long")
-    out = {
-        r["canonical_id"]: (r["rep_id"], r["rep_score"])
-        for r in select_representatives(clusters, scores).collect()
-    }
-    assert out == {
-        10: (2, 9),   # 2 and 3 tie at 9 -> min id 2
-        20: (4, 7),   # 4 and 5 tie -> min id 4
-        30: (6, 1),   # singleton keeps itself
-    }
-
-
-def test_representative_null_scores_excluded(spark):
-    # a NULL score must not win (Spark struct ordering would sort the
-    # NULL neg_score first and crown the scoreless doc); an all-NULL
-    # cluster is absent so the caller keeps its min-id canonical
-    clusters = spark.createDataFrame(
-        [(1, 10), (2, 10), (3, 30)], "doc_id long, canonical_id long"
-    )
-    scores = spark.createDataFrame(
-        [(1, None), (2, 5), (3, None)],
-        "doc_id long, score long",
-    )
-    got = {
-        r["canonical_id"]: (r["rep_id"], r["rep_score"])
-        for r in select_representatives(clusters, scores).collect()
-    }
-    assert got == {10: (2, 5)}
-    con = duckdb.connect()
-    con.register(
-        "c2", pd.DataFrame([(1, 10), (2, 10), (3, 30)],
-                           columns=["doc_id", "canonical_id"])
-    )
-    con.register(
-        "s2", pd.DataFrame({"doc_id": [1, 2, 3],
-                            "score": [None, 5, None]})
-    )
-    want = con.execute(
-        select_representatives_oracle_sql(
-            "SELECT * FROM c2", "SELECT * FROM s2"
-        )
-    ).df()
-    assert len(want) == 1 and int(want["rep_id"][0]) == 2
-
-
-def test_representative_oracle_parity(spark):
-    clusters = spark.createDataFrame(
-        CLUSTERS, "doc_id long, canonical_id long"
-    )
-    scores = spark.createDataFrame(SCORES, "doc_id long, score long")
-    got = (
-        select_representatives(clusters, scores)
-        .orderBy("canonical_id")
-        .toPandas()
-    )
-    con = duckdb.connect()
-    con.register(
-        "c_src", pd.DataFrame(CLUSTERS, columns=["doc_id", "canonical_id"])
-    )
-    con.register("s_src", pd.DataFrame(SCORES, columns=["doc_id", "score"]))
-    want = con.execute(
-        select_representatives_oracle_sql(
-            "SELECT * FROM c_src", "SELECT * FROM s_src"
-        )
-        + " ORDER BY canonical_id"
-    ).df()
-    assert list(got.columns) == list(want.columns)
-    for c in got.columns:
-        assert list(got[c]) == list(want[c]), c

@@ -19,14 +19,6 @@ def vecs(spark):
 
 
 class TestDedup:
-    def test_exact(self, spark):
-        df = spark.createDataFrame(
-            [(1, "aa bb"), (2, "aa bb"), (3, "cc")], ["doc_id", "text"]
-        )
-        rows = {r["canonical_id"]: r["n_dups"]
-                for r in dedup.exact_duplicates(df).collect()}
-        assert rows == {1: 2, 3: 1}
-
     def test_minhash_clusters_near_dupes(self, spark):
         base = "the quick brown fox jumps over the lazy dog again and again " * 5
         variant = base.replace("lazy", "sleepy", 1)
@@ -138,20 +130,6 @@ class TestMultimodal:
         assert out[2]["detected_type"] == "audio/wav"
         assert all(r["n_bytes"] > 500 for r in out.values())
 
-    def test_decode_stub_raises(self, spark):
-        media = multimodal.synthetic_media(spark, 4)
-        with pytest.raises(NotImplementedError):
-            multimodal.image_features(media, use_decoder=True)
-
-    def test_fake_features_and_frames(self, spark):
-        media = multimodal.synthetic_media(spark, 16)
-        feats = multimodal.image_features(media).collect()
-        assert all(len(r["features"]) == 64 for r in feats)
-        assert all(abs(sum(r["features"]) - 1.0) < 1e-3 for r in feats)
-        frames = multimodal.frame_sample(media, n_frames=4).collect()
-        assert len(frames) == 64
-        assert all(len(r["frame"]) <= 256 for r in frames)
-
 
 class TestRelational:
     def test_asof_join_strict_and_nonstrict(self, spark):
@@ -243,24 +221,6 @@ class TestIVF:
         assert a == b
 
 
-class TestResize:
-    def test_resize_deterministic_dims_and_bytes(self, spark):
-        media = multimodal.synthetic_media(spark, 16)
-        out = {r["media_id"]: r for r in multimodal.resize_images(media, max_side=8).collect()}
-        assert len(out) == 16
-        assert all(r["width"] <= 8 and r["height"] <= 8 for r in out.values())
-        assert all(len(r["media"]) == r["width"] * r["height"] for r in out.values())
-        again = {r["media_id"]: bytes(r["media"])
-                 for r in multimodal.resize_images(media, max_side=8).collect()}
-        assert {k: bytes(v["media"]) for k, v in out.items()} == again
-
-    def test_resize_decoder_stub_raises(self, spark):
-        media = multimodal.synthetic_media(spark, 4)
-        import pytest as pt
-        with pt.raises(NotImplementedError):
-            multimodal.resize_images(media, use_decoder=True)
-
-
 class TestParagraphDedup:
     def test_shared_paragraph_counting(self, spark):
         # doc 0 and 1 share their first 10-word block; doc 2 is unique
@@ -343,26 +303,6 @@ class TestRealDecoders:
         with pytest.raises(NotImplementedError, match="integer PCM"):
             multimodal.decode_wav(blob)
 
-    def test_bmp_roundtrip_pixels(self):
-        import numpy as np
-
-        blob = multimodal.synth_bmp(5, width=7, height=3)  # odd width: padding
-        px = multimodal.decode_bmp(blob)
-        assert px.shape == (3, 7, 3)
-        # logical top-left pixel from the generator formulas (i=5)
-        assert px[0, 0].tolist() == [(0 * 11 + 35) % 256, (0 * 17 + 65) % 256, 5]
-        assert px[2, 6].tolist() == [(6 * 11 + 35) % 256, (2 * 17 + 65) % 256, 13]
-
-    def test_bmp_compressed_raises(self):
-        import struct
-
-        body = b"\x00" * 12
-        info = struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 1, len(body),
-                           2835, 2835, 0, 0)  # compression=1 (RLE)
-        header = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(body), 0, 0, 54)
-        with pytest.raises(NotImplementedError, match="uncompressed"):
-            multimodal.decode_bmp(header + info + body)
-
     def test_stats_operators_match_kernel(self, spark):
         media = multimodal.synthetic_media_real(spark, 8)
         audio = {r["media_id"]: (r["rms_q"], r["peak"], r["zero_crossings"])
@@ -372,34 +312,6 @@ class TestRealDecoders:
             if t == "audio/wav":
                 _sr, _ch, _n, rms, peak, zc = multimodal.wav_stats_one(blob)
                 assert audio[mid] == (rms, peak, zc)
-
-
-class TestFeatureHashEmbed:
-    def test_embed_feeds_ann_end_to_end(self, docs):
-        # text -> hashed embedding -> exact cosine top-1: a doc's nearest
-        # neighbour under hashed bag-of-words must be itself when duplicated
-        emb = similarity.feature_hash_embed(docs.limit(50))
-        vecs = emb.withColumnRenamed("doc_id", "vec_id")
-        dup = vecs.filter(F.col("vec_id") == 0).select(
-            F.lit(9999).alias("vec_id"), "embedding"
-        )
-        allv = vecs.union(dup)
-        top = similarity.cosine_topk(
-            allv, allv.filter(F.col("vec_id") == 9999), k=1
-        ).collect()
-        assert top[0]["neighbor_id"] == 0
-        assert abs(top[0]["cosine"] - 1.0) < 1e-9
-
-    def test_sign_balance_and_dim(self, spark):
-        df = spark.createDataFrame(
-            [(0, "a b c d e f g h i j k l m n o p")],
-            "doc_id long, text string",
-        )
-        row = similarity.feature_hash_embed(df, dim=16).collect()[0]
-        assert len(row["embedding"]) == 16
-        # 16 distinct words, each contributing exactly ±1 somewhere
-        assert sum(abs(int(x)) for x in row["embedding"]) <= 16
-        assert any(x != 0 for x in row["embedding"])
 
 
 class TestTextstatsFused:
@@ -555,204 +467,6 @@ class TestExactNtile:
         }
         assert {r["id"]: r["tile"] for r in got.collect()} == want
         assert dbg["resplit"] is False
-
-
-class TestHeavyHitters:
-    """sketches.heavy_hitters: exact phi-heavy-hitter set via per-partition
-    Misra-Gries candidates + broadcast-verified exact counts."""
-
-    @staticmethod
-    def _exact(pairs, phi_permille):
-        from collections import Counter
-
-        c = Counter(x for x in pairs if x is not None)
-        n = sum(c.values())
-        return {
-            w: m for w, m in c.items() if m * 1000 >= phi_permille * n
-        }
-
-    def _items_df(self, spark, values, parts):
-        return spark.createDataFrame(
-            [(v,) for v in values], "item string"
-        ).repartition(parts)
-
-    def test_matches_exact_on_skewed_data(self, spark):
-        from deduce_spark.spark.sketches import heavy_hitters
-
-        # zipf-ish: item_i appears ~3000/i times, plus a long rare tail
-        values = []
-        for i in range(1, 40):
-            values += [f"hot{i}"] * (3000 // i)
-        values += [f"rare{j}" for j in range(5000)]
-        want = self._exact(values, 5)
-        assert 0 < len(want) < 40  # discriminative fixture
-        got = {
-            r["item"]: r["cnt"]
-            for r in heavy_hitters(
-                self._items_df(spark, values, 7), phi_permille=5
-            ).collect()
-        }
-        assert got == want
-
-    def test_partitioning_invariant(self, spark):
-        from deduce_spark.spark.sketches import heavy_hitters
-
-        values = [f"w{i % 37}" for i in range(4000)] + [
-            f"r{j}" for j in range(2000)
-        ]
-        outs = []
-        for parts in (1, 3, 11):
-            outs.append(sorted(
-                (r["item"], r["cnt"])
-                for r in heavy_hitters(
-                    self._items_df(spark, values, parts), phi_permille=4
-                ).collect()
-            ))
-        assert outs[0] == outs[1] == outs[2]
-        assert outs[0] == sorted(self._exact(values, 4).items())
-
-    def test_spread_item_at_threshold_found(self, spark):
-        from deduce_spark.spark.sketches import heavy_hitters
-
-        # adversarial: the heavy item is spread evenly across partitions
-        # and sits exactly at the threshold (cnt * 1000 == phi * N), amid
-        # per-partition noise that would crowd a naive local top-k
-        noise = [f"n{j}" for j in range(990)]
-        values = (["edge"] * 10 + noise) * 6  # N=6000, edge=60 -> 10 permille
-        want = self._exact(values, 10)
-        assert want == {"edge": 60}
-        got = {
-            r["item"]: r["cnt"]
-            for r in heavy_hitters(
-                self._items_df(spark, values, 6), phi_permille=10
-            ).collect()
-        }
-        assert got == want
-
-    def test_sketch_state_bounded(self, spark):
-        from deduce_spark.spark.sketches import heavy_hitters
-
-        values = [f"d{j}" for j in range(8000)]  # all-distinct worst case
-        caches: list = []
-        parts = 5
-        out = heavy_hitters(
-            self._items_df(spark, values, parts),
-            phi_permille=20, caches=caches,
-        )
-        assert out.count() == 0  # nothing reaches 2% of 8000
-        (sk,) = caches
-        # <= k candidates + 1 marker row per partition, k = ceil(1000/20)
-        assert sk.count() <= parts * (50 + 1)
-        sk.unpersist()
-
-    def test_too_small_k_raises(self, spark):
-        from deduce_spark.spark.sketches import heavy_hitters
-
-        with pytest.raises(ValueError):
-            heavy_hitters(
-                self._items_df(spark, ["a"], 1), phi_permille=2, k=100
-            )
-
-    def test_nulls_and_empty(self, spark):
-        from deduce_spark.spark.sketches import heavy_hitters
-
-        df = spark.createDataFrame(
-            [("a",), (None,), ("a",), ("b",)], "item string"
-        )
-        got = {
-            r["item"]: r["cnt"]
-            for r in heavy_hitters(df, phi_permille=500).collect()
-        }
-        assert got == {"a": 2}  # nulls excluded from N (3 non-null)
-        empty = spark.createDataFrame([], "item string")
-        assert heavy_hitters(empty, phi_permille=2).count() == 0
-
-
-class TestJaccardPrefixJoin:
-    """dedup.jaccard_join_prefix: exact prefix-filtered set-similarity
-    self-join — output set identical to the all-pairs explode+join form."""
-
-    def _rand_docs(self, spark, seed, n_docs=60):
-        # deterministic word-salad with controlled near-dup structure
-        import random
-
-        rng = random.Random(seed)
-        vocab = [f"w{i}" for i in range(40)]
-        rows = []
-        for d in range(n_docs):
-            if d % 3 == 2:
-                # near-dup of the previous doc: mutate a couple of words
-                base = rows[-1][1].split()
-                for _ in range(2):
-                    base[rng.randrange(len(base))] = rng.choice(vocab)
-                rows.append((d, " ".join(base)))
-            else:
-                rows.append(
-                    (d, " ".join(rng.choice(vocab) for _ in range(25)))
-                )
-        return spark.createDataFrame(rows, "doc_id long, text string")
-
-    @pytest.mark.parametrize("t_permille", [200, 500, 800])
-    def test_matches_allpairs_form(self, spark, t_permille):
-        from deduce_spark.spark.dedup import (
-            jaccard_join_prefix, ngram_jaccard_pairs,
-        )
-
-        df = self._rand_docs(spark, seed=t_permille)
-        want = {
-            (r["a"], r["b"], r["n_common"])
-            for r in ngram_jaccard_pairs(
-                df, n=3, threshold=t_permille / 1000.0
-            ).collect()
-        }
-        got = {
-            (r["a"], r["b"], r["n_common"])
-            for r in jaccard_join_prefix(
-                df, n=3, threshold_permille=t_permille
-            ).collect()
-        }
-        assert got == want
-        if t_permille == 500:
-            assert want  # fixture must exercise non-empty output
-
-    def test_prefix_candidates_prune(self, spark):
-        # at a high threshold the prefix join generates far fewer candidate
-        # pairs than the all-pairs gram join would (here: every doc shares
-        # hot grams with every other doc, but prefixes are rare grams)
-        from deduce_spark.spark.dedup import jaccard_join_prefix
-
-        hot = "the quick brown fox jumps over the lazy dog"
-        rows = [
-            (d, f"{hot} uniq{d}a uniq{d}b uniq{d}c uniq{d}d uniq{d}e")
-            for d in range(30)
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = jaccard_join_prefix(df, n=3, threshold_permille=900)
-        # all docs share the 7 hot-phrase grams but none reach J >= 0.9
-        assert out.count() == 0
-
-    def test_permille_exact_at_boundary(self, spark):
-        from deduce_spark.spark.dedup import jaccard_join_prefix
-
-        # engineered pair: 7 common grams of 9 union -> 777 permille
-        rows = [(1, "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"),
-                (2, "w1 w2 w3 w4 w5 w6 w7 w8 w9 zz")]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        at = jaccard_join_prefix(df, n=3, threshold_permille=777).collect()
-        assert [(r["a"], r["b"], r["jacc_permille"]) for r in at] == [(1, 2, 777)]
-        above = jaccard_join_prefix(df, n=3, threshold_permille=778).collect()
-        assert above == []
-
-    def test_short_docs_excluded(self, spark):
-        from deduce_spark.spark.dedup import jaccard_join_prefix
-
-        df = spark.createDataFrame(
-            [(1, "one two"), (2, "one two"), (3, "a b c d"), (4, "a b c d")],
-            "doc_id long, text string",
-        )
-        got = {(r["a"], r["b"]) for r in
-               jaccard_join_prefix(df, n=3, threshold_permille=500).collect()}
-        assert got == {(3, 4)}  # <n-word docs have no grams, like the oracle
 
 
 class TestSemanticDedup:

@@ -688,88 +688,3 @@ class TestFrontierWaves:
             )
         )
         assert got == want
-
-
-class TestBoilerplateRemoval:
-    """Per-host template stripping (boilerplate_lines / remove_boilerplate)."""
-
-    def _pages(self, spark, n=90):
-        return spark.range(0, n).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("h"), (F.col("id") % 3).cast("string")).alias("host"),
-            F.concat(
-                F.lit("NAV home h"), (F.col("id") % 3).cast("string"),
-                F.lit("\n"),
-                F.when(F.col("id") % 3 == 0, F.lit("PROMO subscribe\n"))
-                .otherwise(F.lit("")),
-                F.lit("body "), F.col("id").cast("string"),
-                F.lit("\nCOPYRIGHT h"), (F.col("id") % 3).cast("string"),
-            ).alias("text"),
-        )
-
-    def test_strips_per_host_templates_keeps_body(self, spark):
-        from deduce_spark.spark.textstats import remove_boilerplate
-
-        pdf = remove_boilerplate(self._pages(spark)).toPandas()
-        assert (pdf["clean_text"] == "body " + pdf["doc_id"].astype(str)).all()
-        # h0 pages lose NAV+PROMO+COPYRIGHT (PROMO is on EVERY %3==0 page
-        # = every h0 page); other hosts lose NAV+COPYRIGHT only
-        want = pdf["host"].map({"h0": 3, "h1": 2, "h2": 2})
-        assert (pdf["n_removed_lines"] == want).all()
-
-    def test_threshold_is_per_host(self, spark):
-        from deduce_spark.spark.textstats import boilerplate_lines
-
-        # "RARE x" appears on 1 of 30 pages per host -> 33 permille, kept
-        pages = self._pages(spark).withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") < 3,
-                F.concat(F.col("text"), F.lit("\nRARE x")),
-            ).otherwise(F.col("text")),
-        )
-        bp = boilerplate_lines(pages).toPandas()
-        assert not (bp["line"] == "RARE x").any()
-        assert (bp["line"] == "PROMO subscribe").sum() == 1  # h0 only
-
-    def test_min_pages_guard(self, spark):
-        from deduce_spark.spark.textstats import boilerplate_lines
-
-        one = spark.createDataFrame(
-            [(0, "solo", "only\npage")], "doc_id long, host string, text string"
-        )
-        assert boilerplate_lines(one, min_pages=2).count() == 0
-        # with the guard off, every line of a 1-page host is "boilerplate"
-        assert boilerplate_lines(one, min_pages=1).count() == 2
-
-    def test_matches_oracle_sql(self, spark):
-        import duckdb
-
-        from deduce_spark.spark.textstats import (
-            remove_boilerplate, remove_boilerplate_oracle_sql,
-        )
-
-        src = """
-            SELECT range AS doc_id,
-                   'h' || CAST(range % 3 AS VARCHAR) AS host,
-                   'NAV home h' || CAST(range % 3 AS VARCHAR) || chr(10)
-                   || CASE WHEN range % 3 = 0
-                           THEN 'PROMO subscribe' || chr(10) ELSE '' END
-                   || 'body ' || CAST(range AS VARCHAR) || chr(10)
-                   || 'COPYRIGHT h' || CAST(range % 3 AS VARCHAR) AS text
-            FROM range(90)
-        """
-        got = sorted(
-            map(tuple, remove_boilerplate(self._pages(spark)).collect())
-        )
-        want = sorted(
-            map(
-                tuple,
-                duckdb.sql(
-                    remove_boilerplate_oracle_sql(
-                        src, out_cols="p.doc_id, p.host, p.text"
-                    )
-                ).fetchall(),
-            )
-        )
-        assert got == want

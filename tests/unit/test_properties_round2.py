@@ -9,12 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from deduce_spark.spark.dedup import simhash64
-from deduce_spark.spark.multimodal import (
-    decode_bmp,
-    decode_wav,
-    resize_one,
-    synth_bmp,
-)
+from deduce_spark.spark.multimodal import decode_wav
 from deduce_spark.spark.textstats import winnow_doc
 
 _words = st.lists(
@@ -79,25 +74,3 @@ def test_wav_roundtrip_arbitrary_samples(samples, sr):
     got_sr, ch, bits, got = decode_wav(blob)
     assert (got_sr, ch, bits) == (sr, 1, 16)
     assert got.tolist() == samples
-
-
-@given(st.integers(0, 1000), st.integers(1, 40), st.integers(1, 30))
-@settings(max_examples=40, deadline=None)
-def test_bmp_synth_decode_shape(i, width, height):
-    px = decode_bmp(synth_bmp(i, width=width, height=height))
-    assert px.shape == (height, width, 3)
-    # spot-check the generator formulas at two corners
-    assert px[0, 0, 0] == (0 * 11 + i * 7) % 256
-    assert px[height - 1, width - 1, 2] == (width - 1 + height - 1 + i) % 256
-
-
-@given(st.binary(min_size=0, max_size=4096), st.integers(1, 64))
-@settings(max_examples=60, deadline=None)
-def test_resize_bounds_and_idempotence(blob, max_side):
-    out, w, h = resize_one(blob, max_side)
-    assert w <= max(1, max_side) and h <= max(1, max_side)
-    assert len(out) == w * h
-    out2, w2, h2 = resize_one(out, max_side)
-    # a raster already within bounds passes through byte-identical
-    if w2 == w and h2 == h:
-        assert out2 == out

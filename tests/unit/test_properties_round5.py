@@ -14,7 +14,7 @@ from hypothesis import strategies as st
 
 from deduce_spark.spark.lmscore import _plog2_duck
 from deduce_spark.spark.sketches import (
-    cms_oracle_sql, cms_query_oracle_sql, log2_histogram_quantile,
+    cms_oracle_sql, cms_query_oracle_sql,
 )
 from deduce_spark.spark.relational import funnel_oracle_sql
 
@@ -42,28 +42,6 @@ def test_plog2_monotone_and_close_to_log2(xs):
             assert pa == pb
     for x, p in zip(sorted(xs), got):
         assert abs(p / 1024 - math.log2(x)) <= 0.09
-
-
-@given(st.lists(st.integers(min_value=0, max_value=2**40), min_size=1,
-                max_size=200),
-       st.integers(min_value=0, max_value=1000))
-@settings(max_examples=60, deadline=None)
-def test_log2_histogram_quantile_bounds(values, q):
-    """The histogram quantile is an UPPER bound of the true quantile and
-    within 2x of it (power-of-two bucket guarantee)."""
-    hist = {}
-    for v in values:
-        b = -1 if v == 0 else v.bit_length() - 1
-        hist[b] = hist.get(b, 0) + 1
-    bound = log2_histogram_quantile(sorted(hist.items()), q)
-    vs = sorted(values)
-    rank = max((q * len(vs) + 999) // 1000, 1)
-    true = vs[rank - 1]
-    assert bound >= true
-    if true == 0:
-        assert bound == 0
-    else:
-        assert bound < 2 * true
 
 
 @given(st.lists(st.integers(min_value=0, max_value=40), min_size=1,
