@@ -1364,10 +1364,7 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # stats; blobs are valid generated WAV files
         from deduce_spark.spark.multimodal import audio_stats, synthetic_media_real
 
-        media = synthetic_media_real(spark, 32).filter(
-            F.col("media_type") == "audio/wav"
-        )
-        return audio_stats(media).orderBy("media_id")
+        return audio_stats(synthetic_media_real(spark, 32)).orderBy("media_id")
 
     q["media_audio_stats"] = media_audio_stats
 

@@ -677,11 +677,9 @@ def golden_media() -> dict[str, pd.DataFrame]:
 
     rows = synthetic_media_rows(64)
     probe = [(mid, *probe_one(blob)) for mid, blob, _t in rows]
-    real = synthetic_media_real_rows(32)
     audio = [
         (mid,) + wav_stats_one(blob)
-        for mid, blob, t in real
-        if t == "audio/wav"
+        for mid, blob, _t in synthetic_media_real_rows(32)
     ]
     return {
         "media_probe": pd.DataFrame(

@@ -26,7 +26,7 @@ without editing operator source:
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Union
+from typing import Callable, Union
 
 from pyspark.sql import DataFrame
 

@@ -29,9 +29,6 @@ Semantics carried over from Iceberg proper:
   file (on a 10^12-row table the file listing itself is the bottleneck;
   Iceberg prunes from manifests for the same reason);
 * **time travel** — ``read(snapshot_id=...)`` and ``snapshots()``.
-
-A config switch to real Iceberg (``spark.write.format("iceberg")``) when the
-runtime has the jars is a drop-in: every call site goes through this module.
 """
 
 from __future__ import annotations

@@ -38,7 +38,6 @@ import os
 import time
 import uuid
 from pathlib import Path
-from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -167,7 +166,7 @@ def part_records(
 def content_fingerprint(df: DataFrame, *cols: str) -> str:
     """Order-independent content fingerprint of a frame over ``cols``:
     ``"<rowcount>-<hex bit_xor of xxhash64(cols)>"`` — the stage-resume
-    key shared by jobs/curate_corpus.py and jobs/schedule_crawl.py."""
+    key of jobs/curate_corpus.py."""
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.bit_xor(F.xxhash64(*cols)).alias("x"),

@@ -7,9 +7,9 @@ UDF signatures — is real and tested.  Codec status, honestly:
 - ``probe_media``: magic-byte type sniff (real);
 - ``decode_wav`` / ``audio_stats``: REAL RIFF/PCM parser (pure
   numpy/struct) — integer waveform stats over 8/16-bit WAV;
-- ``synth_wav`` / ``synth_bmp`` / ``synthetic_media*``: deterministic
-  fixture blobs; no image decoder ships, and compressed formats
-  (JPEG/PNG/MP3/H.264) have no codec backend here.
+- ``synth_wav`` / ``synthetic_media*``: deterministic fixture blobs
+  (valid WAV files, or magic-byte stubs); no image decoder ships, and
+  compressed formats (JPEG/PNG/MP3/H.264) have no codec backend here.
 """
 
 from __future__ import annotations
@@ -218,38 +218,11 @@ def synth_wav(i: int, n_frames: int = 2000, sample_rate: int = 8000) -> bytes:
     )
 
 
-def synth_bmp(i: int, width: int = 24, height: int = 16) -> bytes:
-    """Deterministic VALID uncompressed 24-bit BMP (gradient + id-keyed
-    offsets, bottom-up, row-padded)."""
-    import struct
-
-    y, x = np.mgrid[0:height, 0:width]
-    r = ((x * 11 + i * 7) % 256).astype(np.uint8)
-    g = ((y * 17 + i * 13) % 256).astype(np.uint8)
-    bl = ((x + y + i) % 256).astype(np.uint8)
-    px = np.stack([bl, g, r], axis=-1)  # file order is BGR
-    row_bytes = (width * 3 + 3) & ~3
-    pad = row_bytes - width * 3
-    body = b"".join(
-        px[row].tobytes() + b"\x00" * pad for row in range(height - 1, -1, -1)
-    )
-    info = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0,
-                       len(body), 2835, 2835, 0, 0)
-    header = struct.pack("<2sIHHI", b"BM", 14 + 40 + len(body), 0, 0, 14 + 40)
-    return header + info + body
-
-
 def synthetic_media_real(spark, n: int = 32) -> DataFrame:
-    """Media table whose blobs are REAL files (PCM WAV + 24-bit BMP
-    alternating) — the WAV decode path runs for real on these."""
+    """Media table of REAL PCM WAV files with the even ids below ``n`` —
+    the WAV decode path runs for real on these."""
     return spark.createDataFrame(synthetic_media_real_rows(n), schema=MEDIA_SCHEMA)
 
 
 def synthetic_media_real_rows(n: int = 32) -> list[tuple[int, bytes, str]]:
-    rows = []
-    for i in range(n):
-        if i % 2 == 0:
-            rows.append((i, synth_wav(i), "audio/wav"))
-        else:
-            rows.append((i, synth_bmp(i), "image/bmp"))
-    return rows
+    return [(i, synth_wav(i), "audio/wav") for i in range(0, n, 2)]

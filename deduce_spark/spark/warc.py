@@ -83,7 +83,7 @@ def pack_warc_files(
     ``(file_id long, payload binary, n_records long)``.
 
     File assignment is the portable 32-bit md5-prefix hash (the
-    frontier_waves / split_assign discipline) so both engines and any
+    curation.split_assign discipline) so both engines and any
     re-run agree; records are concatenated in ``url`` order within each
     file, making every archive byte-deterministic (resume-safe).
 

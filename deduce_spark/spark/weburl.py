@@ -363,192 +363,6 @@ def anchor_extract_sql(
     """
 
 
-def frontier_waves(
-    urls: DataFrame,
-    per_host_cap: int,
-    url_col: str = "url",
-    n_buckets: int = 256,
-) -> DataFrame:
-    """Politeness-scheduled crawl-frontier assignment: (url, host, wave)
-    with at most ``per_host_cap`` urls of any host per wave.
-
-    A crawler must rate-limit per host, so the frontier is fetched in
-    WAVES: wave w holds each host's urls ranked [w*cap, (w+1)*cap).  The
-    rank is deterministic (a re-run or resumed scheduler reproduces the
-    exact same waves — same discipline as the curation samplers).
-
-    Scale shape: the naive rank is ``row_number() OVER (PARTITION BY
-    host ORDER BY url)`` — ONE task per host, and a crawl frontier is
-    exactly the workload where one host can hold 10^7+ urls (the skew
-    this operator exists to manage).  Instead the exact_ntile /
-    token_budget_mix two-phase form: a portable hash splits every host
-    into ``n_buckets`` sub-groups, per-(host, bucket) counts (a tiny
-    <= hosts x n_buckets table) turn into per-host running offsets with
-    a window over n_buckets rows per host, and the global rank is
-    offset + rank within the (host, bucket) sub-group — hot hosts fan
-    out n_buckets-wide, no unbounded single-task window.  Rank order is
-    (bucket, url) within each host; every quantity is a non-negative
-    integer so Spark ``DIV`` and DuckDB ``//`` agree.
-    """
-    host = url_host(F.col(url_col)).alias("host")
-    bucketed = urls.select(
-        F.col(url_col).alias("url"),
-        host,
-        F.expr(
-            f"CAST(conv(substr(md5({url_col}), 1, 8), 16, 10) AS BIGINT)"
-            f" % {n_buckets}"
-        ).alias("bucket"),
-    )
-    counts = bucketed.groupBy("host", "bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    # running offset of each (host, bucket): rows of the SAME host in
-    # strictly smaller buckets — window input is <= n_buckets rows/host
-    w = (
-        Window.partitionBy("host")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "host", "bucket",
-        F.coalesce(F.sum("n").over(w), F.lit(0)).cast("long").alias("off"),
-    )
-    in_bucket = Window.partitionBy("host", "bucket").orderBy("url")
-    return (
-        bucketed.join(offsets, ["host", "bucket"])
-        .select(
-            "url", "host",
-            (F.col("off") + F.row_number().over(in_bucket) - 1).alias("rk"),
-        )
-        .select(
-            "url", "host",
-            F.expr(f"rk DIV {per_host_cap}").cast("long").alias("wave"),
-        )
-    )
-
-
-def recrawl_schedule(
-    history: DataFrame,
-    base_interval: int = 4000,
-    min_interval: int = 1000,
-    max_interval: int = 16000,
-    url_col: str = "url",
-    flags_col: str = "changed_flags",
-) -> DataFrame:
-    """Adaptive-revisit crawl scheduling (AIMD, the Heritrix
-    wait-factor / Cho & Garcia-Molina revisit-policy shape): fold each
-    url's fetch history (``changed_flags``: 1 = content changed at that
-    fetch, 0 = unchanged) into the next revisit interval — halve on
-    change (the page is hot), double on no-change (back off), clamped
-    to [min_interval, max_interval].  Output:
-    ``(url, n_fetches, n_changes, next_interval)``; an empty history
-    keeps ``base_interval``.  The result is exactly what feeds
-    :func:`frontier_waves`: urls due sooner land in earlier waves.
-
-    Scale shape: a per-row integer fold via the ``aggregate``
-    higher-order function — zero shuffle, zero Python, embarrassingly
-    parallel over 10^12 urls.  All quantities are non-negative integers
-    (Spark ``DIV`` == DuckDB ``//``), so the DuckDB ``list_reduce`` twin
-    (:func:`recrawl_schedule_oracle_sql`) is exact."""
-    fold = (
-        f"aggregate({flags_col}, CAST({base_interval} AS BIGINT), "
-        f"(acc, x) -> CASE WHEN x = 1 "
-        f"THEN greatest(CAST({min_interval} AS BIGINT), acc DIV 2) "
-        f"ELSE least(CAST({max_interval} AS BIGINT), acc * 2) END)"
-    )
-    return history.select(
-        F.col(url_col).alias("url"),
-        F.size(F.col(flags_col)).cast("long").alias("n_fetches"),
-        F.expr(
-            f"CAST(aggregate({flags_col}, 0, (a, x) -> a + x) AS BIGINT)"
-        ).alias("n_changes"),
-        F.expr(fold).alias("next_interval"),
-    )
-
-
-def recrawl_schedule_oracle_sql(
-    history_sql: str,
-    base_interval: int = 4000,
-    min_interval: int = 1000,
-    max_interval: int = 16000,
-    url_col: str = "url",
-    flags_col: str = "changed_flags",
-) -> str:
-    """DuckDB twin of :func:`recrawl_schedule`.  ``list_reduce`` seeds
-    from the list's first element, so the fold prepends the base
-    interval (the bpe.py list_reduce discipline); flags are cast to
-    BIGINT so the lambda's CASE arms unify types."""
-    fold = (
-        f"list_reduce(list_prepend(CAST({base_interval} AS BIGINT), "
-        f"list_transform({flags_col}, f -> CAST(f AS BIGINT))), "
-        f"(acc, x) -> CASE WHEN x = 1 "
-        f"THEN greatest(CAST({min_interval} AS BIGINT), acc // 2) "
-        f"ELSE least(CAST({max_interval} AS BIGINT), acc * 2) END)"
-    )
-    return f"""
-        SELECT {url_col} AS url,
-               len({flags_col})::BIGINT AS n_fetches,
-               COALESCE(list_sum({flags_col}), 0)::BIGINT AS n_changes,
-               {fold}::BIGINT AS next_interval
-        FROM ({history_sql})
-    """
-
-
-def crawl_delta(
-    old: DataFrame,
-    new: DataFrame,
-    url_col: str = "url",
-    digest_col: str = "digest",
-) -> DataFrame:
-    """Classify each url across two crawl snapshots:
-    ``(url, status)`` with status in {added, deleted, changed,
-    unchanged} — the per-snapshot change signal that FEEDS
-    :func:`recrawl_schedule`'s changed_flags history and an incremental
-    KG build's re-annotate worklist.
-
-    Both inputs are ``(url, digest)`` where digest is any content
-    fingerprint (md5 of extracted text in the driver query).  Exactly
-    one full-outer shuffle join on url; at 10^12 urls both sides are
-    url-keyed tables a real deployment would bucket by url, making the
-    join co-located."""
-    o = old.select(
-        F.col(url_col).alias("url"), F.col(digest_col).alias("old_digest")
-    )
-    n = new.select(
-        F.col(url_col).alias("url"), F.col(digest_col).alias("new_digest")
-    )
-    return o.join(n, "url", "full_outer").select(
-        "url",
-        F.when(F.col("old_digest").isNull(), F.lit("added"))
-        .when(F.col("new_digest").isNull(), F.lit("deleted"))
-        .when(F.col("old_digest") != F.col("new_digest"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-        .alias("status"),
-    )
-
-
-def crawl_delta_oracle_sql(
-    old_sql: str,
-    new_sql: str,
-    url_col: str = "url",
-    digest_col: str = "digest",
-) -> str:
-    """DuckDB twin of :func:`crawl_delta`."""
-    return f"""
-        SELECT COALESCE(o.url, n.url) AS url,
-               CASE WHEN o.url IS NULL THEN 'added'
-                    WHEN n.url IS NULL THEN 'deleted'
-                    WHEN o.old_digest <> n.new_digest THEN 'changed'
-                    ELSE 'unchanged' END AS status
-        FROM (SELECT {url_col} AS url, {digest_col} AS old_digest
-              FROM ({old_sql})) o
-        FULL OUTER JOIN
-             (SELECT {url_col} AS url, {digest_col} AS new_digest
-              FROM ({new_sql})) n
-          ON o.url = n.url
-    """
-
-
 def _robots_lines(
     robots: DataFrame, host_col: str, body_col: str
 ) -> DataFrame:
@@ -586,8 +400,7 @@ def parse_robots(
     body_col: str = "robots_txt",
 ) -> DataFrame:
     """Parse robots.txt bodies into rule rows ``(host, agent, allow,
-    prefix)`` — the crawl-side policy companion to
-    :func:`frontier_waves` / :func:`recrawl_schedule`.
+    prefix)`` — the crawl-side policy input to :func:`robots_allowed`.
 
     RFC 9309 subset (documented-honesty, like the href grammar):
     ``User-agent`` / ``Allow`` / ``Disallow`` directives
@@ -793,30 +606,5 @@ def robots_allowed_oracle_sql(
                    COALESCE(w.w.allow, 1)::INT AS allowed,
                    COALESCE(w.w.prefix, '') AS rule_prefix
             FROM hosted h LEFT JOIN winner w ON h.url = w.url
-        )
-    """
-
-
-def frontier_waves_oracle_sql(
-    urls_sql: str,
-    per_host_cap: int,
-    url_col: str = "url",
-    n_buckets: int = 256,
-    host_sql: str | None = None,
-) -> str:
-    """DuckDB twin of :func:`frontier_waves` (the rank collapses to one
-    window — the oracle states the SEMANTICS; the Spark form is the
-    skew-safe physical strategy).  ``host_sql`` must be the DuckDB twin
-    of weburl.url_host applied to ``url_col`` (url_host_oracle_sql)."""
-    host = host_sql if host_sql is not None else url_host_oracle_sql(url_col)
-    return f"""
-        SELECT url, host,
-               ((ROW_NUMBER() OVER (PARTITION BY host ORDER BY bucket, url)
-                 - 1) // {per_host_cap})::BIGINT AS wave
-        FROM (
-            SELECT {url_col} AS url, {host} AS host,
-                   ('0x' || substr(md5({url_col}), 1, 8))::BIGINT
-                       % {n_buckets} AS bucket
-            FROM ({urls_sql})
         )
     """

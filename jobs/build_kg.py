@@ -36,9 +36,9 @@ from pyspark.sql import functions as F
 
 
 def _read_pages(spark: SparkSession, path: str):
-    from deduce_spark.spark.iceberg_catalog import open_table
+    from deduce_spark.spark.icetable import IceTable
 
-    t = open_table(spark, str(path))
+    t = IceTable(path)
     if t.exists():
         return t.read(spark)
     return spark.read.parquet(path)
@@ -62,7 +62,7 @@ def run_job(
     anchor_evidence: bool = True,
 ) -> dict:
     from deduce_spark.spark import lineage as lin
-    from deduce_spark.spark.iceberg_catalog import open_table
+    from deduce_spark.spark.icetable import IceTable
     from deduce_spark.spark.stages import AnnotatePipeline
 
     if engine is None:
@@ -73,7 +73,7 @@ def run_job(
     log = lin.LineageLog(out / "_lineage")
     run_id = uuid.uuid4().hex[:12]
     seq = log.next_seq()
-    mentions_table = open_table(spark, str(out / "mentions"))
+    mentions_table = IceTable(out / "mentions")
 
     # -- plan ---------------------------------------------------------------
     if kg_only:
@@ -84,9 +84,7 @@ def run_job(
         if not mentions_table.exists():
             raise SystemExit(f"--kg-only: no mentions table under {out}")
         summary: dict = {"run_id": run_id, "kg_only": True}
-        from deduce_spark.spark.iceberg_catalog import open_table as _ot
-
-        if incremental and _ot(spark, str(out / "surface_map")).exists():
+        if incremental and IceTable(out / "surface_map").exists():
             # streaming integration: fold only the stream batches not yet
             # canonicalized (batch_id comes from stream_ingest's
             # (batch_id, part_id) layout; folded ids are tracked as
@@ -234,12 +232,10 @@ def run_job(
         summary["mentions_rows_written"] = total_rows
 
     # -- stage B: canonicalize + triples ------------------------------------
-    from deduce_spark.spark.iceberg_catalog import open_table as _ot
-
     # layout change relabels every part: the fold bookkeeping below is
     # meaningless across layouts, so only the full rebuild is correct
     if (incremental and not layout_changed
-            and _ot(spark, str(out / "surface_map")).exists()):
+            and IceTable(out / "surface_map").exists()):
         # fold every annotated-but-not-yet-folded part: normally just this
         # run's todo, but a run that crashed between stage A's commit and
         # the fold would otherwise leave its mentions out of the graph
@@ -306,7 +302,7 @@ def _stage_b(
     with_cooccurrence, expire_keep, summary, anchors=None,
 ) -> dict:
     from deduce_spark.spark import lineage as lin
-    from deduce_spark.spark.iceberg_catalog import open_table
+    from deduce_spark.spark.icetable import IceTable
     from deduce_spark.spark.kg import (
         canonicalize, link_dicts_broadcast, link_scores, salted_repartition,
         triples,
@@ -334,7 +330,7 @@ def _stage_b(
         )
         # the surface map is the base an --incremental run folds new
         # batches into (stable entity ids); persisted alongside nodes/edges
-        open_table(spark, str(out / "surface_map")).write(
+        IceTable(out / "surface_map").write(
             surface_map, mode="overwrite",
             summary={"run_id": run_id, "stage": "kg"},
         )
@@ -343,15 +339,15 @@ def _stage_b(
             # compactions keep the anchor-voted canonical forms instead of
             # reverting to the bare mention-count argmax (a full rebuild
             # refreshes it)
-            open_table(spark, str(out / "anchor_weights")).write(
+            IceTable(out / "anchor_weights").write(
                 weights, mode="overwrite",
                 summary={"run_id": run_id, "stage": "kg"},
             )
-        nodes_man = open_table(spark, str(out / "nodes")).write(
+        nodes_man = IceTable(out / "nodes").write(
             nodes, mode="overwrite",
             summary={"run_id": run_id, "stage": "kg"},
         )
-        edges_man = open_table(spark, str(out / "edges")).write(
+        edges_man = IceTable(out / "edges").write(
             edges, partition_by=("pred",), mode="overwrite",
             summary={"run_id": run_id, "stage": "kg"},
         )
@@ -379,7 +375,7 @@ def _stage_b(
     if expire_keep:
         freed = 0
         for t in ("mentions", "surface_map", "nodes", "edges"):
-            freed += open_table(spark, str(out / t)).expire_snapshots(expire_keep)["freed_bytes"]
+            freed += IceTable(out / t).expire_snapshots(expire_keep)["freed_bytes"]
         summary["expired_freed_bytes"] = freed
     return summary
 
@@ -398,19 +394,19 @@ def _stage_b_incremental(
     double-counts mentions until the next full rebuild, which is the
     compaction path (run without --incremental)."""
     from deduce_spark.spark import lineage as lin
-    from deduce_spark.spark.iceberg_catalog import open_table
+    from deduce_spark.spark.icetable import IceTable
     from deduce_spark.spark.kg import (
         incremental_canonicalize, link_dicts_broadcast, link_scores,
         salted_repartition, surfaces, triples,
     )
 
     t0 = time.monotonic()
-    sm_table = open_table(spark, str(out / "surface_map"))
+    sm_table = IceTable(out / "surface_map")
     existing_sm = sm_table.read(spark)
     # keep anchor-voted canonical forms stable across folds: reuse the
     # persisted weight table when the full build wrote one (new pages'
     # anchors are folded in on the next full rebuild — documented)
-    aw_table = open_table(spark, str(out / "anchor_weights"))
+    aw_table = IceTable(out / "anchor_weights")
     anchor_weights = aw_table.read(spark) if aw_table.exists() else None
     updated_sm, nodes = incremental_canonicalize(
         new_mentions, existing_sm, anchor_weights=anchor_weights
@@ -429,7 +425,7 @@ def _stage_b_incremental(
             touched, keys=["surface_id"],
             summary={"run_id": run_id, "stage": "kg_incremental"},
         )
-        nodes_man = open_table(spark, str(out / "nodes")).write(
+        nodes_man = IceTable(out / "nodes").write(
             nodes, mode="overwrite",
             summary={"run_id": run_id, "stage": "kg_incremental"},
         )
@@ -440,7 +436,7 @@ def _stage_b_incremental(
         edges_new = salted_repartition(
             edges_new, spark.sparkContext.defaultParallelism
         )
-        edges_man = open_table(spark, str(out / "edges")).write(
+        edges_man = IceTable(out / "edges").write(
             edges_new, partition_by=("pred",), mode="append",
             summary={"run_id": run_id, "stage": "kg_incremental"},
         )
@@ -472,7 +468,7 @@ def _stage_b_incremental(
         # accumulates snapshots — GC must not be full-rebuild-only
         freed = 0
         for t in ("mentions", "surface_map", "nodes", "edges"):
-            tbl = open_table(spark, str(out / t))
+            tbl = IceTable(out / t)
             if tbl.exists():
                 freed += tbl.expire_snapshots(expire_keep)["freed_bytes"]
         summary["expired_freed_bytes"] = freed

@@ -78,7 +78,7 @@ def run_job(
         corpus_filter, decontam_overlap, pack_sequences,
     )
     from deduce_spark.spark.dedup import minhash_dedup
-    from deduce_spark.spark.iceberg_catalog import open_table
+    from deduce_spark.spark.icetable import IceTable
     from deduce_spark.spark.lineage import (
         LineageLog,
         content_fingerprint,
@@ -112,7 +112,7 @@ def run_job(
     summary: dict = {"run_id": run_id, "input_fp": fp, "stages": {}}
 
     def stage(name: str, build, table_name: str, partition_by=()):
-        table = open_table(spark, str(out / table_name))
+        table = IceTable(out / table_name)
         if resume and stage_done(log, table, name, fp):
             summary["stages"][name] = {"skipped": True}
             return table.read(spark)

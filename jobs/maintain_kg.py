@@ -48,7 +48,7 @@ def run_merge_compaction(spark, root: str, engine=None) -> dict:
 
     No-op (and no new snapshots) when the map is already converged."""
     from deduce_spark.spark import lineage as lin
-    from deduce_spark.spark.iceberg_catalog import open_table
+    from deduce_spark.spark.icetable import IceTable
     from deduce_spark.spark.kg import (
         compact_canonicalize, link_dicts_broadcast, link_scores,
         remap_triples, salted_repartition,
@@ -60,13 +60,13 @@ def run_merge_compaction(spark, root: str, engine=None) -> dict:
     run_id = f"mergecompact-{log.next_seq()}"
     t0 = time.monotonic()
 
-    sm_table = open_table(spark, str(out / "surface_map"))
+    sm_table = IceTable(out / "surface_map")
     if not sm_table.exists():
         return {"skipped": "no surface_map table"}
     held_caches: list = []
     # anchor-voted canonical forms survive compaction when the build
     # persisted a weight table (jobs/build_kg.py stage B)
-    aw_table = open_table(spark, str(out / "anchor_weights"))
+    aw_table = IceTable(out / "anchor_weights")
     anchor_weights = aw_table.read(spark) if aw_table.exists() else None
     new_sm, new_nodes, id_map = compact_canonicalize(
         sm_table.read(spark), caches=held_caches,
@@ -93,7 +93,7 @@ def run_merge_compaction(spark, root: str, engine=None) -> dict:
         new_sm, mode="overwrite",
         summary={"run_id": run_id, "stage": "merge_compaction"},
     )
-    nodes_man = open_table(spark, str(out / "nodes")).write(
+    nodes_man = IceTable(out / "nodes").write(
         new_nodes, mode="overwrite",
         summary={"run_id": run_id, "stage": "merge_compaction"},
     )
@@ -102,7 +102,7 @@ def run_merge_compaction(spark, root: str, engine=None) -> dict:
         "surface_map_rows": sm_man["summary"]["total_rows"],
         "nodes_rows": nodes_man["summary"]["total_rows"],
     }
-    edges_table = open_table(spark, str(out / "edges"))
+    edges_table = IceTable(out / "edges")
     if edges_table.exists():
         remapped = remap_triples(edges_table.read(spark), changed)
         remapped = salted_repartition(
@@ -113,7 +113,7 @@ def run_merge_compaction(spark, root: str, engine=None) -> dict:
             summary={"run_id": run_id, "stage": "merge_compaction"},
         )
         report["edges_rows"] = edges_man["summary"]["total_rows"]
-    open_table(spark, str(out / "entity_id_map")).write(
+    IceTable(out / "entity_id_map").write(
         changed.withColumn("run_id", F.lit(run_id)),
         mode="append",
         summary={"run_id": run_id, "stage": "merge_compaction"},
@@ -147,13 +147,13 @@ def run_maintenance(
     expire_keep: int = 0,
 ) -> dict:
     from deduce_spark.spark import lineage as lin
-    from deduce_spark.spark.iceberg_catalog import open_table
+    from deduce_spark.spark.icetable import IceTable
 
     out = Path(root)
     log = lin.LineageLog(out / "_lineage")
     report: dict = {}
     for name in tables:
-        t = open_table(spark, str(out / name))
+        t = IceTable(out / name)
         if not t.exists():
             report[name] = {"skipped": "missing"}
             continue

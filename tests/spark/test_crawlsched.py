@@ -1,63 +1,11 @@
-"""Crawl scheduling operators (weburl.recrawl_schedule, robots policy and
-crawl_delta).
+"""Robots policy operators (weburl.parse_robots, robots_allowed).
 
-Pins the AIMD fold exactly (halve-on-change / double-on-no-change with
-both clamps), empty-history behavior, and DuckDB twin parity.
+Pins RFC 9309 group selection, longest-match Allow/Disallow precedence,
+duplicate host rows, and DuckDB twin parity.
 """
 import duckdb
 import pandas as pd
 import pytest
-
-from deduce_spark.spark.weburl import (
-    crawl_delta,
-    crawl_delta_oracle_sql,
-    recrawl_schedule,
-    recrawl_schedule_oracle_sql,
-)
-
-HIST = [
-    ("u/empty", []),
-    ("u/backoff", [0, 0, 0]),        # 8000 -> 16000 -> clamp 16000
-    ("u/hot", [1, 1, 1]),            # 2000 -> 1000 -> clamp 1000
-    ("u/alternate", [1, 0, 1, 0]),   # 2000 -> 4000 -> 2000 -> 4000
-    ("u/late_change", [0, 0, 1]),    # 8000 -> 16000 -> 8000
-]
-EXPECT = {
-    "u/empty": (0, 0, 4000),
-    "u/backoff": (3, 0, 16000),
-    "u/hot": (3, 3, 1000),
-    "u/alternate": (4, 2, 4000),
-    "u/late_change": (3, 1, 8000),
-}
-
-
-@pytest.fixture(scope="module")
-def hist_df(spark):
-    return spark.createDataFrame(
-        HIST, "url string, changed_flags array<int>"
-    )
-
-
-def test_aimd_fold_exact(spark, hist_df):
-    out = {
-        r["url"]: (r["n_fetches"], r["n_changes"], r["next_interval"])
-        for r in recrawl_schedule(hist_df).collect()
-    }
-    assert out == EXPECT
-
-
-def test_oracle_parity_inline(spark, hist_df):
-    got = (
-        recrawl_schedule(hist_df).orderBy("url").toPandas()
-    )
-    con = duckdb.connect()
-    con.register("hist", pd.DataFrame(HIST, columns=["url", "changed_flags"]))
-    want = con.execute(
-        recrawl_schedule_oracle_sql("SELECT * FROM hist") + " ORDER BY url"
-    ).df()
-    assert list(got.columns) == list(want.columns)
-    for c in got.columns:
-        assert list(got[c]) == list(want[c]), c
 
 
 ROBOTS = [
@@ -205,42 +153,3 @@ def test_robots_oracle_parity_inline(spark, robots_rules):
     assert list(got.columns) == list(want.columns)
     for c in got.columns:
         assert list(got[c]) == list(want[c]), c
-
-
-OLD = [("u1", "d1"), ("u2", "d2"), ("u3", "d3")]
-NEW = [("u2", "dX"), ("u3", "d3"), ("u4", "d4")]
-
-
-def test_crawl_delta_statuses(spark):
-    old = spark.createDataFrame(OLD, "url string, digest string")
-    new = spark.createDataFrame(NEW, "url string, digest string")
-    out = {r["url"]: r["status"] for r in crawl_delta(old, new).collect()}
-    assert out == {
-        "u1": "deleted", "u2": "changed", "u3": "unchanged", "u4": "added",
-    }
-
-
-def test_crawl_delta_oracle_parity(spark):
-    old = spark.createDataFrame(OLD, "url string, digest string")
-    new = spark.createDataFrame(NEW, "url string, digest string")
-    got = crawl_delta(old, new).orderBy("url").toPandas()
-    con = duckdb.connect()
-    con.register("old_src", pd.DataFrame(OLD, columns=["url", "digest"]))
-    con.register("new_src", pd.DataFrame(NEW, columns=["url", "digest"]))
-    want = con.execute(
-        crawl_delta_oracle_sql(
-            "SELECT * FROM old_src", "SELECT * FROM new_src"
-        )
-        + " ORDER BY url"
-    ).df()
-    for c in got.columns:
-        assert list(got[c]) == list(want[c]), c
-
-
-def test_no_shuffle_no_python(spark, hist_df):
-    plan = (
-        recrawl_schedule(hist_df)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "MapInPandas" not in plan

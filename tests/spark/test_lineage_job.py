@@ -225,7 +225,7 @@ class TestIncrementalJob:
         assert IceTable(out / "edges").current_version() == edges_v
 
 
-def test_maintenance_compacts_and_expires_through_factory(spark, tmp_path):
+def test_maintenance_compacts_and_expires(spark, tmp_path):
     sys.path.insert(0, str(Path(__file__).resolve().parents[2] / "jobs"))
     from maintain_kg import run_maintenance
 

@@ -306,12 +306,12 @@ class TestRealDecoders:
     def test_stats_operators_match_kernel(self, spark):
         media = multimodal.synthetic_media_real(spark, 8)
         audio = {r["media_id"]: (r["rms_q"], r["peak"], r["zero_crossings"])
-                 for r in multimodal.audio_stats(
-                     media.filter(F.col("media_type") == "audio/wav")).collect()}
-        for mid, blob, t in multimodal.synthetic_media_real_rows(8):
-            if t == "audio/wav":
-                _sr, _ch, _n, rms, peak, zc = multimodal.wav_stats_one(blob)
-                assert audio[mid] == (rms, peak, zc)
+                 for r in multimodal.audio_stats(media).collect()}
+        rows = multimodal.synthetic_media_real_rows(8)
+        assert [mid for mid, _b, _t in rows] == [0, 2, 4, 6]
+        for mid, blob, _t in rows:
+            _sr, _ch, _n, rms, peak, zc = multimodal.wav_stats_one(blob)
+            assert audio[mid] == (rms, peak, zc)
 
 
 class TestTextstatsFused:

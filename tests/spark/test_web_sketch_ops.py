@@ -617,74 +617,3 @@ class TestExactSubstrDupRolling:
         b = set(substr_hashes_doc("r" * 23 + span + "s" * 3, k=50, stride=10))
         inner = set(substr_hashes_doc(span, k=50, stride=10))
         assert inner and inner <= a and inner <= b
-
-
-class TestFrontierWaves:
-    """Politeness crawl-frontier scheduler (frontier_waves)."""
-
-    def _frontier(self, spark, n=900, cap=40):
-        from deduce_spark.spark.weburl import frontier_waves
-
-        # zipf-ish skew: host h0 holds ~half the urls (the hot-host case
-        # the two-phase rank exists for), h1..h8 share the rest
-        urls = spark.range(0, n).select(
-            F.concat(
-                F.lit("https://h"),
-                F.when(F.col("id") % 2 == 0, F.lit(0))
-                .otherwise((F.col("id") % 8) + 1)
-                .cast("string"),
-                F.lit(".nl/p/"),
-                F.col("id").cast("string"),
-            ).alias("url")
-        )
-        return urls, frontier_waves(urls, per_host_cap=cap, n_buckets=16)
-
-    def test_cap_and_contiguity(self, spark):
-        cap = 40
-        urls, out = self._frontier(spark, cap=cap)
-        pdf = out.toPandas()
-        assert len(pdf) == urls.count()  # every url scheduled exactly once
-        sizes = pdf.groupby(["host", "wave"]).size()
-        assert (sizes <= cap).all()
-        for host, g in pdf.groupby("host"):
-            waves = sorted(g["wave"].unique())
-            # waves are contiguous 0..max and all but the last are FULL
-            assert waves == list(range(len(waves)))
-            per = g.groupby("wave").size()
-            assert (per.loc[per.index != waves[-1]] == cap).all()
-
-    def test_deterministic_across_partitioning(self, spark):
-        from deduce_spark.spark.weburl import frontier_waves
-
-        urls, out = self._frontier(spark)
-        again = frontier_waves(
-            urls.repartition(13), per_host_cap=40, n_buckets=16
-        )
-        a = sorted(map(tuple, out.collect()))
-        b = sorted(map(tuple, again.collect()))
-        assert a == b
-
-    def test_matches_oracle_sql(self, spark):
-        import duckdb
-
-        from deduce_spark.spark.weburl import (
-            frontier_waves, frontier_waves_oracle_sql,
-        )
-
-        src = (
-            "SELECT 'https://h' || CAST(CASE WHEN range % 2 = 0 THEN 0 "
-            "ELSE (range % 8) + 1 END AS VARCHAR) || '.nl/p/' "
-            "|| CAST(range AS VARCHAR) AS url FROM range(900)"
-        )
-        urls, out = self._frontier(spark)
-        got = sorted(map(tuple, out.collect()))
-        duck = duckdb.connect()
-        want = sorted(
-            map(
-                tuple,
-                duck.sql(
-                    frontier_waves_oracle_sql(src, per_host_cap=40, n_buckets=16)
-                ).fetchall(),
-            )
-        )
-        assert got == want
