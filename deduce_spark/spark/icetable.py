@@ -172,6 +172,12 @@ class IceTable:
         v = self.current_version() if version is None else version
         return json.loads((self.meta_dir / f"v{v}.metadata.json").read_text())
 
+    def schema(self):
+        """The current schema, from the table metadata (no data read)."""
+        import pyspark.sql.types as T
+
+        return T.StructType.fromJson(json.loads(self._metadata()["schema_json"]))
+
     def manifest(self, snapshot_id: Optional[int] = None) -> dict:
         sid = snapshot_id
         if sid is None:
@@ -346,10 +352,7 @@ class IceTable:
 
             entries = [e for e in entries if _may_match(e)]
         if not entries:
-            import pyspark.sql.types as T
-
-            schema = T.StructType.fromJson(json.loads(self._metadata()["schema_json"]))
-            return spark.createDataFrame([], schema)
+            return spark.createDataFrame([], self.schema())
         by_snap: dict[str, list[str]] = {}
         for e in entries:
             snap_rel = "/".join(e["dir"].split("/")[:2])  # data/snap-N
@@ -368,12 +371,10 @@ class IceTable:
         # nulls and normalize types (partition-dir values re-infer as int
         # otherwise), matching how Iceberg reads old snapshots with the
         # latest schema
-        import pyspark.sql.types as T
         from pyspark.sql import functions as F
 
-        cur = T.StructType.fromJson(json.loads(self._metadata()["schema_json"]))
         cols = []
-        for f in cur.fields:
+        for f in self.schema().fields:
             if f.name in out.columns:
                 cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
             else:
@@ -412,12 +413,7 @@ class IceTable:
         # source cannot silently narrow the table schema-wide.  Extra df
         # columns are kept — that is add-column schema evolution, which
         # write()/read() already handle.
-        import pyspark.sql.types as T
-
-        cur_schema = T.StructType.fromJson(
-            json.loads(self._metadata()["schema_json"])
-        )
-        for f in cur_schema.fields:
+        for f in self.schema().fields:
             if f.name not in df.columns:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
         if spec:

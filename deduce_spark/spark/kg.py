@@ -3,15 +3,20 @@
 Stages (SURVEY.md §1 tail / north_star):
 
 1. surface normalization (native Spark expressions — stays in codegen);
-2. MinHash signatures over char 3-shingles (Arrow-batched numpy UDF,
-   the tiled :func:`minhash_batch` kernel);
-3. LSH banding -> candidate pairs (:func:`lsh_bands`, bucket self-join
-   under the ``parallel.cap_buckets`` hot-bucket cap, est-jaccard verify
-   in :func:`candidate_pairs`);
-4. connected components: driver union-find for sparse edge sets, else
-   distributed min-label propagation (iterative joins, O(cluster diameter)
-   rounds — near-dup clusters are shallow; lineage truncated with
-   localCheckpoint per round);
+2. MinHash signatures over char 3-shingles (the tiled
+   :func:`minhash_batch` kernel);
+3. LSH banding -> candidate pairs (16 bands x 4 rows keyed by type,
+   buckets over 64 members dropped whole, est-jaccard verify);
+4. connected components with min-member labels.
+
+   Up to ``LOCAL_SURFACES`` fuzzy-type surfaces, stages 2-4 run on the
+   driver in one pass after one collect (:func:`minhash_matrix`,
+   :func:`local_lsh_components`).  Above it they run distributed: an
+   Arrow-batched UDF (:func:`surface_signatures`), :func:`lsh_bands` and
+   a bucket self-join under ``parallel.cap_buckets``
+   (:func:`candidate_pairs`), then :func:`connected_components` (driver
+   union-find for sparse edge sets, else small-star/large-star rounds
+   with lineage truncated per round).  Both paths give the same labels;
 5. canonical entity id = min stable hash in the component;
 6. nodes / edges (triples) materialization, salted against hot-domain skew.
 
@@ -22,7 +27,8 @@ exact-resume and differential-test guarantees.
 Stages 2-4 are the one MinHash-LSH core of the package: ``dedup`` signs
 documents with ``minhash_batch`` and clusters them with
 :func:`lsh_components`, the same owner of the signature and band caches
-that canonicalization uses.
+that distributed canonicalization uses; both union-finds are
+:func:`_union_find`.
 """
 
 from __future__ import annotations
@@ -48,6 +54,8 @@ N_HASHES = 64
 # own.
 N_BANDS = 16
 SURFACE_JACCARD = 0.7
+# buckets with more members are dropped whole (parallel.cap_buckets)
+SURFACE_MAX_BUCKET = 64
 _MERSENNE = (1 << 61) - 1
 _RNG = np.random.RandomState(42)
 _PERM_A = _RNG.randint(1, _MERSENNE, size=N_HASHES, dtype=np.uint64)
@@ -139,7 +147,8 @@ def minhash_batch(shingle_arrays: Iterable[np.ndarray]) -> list[list[int]]:
     Bit-identical to ``minhash`` (same arithmetic on the same values, only
     the loop structure changes) — pinned by test and by the golden
     fixtures.  Each caller brings its own shingler (char-3 for surfaces,
-    word-3 for documents).
+    word-3 for documents).  :func:`minhash_matrix` is the same kernel
+    returning one (items, N_HASHES) int64 array.
 
     Items are processed in chunks of at most ``_MAX_CHUNK_SHINGLES`` total
     shingles so the permute matrix (and its arithmetic temporaries) stays
@@ -149,7 +158,13 @@ def minhash_batch(shingle_arrays: Iterable[np.ndarray]) -> list[list[int]]:
     its peak memory is ``64 × its_shingles × 8 B`` — callers clamp long
     items before shingling (``dedup.minhash_signatures``'s
     ``max_doc_words``)."""
-    out: list[list[int]] = []
+    return minhash_matrix(shingle_arrays).tolist()
+
+
+def minhash_matrix(shingle_arrays: Iterable[np.ndarray]) -> np.ndarray:
+    """:func:`minhash_batch` as one (items, N_HASHES) int64 matrix (every
+    value is below the Mersenne prime 2^61 - 1, so int64 holds it)."""
+    out: list[np.ndarray] = [np.empty((0, N_HASHES), dtype=np.int64)]
     chunk: list[np.ndarray] = []
     chunk_shingles = 0
 
@@ -163,7 +178,7 @@ def minhash_batch(shingle_arrays: Iterable[np.ndarray]) -> list[list[int]]:
         starts = np.zeros(len(lengths), dtype=np.int64)
         np.cumsum(lengths[:-1], out=starts[1:])
         mins = np.minimum.reduceat(v, starts, axis=1)  # (N_HASHES, n_items)
-        out.extend([int(x) for x in mins[:, j]] for j in range(len(chunk)))
+        out.append(mins.T.astype(np.int64))
         chunk, chunk_shingles = [], 0
 
     for sh in shingle_arrays:
@@ -172,7 +187,7 @@ def minhash_batch(shingle_arrays: Iterable[np.ndarray]) -> list[list[int]]:
         chunk.append(sh)
         chunk_shingles += len(sh)
     flush()
-    return out
+    return np.concatenate(out)
 
 
 def surface_signatures(surf: DataFrame) -> DataFrame:
@@ -260,7 +275,7 @@ def candidate_pairs(
     sigs: DataFrame,
     n_bands: int = N_BANDS,
     min_jaccard: float = SURFACE_JACCARD,
-    max_bucket: int = 64,
+    max_bucket: int = SURFACE_MAX_BUCKET,
     id_col: str = "surface_id",
     key: str | None = "type",
 ) -> DataFrame:
@@ -296,7 +311,7 @@ def candidate_pairs(
 def lsh_components(
     sigs: DataFrame,
     min_jaccard: float = SURFACE_JACCARD,
-    max_bucket: int = 64,
+    max_bucket: int = SURFACE_MAX_BUCKET,
     id_col: str = "surface_id",
     key: str | None = "type",
 ) -> DataFrame:
@@ -322,6 +337,48 @@ def lsh_components(
     bands.unpersist()
     sigs.unpersist()
     return comp
+
+
+def local_lsh_components(
+    ids: np.ndarray, types: np.ndarray, sig: np.ndarray
+) -> pd.DataFrame:
+    """Driver twin of :func:`lsh_components` over an (items, N_HASHES)
+    signature matrix: (surface_id, component) for the ids in a verified
+    pair.  Same rules: ``N_BANDS`` slices keyed by (type, band, slice),
+    buckets over ``SURFACE_MAX_BUCKET`` rows dropped whole, pairs kept
+    when ``equal / N_HASHES >= SURFACE_JACCARD``, min-root union-find.
+    Vectorized per band (one lexsort, then one pass per in-bucket
+    offset)."""
+    sig = np.asarray(sig, dtype=np.int64)
+    codes = np.unique(np.asarray(types), return_inverse=True)[1]
+    rows = N_HASHES // N_BANDS
+    lo, hi = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
+    for b in range(N_BANDS if len(sig) else 0):
+        keys = np.column_stack([codes, sig[:, b * rows : (b + 1) * rows]])
+        order = np.lexsort(keys.T)
+        sk = keys[order]
+        gid = np.concatenate([[0], np.cumsum(np.any(sk[1:] != sk[:-1], 1))])
+        size = np.bincount(gid)
+        kept = size[gid] <= SURFACE_MAX_BUCKET
+        # members of one bucket are adjacent in ``order``: the pairs at
+        # offset d are the adjacent-by-d positions that share a bucket
+        largest = int(size[size <= SURFACE_MAX_BUCKET].max(initial=1))
+        for d in range(1, largest):
+            m = (gid[d:] == gid[:-d]) & kept[d:]
+            lo.append(order[:-d][m])
+            hi.append(order[d:][m])
+    lo, hi = np.concatenate(lo), np.concatenate(hi)
+    n = max(len(sig), 1)
+    pair = np.unique(np.minimum(lo, hi) * n + np.maximum(lo, hi))
+    lo, hi = pair // n, pair % n
+    # verify in slices: the gathered signature pairs are 1 KB each
+    ok = np.empty(len(lo), dtype=bool)
+    for i in range(0, len(lo), 1 << 16):
+        part = slice(i, i + (1 << 16))
+        equal = np.count_nonzero(sig[lo[part]] == sig[hi[part]], axis=1)
+        ok[part] = equal / N_HASHES >= SURFACE_JACCARD
+    ids = np.asarray(ids, dtype=np.int64)
+    return _union_find(ids[lo[ok]], ids[hi[ok]])
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -356,6 +413,33 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return to_min.union(self_edge).distinct()
 
 
+def _union_find(a: np.ndarray, b: np.ndarray) -> pd.DataFrame:
+    """(surface_id, component) over the undirected edges a[i]-b[i] by a
+    driver-side union-find; the min root wins, so every node's component
+    is its component's minimum member, the distributed path's label.
+
+    Vectorized over all edges per round: every root hooks onto the
+    smallest root across its edges, then parent pointers are jumped to
+    their roots.  Roots only ever decrease, so it terminates, and at the
+    fixpoint no edge joins two roots."""
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ea, eb = idx[: len(a)], idx[len(a) :]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[ea], parent[eb]
+        hooked = parent.copy()
+        np.minimum.at(hooked, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = hooked[hooked]
+            if np.array_equal(jumped, hooked):
+                break
+            hooked = jumped
+        if np.array_equal(hooked, parent):
+            break
+        parent = hooked
+    return pd.DataFrame({"surface_id": nodes, "component": nodes[parent]})
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 12,
@@ -385,37 +469,13 @@ def connected_components(
         edges.unpersist()
         return spark.createDataFrame([], "surface_id long, component long")
     if n_edges <= local_threshold:
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
         pdf = edges.select("a", "b").toPandas()  # Arrow transfer, bounded
         edges.unpersist()
-        for a, b in zip(pdf["a"].to_numpy(), pdf["b"].to_numpy()):
-            a, b = int(a), int(b)
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # min root wins -> canonical id = min member, matching the
-                # distributed path
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        out = pd.DataFrame(
-            {
-                "surface_id": np.fromiter(parent.keys(), dtype=np.int64),
-                "component": np.fromiter(
-                    (find(x) for x in parent), dtype=np.int64, count=len(parent)
-                ),
-            }
-        )
         connected_components.last_rounds = 0  # local union-find path
         # Arrow path: ~10x faster than a list-of-tuples createDataFrame
-        return spark.createDataFrame(out)
+        return spark.createDataFrame(
+            _union_find(pdf["a"].to_numpy(), pdf["b"].to_numpy())
+        )
     # every node must appear in the output, including those that converge
     # to roots (roots stop appearing on the `a` side of star edges)
     all_nodes = cut(
@@ -472,6 +532,16 @@ def connected_components(
 
 
 FUZZY_TYPES = ("PERSOON", "LOCATIE", "INSTELLING")
+# Fuzzy-surface count up to which _entity_map canonicalizes on the driver
+# (read at call time).  Measured on 4 cores, warm session, _entity_map
+# wall over letter-permuted copies of the 50k-fixture-page surfaces
+# (dense near-duplicate clusters), driver vs distributed: 1.5 vs 4.7-5.0 s
+# at 15k surfaces, 3.8-5.3 vs 16-29 s at 62k, 9.4-11 vs 27-32 s at 124k,
+# 22 vs 72-75 s at 247k.  The driver path is single-threaded (~90 us a
+# surface at 247k) and holds the signature matrix (512 B a surface),
+# while the distributed one scales out with executors, so the gate stops
+# at 2^17.
+LOCAL_SURFACES = 1 << 17
 
 
 def canonicalize(
@@ -511,8 +581,14 @@ def canonicalize(
 
 def _entity_map(surf: DataFrame, fuzzy_types: tuple[str, ...]) -> DataFrame:
     """``surf`` (surface_id, type, surface, …) + entity_id under the batch
-    canonicalization rules: :func:`lsh_components` over the fuzzy-type
+    canonicalization rules: MinHash-LSH components over the fuzzy-type
     surfaces, identity for every other surface.
+
+    The fuzzy-type surfaces are counted once.  Up to ``LOCAL_SURFACES`` of
+    them are collected and canonicalized on the driver
+    (:func:`minhash_matrix` + :func:`local_lsh_components`); above it,
+    :func:`lsh_components` over :func:`surface_signatures` runs
+    distributed.  Both give the same components.
 
     The result is cached and materialized, and the ``surf`` cache is
     released: the map is consumed by the canonical-form pick AND by the
@@ -520,9 +596,19 @@ def _entity_map(surf: DataFrame, fuzzy_types: tuple[str, ...]) -> DataFrame:
     the whole LSH chain (measured 78s -> 31s for the sf0.1 triples
     query)."""
     surf = surf.cache()
-    comp = lsh_components(
-        surface_signatures(surf.filter(F.col("type").isin(*fuzzy_types)))
-    )
+    fuzzy = surf.filter(F.col("type").isin(*fuzzy_types))
+    if fuzzy.count() <= LOCAL_SURFACES:
+        pdf = fuzzy.select("surface_id", "type", "surface").toPandas()
+        comp = surf.sparkSession.createDataFrame(
+            local_lsh_components(
+                pdf["surface_id"].to_numpy(),
+                pdf["type"].to_numpy(),
+                minhash_matrix(_shingle_hashes(s) for s in pdf["surface"]),
+            ),
+            "surface_id long, component long",
+        )
+    else:
+        comp = lsh_components(surface_signatures(fuzzy))
     out = (
         surf.join(comp, "surface_id", "left")
         .withColumn("entity_id", F.coalesce("component", "surface_id"))
@@ -1003,7 +1089,7 @@ def incremental_canonicalize(
     surface_map: DataFrame,
     fuzzy_types: tuple[str, ...] = FUZZY_TYPES,
     min_jaccard: float = SURFACE_JACCARD,
-    max_bucket: int = 64,
+    max_bucket: int = SURFACE_MAX_BUCKET,
     anchor_weights: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Fold a batch of NEW mentions into an existing canonicalization

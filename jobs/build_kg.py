@@ -128,8 +128,8 @@ def run_job(
             spark, out, log, run_id, seq, mentions_table, engine,
             with_cooccurrence, expire_keep, summary,
         )
-        cols = mentions_table.read(spark).columns
-        if "batch_id" in cols:
+        # the committed schema answers this without listing or reading data
+        if "batch_id" in mentions_table.schema().fieldNames():
             # a full rebuild canonicalizes every present batch: record them
             # so a later --incremental run folds only NEWER ones
             present = sorted(

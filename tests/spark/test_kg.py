@@ -42,7 +42,7 @@ def test_candidate_pairs_merge_typo_variants(spark):
 
 
 @pytest.mark.parametrize("op, retained", [("canonicalize", 1), ("minhash_dedup", 0)])
-def test_lsh_ops_release_intermediate_caches(spark, op, retained):
+def test_lsh_ops_release_intermediate_caches(spark, op, retained, monkeypatch):
     """Input, signature and band caches are released once the components
     exist; only the caches an operator hands back stay cached (the
     surface map for canonicalize, nothing for minhash_dedup)."""
@@ -52,24 +52,161 @@ def test_lsh_ops_release_intermediate_caches(spark, op, retained):
     jsc = spark.sparkContext._jsc
     # ids, not a count: the JVM's persisted-RDD map is weak-valued, so a
     # GC can drop caches earlier tests left and hide a leak of that size
-    before = set(jsc.getPersistentRDDs().keys())
     if op == "canonicalize":
         m = spark.createDataFrame(
             [(n, "persoon") for n in names] + [("10 oktober 2018", "datum")],
             ["text", "tag"],
         )
-        surface_map, nodes = kg.canonicalize(m)
-        nodes.count()
-        surface_map.count()
+        # both the distributed (gate 0) and the driver path (default gate)
+        for gate in (0, kg.LOCAL_SURFACES):
+            monkeypatch.setattr(kg, "LOCAL_SURFACES", gate)
+            before = set(jsc.getPersistentRDDs().keys())
+            surface_map, nodes = kg.canonicalize(m)
+            nodes.count()
+            surface_map.count()
+            assert len(set(jsc.getPersistentRDDs().keys()) - before) <= retained
+            surface_map.unpersist()
     else:
+        before = set(jsc.getPersistentRDDs().keys())
         docs = spark.createDataFrame(
             [(i, f"{n} woont in een huis") for i, n in enumerate(names)],
             ["doc_id", "text"],
         )
         minhash_dedup(docs, threshold=0.5).count()
-    assert len(set(jsc.getPersistentRDDs().keys()) - before) <= retained
-    if op == "canonicalize":
+        assert len(set(jsc.getPersistentRDDs().keys()) - before) <= retained
+
+
+def _synthetic_signatures():
+    """(ids, types, sig) exercising every local/distributed LSH rule: a
+    65-member bucket (dropped) and a 64-member one (kept), each holding a
+    pair that shares only that bucket; pairs at exactly 45/64 and 44/64
+    equal positions; one band slice shared by two types."""
+    import random
+
+    rng = random.Random(7)
+    rows: list[tuple[str, list[int]]] = []
+
+    def fresh(ty: str) -> list[int]:
+        rows.append((ty, [rng.randrange(1, 1 << 40) for _ in range(kg.N_HASHES)]))
+        return rows[-1][1]
+
+    def near(sig: list[int], ty: str) -> None:
+        # shares band 0 whole and 3 of 4 positions of every other band:
+        # 49 equal positions, one shared bucket
+        new = fresh(ty)
+        new[:4] = sig[:4]
+        for b in range(1, kg.N_BANDS):
+            new[4 * b : 4 * b + 3] = sig[4 * b : 4 * b + 3]
+
+    def bucket(ty: str, size: int, key: int) -> None:
+        first = fresh(ty)
+        first[:4] = [key] * 4
+        near(first, ty)
+        for _ in range(size - 2):
+            fresh(ty)[:4] = [key] * 4
+
+    bucket("PERSOON", 65, 11)  # capped: its near pair stays apart
+    bucket("PERSOON", 64, 22)  # kept: its near pair merges
+    # 40 + 40 rows share one slice across two types: under the cap per
+    # type, so the PERSOON near pair merges; the LOCATIE copy of it does not
+    bucket("PERSOON", 40, 33)
+    rows.append(("LOCATIE", list(rows[-40][1])))
+    for _ in range(39):
+        fresh("LOCATIE")[:4] = [33] * 4
+    for n_equal in (45, 44):
+        a = fresh("INSTELLING")
+        b = fresh("INSTELLING")
+        b[:n_equal] = a[:n_equal]
+    ids = list(range(1000, 1000 + len(rows)))
+    return ids, [t for t, _ in rows], [s for _, s in rows]
+
+
+def test_local_lsh_components_match_distributed(spark):
+    import numpy as np
+
+    ids, types, sigs = _synthetic_signatures()
+    local = kg.local_lsh_components(
+        np.array(ids), np.array(types, dtype=object), np.array(sigs)
+    )
+    local = dict(zip(local["surface_id"].tolist(), local["component"].tolist()))
+    sigs_df = spark.createDataFrame(
+        list(zip(ids, types, sigs)), kg._SIG_SCHEMA
+    )
+    dist = {r["surface_id"]: r["component"] for r in
+            kg.connected_components(kg.candidate_pairs(sigs_df)).collect()}
+    assert local == dist
+    # rows 0-64: the 65-bucket, whose near pair (0, 1) stays apart
+    assert ids[0] not in local and ids[1] not in local
+    # rows 65-128: the 64-bucket, whose near pair merges
+    assert local[ids[66]] == ids[65]
+    # rows 129-168 PERSOON and 169-208 LOCATIE share one slice: the PERSOON
+    # near pair merges, row 169 (a LOCATIE copy of row 129) pairs with none
+    assert local[ids[130]] == ids[129] and ids[169] not in local
+    # rows 209-212: 45/64 merges, 44/64 does not
+    assert local[ids[210]] == ids[209]
+    assert ids[211] not in local and ids[212] not in local
+    assert len(ids) == 213
+
+
+def test_union_find_matches_loop_reference():
+    """The vectorized union-find labels like the golden oracle's loop,
+    including long paths whose ids run against the path order."""
+    import random
+
+    import numpy as np
+
+    from deduce_spark.golden import _UnionFind
+
+    rng = random.Random(3)
+    for trial in range(60):
+        ids = [rng.randrange(-(1 << 62), 1 << 62) for _ in range(rng.choice([2, 40, 400]))]
+        if trial % 3:
+            edges = [(rng.choice(ids), rng.choice(ids)) for _ in range(len(ids))]
+        else:
+            edges = list(zip(ids, ids[1:]))
+        uf = _UnionFind()
+        for a, b in edges:
+            uf.union(a, b)
+        out = kg._union_find(*(np.array(c, dtype=np.int64) for c in zip(*edges)))
+        assert dict(zip(out["surface_id"], out["component"])) == uf.labels()
+
+
+def test_canonicalize_driver_path_matches_distributed(mentions, monkeypatch):
+    def rows(gate):
+        monkeypatch.setattr(kg, "LOCAL_SURFACES", gate)
+        surface_map, nodes = kg.canonicalize(mentions)
+        out = (sorted(surface_map.collect()), sorted(nodes.collect()))
         surface_map.unpersist()
+        return out
+
+    n_fuzzy = kg.surfaces(mentions).filter(
+        F.col("type").isin(*kg.FUZZY_TYPES)
+    ).count()
+    assert 0 < n_fuzzy <= kg.LOCAL_SURFACES
+    local, dist = rows(kg.LOCAL_SURFACES), rows(0)
+    assert local == dist
+    assert len({r["entity_id"] for r in local[0]}) < len(local[0])
+
+
+def test_canonicalize_spark_job_count(spark):
+    """Pins the Spark jobs canonicalize and one surface-map count launch on
+    a small frame, so a reintroduced action or Python stage fails here."""
+    m = spark.createDataFrame(
+        [("jan de vries", "persoon"), ("jan de vriess", "persoon"),
+         ("utrecht", "locatie"), ("10 oktober 2018", "datum")],
+        ["text", "tag"],
+    )
+    sc = spark.sparkContext
+    group = "test_canonicalize_spark_job_count"
+    sc.setJobGroup(group, "canonicalize jobs")
+    try:
+        surface_map, _nodes = kg.canonicalize(m)
+        surface_map.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    surface_map.unpersist()
+    assert n_jobs == 11
 
 
 def test_connected_components_chain(spark):
