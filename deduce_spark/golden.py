@@ -159,9 +159,9 @@ def canonicalize_seq(mentions: pd.DataFrame):
     surf = [
         (s, ty, spark_xxhash64(s, ty), n) for (s, ty), n in counts.items()
     ]
-    # LSH over fuzzy types, the rules both kg._entity_map paths apply
-    # (kg.local_lsh_components on the driver, kg.lsh_components ->
-    # kg.candidate_pairs distributed): 16 bands x 4 rows keyed by type,
+    # LSH over fuzzy types, the rules kg._entity_map applies on the driver
+    # (kg.local_lsh_components, twin of the distributed kg.lsh_components
+    # -> kg.candidate_pairs): 16 bands x 4 rows keyed by type,
     # buckets over 64 members dropped, est-jaccard >= 0.7 i.e. >= 45/64
     # equal positions
     sigs = {sid: surface_sig(s) for s, ty, sid, _n in surf if ty in FUZZY_TYPES}

@@ -4,19 +4,20 @@ Stages (SURVEY.md §1 tail / north_star):
 
 1. surface normalization (native Spark expressions — stays in codegen);
 2. MinHash signatures over char 3-shingles (the tiled
-   :func:`minhash_batch` kernel);
+   :func:`minhash_matrix` kernel);
 3. LSH banding -> candidate pairs (16 bands x 4 rows keyed by type,
    buckets over 64 members dropped whole, est-jaccard verify);
 4. connected components with min-member labels.
 
-   Up to ``LOCAL_SURFACES`` fuzzy-type surfaces, stages 2-4 run on the
-   driver in one pass after one collect (:func:`minhash_matrix`,
-   :func:`local_lsh_components`).  Above it they run distributed: an
-   Arrow-batched UDF (:func:`surface_signatures`), :func:`lsh_bands` and
-   a bucket self-join under ``parallel.cap_buckets``
-   (:func:`candidate_pairs`), then :func:`connected_components` (driver
-   union-find for sparse edge sets, else small-star/large-star rounds
-   with lineage truncated per round).  Both paths give the same labels;
+   Batch canonicalization collects the fuzzy-type surfaces once and runs
+   stages 2-4 on the driver in one pass (:func:`local_lsh_components`).
+   The distributed twin — an Arrow-batched UDF
+   (:func:`surface_signatures`), :func:`lsh_bands` and a bucket self-join
+   under ``parallel.cap_buckets`` (:func:`candidate_pairs`), then
+   :func:`connected_components` (driver union-find for sparse edge sets,
+   else small-star/large-star rounds with lineage truncated per round) —
+   serves ``dedup`` and :func:`incremental_canonicalize`.  Both give the
+   same labels;
 5. canonical entity id = min stable hash in the component;
 6. nodes / edges (triples) materialization, salted against hot-domain skew.
 
@@ -27,7 +28,7 @@ exact-resume and differential-test guarantees.
 Stages 2-4 are the one MinHash-LSH core of the package: ``dedup`` signs
 documents with ``minhash_batch`` and clusters them with
 :func:`lsh_components`, the same owner of the signature and band caches
-that distributed canonicalization uses; both union-finds are
+that incremental canonicalization uses; both union-finds are
 :func:`_union_find`.
 """
 
@@ -141,14 +142,19 @@ _MAX_CHUNK_SHINGLES = 1 << 12
 
 
 def minhash_batch(shingle_arrays: Iterable[np.ndarray]) -> list[list[int]]:
+    """List form of :func:`minhash_matrix`."""
+    return minhash_matrix(shingle_arrays).tolist()
+
+
+def minhash_matrix(shingle_arrays: Iterable[np.ndarray]) -> np.ndarray:
     """Batch-vectorized :func:`minhash` of many non-empty shingle-hash
-    arrays: one (N_HASHES, chunk_shingles) permute matrix + segmented min
-    (np.minimum.reduceat) instead of a per-item outer product.
-    Bit-identical to ``minhash`` (same arithmetic on the same values, only
-    the loop structure changes) — pinned by test and by the golden
-    fixtures.  Each caller brings its own shingler (char-3 for surfaces,
-    word-3 for documents).  :func:`minhash_matrix` is the same kernel
-    returning one (items, N_HASHES) int64 array.
+    arrays as one (items, N_HASHES) int64 matrix (every value is below the
+    Mersenne prime 2^61 - 1, so int64 holds it): one (N_HASHES,
+    chunk_shingles) permute matrix + segmented min (np.minimum.reduceat)
+    instead of a per-item outer product.  Bit-identical to ``minhash``
+    (same arithmetic on the same values, only the loop structure changes)
+    — pinned by test and by the golden fixtures.  Each caller brings its
+    own shingler (char-3 for surfaces, word-3 for documents).
 
     Items are processed in chunks of at most ``_MAX_CHUNK_SHINGLES`` total
     shingles so the permute matrix (and its arithmetic temporaries) stays
@@ -158,12 +164,6 @@ def minhash_batch(shingle_arrays: Iterable[np.ndarray]) -> list[list[int]]:
     its peak memory is ``64 × its_shingles × 8 B`` — callers clamp long
     items before shingling (``dedup.minhash_signatures``'s
     ``max_doc_words``)."""
-    return minhash_matrix(shingle_arrays).tolist()
-
-
-def minhash_matrix(shingle_arrays: Iterable[np.ndarray]) -> np.ndarray:
-    """:func:`minhash_batch` as one (items, N_HASHES) int64 matrix (every
-    value is below the Mersenne prime 2^61 - 1, so int64 holds it)."""
     out: list[np.ndarray] = [np.empty((0, N_HASHES), dtype=np.int64)]
     chunk: list[np.ndarray] = []
     chunk_shingles = 0
@@ -532,16 +532,6 @@ def connected_components(
 
 
 FUZZY_TYPES = ("PERSOON", "LOCATIE", "INSTELLING")
-# Fuzzy-surface count up to which _entity_map canonicalizes on the driver
-# (read at call time).  Measured on 4 cores, warm session, _entity_map
-# wall over letter-permuted copies of the 50k-fixture-page surfaces
-# (dense near-duplicate clusters), driver vs distributed: 1.5 vs 4.7-5.0 s
-# at 15k surfaces, 3.8-5.3 vs 16-29 s at 62k, 9.4-11 vs 27-32 s at 124k,
-# 22 vs 72-75 s at 247k.  The driver path is single-threaded (~90 us a
-# surface at 247k) and holds the signature matrix (512 B a surface),
-# while the distributed one scales out with executors, so the gate stops
-# at 2^17.
-LOCAL_SURFACES = 1 << 17
 
 
 def canonicalize(
@@ -584,31 +574,36 @@ def _entity_map(surf: DataFrame, fuzzy_types: tuple[str, ...]) -> DataFrame:
     canonicalization rules: MinHash-LSH components over the fuzzy-type
     surfaces, identity for every other surface.
 
-    The fuzzy-type surfaces are counted once.  Up to ``LOCAL_SURFACES`` of
-    them are collected and canonicalized on the driver
-    (:func:`minhash_matrix` + :func:`local_lsh_components`); above it,
-    :func:`lsh_components` over :func:`surface_signatures` runs
-    distributed.  Both give the same components.
+    The fuzzy-type surfaces are collected once and canonicalized on the
+    driver (:func:`minhash_matrix` + :func:`local_lsh_components`), which
+    gives the components :func:`lsh_components` would at a fraction of its
+    Spark jobs.  Measured on 4 cores over letter-permuted copies of the
+    50k-fixture-page surfaces (dense near-duplicate clusters), the driver
+    path beat the distributed one at every size tried, up to 247k
+    surfaces (22 vs 72-75 s).  Its driver cost is ~3.3 KB a surface at
+    peak on those surfaces (signatures, band pairs, verify slices; plus
+    ~150 B a surface for the collected frame): ~0.8 GB at 247k, against
+    the 15-17k fuzzy surfaces the 50k- and 800k-page builds hold.
 
     The result is cached and materialized, and the ``surf`` cache is
     released: the map is consumed by the canonical-form pick AND by the
     caller's triples() broadcast join — uncached, every consumer re-runs
-    the whole LSH chain (measured 78s -> 31s for the sf0.1 triples
-    query)."""
+    the collect and the driver pass (when this chain ran distributed,
+    caching measured 78s -> 31s for the sf0.1 triples query)."""
     surf = surf.cache()
-    fuzzy = surf.filter(F.col("type").isin(*fuzzy_types))
-    if fuzzy.count() <= LOCAL_SURFACES:
-        pdf = fuzzy.select("surface_id", "type", "surface").toPandas()
-        comp = surf.sparkSession.createDataFrame(
-            local_lsh_components(
-                pdf["surface_id"].to_numpy(),
-                pdf["type"].to_numpy(),
-                minhash_matrix(_shingle_hashes(s) for s in pdf["surface"]),
-            ),
-            "surface_id long, component long",
-        )
-    else:
-        comp = lsh_components(surface_signatures(fuzzy))
+    pdf = (
+        surf.filter(F.col("type").isin(*fuzzy_types))
+        .select("surface_id", "type", "surface")
+        .toPandas()
+    )
+    comp = surf.sparkSession.createDataFrame(
+        local_lsh_components(
+            pdf["surface_id"].to_numpy(),
+            pdf["type"].to_numpy(),
+            minhash_matrix(_shingle_hashes(s) for s in pdf["surface"]),
+        ),
+        "surface_id long, component long",
+    )
     out = (
         surf.join(comp, "surface_id", "left")
         .withColumn("entity_id", F.coalesce("component", "surface_id"))

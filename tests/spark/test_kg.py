@@ -42,7 +42,7 @@ def test_candidate_pairs_merge_typo_variants(spark):
 
 
 @pytest.mark.parametrize("op, retained", [("canonicalize", 1), ("minhash_dedup", 0)])
-def test_lsh_ops_release_intermediate_caches(spark, op, retained, monkeypatch):
+def test_lsh_ops_release_intermediate_caches(spark, op, retained):
     """Input, signature and band caches are released once the components
     exist; only the caches an operator hands back stay cached (the
     surface map for canonicalize, nothing for minhash_dedup)."""
@@ -52,28 +52,24 @@ def test_lsh_ops_release_intermediate_caches(spark, op, retained, monkeypatch):
     jsc = spark.sparkContext._jsc
     # ids, not a count: the JVM's persisted-RDD map is weak-valued, so a
     # GC can drop caches earlier tests left and hide a leak of that size
+    before = set(jsc.getPersistentRDDs().keys())
     if op == "canonicalize":
         m = spark.createDataFrame(
             [(n, "persoon") for n in names] + [("10 oktober 2018", "datum")],
             ["text", "tag"],
         )
-        # both the distributed (gate 0) and the driver path (default gate)
-        for gate in (0, kg.LOCAL_SURFACES):
-            monkeypatch.setattr(kg, "LOCAL_SURFACES", gate)
-            before = set(jsc.getPersistentRDDs().keys())
-            surface_map, nodes = kg.canonicalize(m)
-            nodes.count()
-            surface_map.count()
-            assert len(set(jsc.getPersistentRDDs().keys()) - before) <= retained
-            surface_map.unpersist()
+        surface_map, nodes = kg.canonicalize(m)
+        nodes.count()
+        surface_map.count()
     else:
-        before = set(jsc.getPersistentRDDs().keys())
         docs = spark.createDataFrame(
             [(i, f"{n} woont in een huis") for i, n in enumerate(names)],
             ["doc_id", "text"],
         )
         minhash_dedup(docs, threshold=0.5).count()
-        assert len(set(jsc.getPersistentRDDs().keys()) - before) <= retained
+    assert len(set(jsc.getPersistentRDDs().keys()) - before) <= retained
+    if op == "canonicalize":
+        surface_map.unpersist()
 
 
 def _synthetic_signatures():
@@ -171,23 +167,6 @@ def test_union_find_matches_loop_reference():
         assert dict(zip(out["surface_id"], out["component"])) == uf.labels()
 
 
-def test_canonicalize_driver_path_matches_distributed(mentions, monkeypatch):
-    def rows(gate):
-        monkeypatch.setattr(kg, "LOCAL_SURFACES", gate)
-        surface_map, nodes = kg.canonicalize(mentions)
-        out = (sorted(surface_map.collect()), sorted(nodes.collect()))
-        surface_map.unpersist()
-        return out
-
-    n_fuzzy = kg.surfaces(mentions).filter(
-        F.col("type").isin(*kg.FUZZY_TYPES)
-    ).count()
-    assert 0 < n_fuzzy <= kg.LOCAL_SURFACES
-    local, dist = rows(kg.LOCAL_SURFACES), rows(0)
-    assert local == dist
-    assert len({r["entity_id"] for r in local[0]}) < len(local[0])
-
-
 def test_canonicalize_spark_job_count(spark):
     """Pins the Spark jobs canonicalize and one surface-map count launch on
     a small frame, so a reintroduced action or Python stage fails here."""
@@ -206,7 +185,7 @@ def test_canonicalize_spark_job_count(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     surface_map.unpersist()
-    assert n_jobs == 11
+    assert n_jobs == 9
 
 
 def test_connected_components_chain(spark):
