@@ -30,7 +30,7 @@ from __future__ import annotations
 import re
 from collections import Counter, defaultdict
 from decimal import ROUND_HALF_UP, Decimal
-from itertools import combinations
+from itertools import combinations, product
 from pathlib import Path
 
 import numpy as np
@@ -144,48 +144,53 @@ def mentions_long_seq(pages: list[tuple]) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["url", "warc_ts", "text", "tag"])
 
 
-def canonicalize_seq(mentions: pd.DataFrame):
-    """Replica of kg.canonicalize: returns (surface_map rows, nodes rows).
-
-    surface_map: list of (surface, type, surface_id, entity_id, n_mentions)
-    nodes:       list of (entity_id, type, canonical_form, n_mentions)
-    """
-    from deduce_spark.spark.kg import surface_sig  # numpy kernel, no Spark
-
+def _surface_rows(mentions: pd.DataFrame) -> list[tuple]:
+    """Distinct (surface, type, surface_id, n_mentions), as kg.surfaces."""
     counts = Counter(
         (_normalize_surface(t), _node_type(g))
         for t, g in zip(mentions["text"], mentions["tag"])
     )
-    surf = [
-        (s, ty, spark_xxhash64(s, ty), n) for (s, ty), n in counts.items()
-    ]
-    # LSH over fuzzy types, the rules kg._entity_map applies on the driver
-    # (kg.local_lsh_components, twin of the distributed kg.lsh_components
-    # -> kg.candidate_pairs): 16 bands x 4 rows keyed by type,
-    # buckets over 64 members dropped, est-jaccard >= 0.7 i.e. >= 45/64
-    # equal positions
-    sigs = {sid: surface_sig(s) for s, ty, sid, _n in surf if ty in FUZZY_TYPES}
+    return [(s, ty, spark_xxhash64(s, ty), n) for (s, ty), n in counts.items()]
+
+
+def _fuzzy_buckets(rows) -> tuple[dict, dict]:
+    """({surface_id: signature}, {(type, band, slice): [surface_id]}) over
+    the fuzzy-type rows of ``rows`` (surface, type, surface_id, …).
+
+    The LSH rules kg.local_lsh_components and a fold's kg._adoption_pairs
+    apply on the driver (twin of the distributed kg.lsh_components ->
+    kg.candidate_pairs): 16 bands x 4 rows keyed by type, buckets over 64
+    members dropped, est-jaccard >= 0.7 i.e. >= 45/64 equal positions."""
+    from deduce_spark.spark.kg import surface_sig  # numpy kernel, no Spark
+
+    sigs: dict[int, list[int]] = {}
     buckets: dict[tuple, list[int]] = defaultdict(list)
-    for s, ty, sid, _n in surf:
-        if ty not in FUZZY_TYPES:
-            continue
-        sig = sigs[sid]
-        for band in range(16):
-            buckets[(ty, band, tuple(sig[band * 4 : band * 4 + 4]))].append(sid)
+    for s, ty, sid, *_rest in rows:
+        if ty in FUZZY_TYPES:
+            sig = sigs[sid] = surface_sig(s)
+            for band in range(16):
+                buckets[(ty, band, tuple(sig[band * 4 : band * 4 + 4]))].append(sid)
+    return sigs, buckets
+
+
+def _similar(a: list[int], b: list[int]) -> bool:
+    return sum(x == y for x, y in zip(a, b)) >= 45
+
+
+def _lsh_labels(sigs: dict, buckets: dict) -> dict[int, int]:
+    """{surface_id: component} for the ids in a verified pair."""
     pairs: set[tuple[int, int]] = set()
     for members in buckets.values():
-        if len(members) > 64:
-            continue
-        for a, b in combinations(sorted(members), 2):
-            pairs.add((a, b))
+        if len(members) <= 64:
+            pairs.update(combinations(sorted(members), 2))
     uf = _UnionFind()
     for a, b in pairs:
-        if sum(x == y for x, y in zip(sigs[a], sigs[b])) >= 45:
+        if _similar(sigs[a], sigs[b]):
             uf.union(a, b)
-    comp = uf.labels()
-    surface_map = [
-        (s, ty, sid, comp.get(sid, sid), n) for s, ty, sid, n in surf
-    ]
+    return uf.labels()
+
+
+def _nodes_seq(surface_map: list) -> list[tuple]:
     # canonical form: most mentions, tie-break min surface
     by_entity: dict[tuple, list] = defaultdict(list)
     for s, ty, sid, eid, n in surface_map:
@@ -194,7 +199,51 @@ def canonicalize_seq(mentions: pd.DataFrame):
     for (eid, ty), forms in by_entity.items():
         canon = min(forms, key=lambda fn: (-fn[1], fn[0]))[0]
         nodes.append((eid, ty, canon, sum(n for _s, n in forms)))
-    return surface_map, nodes
+    return nodes
+
+
+def canonicalize_seq(mentions: pd.DataFrame):
+    """Replica of kg.canonicalize: returns (surface_map rows, nodes rows).
+
+    surface_map: list of (surface, type, surface_id, entity_id, n_mentions)
+    nodes:       list of (entity_id, type, canonical_form, n_mentions)
+    """
+    surf = _surface_rows(mentions)
+    comp = _lsh_labels(*_fuzzy_buckets(surf))
+    surface_map = [(s, ty, sid, comp.get(sid, sid), n) for s, ty, sid, n in surf]
+    return surface_map, _nodes_seq(surface_map)
+
+
+def incremental_canonicalize_seq(
+    base_mentions: pd.DataFrame, new_mentions: pd.DataFrame
+):
+    """Replica of kg.canonicalize over ``base_mentions``, then
+    kg.incremental_canonicalize of ``new_mentions``; same shapes as
+    canonicalize_seq.  A novel fuzzy surface adopts the minimum entity id
+    among the base surfaces it shares a bucket with and verifies against,
+    skipping buckets of more than 64 BASE surfaces; novel surfaces cluster
+    under the batch rules, and a cluster takes the minimum id its members
+    adopted, else its component id."""
+    base, _ = canonicalize_seq(base_mentions)
+    entity = {sid: eid for _s, _ty, sid, eid, _n in base}
+    new = _surface_rows(new_mentions)
+    novel = [r for r in new if r[2] not in entity]
+    bsigs, bbuckets = _fuzzy_buckets(base)
+    nsigs, nbuckets = _fuzzy_buckets(novel)
+    cluster = _lsh_labels(nsigs, nbuckets)
+    adopted: dict[int, int] = {}
+    for key, members in nbuckets.items():
+        olds = bbuckets.get(key, [])
+        for a, b in product(members, olds if len(olds) <= 64 else []):
+            if _similar(nsigs[a], bsigs[b]):
+                c = cluster.get(a, a)
+                adopted[c] = min(adopted.get(c, entity[b]), entity[b])
+    added = {sid: n for _s, _ty, sid, n in new}
+    surface_map = [(s, ty, sid, e, n + added.get(sid, 0)) for s, ty, sid, e, n in base]
+    for s, ty, sid, n in novel:
+        c = cluster.get(sid, sid)
+        surface_map.append((s, ty, sid, adopted.get(c, c), n))
+    return surface_map, _nodes_seq(surface_map)
 
 
 def triples_seq(mentions: pd.DataFrame, surface_map: list) -> dict:

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from deduce_spark.spark.kg import lsh_components, minhash, minhash_batch
+from deduce_spark.spark.kg import lsh_components, minhash, minhash_matrix
 from deduce_spark.spark.parallel import cap_buckets, fan_out
 
 
@@ -68,7 +68,7 @@ def minhash_signatures(
     max_doc_words: int | None = None,
 ) -> DataFrame:
     """(doc_id, sig) over word shingles, signed by the tiled
-    :func:`deduce_spark.spark.kg.minhash_batch` kernel.
+    :func:`deduce_spark.spark.kg.minhash_matrix` kernel.
 
     ``max_doc_words`` clamps each document to its first ``max_doc_words``
     whitespace tokens BEFORE shingling, so one document's shingles — and
@@ -81,10 +81,10 @@ def minhash_signatures(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
             ids = [int(d) for d in batch[id_col]]
-            sigs = minhash_batch(
+            sigs = minhash_matrix(
                 _word_shingles(t, shingle_words, max_doc_words)
                 for t in batch[text_col]
-            )
+            ).tolist()
             yield pd.DataFrame({"doc_id": ids, "sig": sigs})
 
     # single-row-group inputs otherwise sign the whole corpus on ONE core
@@ -150,7 +150,7 @@ def _batch_simhash(texts: list[str]) -> list[int]:
     (same word hashes, same votes, same sign threshold), pinned by test
     and by the golden fixtures.  Chunked at ``_MAX_CHUNK_WORDS`` total
     words so the bit matrix stays bounded regardless of Arrow batch size
-    × document length (same rationale as ``kg.minhash_batch``)."""
+    × document length (same rationale as ``kg.minhash_matrix``)."""
     out = np.zeros(len(texts), dtype=np.int64)
 
     def flush(idx: list[int], word_lists: list[list[str]]):

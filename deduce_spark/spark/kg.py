@@ -9,15 +9,15 @@ Stages (SURVEY.md §1 tail / north_star):
    buckets over 64 members dropped whole, est-jaccard verify);
 4. connected components with min-member labels.
 
-   Batch canonicalization collects the fuzzy-type surfaces once and runs
-   stages 2-4 on the driver in one pass (:func:`local_lsh_components`).
-   The distributed twin — an Arrow-batched UDF
-   (:func:`surface_signatures`), :func:`lsh_bands` and a bucket self-join
-   under ``parallel.cap_buckets`` (:func:`candidate_pairs`), then
-   :func:`connected_components` (driver union-find for sparse edge sets,
-   else small-star/large-star rounds with lineage truncated per round) —
-   serves ``dedup`` and :func:`incremental_canonicalize`.  Both give the
-   same labels;
+   Batch canonicalization, compaction and incremental folds run stages
+   2-4 on the driver (:func:`local_lsh_components`, plus a fold's probe
+   of the existing surfaces, :func:`_adoption_pairs`).  The distributed
+   twin — an Arrow-batched UDF (:func:`surface_signatures`),
+   :func:`lsh_bands` and a bucket self-join under ``parallel.cap_buckets``
+   (:func:`candidate_pairs`), then :func:`connected_components` (driver
+   union-find for sparse edge sets, else small-star/large-star rounds with
+   lineage truncated per round) — serves ``dedup``.  Both give the same
+   labels;
 5. canonical entity id = min stable hash in the component;
 6. nodes / edges (triples) materialization, salted against hot-domain skew.
 
@@ -26,10 +26,8 @@ numpy permutations seeded with a fixed constant) — required for the
 exact-resume and differential-test guarantees.
 
 Stages 2-4 are the one MinHash-LSH core of the package: ``dedup`` signs
-documents with ``minhash_batch`` and clusters them with
-:func:`lsh_components`, the same owner of the signature and band caches
-that incremental canonicalization uses; both union-finds are
-:func:`_union_find`.
+documents with :func:`minhash_matrix` and clusters them with
+:func:`lsh_components`; both union-finds are :func:`_union_find`.
 """
 
 from __future__ import annotations
@@ -119,7 +117,7 @@ def _shingle_hashes(s: str) -> np.ndarray:
 def minhash(shingles: np.ndarray) -> list[int]:
     """Reference MinHash of one non-empty shingle-hash array:
     sig[k] = min((a_k * h + b_k) mod p) over the hashes h.  The per-item
-    kernel that :func:`minhash_batch` is pinned against."""
+    kernel that :func:`minhash_matrix` is pinned against."""
     v = (np.outer(_PERM_A, shingles) + _PERM_B[:, None]) % _MERSENNE
     return [int(x) for x in v.min(axis=1)]
 
@@ -139,11 +137,6 @@ def surface_sig(s: str) -> list[int]:
 # wall).  Per-item results are bit-identical for any tile size; a single
 # item longer than the tile still forms one chunk.
 _MAX_CHUNK_SHINGLES = 1 << 12
-
-
-def minhash_batch(shingle_arrays: Iterable[np.ndarray]) -> list[list[int]]:
-    """List form of :func:`minhash_matrix`."""
-    return minhash_matrix(shingle_arrays).tolist()
 
 
 def minhash_matrix(shingle_arrays: Iterable[np.ndarray]) -> np.ndarray:
@@ -195,7 +188,9 @@ def surface_signatures(surf: DataFrame) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for batch in batches:
-            sigs = minhash_batch(_shingle_hashes(s) for s in batch["surface"])
+            sigs = minhash_matrix(
+                _shingle_hashes(s) for s in batch["surface"]
+            ).tolist()
             yield pd.DataFrame(
                 {"surface_id": batch["surface_id"], "type": batch["type"],
                  "sig": sigs}
@@ -237,40 +232,6 @@ def lsh_bands(
     )
 
 
-def _verified(
-    pairs: DataFrame,
-    sigs_a: DataFrame,
-    sigs_b: DataFrame,
-    min_jaccard: float,
-    id_col: str = "surface_id",
-) -> DataFrame:
-    """The (a, b) candidate pairs whose signature-estimated jaccard (the
-    share of equal signature positions) reaches ``min_jaccard``; ``a`` is
-    looked up in ``sigs_a``, ``b`` in ``sigs_b``."""
-
-    def side(sigs: DataFrame, name: str) -> DataFrame:
-        return sigs.select(
-            F.col(id_col).alias(name), F.col("sig").alias(f"sig_{name}")
-        )
-
-    # zip_with avoids the per-element struct allocation of arrays_zip+filter:
-    # measured 6x faster on the verify stage
-    equal = F.expr(
-        "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),"
-        " 0, (acc, v) -> acc + v)"
-    )
-    return (
-        pairs.join(side(sigs_a, "a"), "a")
-        .join(side(sigs_b, "b"), "b")
-        .filter(equal / F.lit(N_HASHES) >= min_jaccard)
-        .select("a", "b")
-    )
-
-
-def _bucket_cols(key: str | None) -> list[str]:
-    return [*([key] if key else []), "band", "band_key"]
-
-
 def candidate_pairs(
     sigs: DataFrame,
     n_bands: int = N_BANDS,
@@ -281,7 +242,8 @@ def candidate_pairs(
 ) -> DataFrame:
     """LSH banding over signatures -> bucket self-join (within ``key``, the
     node type for surfaces; ``None`` for documents) -> (a, b) pairs, a < b,
-    verified by the signature-estimated jaccard.
+    whose signature-estimated jaccard (the share of equal signature
+    positions) reaches ``min_jaccard``.
 
     Buckets larger than ``max_bucket`` are dropped whole
     (:func:`deduce_spark.spark.parallel.cap_buckets`).
@@ -291,7 +253,7 @@ def candidate_pairs(
     :func:`lsh_components`) caches ``lsh_bands(sigs, id_col, key, n_bands)``
     itself — Spark's cache manager substitutes the cached table for the
     identical projection here — and releases it when done."""
-    bucket = _bucket_cols(key)
+    bucket = [*([key] if key else []), "band", "band_key"]
     banded = cap_buckets(
         lsh_bands(sigs, id_col, key, n_bands), bucket, max_bucket
     )
@@ -305,7 +267,21 @@ def candidate_pairs(
         .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
         .distinct()
     )
-    return _verified(pairs, sigs, sigs, min_jaccard, id_col)
+    sig_a, sig_b = (
+        sigs.select(F.col(id_col).alias(n), F.col("sig").alias(f"sig_{n}"))
+        for n in "ab"
+    )
+    # zip_with avoids the per-element struct allocation of arrays_zip+filter:
+    # measured 6x faster on the verify stage
+    equal = F.expr(
+        "aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1, 0)),"
+        " 0, (acc, v) -> acc + v)"
+    )
+    return (
+        pairs.join(sig_a, "a").join(sig_b, "b")
+        .filter(equal / F.lit(N_HASHES) >= min_jaccard)
+        .select("a", "b")
+    )
 
 
 def lsh_components(
@@ -339,6 +315,34 @@ def lsh_components(
     return comp
 
 
+def _band_buckets(types: np.ndarray, sig: np.ndarray) -> Iterator[tuple]:
+    """Per band, (order, gid): the rows sorted by bucket — (type, the
+    band's slice of the signature) — and the bucket number of each sorted
+    position.  The sort is stable, so a bucket's rows keep their input
+    order."""
+    codes = np.unique(np.asarray(types), return_inverse=True)[1]
+    rows = N_HASHES // N_BANDS
+    for b in range(N_BANDS if len(sig) else 0):
+        keys = np.column_stack([codes, sig[:, b * rows : (b + 1) * rows]])
+        order = np.lexsort(keys.T)
+        sk = keys[order]
+        gid = np.concatenate([[0], np.cumsum(np.any(sk[1:] != sk[:-1], 1))])
+        yield order, gid
+
+
+def _verified(sig_a: np.ndarray, a: np.ndarray,
+              sig_b: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Mask of the pairs (sig_a[a[i]], sig_b[b[i]]) with
+    ``equal / N_HASHES >= SURFACE_JACCARD``; in slices, as the gathered
+    signature pairs are 1 KB each."""
+    ok = np.empty(len(a), dtype=bool)
+    for i in range(0, len(a), 1 << 16):
+        part = slice(i, i + (1 << 16))
+        equal = np.count_nonzero(sig_a[a[part]] == sig_b[b[part]], axis=1)
+        ok[part] = equal / N_HASHES >= SURFACE_JACCARD
+    return ok
+
+
 def local_lsh_components(
     ids: np.ndarray, types: np.ndarray, sig: np.ndarray
 ) -> pd.DataFrame:
@@ -350,14 +354,8 @@ def local_lsh_components(
     Vectorized per band (one lexsort, then one pass per in-bucket
     offset)."""
     sig = np.asarray(sig, dtype=np.int64)
-    codes = np.unique(np.asarray(types), return_inverse=True)[1]
-    rows = N_HASHES // N_BANDS
     lo, hi = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
-    for b in range(N_BANDS if len(sig) else 0):
-        keys = np.column_stack([codes, sig[:, b * rows : (b + 1) * rows]])
-        order = np.lexsort(keys.T)
-        sk = keys[order]
-        gid = np.concatenate([[0], np.cumsum(np.any(sk[1:] != sk[:-1], 1))])
+    for order, gid in _band_buckets(types, sig):
         size = np.bincount(gid)
         kept = size[gid] <= SURFACE_MAX_BUCKET
         # members of one bucket are adjacent in ``order``: the pairs at
@@ -371,14 +369,33 @@ def local_lsh_components(
     n = max(len(sig), 1)
     pair = np.unique(np.minimum(lo, hi) * n + np.maximum(lo, hi))
     lo, hi = pair // n, pair % n
-    # verify in slices: the gathered signature pairs are 1 KB each
-    ok = np.empty(len(lo), dtype=bool)
-    for i in range(0, len(lo), 1 << 16):
-        part = slice(i, i + (1 << 16))
-        equal = np.count_nonzero(sig[lo[part]] == sig[hi[part]], axis=1)
-        ok[part] = equal / N_HASHES >= SURFACE_JACCARD
+    ok = _verified(sig, lo, sig, hi)
     ids = np.asarray(ids, dtype=np.int64)
     return _union_find(ids[lo[ok]], ids[hi[ok]])
+
+
+def _adoption_pairs(new_types, new_sig, old_types, old_sig) -> tuple:
+    """(new row, old row) index pairs that share a bucket under
+    :func:`local_lsh_components`' banding and verify.  A bucket holding
+    more than ``SURFACE_MAX_BUCKET`` old rows is skipped; new rows do not
+    count toward the cap.  Each kept old row pairs with every new row of
+    its bucket, which the stable sort puts first in the bucket."""
+    n = len(new_sig)
+    sig = np.concatenate([new_sig, old_sig])
+    a, b = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
+    for order, gid in _band_buckets(np.concatenate([new_types, old_types]), sig):
+        old = order >= n
+        n_old = np.bincount(gid[old], minlength=gid[-1] + 1)
+        n_new = np.bincount(gid[~old], minlength=gid[-1] + 1)
+        probe = np.flatnonzero(old & (n_old[gid] <= SURFACE_MAX_BUCKET))
+        reps = n_new[gid[probe]]
+        at = np.repeat(probe, reps)
+        nth = np.arange(len(at)) - np.repeat(np.cumsum(reps) - reps, reps)
+        a.append(order[np.searchsorted(gid, gid[at]) + nth])
+        b.append(order[at] - n)
+    a, b = np.concatenate(a), np.concatenate(b)
+    ok = _verified(new_sig, a, old_sig, b)
+    return a[ok], b[ok]
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -569,6 +586,19 @@ def canonicalize(
     return surface_map, nodes_from_surface_map(surface_map, weights)
 
 
+def _signed(
+    surf: DataFrame, fuzzy_types: tuple[str, ...], *cols: str
+) -> tuple[pd.DataFrame, np.ndarray]:
+    """The fuzzy-type rows of ``surf`` collected as (surface_id, type,
+    surface, *cols), and their (rows, N_HASHES) signature matrix."""
+    pdf = (
+        surf.filter(F.col("type").isin(*fuzzy_types))
+        .select("surface_id", "type", "surface", *cols)
+        .toPandas()
+    )
+    return pdf, minhash_matrix(_shingle_hashes(s) for s in pdf["surface"])
+
+
 def _entity_map(surf: DataFrame, fuzzy_types: tuple[str, ...]) -> DataFrame:
     """``surf`` (surface_id, type, surface, …) + entity_id under the batch
     canonicalization rules: MinHash-LSH components over the fuzzy-type
@@ -591,16 +621,10 @@ def _entity_map(surf: DataFrame, fuzzy_types: tuple[str, ...]) -> DataFrame:
     the collect and the driver pass (when this chain ran distributed,
     caching measured 78s -> 31s for the sf0.1 triples query)."""
     surf = surf.cache()
-    pdf = (
-        surf.filter(F.col("type").isin(*fuzzy_types))
-        .select("surface_id", "type", "surface")
-        .toPandas()
-    )
+    pdf, sig = _signed(surf, fuzzy_types)
     comp = surf.sparkSession.createDataFrame(
         local_lsh_components(
-            pdf["surface_id"].to_numpy(),
-            pdf["type"].to_numpy(),
-            minhash_matrix(_shingle_hashes(s) for s in pdf["surface"]),
+            pdf["surface_id"].to_numpy(), pdf["type"].to_numpy(), sig
         ),
         "surface_id long, component long",
     )
@@ -1083,8 +1107,6 @@ def incremental_canonicalize(
     new_mentions: DataFrame,
     surface_map: DataFrame,
     fuzzy_types: tuple[str, ...] = FUZZY_TYPES,
-    min_jaccard: float = SURFACE_JACCARD,
-    max_bucket: int = SURFACE_MAX_BUCKET,
     anchor_weights: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Fold a batch of NEW mentions into an existing canonicalization
@@ -1107,9 +1129,10 @@ def incremental_canonicalize(
     merge existing entities — merges are a compaction concern
     (re-canonicalize), not an ingest concern.
 
-    At 10^12 scale the existing signatures would be read from a persisted
-    sidecar table (they are pure functions of the surface string); they
-    are recomputed here to stay self-contained."""
+    Runs on the driver core of :func:`_entity_map`: the novel and the
+    existing fuzzy surfaces are collected and signed (existing signatures
+    are recomputed per fold), :func:`local_lsh_components` clusters the
+    novel ones and :func:`_adoption_pairs` matches them to existing ones."""
     new_surf = surfaces(new_mentions).cache()
     existing = surface_map.select(
         "surface", "type", "n_mentions", "surface_id", "entity_id"
@@ -1122,48 +1145,25 @@ def incremental_canonicalize(
         .select("surface_id", F.col("n_mentions").alias("add_n"))
     )
 
-    # -- novel fuzzy surfaces vs existing ones: cross-LSH match ------------
-    nsigs = surface_signatures(novel.filter(F.col("type").isin(*fuzzy_types)))
-    esigs = surface_signatures(
-        existing.filter(F.col("type").isin(*fuzzy_types))
-    )
-    bucket = _bucket_cols("type")
-    nb = lsh_bands(nsigs).alias("n")
-    eb = cap_buckets(lsh_bands(esigs), bucket, max_bucket).alias("e")
-    cand = (
-        nb.join(eb, [F.col(f"n.{c}") == F.col(f"e.{c}") for c in bucket])
-        .select(
-            F.col("n.surface_id").alias("a"), F.col("e.surface_id").alias("b")
-        )
-        .distinct()
-    )
-    adopt = (
-        _verified(cand, nsigs, esigs, min_jaccard)
-        .join(
-            existing.select(F.col("surface_id").alias("b"), "entity_id"), "b"
-        )
-        .groupBy("a")
-        .agg(F.min("entity_id").alias("adopted"))
-    )
-
-    # -- novel-novel clustering (same rules as the batch path) -------------
-    comp = lsh_components(nsigs, max_bucket=max_bucket)
-    novel_assigned = (
-        novel.join(comp, "surface_id", "left")
-        .withColumn("cluster", F.coalesce("component", "surface_id"))
-        .drop("component")
-    )
-    # a cluster adopts the minimum existing entity any member matched
-    cluster_adopt = (
-        novel_assigned.join(
-            adopt, novel_assigned.surface_id == adopt.a, "left"
-        )
-        .groupBy("cluster")
-        .agg(F.min("adopted").alias("cluster_entity"))
+    new, new_sig = _signed(novel, fuzzy_types)
+    old, old_sig = _signed(existing, fuzzy_types, "entity_id")
+    ids, types = new["surface_id"].to_numpy(), new["type"].to_numpy()
+    comp = local_lsh_components(ids, types, new_sig)
+    cluster = ids.copy()
+    cluster[pd.Index(ids).get_indexer(comp["surface_id"])] = comp["component"]
+    # a cluster adopts the minimum existing entity any member matched; the
+    # ids are full-range xxhash64 values, so they never pass through floats
+    a, b = _adoption_pairs(types, new_sig, old["type"].to_numpy(), old_sig)
+    adopted = pd.Series(old["entity_id"].to_numpy()[b]).groupby(cluster[a]).min()
+    entity = np.where(np.isin(cluster, adopted.index),
+                      adopted.reindex(cluster, fill_value=0), cluster)
+    assigned = new_surf.sparkSession.createDataFrame(
+        pd.DataFrame({"surface_id": ids, "entity_id": entity}),
+        "surface_id long, entity_id long",
     )
     novel_rows = (
-        novel_assigned.join(cluster_adopt, "cluster", "left")
-        .withColumn("entity_id", F.coalesce("cluster_entity", "cluster"))
+        novel.join(assigned, "surface_id", "left")
+        .withColumn("entity_id", F.coalesce("entity_id", "surface_id"))
         .select("surface", "type", "n_mentions", "surface_id", "entity_id")
     )
 
@@ -1220,8 +1220,7 @@ def compact_canonicalize(
 
     Persist ``id_map`` next to the KG tables and remap edge tables with
     ``remap_triples`` so historical triples stay joinable.  Scale shape:
-    identical to ``canonicalize`` (the LSH + CC path is the scale-proven
-    one); id_map is one extra groupBy over the surface map.
+    that of ``canonicalize`` plus one groupBy over the surface map.
     """
     new_sm = _entity_map(
         surface_map.select(

@@ -41,24 +41,39 @@ def test_candidate_pairs_merge_typo_variants(spark):
     assert all(3 not in p for p in pairs)
 
 
-@pytest.mark.parametrize("op, retained", [("canonicalize", 1), ("minhash_dedup", 0)])
+@pytest.mark.parametrize("op, retained", [
+    ("canonicalize", 1), ("incremental_canonicalize", 1), ("minhash_dedup", 0),
+])
 def test_lsh_ops_release_intermediate_caches(spark, op, retained):
     """Input, signature and band caches are released once the components
     exist; only the caches an operator hands back stay cached (the
-    surface map for canonicalize, nothing for minhash_dedup)."""
+    surface map for canonicalize and incremental_canonicalize, nothing for
+    minhash_dedup)."""
     from deduce_spark.spark.dedup import minhash_dedup
 
     names = ["jan de vries", "jan de vries", "jan de vriess", "piet jansen"]
+    m = spark.createDataFrame(
+        [(n, "persoon") for n in names] + [("10 oktober 2018", "datum")],
+        ["text", "tag"],
+    )
+    if op == "incremental_canonicalize":
+        base, _ = kg.canonicalize(m)
+        base.count()
     jsc = spark.sparkContext._jsc
     # ids, not a count: the JVM's persisted-RDD map is weak-valued, so a
     # GC can drop caches earlier tests left and hide a leak of that size
     before = set(jsc.getPersistentRDDs().keys())
     if op == "canonicalize":
-        m = spark.createDataFrame(
-            [(n, "persoon") for n in names] + [("10 oktober 2018", "datum")],
+        surface_map, nodes = kg.canonicalize(m)
+        nodes.count()
+        surface_map.count()
+    elif op == "incremental_canonicalize":
+        inc = spark.createDataFrame(
+            [("jan de vriesss", "persoon"), ("piet janssen", "persoon"),
+             ("jan de vries", "persoon"), ("utrecht", "locatie")],
             ["text", "tag"],
         )
-        surface_map, nodes = kg.canonicalize(m)
+        surface_map, nodes = kg.incremental_canonicalize(inc, base)
         nodes.count()
         surface_map.count()
     else:
@@ -68,8 +83,10 @@ def test_lsh_ops_release_intermediate_caches(spark, op, retained):
         )
         minhash_dedup(docs, threshold=0.5).count()
     assert len(set(jsc.getPersistentRDDs().keys()) - before) <= retained
-    if op == "canonicalize":
+    if op != "minhash_dedup":
         surface_map.unpersist()
+    if op == "incremental_canonicalize":
+        base.unpersist()
 
 
 def _synthetic_signatures():
@@ -186,6 +203,34 @@ def test_canonicalize_spark_job_count(spark):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     surface_map.unpersist()
     assert n_jobs == 9
+
+
+def test_incremental_canonicalize_spark_job_count(spark):
+    """Pins the Spark jobs one fold and one count of the updated surface
+    map launch on small frames, as the batch pin above does."""
+    m = spark.createDataFrame(
+        [("jan de vries", "persoon"), ("utrecht", "locatie"),
+         ("10 oktober 2018", "datum")],
+        ["text", "tag"],
+    )
+    base, _ = kg.canonicalize(m)
+    inc = spark.createDataFrame(
+        [("jan de vriess", "persoon"), ("utrecht", "locatie"),
+         ("rotterdam", "locatie"), ("11 oktober 2018", "datum")],
+        ["text", "tag"],
+    )
+    sc = spark.sparkContext
+    group = "test_incremental_canonicalize_spark_job_count"
+    sc.setJobGroup(group, "incremental_canonicalize jobs")
+    try:
+        surface_map, _nodes = kg.incremental_canonicalize(inc, base)
+        surface_map.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    surface_map.unpersist()
+    base.unpersist()
+    assert n_jobs == 15
 
 
 def test_connected_components_chain(spark):
@@ -439,6 +484,181 @@ class TestIncrementalCanonicalize:
         )
         sm1, n1 = incremental_canonicalize(empty, sm0)
         assert sorted(map(tuple, sm1.collect())) == sorted(map(tuple, sm0.collect()))
+
+
+    @pytest.fixture(scope="class")
+    def pool_ds(self):
+        from perfbench.workloads import load_engine
+
+        return load_engine().ds
+
+    @pytest.mark.parametrize("seed", [1, 2, 3])
+    def test_fold_matches_sequential_oracle(self, spark, pool_ds, seed):
+        """A perfbench base graph plus its fold batch: every surface-map
+        and node row, novel entity ids included, equals the pure-Python
+        replica."""
+        from deduce_spark.golden import (
+            canonicalize_seq, incremental_canonicalize_seq,
+        )
+        from perfbench import gen
+        from perfbench.workloads import FOLD_PAGES, KG_ENTITIES, KG_PAGES
+
+        pool = gen.entity_pool(pool_ds, seed, KG_ENTITIES)
+        base = gen.kg_mentions(seed, pool, 0, KG_PAGES)[["text", "tag"]]
+        batch = gen.kg_mentions(seed, pool, KG_PAGES, FOLD_PAGES)[["text", "tag"]]
+        sm0, _ = kg.canonicalize(spark.createDataFrame(base))
+        sm1, n1 = kg.incremental_canonicalize(spark.createDataFrame(batch), sm0)
+        want_sm, want_nodes = incremental_canonicalize_seq(base, batch)
+        got_sm = {
+            (r["surface"], r["type"], r["surface_id"], r["entity_id"],
+             r["n_mentions"]) for r in sm1.collect()
+        }
+        got_nodes = {tuple(r) for r in n1.collect()}
+        sm1.unpersist()
+        sm0.unpersist()
+        assert got_sm == set(want_sm)
+        assert got_nodes == set(want_nodes)
+        # the batch brings novel fuzzy surfaces, adopted and not
+        base_sm, _ = canonicalize_seq(base)
+        base_ids = {e for _s, _t, _sid, e, _n in base_sm}
+        novel = want_sm[len(base_sm):]
+        assert any(e in base_ids for _s, t, _sid, e, _n in novel
+                   if t in kg.FUZZY_TYPES)
+        assert any(e not in base_ids for _s, t, _sid, e, _n in novel
+                   if t in kg.FUZZY_TYPES)
+
+    def test_adoption_probe_rules(self, spark, monkeypatch):
+        """Synthetic signatures through the whole fold: the novel-vs-
+        existing probe skips a bucket of 65 existing rows but keeps 64
+        existing rows plus 10 novel ones, verifies at 45/64 and not 44/64,
+        keys buckets by type, and keeps full-range (negative) entity ids
+        exact while a novel cluster takes its members' minimum adoption."""
+        import numpy as np
+
+        existing, novel = _synthetic_fold()
+        sig_of = {
+            tuple(kg._shingle_hashes(s).tolist()): sig
+            for s, _ty, sig in existing + novel
+        }
+        monkeypatch.setattr(
+            kg, "minhash_matrix",
+            lambda arrays: np.array(
+                [sig_of[tuple(a.tolist())] for a in arrays], dtype=np.int64
+            ).reshape(-1, kg.N_HASHES),
+        )
+        ent = {s: _ENTITY.get(s, -(1 << 63) + 11 + 2 * i)
+               for i, (s, _ty, _sig) in enumerate(existing)}
+        sm0 = spark.createDataFrame(
+            [(s, ty, 1, i + 1, ent[s]) for i, (s, ty, _sig) in enumerate(existing)],
+            "surface string, type string, n_mentions long, surface_id long,"
+            " entity_id long",
+        )
+        tag = {"PERSOON": "persoon", "LOCATIE": "locatie",
+               "INSTELLING": "zorginstelling"}
+        inc = spark.createDataFrame(
+            [(s, tag[ty]) for s, ty, _sig in novel], "text string, tag string"
+        )
+        sm1, _ = kg.incremental_canonicalize(inc, sm0)
+        rows = sm1.collect()
+        sm1.unpersist()
+        got = {r["surface"]: r["entity_id"] for r in rows}
+        sid = {r["surface"]: r["surface_id"] for r in rows}
+        assert len(rows) == len(existing) + len(novel)
+        assert all(got[s] == ent[s] for s in ent)
+        own = [s for s, _ty, _sig in novel
+               if s not in ("nb0", "n45", "np", "nm", "c1", "c2", "d1", "d2")]
+        # 65-bucket, the 9 other novel rows of the 64-bucket, 44/64, and
+        # the LOCATIE copy of a PERSOON signature: own entities
+        assert {"na", "n44", "nl", "nb1", "nb9"} <= set(own)
+        assert all(got[s] == sid[s] for s in own)
+        assert got["nb0"] == ent["b0"]
+        assert got["n45"] == ent["e45"]
+        assert got["np"] == ent["p0"]
+        assert got["nm"] == min(ent["m1"], ent["m2"]) == -(1 << 63) + 3
+        assert got["c1"] == got["c2"] == min(ent["x1"], ent["x2"])
+        assert got["d1"] == got["d2"] == min(sid["d1"], sid["d2"])
+
+
+# entity ids the probe test pins: full-range, and odd near the int64
+# minimum, where a float64 round trip would move them
+_ENTITY = {"m1": (1 << 63) - 1, "m2": -(1 << 63) + 3, "x1": 5, "x2": -7}
+
+
+def _synthetic_fold():
+    """(existing, novel) rows of (surface, type, signature) for the
+    adoption probe; each novel row is named for the case it pins."""
+    import random
+
+    rng = random.Random(11)
+    existing: list[tuple[str, str, list[int]]] = []
+    novel: list[tuple[str, str, list[int]]] = []
+
+    def add(rows, name, ty, sig=None):
+        if sig is None:
+            sig = [rng.randrange(1, 1 << 40) for _ in range(kg.N_HASHES)]
+        rows.append((name, ty, sig))
+        return sig
+
+    def near(sig):
+        # shares band 0 whole and 3 of 4 positions of every other band:
+        # 49 equal positions, one shared bucket
+        new = [rng.randrange(1, 1 << 40) for _ in range(kg.N_HASHES)]
+        new[:4] = sig[:4]
+        for b in range(1, kg.N_BANDS):
+            new[4 * b : 4 * b + 3] = sig[4 * b : 4 * b + 3]
+        return new
+
+    def changed(sig, positions):
+        new = list(sig)
+        for i in positions:
+            new[i] = rng.randrange(1, 1 << 40)
+        return new
+
+    def keyed(rows, name, ty, key):
+        sig = add(rows, name, ty)
+        sig[:4] = [key] * 4
+        return sig
+
+    # 65 existing rows in one bucket: skipped, so its near novel row
+    a0 = keyed(existing, "a0", "PERSOON", 11)
+    for i in range(1, 65):
+        keyed(existing, f"a{i}", "PERSOON", 11)
+    add(novel, "na", "PERSOON", near(a0))
+    # 64 existing rows plus 10 novel ones: kept, novel rows do not count
+    b0 = keyed(existing, "b0", "PERSOON", 22)
+    for i in range(1, 64):
+        keyed(existing, f"b{i}", "PERSOON", 22)
+    add(novel, "nb0", "PERSOON", near(b0))
+    for i in range(1, 10):
+        keyed(novel, f"nb{i}", "PERSOON", 22)
+    # 45/64 equal positions adopt, 44/64 do not
+    for n_equal in (45, 44):
+        e = add(existing, f"e{n_equal}", "INSTELLING")
+        add(novel, f"n{n_equal}", "INSTELLING", e[:n_equal] + changed(
+            e, range(kg.N_HASHES))[n_equal:])
+    # 40 PERSOON + 40 LOCATIE existing rows share one slice: under the cap
+    # per type, so a near PERSOON row adopts; a LOCATIE copy of a PERSOON
+    # signature matches nothing
+    p0 = keyed(existing, "p0", "PERSOON", 33)
+    for i in range(1, 40):
+        keyed(existing, f"p{i}", "PERSOON", 33)
+    for i in range(40):
+        keyed(existing, f"l{i}", "LOCATIE", 33)
+    add(novel, "np", "PERSOON", near(p0))
+    add(novel, "nl", "LOCATIE", list(p0))
+    # one novel row verifies against two existing entities: the minimum
+    m1 = add(existing, "m1", "LOCATIE")
+    add(existing, "m2", "LOCATIE", list(m1))
+    add(novel, "nm", "LOCATIE", changed(m1, range(8)))
+    # a novel cluster whose members adopt different entities takes the
+    # minimum; one that adopts none takes its component id
+    c1 = add(novel, "c1", "INSTELLING")
+    c2 = add(novel, "c2", "INSTELLING", changed(c1, range(8)))
+    add(existing, "x1", "INSTELLING", changed(c1, range(20, 36)))
+    add(existing, "x2", "INSTELLING", changed(c2, range(8, 20)))
+    d1 = add(novel, "d1", "PERSOON")
+    add(novel, "d2", "PERSOON", changed(d1, range(8)))
+    return existing, novel
 
 
 class TestCompaction:

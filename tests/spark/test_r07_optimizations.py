@@ -19,23 +19,23 @@ class TestSignatureTiles:
 
     def test_minhash_tile_boundary_exact(self):
         from deduce_spark.spark.dedup import _word_shingles, minhash_sig
-        from deduce_spark.spark.kg import _MAX_CHUNK_SHINGLES, minhash_batch
+        from deduce_spark.spark.kg import _MAX_CHUNK_SHINGLES, minhash_matrix
 
         big = " ".join(f"w{i % 1009}" for i in range(_MAX_CHUNK_SHINGLES + 500))
         docs = ["short doc one", big, "short doc two", ""]
-        got = minhash_batch(_word_shingles(d) for d in docs)
+        got = minhash_matrix(_word_shingles(d) for d in docs).tolist()
         assert got == [minhash_sig(d) for d in docs]
 
     def test_surface_sig_tile_boundary_exact(self):
         # the char-3 shingler through the same kernel: many short surfaces
         # fill several tiles, and one surface alone exceeds a tile
         from deduce_spark.spark.kg import (
-            _MAX_CHUNK_SHINGLES, _shingle_hashes, minhash_batch, surface_sig,
+            _MAX_CHUNK_SHINGLES, _shingle_hashes, minhash_matrix, surface_sig,
         )
 
         surfs = [f"albert schweitzer ziekenhuis {i}" for i in range(400)]
         surfs[200:200] = ["x" * (_MAX_CHUNK_SHINGLES + 500), "ab", ""]
-        got = minhash_batch(_shingle_hashes(s) for s in surfs)
+        got = minhash_matrix(_shingle_hashes(s) for s in surfs).tolist()
         assert got == [surface_sig(s) for s in surfs]
 
     def test_simhash_tile_boundary_exact(self):

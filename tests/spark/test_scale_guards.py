@@ -330,7 +330,7 @@ class TestSaltedSkewDefusal:
 class TestOversizedDocClamp:
     """max_doc_words bounds the minhash permute matrix against a single
     pathological document (round-4 judge task #6): the chunk bound in
-    kg.minhash_batch is across documents, so one multi-million-word doc
+    kg.minhash_matrix is across documents, so one multi-million-word doc
     used to form one unbounded chunk."""
 
     def test_clamp_equals_signing_the_prefix(self, spark):
