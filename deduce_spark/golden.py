@@ -158,9 +158,10 @@ def _fuzzy_buckets(rows) -> tuple[dict, dict]:
     the fuzzy-type rows of ``rows`` (surface, type, surface_id, …).
 
     The LSH rules kg.local_lsh_components and a fold's kg._adoption_pairs
-    apply on the driver (twin of the distributed kg.lsh_components ->
-    kg.candidate_pairs): 16 bands x 4 rows keyed by type, buckets over 64
-    members dropped, est-jaccard >= 0.7 i.e. >= 45/64 equal positions."""
+    apply on the driver for every caller (their distributed twin,
+    kg.candidate_pairs -> kg.connected_components, serves no caller):
+    16 bands x 4 rows keyed by type, buckets over 64 members dropped,
+    est-jaccard >= 0.7 i.e. >= 45/64 equal positions."""
     from deduce_spark.spark.kg import surface_sig  # numpy kernel, no Spark
 
     sigs: dict[int, list[int]] = {}
@@ -438,7 +439,8 @@ def golden_kg(n_pages: int) -> dict[str, pd.DataFrame]:
 
 
 def golden_minhash(docs: pd.DataFrame) -> pd.DataFrame:
-    """Replica of dedup.minhash_dedup(threshold=0.5, max_bucket=256)."""
+    """Replica of dedup.minhash_dedup(threshold=0.5, max_bucket=256): the
+    kg LSH rules under one bucket type, a 256 cap, >= 32/64 equal."""
     from deduce_spark.spark.dedup import minhash_sig
 
     sigs = {int(d): minhash_sig(t) for d, t in zip(docs["doc_id"], docs["text"])}

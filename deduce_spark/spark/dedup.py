@@ -3,9 +3,10 @@
 All operators are DataFrame -> DataFrame, deterministic, and shuffle-aware:
 
 - minhash:   word shingles -> 64-perm signatures (Arrow numpy UDF) ->
-             the kg LSH core (``kg.lsh_components``: bands, capped bucket
-             self-join, signature-estimated jaccard filter, connected
-             components) -> canonical doc per cluster;
+             one collect -> the kg LSH core on the driver
+             (``kg.local_lsh_components``: bands, capped buckets,
+             signature-estimated jaccard filter, union-find) -> canonical
+             doc per cluster;
 - simhash:   64-bit simhash, bucketed by four 16-bit chunks (any pair with
              hamming distance <= 3 shares a chunk by pigeonhole), under the
              ``parallel.cap_buckets`` hot-bucket cap;
@@ -24,7 +25,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from deduce_spark.spark.kg import lsh_components, minhash, minhash_matrix
+from deduce_spark.spark.kg import (
+    N_HASHES, local_lsh_components, minhash, minhash_matrix,
+)
 from deduce_spark.spark.parallel import cap_buckets, fan_out
 
 
@@ -102,30 +105,42 @@ def minhash_dedup(
     max_bucket: int = 256,
     max_doc_words: int | None = None,
 ) -> DataFrame:
-    """(doc_id, canonical_id) for every doc in a near-dup cluster.
+    """(doc_id, canonical_id) for every input doc; a doc in a near-dup
+    cluster maps to the cluster's minimum doc id, any other to itself.
 
-    The LSH core is :func:`deduce_spark.spark.kg.lsh_components` over
-    document signatures, with no bucket key beyond the band.  Buckets
-    larger than ``max_bucket`` are dropped whole: a pair is still found
-    through any other band it shares (exact duplicates share every band);
-    the cap trades a sliver of near-dup recall for a bounded join.
+    The signatures (:func:`minhash_signatures`, the only Python stage) are
+    collected once and clustered on the driver by the kg LSH core,
+    :func:`deduce_spark.spark.kg.local_lsh_components`, under one constant
+    bucket type: a pair is kept at ``equal / N_HASHES >= threshold``.
+    Buckets larger than ``max_bucket`` are dropped whole: a pair is still
+    found through any other band it shares (exact duplicates share every
+    band); the cap trades a sliver of near-dup recall for bounded pairs.
+    The result is built from the collected ids, so the input is scanned
+    once.  Its driver cost, measured with ``tracemalloc`` over 50k fixture
+    pages plus 5k near-duplicate twins, is ~2.1 KB a doc at peak (the
+    stacked signatures, band sort keys, pairs and verify slices; plus
+    ~640 B a doc for the collected frame): ~0.15 GB at 55k docs.  On 4
+    cores it took 1.06 s warm there against 2.38 s for the distributed
+    chain it replaced (3 Spark jobs against 22), with identical output.
 
     ``max_doc_words`` (recommended at crawl scale, e.g. ``1_000_000``)
     bounds the signature worker's peak memory against pathological single
     documents — see :func:`minhash_signatures`."""
-    comp = lsh_components(
-        minhash_signatures(df, text_col, id_col, shingle_words, max_doc_words),
-        threshold,
-        max_bucket,
-        id_col="doc_id",
-        key=None,
+    pdf = minhash_signatures(
+        df, text_col, id_col, shingle_words, max_doc_words
+    ).toPandas()
+    ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+    sig = np.array(pdf["sig"].tolist(), dtype=np.int64).reshape(-1, N_HASHES)
+    comp = local_lsh_components(
+        ids, np.zeros(len(ids), dtype=np.int8), sig, threshold, max_bucket
     )
-    return (
-        df.select(F.col(id_col).alias("doc_id"))
-        .join(comp.withColumnRenamed("surface_id", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id", F.coalesce("component", "doc_id").alias("canonical_id")
-        )
+    # by position in ``comp``: a doc id can repeat in the input
+    at = pd.Index(comp["surface_id"]).get_indexer(ids)
+    canonical = ids.copy()
+    canonical[at >= 0] = comp["component"].to_numpy()[at[at >= 0]]
+    return df.sparkSession.createDataFrame(
+        pd.DataFrame({"doc_id": ids, "canonical_id": canonical}),
+        "doc_id long, canonical_id long",
     )
 
 

@@ -9,14 +9,16 @@ Stages (SURVEY.md §1 tail / north_star):
    buckets over 64 members dropped whole, est-jaccard verify);
 4. connected components with min-member labels.
 
-   Batch canonicalization, compaction and incremental folds run stages
-   2-4 on the driver (:func:`local_lsh_components`, plus a fold's probe
-   of the existing surfaces, :func:`_adoption_pairs`).  The distributed
+   Every LSH caller runs stages 2-4 on the driver
+   (:func:`local_lsh_components`): batch canonicalization, compaction,
+   incremental folds (plus their probe of the existing surfaces,
+   :func:`_adoption_pairs`) and ``dedup.minhash_dedup``.  The distributed
    twin — an Arrow-batched UDF (:func:`surface_signatures`),
    :func:`lsh_bands` and a bucket self-join under ``parallel.cap_buckets``
-   (:func:`candidate_pairs`), then :func:`connected_components` (driver
-   union-find for sparse edge sets, else small-star/large-star rounds with
-   lineage truncated per round) — serves ``dedup``.  Both give the same
+   (:func:`candidate_pairs`), then :func:`connected_components` — serves
+   no LSH caller: it stays as the reference the parity test and
+   perfbench's replay read (``similarity.semantic_dedup`` still labels its
+   own pairs with :func:`connected_components`).  Both give the same
    labels;
 5. canonical entity id = min stable hash in the component;
 6. nodes / edges (triples) materialization, salted against hot-domain skew.
@@ -27,7 +29,8 @@ exact-resume and differential-test guarantees.
 
 Stages 2-4 are the one MinHash-LSH core of the package: ``dedup`` signs
 documents with :func:`minhash_matrix` and clusters them with
-:func:`lsh_components`; both union-finds are :func:`_union_find`.
+:func:`local_lsh_components` under one constant bucket type; both
+union-finds are :func:`_union_find`.
 """
 
 from __future__ import annotations
@@ -204,20 +207,15 @@ def surface_signatures(surf: DataFrame) -> DataFrame:
 # -- LSH: banding, bucket self-join, est-jaccard verify ----------------------
 
 
-def lsh_bands(
-    sigs: DataFrame,
-    id_col: str = "surface_id",
-    key: str | None = "type",
-    n_bands: int = N_BANDS,
-) -> DataFrame:
-    """(id, [key,] band, band_key): one row per signature band, keyed by
-    xxhash64 over (band index, the band's slice of the signature) — two
-    signatures share a bucket when they agree on a whole band.  Native
-    Spark expressions, no UDF."""
+def lsh_bands(sigs: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
+    """(surface_id, type, band, band_key): one row per signature band,
+    keyed by xxhash64 over (band index, the band's slice of the signature)
+    — two signatures share a bucket when they agree on a whole band.
+    Native Spark expressions, no UDF."""
     rows_per_band = N_HASHES // n_bands
     return sigs.select(
-        id_col,
-        *([key] if key else []),
+        "surface_id",
+        "type",
         F.posexplode(
             F.array(
                 *[
@@ -237,38 +235,33 @@ def candidate_pairs(
     n_bands: int = N_BANDS,
     min_jaccard: float = SURFACE_JACCARD,
     max_bucket: int = SURFACE_MAX_BUCKET,
-    id_col: str = "surface_id",
-    key: str | None = "type",
 ) -> DataFrame:
-    """LSH banding over signatures -> bucket self-join (within ``key``, the
-    node type for surfaces; ``None`` for documents) -> (a, b) pairs, a < b,
-    whose signature-estimated jaccard (the share of equal signature
-    positions) reaches ``min_jaccard``.
+    """LSH banding over surface signatures -> bucket self-join within the
+    node type -> (a, b) surface-id pairs, a < b, whose signature-estimated
+    jaccard (the share of equal signature positions) reaches
+    ``min_jaccard``.
 
     Buckets larger than ``max_bucket`` are dropped whole
     (:func:`deduce_spark.spark.parallel.cap_buckets`).
 
-    The band table is read by the bucket count and both join sides.  This
-    function caches nothing; a caller that runs it under an action (see
-    :func:`lsh_components`) caches ``lsh_bands(sigs, id_col, key, n_bands)``
-    itself — Spark's cache manager substitutes the cached table for the
-    identical projection here — and releases it when done."""
-    bucket = [*([key] if key else []), "band", "band_key"]
-    banded = cap_buckets(
-        lsh_bands(sigs, id_col, key, n_bands), bucket, max_bucket
-    )
+    The distributed twin of :func:`local_lsh_components`' pairs, kept as
+    its reference: no LSH caller runs it.  The band table is read by the
+    bucket count and both join sides, and nothing is cached here, so a
+    caller that reuses ``sigs`` caches it itself."""
+    bucket = ["type", "band", "band_key"]
+    banded = cap_buckets(lsh_bands(sigs, n_bands), bucket, max_bucket)
     l, r = banded.alias("l"), banded.alias("r")
     pairs = (
         l.join(
             r,
             [F.col(f"l.{c}") == F.col(f"r.{c}") for c in bucket]
-            + [F.col(f"l.{id_col}") < F.col(f"r.{id_col}")],
+            + [F.col("l.surface_id") < F.col("r.surface_id")],
         )
-        .select(F.col(f"l.{id_col}").alias("a"), F.col(f"r.{id_col}").alias("b"))
+        .select(F.col("l.surface_id").alias("a"), F.col("r.surface_id").alias("b"))
         .distinct()
     )
     sig_a, sig_b = (
-        sigs.select(F.col(id_col).alias(n), F.col("sig").alias(f"sig_{n}"))
+        sigs.select(F.col("surface_id").alias(n), F.col("sig").alias(f"sig_{n}"))
         for n in "ab"
     )
     # zip_with avoids the per-element struct allocation of arrays_zip+filter:
@@ -282,37 +275,6 @@ def candidate_pairs(
         .filter(equal / F.lit(N_HASHES) >= min_jaccard)
         .select("a", "b")
     )
-
-
-def lsh_components(
-    sigs: DataFrame,
-    min_jaccard: float = SURFACE_JACCARD,
-    max_bucket: int = SURFACE_MAX_BUCKET,
-    id_col: str = "surface_id",
-    key: str | None = "type",
-) -> DataFrame:
-    """(surface_id, component) over :func:`candidate_pairs` of ``sigs``
-    (ids in no verified pair are absent).  The result is materialized
-    (:func:`connected_components`), so the signature and band caches this
-    function creates are released before it returns.
-
-    Both caches are populated by one scan of ``sigs``: the pair plan reads
-    them from several concurrently launched subtrees (bucket count, both
-    self-join sides, both verify joins), which would otherwise each
-    recompute the Python signature stage and race to populate the same
-    cache."""
-    sigs = sigs.cache()
-    bands = lsh_bands(sigs, id_col, key).cache()
-    bands.count()
-    comp = connected_components(
-        candidate_pairs(
-            sigs, min_jaccard=min_jaccard, max_bucket=max_bucket,
-            id_col=id_col, key=key,
-        )
-    )
-    bands.unpersist()
-    sigs.unpersist()
-    return comp
 
 
 def _band_buckets(types: np.ndarray, sig: np.ndarray) -> Iterator[tuple]:
@@ -331,36 +293,42 @@ def _band_buckets(types: np.ndarray, sig: np.ndarray) -> Iterator[tuple]:
 
 
 def _verified(sig_a: np.ndarray, a: np.ndarray,
-              sig_b: np.ndarray, b: np.ndarray) -> np.ndarray:
+              sig_b: np.ndarray, b: np.ndarray,
+              min_jaccard: float = SURFACE_JACCARD) -> np.ndarray:
     """Mask of the pairs (sig_a[a[i]], sig_b[b[i]]) with
-    ``equal / N_HASHES >= SURFACE_JACCARD``; in slices, as the gathered
+    ``equal / N_HASHES >= min_jaccard``; in slices, as the gathered
     signature pairs are 1 KB each."""
     ok = np.empty(len(a), dtype=bool)
     for i in range(0, len(a), 1 << 16):
         part = slice(i, i + (1 << 16))
         equal = np.count_nonzero(sig_a[a[part]] == sig_b[b[part]], axis=1)
-        ok[part] = equal / N_HASHES >= SURFACE_JACCARD
+        ok[part] = equal / N_HASHES >= min_jaccard
     return ok
 
 
 def local_lsh_components(
-    ids: np.ndarray, types: np.ndarray, sig: np.ndarray
+    ids: np.ndarray,
+    types: np.ndarray,
+    sig: np.ndarray,
+    min_jaccard: float = SURFACE_JACCARD,
+    max_bucket: int = SURFACE_MAX_BUCKET,
 ) -> pd.DataFrame:
-    """Driver twin of :func:`lsh_components` over an (items, N_HASHES)
-    signature matrix: (surface_id, component) for the ids in a verified
-    pair.  Same rules: ``N_BANDS`` slices keyed by (type, band, slice),
-    buckets over ``SURFACE_MAX_BUCKET`` rows dropped whole, pairs kept
-    when ``equal / N_HASHES >= SURFACE_JACCARD``, min-root union-find.
-    Vectorized per band (one lexsort, then one pass per in-bucket
-    offset)."""
+    """The package's MinHash-LSH core, run on the driver over an (items,
+    N_HASHES) signature matrix: (surface_id, component) for the ids in a
+    verified pair.  ``N_BANDS`` slices keyed by (type, band, slice),
+    buckets over ``max_bucket`` rows dropped whole, pairs kept when
+    ``equal / N_HASHES >= min_jaccard``, min-root union-find — the rules
+    of the distributed :func:`candidate_pairs` +
+    :func:`connected_components`.  Vectorized per band (one lexsort, then
+    one pass per in-bucket offset)."""
     sig = np.asarray(sig, dtype=np.int64)
     lo, hi = [np.empty(0, dtype=np.int64)], [np.empty(0, dtype=np.int64)]
     for order, gid in _band_buckets(types, sig):
         size = np.bincount(gid)
-        kept = size[gid] <= SURFACE_MAX_BUCKET
+        kept = size[gid] <= max_bucket
         # members of one bucket are adjacent in ``order``: the pairs at
         # offset d are the adjacent-by-d positions that share a bucket
-        largest = int(size[size <= SURFACE_MAX_BUCKET].max(initial=1))
+        largest = int(size[size <= max_bucket].max(initial=1))
         for d in range(1, largest):
             m = (gid[d:] == gid[:-d]) & kept[d:]
             lo.append(order[:-d][m])
@@ -369,7 +337,7 @@ def local_lsh_components(
     n = max(len(sig), 1)
     pair = np.unique(np.minimum(lo, hi) * n + np.maximum(lo, hi))
     lo, hi = pair // n, pair % n
-    ok = _verified(sig, lo, sig, hi)
+    ok = _verified(sig, lo, sig, hi, min_jaccard)
     ids = np.asarray(ids, dtype=np.int64)
     return _union_find(ids[lo[ok]], ids[hi[ok]])
 
@@ -606,8 +574,9 @@ def _entity_map(surf: DataFrame, fuzzy_types: tuple[str, ...]) -> DataFrame:
 
     The fuzzy-type surfaces are collected once and canonicalized on the
     driver (:func:`minhash_matrix` + :func:`local_lsh_components`), which
-    gives the components :func:`lsh_components` would at a fraction of its
-    Spark jobs.  Measured on 4 cores over letter-permuted copies of the
+    gives the components the distributed :func:`candidate_pairs` +
+    :func:`connected_components` chain would at a fraction of its Spark
+    jobs.  Measured on 4 cores over letter-permuted copies of the
     50k-fixture-page surfaces (dense near-duplicate clusters), the driver
     path beat the distributed one at every size tried, up to 247k
     surfaces (22 vs 72-75 s).  Its driver cost is ~3.3 KB a surface at

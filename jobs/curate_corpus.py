@@ -118,9 +118,8 @@ def run_job(
             return table.read(spark)
         t0 = time.time()
         df = build()
-        table.write(df, partition_by=list(partition_by))
-        result = table.read(spark)
-        rows = result.count()
+        man = table.write(df, partition_by=list(partition_by))
+        rows = man["summary"]["total_rows"]
         log.append([
             stage_record(
                 name, log.next_seq(), run_id, rows,
@@ -129,7 +128,7 @@ def run_job(
         ])
         summary["stages"][name] = {"rows": rows,
                                    "wall_s": round(time.time() - t0, 2)}
-        return result
+        return table.read(spark)
 
     if normalize:
         # unicode normalization FIRST so every downstream signal
@@ -190,11 +189,7 @@ def run_job(
         # clamp here is defense in depth: signature memory stays bounded
         # even if a caller disables the verdict rule
         clusters = minhash_dedup(kept_docs, max_doc_words=max_doc_words)
-        survivors = kept_docs.join(clusters, "doc_id", "left").filter(
-            F.coalesce(F.col("canonical_id"), F.col("doc_id"))
-            == F.col("doc_id")
-        )
-        return survivors.select("doc_id")
+        return clusters.filter("canonical_id = doc_id").select("doc_id")
 
     kept = stage("dedup", build_kept, "kept")
 

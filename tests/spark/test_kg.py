@@ -233,6 +233,27 @@ def test_incremental_canonicalize_spark_job_count(spark):
     assert n_jobs == 15
 
 
+def test_minhash_dedup_spark_job_count(spark):
+    """Pins the Spark jobs minhash_dedup and one count of its result
+    launch on a small frame: the signature collect (its round-robin
+    fan-out shuffle runs as a job of its own) and the count.  The
+    distributed LSH chain this replaced launched 18."""
+    from deduce_spark.spark.dedup import minhash_dedup
+
+    docs = spark.createDataFrame(
+        [(i, f"jan de vries {i % 3} woont in een huis") for i in range(6)],
+        ["doc_id", "text"],
+    )
+    sc = spark.sparkContext
+    group = "test_minhash_dedup_spark_job_count"
+    sc.setJobGroup(group, "minhash_dedup jobs")
+    try:
+        minhash_dedup(docs, threshold=0.5).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+
+
 def test_connected_components_chain(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], ["a", "b"]

@@ -31,6 +31,37 @@ class TestDedup:
         assert out[1] == out[2]
         assert out[3] != out[1]
 
+    def test_minhash_dedup_matches_golden(self, spark):
+        """Row for row against ``golden.golden_minhash`` on generated pages
+        plus near-duplicate twins (one word changed) and 260 copies of one
+        text, whose buckets exceed the 256 cap in every band."""
+        import pandas as pd
+
+        from deduce_spark.fixtures import generate_pages
+        from deduce_spark.golden import golden_minhash
+
+        texts = generate_pages(200, seed=5)["text"]
+        twins = [t.replace(" ", " twin ", 1) for t in texts[::10]]
+        hot = ["one boilerplate text for every copy"] * 260
+        pdf = pd.DataFrame({"text": texts + twins + hot})
+        pdf.insert(0, "doc_id", range(len(pdf)))
+        want = golden_minhash(pdf)
+        got = (
+            dedup.minhash_dedup(spark.createDataFrame(pdf), threshold=0.5)
+            .toPandas().sort_values("doc_id", ignore_index=True)
+        )
+        pd.testing.assert_frame_equal(got, want)
+        merged = got[got["doc_id"] != got["canonical_id"]]
+        assert set(merged["doc_id"]) >= set(range(200, 200 + len(twins)))
+        assert not set(merged["doc_id"]) & set(range(220, 480))
+
+    def test_minhash_dedup_empty_input(self, spark):
+        # a curate run whose verdicts keep nothing dedups an empty frame
+        kept = spark.createDataFrame([], "doc_id long, text string")
+        out = dedup.minhash_dedup(kept)
+        assert out.columns == ["doc_id", "canonical_id"]
+        assert out.collect() == []
+
     def test_simhash_near_dupes(self, spark):
         base = "alpha beta gamma delta epsilon zeta eta theta " * 8
         variant = base.replace("delta", "delta2", 1)

@@ -77,7 +77,7 @@ class TestBucketCapPlanShape:
     bucket (sorted) on one task — assert none sneaks back in."""
 
     def test_minhash_lsh_plans_have_no_window(self, spark):
-        from deduce_spark.spark.dedup import minhash_dedup, minhash_signatures
+        from deduce_spark.spark.dedup import minhash_dedup
         from deduce_spark.spark.kg import candidate_pairs, surface_signatures
 
         surf = spark.createDataFrame(
@@ -90,10 +90,6 @@ class TestBucketCapPlanShape:
         )
         for out in (
             candidate_pairs(surface_signatures(surf)),
-            # minhash_dedup's own call; its result plan reads only the
-            # materialized components, checked as well
-            candidate_pairs(minhash_signatures(docs), min_jaccard=0.7,
-                            max_bucket=256, id_col="doc_id", key=None),
             minhash_dedup(docs, threshold=0.5),
         ):
             plan = out._jdf.queryExecution().executedPlan().toString()
